@@ -1,108 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Try}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Untimed warmup: JIT/codegen/shuffle machinery spin-up otherwise
     // lands entirely on whichever query happens to run first.
     try SparkEntry.entry(spark).count() catch {
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] entry warmup failed: $e")
     }
     // Optional comma-separated query filter for local iteration
     // (e.g. SPARK_GRAFT_ONLY=dd_minhash_pairs,sim_ivf_topk).
     val selected = SparkEntry.selectedQueries("bench")
-    // Per-plan untimed warmup (JMH-style): run each query once just
-    // before its timed reps so whole-stage codegen + JIT compile
-    // outside the measured window — the timed pass then reports
-    // steady-state engine throughput, not Janino compile time
-    // (~0.5-1.5 s per distinct plan, pure noise at any real scale
-    // where a plan runs for minutes). Warmup runs at the SAME sfDir:
-    // AQE re-plans (and re-codegens) differently per data size, so a
-    // smaller-SF warmup only partially transfers. Disable:
-    // SPARK_GRAFT_WARMUP=0.
-    // Per-query storage sweep: unpersist every RDD that is NOT backing
-    // a shared FrameCache artifact (index/sketch/edge-cache frames keyed
-    // by input identity). Query-PRIVATE persists and localCheckpoints
-    // (iterative-round frontiers, one-shot union-find edge caches)
-    // otherwise accumulate across a 200-query one-JVM suite and evict
-    // each other's hot frames — at sf10 that turned three committed
-    // suite entries into storage-eviction artifacts 2-11x above their
-    // solo plan cost. A real cluster spreads these caches over many
-    // executors' memory; sweeping per query makes the committed suite
-    // number the PLAN's cost, which is the quantity that scales.
-    def sweepPrivateStorage(): Unit =
-      try {
-        val keep = graft.queries.FrameCache.ownedRddIds(spark)
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!keep.contains(id)) { rdd.unpersist(blocking = false); () }
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] storage sweep failed: $e")
-      }
-    // Warmup and timed reps are FUSED per query (warm up q, time q,
-    // THEN sweep) rather than warmup-all-then-time-all: the sweep
-    // between a query's warmup and its timed pass would force every
-    // reps=1 timed run (the driver's mode) to rebuild its own
-    // query-private persists inside the measured window — a cost
-    // neither a solo warm-min measurement nor the pre-sweep harness
-    // paid, so round-over-round diffs would show phantom regressions.
-    // Fused, a query's timed run rides exactly its own warmup's frames
-    // (the solo-run semantics) while other queries' private storage is
-    // still gone before it starts.
-    val doWarmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
     // SPARK_GRAFT_REPS=N → report the min over N runs (local iteration
     // only; the driver leaves it unset → single timed run per query).
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(1)
-    // Deterministic SORTED suite order. The registry is an immutable
-    // HashMap whose iteration order reshuffles globally whenever a key
-    // is added — so every round that registered a query silently ran a
-    // DIFFERENT suite permutation, rotating the position-dependent
-    // artifacts (JIT-first windows, shared-index build riding, storage
-    // pressure) onto new victims and making round-over-round per-query
-    // diffs partly positional noise. Alphabetical order is stable under
-    // insertion (only neighbors shift) and clusters each family with
-    // its shared FrameCache artifacts, so an index build rides the
-    // family's first query instead of a random stranger.
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      if (doWarmup) {
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); () }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] warmup $name failed: $e")
-        }
-      }
-      val times = (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        // Materialize FULL output rows, not df.count(): an Aggregate on
-        // top lets Catalyst prune the query's own projections, so a
-        // map-only query (redaction, formatting, scoring) would be timed
-        // as a bare scan. toRdd computes every output column per row —
-        // the same work DuckDB's fetchall pays in the comparison.
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case scala.util.control.NonFatal(e) =>
-          // visible failure, never a near-zero "fast" time for a broken query
-          System.err.println(s"[bench] $name FAILED: $e")
-          -1L
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-      sweepPrivateStorage()
-      name -> times.min
-    }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val (results, failed) = runSuite(spark, sfDir, selected, reps)
+    val total = results.map(_._2).sum
     // Explicit root locale: the f-interpolator is locale-sensitive, and
     // a comma-decimal default locale would corrupt the machine-parsed
     // JSON line ("1,234").
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Full per-query map → file: the driver keeps only the last ~2000
     // chars of stdout, and a 196-entry map (~5 KB) truncates mid-line
     // there, so its JSON tail-parse came back null in r7/r8. The printed
@@ -111,7 +34,7 @@ object Bench {
     val fullJson = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString(
         s"""{"metric":"total","value":$total,"unit":"sec","queries":{""",
-        ",", s"""},"sf":"$sfDir"}""")
+        ",", s"""},"failed":$failedJson,"sf":"$sfDir"}""")
     // A SPARK_GRAFT_ONLY-filtered run must not overwrite the full-suite
     // artifact: round-over-round totals diffed from bench_full_last.json
     // are meaningless if a 4-query targeted run replaced the 196-query
@@ -128,14 +51,96 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(fullPath),
       fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(e) =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $fullPath: $e")
     }
-    val slowest = results.toSeq.sortBy(-_._2).take(40)
+    val slowest = results.sortBy(-_._2).take(40)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$slowest,"full":"$fullPath","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$slowest,"failed":$failedJson,"full":"$fullPath","sf":"$sfDir"}""")
     graft.queries.FrameCache.clear()
     spark.stop()
   }
+
+  /** Runs each query once untimed, then `reps` timed runs, then the
+    * storage sweep, in deterministic SORTED order. Returns the min timed
+    * run of every query that succeeded, and the names of the queries
+    * that threw: a failed query is never reported as a timing, so its
+    * time-to-failure cannot pass for a fast run or inflate the total.
+    *
+    * Sorted order: the registry is an immutable HashMap whose iteration
+    * order reshuffles globally whenever a key is added — so every round
+    * that registered a query silently ran a DIFFERENT suite permutation,
+    * rotating the position-dependent artifacts (JIT-first windows,
+    * shared-index build riding, storage pressure) onto new victims and
+    * making round-over-round per-query diffs partly positional noise.
+    * Alphabetical order is stable under insertion (only neighbors shift)
+    * and clusters each family with its shared FrameCache artifacts, so an
+    * index build rides the family's first query instead of a random
+    * stranger.
+    */
+  def runSuite(spark: SparkSession, sfDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      reps: Int): (Seq[(String, Double)], Seq[String]) = {
+    val runs = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      // Per-plan untimed warmup (JMH-style): run each query once just
+      // before its timed reps so whole-stage codegen + JIT compile
+      // outside the measured window — the timed pass then reports
+      // steady-state engine throughput, not Janino compile time
+      // (~0.5-1.5 s per distinct plan, pure noise at any real scale
+      // where a plan runs for minutes). Warmup runs at the SAME sfDir:
+      // AQE re-plans (and re-codegens) differently per data size, so a
+      // smaller-SF warmup only partially transfers.
+      // Warmup and timed reps are FUSED per query (warm up q, time q,
+      // THEN sweep) rather than warmup-all-then-time-all: the sweep
+      // between a query's warmup and its timed pass would force every
+      // reps=1 timed run (the default mode) to rebuild its own
+      // query-private persists inside the measured window — a cost
+      // neither a solo warm-min measurement nor the pre-sweep harness
+      // paid, so round-over-round diffs would show phantom regressions.
+      // Fused, a query's timed run rides exactly its own warmup's frames
+      // (the solo-run semantics) while other queries' private storage is
+      // still gone before it starts.
+      try { fn(spark, sfDir).queryExecution.toRdd.count(); () }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warmup $name failed: $e")
+      }
+      val times = (0 until reps).map { _ =>
+        val t0 = System.nanoTime()
+        // Materialize FULL output rows, not df.count(): an Aggregate on
+        // top lets Catalyst prune the query's own projections, so a
+        // map-only query (redaction, formatting, scoring) would be timed
+        // as a bare scan. toRdd computes every output column per row —
+        // the same work DuckDB's fetchall pays in the comparison.
+        Try(fn(spark, sfDir).queryExecution.toRdd.count())
+          .map(_ => (System.nanoTime() - t0) / 1e9)
+      }
+      times.collectFirst { case Failure(e) => e }.foreach(e =>
+        System.err.println(s"[bench] $name FAILED: $e"))
+      sweepPrivateStorage(spark)
+      name -> times
+    }
+    val (ok, failed) = runs.partition(_._2.forall(_.isSuccess))
+    (ok.map { case (name, times) => name -> times.map(_.get).min }, failed.map(_._1))
+  }
+
+  // Per-query storage sweep: unpersist every RDD that is NOT backing
+  // a shared FrameCache artifact (index/sketch/edge-cache frames keyed
+  // by input identity). Query-PRIVATE persists and localCheckpoints
+  // (iterative-round frontiers, one-shot union-find edge caches)
+  // otherwise accumulate across a 200-query one-JVM suite and evict
+  // each other's hot frames — at sf10 that turned three committed
+  // suite entries into storage-eviction artifacts 2-11x above their
+  // solo plan cost. A real cluster spreads these caches over many
+  // executors' memory; sweeping per query makes the committed suite
+  // number the PLAN's cost, which is the quantity that scales.
+  private def sweepPrivateStorage(spark: SparkSession): Unit =
+    try {
+      val keep = graft.queries.FrameCache.ownedRddIds(spark)
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!keep.contains(id)) { rdd.unpersist(blocking = false); () }
+      }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] storage sweep failed: $e")
+    }
 }

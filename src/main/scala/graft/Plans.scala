@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-audit dump: `explain("formatted")` for the headline queries, with
@@ -208,18 +207,10 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      // the cluster deployment model: graft's optimizer rules arrive
-      // with the session, same as Verify/Bench/SparkTestBase — without
-      // this the j9 audit prints the un-rewritten nested-loop plan and
-      // contradicts its own Expected line
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // graft's optimizer rules arrive with the session — without them
+    // the j9 audit prints the un-rewritten nested-loop plan and
+    // contradicts its own Expected line
+    val spark = LocalSession(4)
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of the headline queries\n\n")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query cost decomposition for the optimization rounds: splits a
   * query invocation into (1) DataFrame construction (query-function
   * body: reads, FrameCache hits, driver-side control collects),
@@ -17,14 +15,7 @@ object QProfile {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     def t[A](body: => A): (Double, A) = {
       val t0 = System.nanoTime(); val a = body; ((System.nanoTime() - t0) / 1e9, a)
     }

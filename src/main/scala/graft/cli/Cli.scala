@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
-import graft.Schemas
+import graft.{LocalSession, Schemas}
 import graft.pipelines.{ClinicalPipeline, LoadPipeline, MafPipeline, StudyValidator}
 import graft.sources.{SynapseStore, Tsv}
 import graft.validation.Rules
@@ -56,18 +56,9 @@ private[cli] object CliUtil {
     */
   def withSession[T](f: SparkSession => T): T = {
     val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = existing.getOrElse {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val s = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    val spark = existing.getOrElse(LocalSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+      sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _).toSeq: _*))
     try f(spark) finally if (existing.isEmpty) spark.stop()
   }
 

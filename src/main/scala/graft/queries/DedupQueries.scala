@@ -551,7 +551,9 @@ object DedupQueries {
     // pipeline is ~10 small stages over the byte-width gram cache —
     // compiled at the cache's width with AQE's per-stage
     // materialization barriers off, it runs as ONE job of tiny stages.
-    // Measured 2.0 → 0.73 s at sf0.1/32c (PpjProfile), identical rows.
+    // Measured 2.0 → 0.73 s at sf0.1/32c, identical rows
+    // (OPTIMIZATION_r15.md, "Shared gram cache width + pinned
+    // dd_prefix_join").
     Tuned.pinned(s, TextQueries.gramWidth(s, dir))(prefixJoinOf(grams))
   }
 

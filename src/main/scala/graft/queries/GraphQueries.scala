@@ -67,12 +67,13 @@ object GraphQueries {
     * adaptive execution OFF, so the per-round plans compile STATIC.
     * With AQE on, every `localCheckpoint` materializes its stages as
     * separate blocking jobs (measured 60–300 ms each on a 32-core
-    * local master — GraphProfile5) and the r14 LAZY checkpoints
-    * additionally RECOMPUTED all prior rounds inside the final fused
-    * job (per-round stage runSum grew 402→1120 ms — GraphProfile8).
-    * Static width-matched plans with EAGER checkpoints run each round
-    * exactly once as one tiny job: sssp 1.85 → 0.82 s at 32 cores
-    * (GraphProfile9), bit-equal output. AQE contributes nothing to
+    * local master) and the r14 LAZY checkpoints additionally
+    * RECOMPUTED all prior rounds inside the final fused job (per-round
+    * stage runSum grew 402→1120 ms). Static width-matched plans with
+    * EAGER checkpoints run each round exactly once as one tiny job:
+    * sssp 1.85 → 0.82 s at 32 cores, bit-equal output. The job/stage
+    * accounting and the A/B ladder are in OPTIMIZATION_r15.md,
+    * "Wave 1". AQE contributes nothing to
     * these rounds at any scale: join strategy is hinted, the cache
     * side's partitioning is fixed, and round frames are node-sized.
     */

@@ -765,9 +765,10 @@ object RefQueries {
     // Tuned.withWidth (the graph/ppjoin static width-matched recipe)
     // read 2.72/2.81 s vs 2.79 baseline at sf0.1/32c reps=1 — the
     // reps=1 cost is dominated by tiered-JIT warmup of the 37-rule
-    // fused pass's generated code (V18Profile3: exec 5.95 → 1.45 →
-    // 0.63 → 0.59 s across identical runs), not by task width; the
-    // steady-state floor is ~1.8 s with or without the wrap.
+    // fused pass's generated code (exec 5.95 → 1.45 → 0.63 → 0.59 s
+    // across identical runs), not by task width; the steady-state floor
+    // is ~1.8 s with or without the wrap (OPTIMIZATION_r15.md,
+    // "Negative results").
     import s.implicits._
     import graft.validation.{PortalRules, Rules}
     val customer = Tables.customer(s, dir)

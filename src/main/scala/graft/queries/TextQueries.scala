@@ -1619,7 +1619,7 @@ object TextQueries {
         lit(WsBuckets)) < col("thr"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).cast("long").as("sum_ids"))
-    broadcast(rates).join(kept, Seq("source"), "left")
+    rates.join(kept, Seq("source"), "left")
       .select(col("source"), col("n_docs"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("sum_ids"), lit(0L)).as("sum_ids"),

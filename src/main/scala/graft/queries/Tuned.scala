@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   *    `cpus` near-empty tasks on KB–MB frames;
   *  - with AQE on, every exchange of such a query materializes as its
   *    own blocking stage job (measured 60–300 ms apiece on a 32-core
-  *    local master — GraphProfile5), so a 10-stage query pays ~10 job
-  *    round-trips regardless of data volume.
+  *    local master — OPTIMIZATION_r15.md, "Wave 1"), so a 10-stage
+  *    query pays ~10 job round-trips regardless of data volume.
   *
   * The cure: derive the cache width from DATA BYTES (never core count),
   * and compile the consuming query STATIC at that width — one job, tiny

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale proof for dd_incremental's per-batch-cost claim (test scope,
@@ -12,13 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32)
 
     def sigs(df: org.apache.spark.sql.DataFrame) =
       graft.queries.DedupQueries.minhashSigsFrame(df)

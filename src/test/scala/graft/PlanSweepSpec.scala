@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.{Cross, FullOuter, Inner, JoinType, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, LogicalPlan}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase.{sf001, spark}
@@ -13,6 +15,10 @@ import graft.SparkTestBase.{sf001, spark}
   * how per-corpus constants (total token count, centroid tables, scale
   * factors) reach every row — those queries are allowlisted BY NAME and
   * re-justified here so additions stay deliberate.
+  *
+  * The same sweep also rejects broadcast() hints that Spark must drop: a
+  * hint on a join side its join type cannot build is dead code that
+  * reads as a plan decision and logs a HintErrorLogger line per query.
   */
 class PlanSweepSpec extends AnyFunSuite {
 
@@ -32,11 +38,18 @@ class PlanSweepSpec extends AnyFunSuite {
     "a15_hll_union" // two 1-row sketch-rollup frames (union estimate × per-source rollup) combined into the single output row
   )
 
+  /** Every registered query, built once for both checks: its optimized
+    * logical plan and its physical plan, rendered. */
+  private lazy val plans: Seq[(String, LogicalPlan, String)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val qe = fn(spark, sf001).queryExecution
+      (name, qe.optimizedPlan, qe.sparkPlan.toString)
+    }
+
   test("no cartesian/nested-loop join in any registered query plan (sf0.001)") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val unusedAllow = scala.collection.mutable.Set.empty[String] ++= broadcastScalarAllowlist
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sf001).queryExecution.sparkPlan.toString
+    plans.foreach { case (name, _, plan) =>
       val hasCross = plan.contains("CartesianProduct")
       val hasBnlj = plan.contains("BroadcastNestedLoopJoin")
       if (hasCross)
@@ -52,5 +65,23 @@ class PlanSweepSpec extends AnyFunSuite {
     // keep the allowlist honest: every entry must still be needed
     assert(unusedAllow.isEmpty,
       s"allowlist entries no longer needed (plan improved? remove them): $unusedAllow")
+  }
+
+  test("no broadcast hint on a join side its join type cannot build (sf0.001)") {
+    def hinted(h: Option[HintInfo]): Boolean = h.exists(_.strategy.contains(BROADCAST))
+    def buildsLeft(t: JoinType): Boolean = t == Inner || t == Cross || t == RightOuter
+    def buildsRight(t: JoinType): Boolean = t != RightOuter && t != FullOuter
+    val offenders = plans.flatMap { case (name, optimized, _) =>
+      optimized.collectWithSubqueries { case j: Join => j }.flatMap { j =>
+        Seq(
+          Option.when(hinted(j.hint.leftHint) && !buildsLeft(j.joinType))(
+            s"$name: broadcast hint on the left side of a ${j.joinType} join"),
+          Option.when(hinted(j.hint.rightHint) && !buildsRight(j.joinType))(
+            s"$name: broadcast hint on the right side of a ${j.joinType} join")
+        ).flatten
+      }
+    }
+    assert(offenders.isEmpty,
+      s"broadcast hints Spark cannot honour:\n  ${offenders.mkString("\n  ")}")
   }
 }

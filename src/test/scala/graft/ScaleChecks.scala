@@ -33,13 +33,7 @@ object ScaleChecks {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/testdata-sf1")
     val what = args.lift(1).getOrElse("all")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(32)
     if (what == "knn" || what == "all") knnAccounting(spark, dir)
     if (what == "simhash" || what == "all") simhashEquivalence(spark, dir)
     if (what == "prefix" || what == "all") prefixStability(spark, dir)

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole ScalaTest run (sessions are
-  * expensive; suites only read). Mirrors the driver config: UTC, small
-  * shuffle-partition count sized to local cores.
+  * expensive; suites only read), built with the mains' session policy
+  * ([[LocalSession]]) on 4 cores.
   */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = LocalSession(4, "spark.app.name" -> "graft-test")
     // Test-run teardown: drop FrameCache's persisted frames with the
     // session (suites share one session, so per-suite clears would
     // defeat the cache; end-of-JVM is the right boundary).

@@ -27,15 +27,9 @@ object StreamScale {
     val dir = args.headOption.getOrElse("/root/repo/testdata-sf1")
     val nSplits = args.lift(1).map(_.toInt).getOrElse(20)
     val repl = args.lift(2).map(_.toInt).getOrElse(1)
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    implicit val spark: SparkSession = graft.LocalSession(32,
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import EventStreams.Event
 
