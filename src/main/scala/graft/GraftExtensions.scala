@@ -10,8 +10,8 @@ import graft.functions.{AsciiClassCount, Format12g, MinHashSigs, PyTitleCase,
 /** SQL-surface registration of the engine's custom expressions, for
   * cluster deployment via `spark.sql.extensions=graft.GraftExtensions`
   * (every session built on the cluster gets the functions; no per-session
-  * registration code). The same registrations are available per-session
-  * through [[graft.functions.Fns.registerAll]].
+  * registration code). [[graft.LocalSession]] installs it on every
+  * session the mains and tests build.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.types._
-
-/** Explicit schema contracts (SURVEY §1, §7 build-order item 1) — the
+/** Explicit output contracts (SURVEY §1, §7 build-order item 1) — the
   * places where the reference re-asserts schema facts post-hoc become
-  * declared `StructType`s here, so scans read exactly the declared shape
-  * and contract checks are driver-side set arithmetic.
+  * declared column and file sets here, so contract checks are
+  * driver-side set arithmetic.
   */
 object Schemas {
 
@@ -42,30 +40,6 @@ object Schemas {
     "vcf_qual", "Annotation_Status", "Peptide", "HLA_Allele",
     "MHCflurry_2.1.1_affinity_nm", "MHCflurry_2.1.1_presentation_score")
 
-  private val longCols = Set(
-    "Entrez_Gene_Id", "Start_Position", "End_Position", "n_ref_count",
-    "n_alt_count", "n_depth", "t_depth", "t_ref_count", "t_alt_count",
-    "ALLELE_NUM", "DISTANCE", "HGVS_OFFSET", "MOTIF_POS", "vcf_pos")
-
-  private val doubleCols = Set(
-    "Score", "AA_AF", "AF", "AFR_AF", "AMR_AF", "ASN_AF", "EAS_AF", "EA_AF",
-    "EUR_AF", "SAS_AF", "MOTIF_SCORE_CHANGE", "gnomADe_AF", "gnomADe_AFR_AF",
-    "gnomADe_AMR_AF", "gnomADe_ASJ_AF", "gnomADe_EAS_AF", "gnomADe_FIN_AF",
-    "gnomADe_NFE_AF", "gnomADe_OTH_AF", "gnomADe_SAS_AF", "vcf_qual",
-    "MHCflurry_2.1.1_affinity_nm", "MHCflurry_2.1.1_presentation_score")
-
-  /** The contract as a typed schema: genomic positions/counts are longs,
-    * allele frequencies/scores doubles, everything else strings (the
-    * reference's TSVs are untyped at rest; this is the Spark-side type
-    * assignment that keeps integer columns out of pandas' float trap,
-    * SURVEY §2.1 K2).
-    */
-  val mafSchema: StructType = StructType(RequiredMafCols.map { c =>
-    val t: DataType =
-      if (longCols(c)) LongType else if (doubleCols(c)) DoubleType else StringType
-    StructField(c, t, nullable = true)
-  })
-
   /** Global required-output set (reference `utils.py:11-22`). */
   val RequiredOutputFiles: Seq[String] = Seq(
     "data_clinical_patient.txt", "data_clinical_sample.txt",
@@ -73,30 +47,4 @@ object Schemas {
     "data_mutations.txt", "meta_mutations.txt",
     "data_gene_signatures.txt", "meta_gene_signatures.txt",
     "data_rna_seq_mrna.txt", "meta_rna_seq_mrna.txt")
-
-  /** Clinical-side required set (reference `clinical.py:64-71`). */
-  val RequiredClinicalFiles: Seq[String] = Seq(
-    "data_clinical_patient.txt", "data_clinical_sample.txt",
-    "cases_sequenced.txt", "cases_all.txt",
-    "meta_clinical_patient.txt", "meta_clinical_sample.txt")
-
-  /** Oncotree mapping control table (reference `clinical.py:320-327`). */
-  val oncotreeMappingSchema: StructType = StructType(Seq(
-    StructField("TCGA_Study", StringType),
-    StructField("AMADEUS_Study", StringType),
-    StructField("Dataset", StringType),
-    StructField("ONCOTREE_CODE", StringType)))
-
-  /** cli→cbio attribute mapping control table (reference
-    * `clinical.py:425-437`, `clinical.py:152-166`).
-    */
-  val attrMappingSchema: StructType = StructType(Seq(
-    StructField("iATLAS_attribute", StringType),
-    StructField("NORMALIZED_HEADER", StringType),
-    StructField("ATTRIBUTE_TYPE", StringType),
-    StructField("DATA_TYPE", StringType),
-    StructField("DESCRIPTION", StringType),
-    StructField("DISPLAY_NAME", StringType),
-    StructField("PRIORITY", StringType),
-    StructField("Case", StringType)))
 }

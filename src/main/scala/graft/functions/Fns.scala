@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Composable column functions reproducing the reference's scalar-function
@@ -18,17 +18,10 @@ object Fns {
   def qcol(name: String): Column = col(s"`$name`")
 
   /** F1 — strip the first occurrence of the literal `"_" + columnName
-    * .toLowerCase` from every value of the column (reference
-    * `clinical.py:98-133`: `str.replace(suffix, "", n=1, regex=False)`).
-    */
-  def stripColumnSuffix(c: Column, columnName: String): Column = {
-    val suffix = "_" + columnName.toLowerCase
-    ReplaceFirst.replaceFirst(c, lit(suffix), lit(""))
-  }
-
-  /** F1 applied over all string columns of a frame, with the reference's
-    * special case: column `AMADEUS_STUDY` strips `"_amadeus"`
-    * (`clinical.py:109-115`).
+    * .toLowerCase` from every value of each string column (reference
+    * `clinical.py:98-133`: `str.replace(suffix, "", n=1, regex=False)`),
+    * with the reference's special case: column `AMADEUS_STUDY` strips
+    * `"_amadeus"` (`clinical.py:109-115`).
     */
   def stripSuffixesFromStringColumns(df: DataFrame): DataFrame = {
     val stringCols = df.schema.fields
@@ -94,35 +87,5 @@ object Fns {
   def sanitizeCancerType(raw: String): String = {
     val s = Option(raw).getOrElse("").replace(" ", "_").replace(",", "").replace("/", "_")
     if (s.isEmpty || s == "NA") "no_oncotree_code" else s
-  }
-
-  /** Register every custom expression for SQL use in THIS session (the
-    * cluster-wide path is `spark.sql.extensions=graft.GraftExtensions`).
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-    def intLit(e: Expression): Int = e match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(s"expected int literal, got $other")
-    }
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "replace_first", exprs => ReplaceFirst(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "format_12g", exprs => Format12g(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash60", exprs => SimHash60(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sigs", exprs => MinHashSigs(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "ws_token_count", exprs => WsTokenCount(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "ascii_class_count", exprs => AsciiClassCount(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "winnow_fingerprints", exprs => WinnowFingerprints(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "py_title", exprs => PyTitleCase(exprs.head), "built-in")
   }
 }

@@ -34,12 +34,6 @@ object Hashing {
   def md5LongSeeded(seed: Int, c: Column): Column =
     md5Long(concat_ws(":", lit(seed.toString), c))
 
-  /** The same seeded hash as a SQL-expression string over a lambda
-    * variable — for use inside `transform(...)` lambdas in `expr(...)`.
-    */
-  def md5LongSeededSql(seed: Int, varName: String): String =
-    s"CAST(conv(substring(md5(concat('$seed', ':', $varName)), 1, 15), 16, 10) AS BIGINT)"
-
   /** DuckDB SQL fragment computing the identical seeded hash. */
   def duckMd5Long(seed: Int, sqlExpr: String): String =
     s"('0x' || substr(md5('$seed' || ':' || ($sqlExpr)), 1, 15))::BIGINT"

@@ -251,11 +251,6 @@ object ClinicalPipeline {
       .drop("__src", "__pos", "__rn")
   }
 
-  /** The 4 `#`-prefixed cBioPortal metadata lines for a frame's columns,
-    * from the attribute-metadata table (replaces the reference's
-    * insert_clinical_metadata.py subprocess; `clinical.py:550-620`).
-    * Missing attributes fall back to the column name / STRING / 1.
-    */
   /** attrMeta as a driver-side map: header facts per normalized column
     * (shared by the single-file and parted header paths so they cannot
     * diverge).
@@ -267,6 +262,11 @@ object ClinicalPipeline {
       .map(r => r.getString(0) -> (r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
       .toMap
 
+  /** The 4 `#`-prefixed cBioPortal metadata lines for a frame's columns,
+    * from the attribute-metadata table (replaces the reference's
+    * insert_clinical_metadata.py subprocess; `clinical.py:550-620`).
+    * Missing attributes fall back to the column name / STRING / 1.
+    */
   def cbioHeaderBlock(columns: Seq[String], attrMeta: DataFrame): Seq[String] = {
     val meta = attrMetaMap(attrMeta)
     def line(f: ((String, String, String, String)) => String, dflt: String => String) =
@@ -306,17 +306,6 @@ object ClinicalPipeline {
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** Per-dataset export (reference `clinical.py:922-950`): P3 filter →
-    * P5 drop-all-NA → headered patient/sample TSVs + case lists. Returns
-    * the V1–V7-style report rows for the dataset.
-    *
-    * `partedSink = true` is the 100×-scale mode: the clinical outputs are
-    * written as cbio dataset DIRECTORIES through the distributed DSv2
-    * sink — one part per partition, each carrying the full header block,
-    * no single-task `coalesce(1)` funnel — and read back identically by
-    * `format("cbio")` / [[graft.sources.Tsv.read]]. The default keeps the
-    * reference's single-file parity surface for small per-study outputs.
-    */
   /** The two clinical meta files every study package carries, written
     * next to their data files — ONE definition shared by StudyRunner and
     * ClinicalCli so the key-value contract cannot drift between the
@@ -336,6 +325,17 @@ object ClinicalPipeline {
       "data_filename" -> "data_clinical_sample.txt"))
   }
 
+  /** Per-dataset export (reference `clinical.py:922-950`): P3 filter →
+    * P5 drop-all-NA → headered patient/sample TSVs + case lists. Returns
+    * the V1–V7-style report rows for the dataset.
+    *
+    * `partedSink = true` is the 100×-scale mode: the clinical outputs are
+    * written as cbio dataset DIRECTORIES through the distributed DSv2
+    * sink — one part per partition, each carrying the full header block,
+    * no single-task `coalesce(1)` funnel — and read back identically by
+    * `format("cbio")` / [[graft.sources.Tsv.read]]. The default keeps the
+    * reference's single-file parity surface for small per-study outputs.
+    */
   def exportDataset(patient: DataFrame, sample: DataFrame, dataset: String,
                     attrMeta: DataFrame, studyId: String, outDir: String,
                     partedSink: Boolean = false): Seq[(String, Long, Boolean)] = {

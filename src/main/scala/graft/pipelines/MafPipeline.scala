@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StringType
 
 import graft.functions.Fns
 import graft.sources.Tsv
+import graft.validation.Rules
 
 /** The reference's MAF (mutation) pipeline (`maf.py main()`, SURVEY §3.2)
   * as a library. The reference's chunk → process-pool → docker annotator
@@ -171,12 +172,9 @@ object MafPipeline {
     val inRows = input.count()
     val outRows = output.count()
     val dupRows = outRows - output.distinct().count()
-    val barcodeDiff = input.select(col("Tumor_Sample_Barcode").as("k"), lit(1).as("side"))
-      .unionByName(output.select(col("Tumor_Sample_Barcode").as("k"), lit(2).as("side")))
-      .groupBy(col("k"))
-      .agg(max(when(col("side") === 1, 1).otherwise(0)).as("in_a"),
-        max(when(col("side") === 2, 1).otherwise(0)).as("in_b"))
-      .agg(sum(when(col("in_a") =!= col("in_b"), 1L).otherwise(0L))).head().getLong(0)
+    val (lost, gained) = Rules.setDifference(input, col("Tumor_Sample_Barcode"),
+      output, col("Tumor_Sample_Barcode"))
+    val barcodeDiff = lost + gained
     val alleleChecks =
       if (Seq("t_ref_count", "t_alt_count").forall(output.columns.contains)) {
         val nas = output.agg(
@@ -203,15 +201,10 @@ object MafPipeline {
     */
   def barcodesMatchNeoantigen(spark: SparkSession, maf: DataFrame, neo: DataFrame): DataFrame = {
     import spark.implicits._
-    val diff = maf.select(col("Tumor_Sample_Barcode").cast(StringType).as("k"), lit(1).as("side"))
-      .unionByName(neo.select(col("Sample_ID").cast(StringType).as("k"), lit(2).as("side")))
-      .groupBy(col("k"))
-      .agg(max(when(col("side") === 1, 1).otherwise(0)).as("in_a"),
-        max(when(col("side") === 2, 1).otherwise(0)).as("in_b"))
-      .agg(sum(when(col("in_a") === 1 && col("in_b") === 0, 1L).otherwise(0L)),
-        sum(when(col("in_b") === 1 && col("in_a") === 0, 1L).otherwise(0L))).head()
-    Seq(("maf_not_in_neo", diff.getLong(0), diff.getLong(0) == 0L),
-      ("neo_not_in_maf", diff.getLong(1), diff.getLong(1) == 0L))
+    val (mafOnly, neoOnly) = Rules.setDifference(
+      maf, col("Tumor_Sample_Barcode").cast(StringType), neo, col("Sample_ID").cast(StringType))
+    Seq(("maf_not_in_neo", mafOnly, mafOnly == 0L),
+      ("neo_not_in_maf", neoOnly, neoOnly == 0L))
       .toDF("rule", "value", "passed")
   }
 

@@ -39,15 +39,10 @@ object StudyRunner {
     * [[StudyResult.missingOutputs]] and warns, for studies that
     * legitimately carry a subset of the global data types.
     */
-  /** `partedSink = true` writes the clinical outputs as distributed cbio
-    * dataset directories (one part per partition, header per part) —
-    * the 100× mode; default keeps the reference's single-file surface.
-    */
   def run(spark: SparkSession, storeRoot: String, in: StudyInputs,
           dataset: String, studyId: String, outDir: String,
           outputFolderId: String, versionComment: String,
-          strictUpload: Boolean = false,
-          partedSink: Boolean = false): StudyResult = {
+          strictUpload: Boolean = false): StudyResult = {
     def fetch(id: String): DataFrame =
       spark.read.format("synapse").option("store", storeRoot).load(id)
 
@@ -63,8 +58,7 @@ object StudyRunner {
       broadcast(fetch(in.oncotreeNamesId)), Seq("ONCOTREE_CODE"), "left")
     val (patient, sample) = ClinicalPipeline.splitPatientSample(enriched, attrMapping)
     val exportChecks = ClinicalPipeline.exportDataset(
-      patient, sample, dataset, fetch(in.attrMetaId), studyId, outDir,
-      partedSink = partedSink)
+      patient, sample, dataset, fetch(in.attrMetaId), studyId, outDir)
     // the export writes above materialized the observed chain — the V16
     // metric is ready without any extra job
     val clinicalChecks =

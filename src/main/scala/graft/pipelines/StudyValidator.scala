@@ -6,11 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Schemas
 import graft.sources.Tsv
+import graft.validation.{Async, PortalRules}
 
 /** The reference's cross-file validation entry point (`validate.py main()`,
-  * SURVEY §3.3): load every required output (S6), check presence (V1),
-  * the MAF column contract (V13), and barcode↔neoantigen consistency
-  * (V12, via [[MafPipeline.barcodesMatchNeoantigen]]).
+  * SURVEY §3.3): load the study's outputs (S6), check presence (V1),
+  * the MAF column contract (V13), barcode↔neoantigen consistency
+  * (V12, via [[MafPipeline.barcodesMatchNeoantigen]]) and the portal
+  * validator's rule set (V18, [[graft.validation.PortalRules.check]]).
   */
 object StudyValidator {
 
@@ -35,27 +37,31 @@ object StudyValidator {
   def missingMafColumns(maf: DataFrame): Seq[String] =
     MafPipeline.missingRequiredColumns(maf, Schemas.RequiredMafCols)
 
-  /** The full cross-file report: (rule, detail, passed). */
+  /** The full cross-file report: (rule, detail, passed). Each data file
+    * the rules check is read (and schema-inferred) once, here; the
+    * portal engine gets those frames, and the V12 neoantigen check runs
+    * alongside it.
+    */
   def report(spark: SparkSession, dir: String,
              neo: Option[DataFrame] = None): Seq[(String, String, Boolean)] = {
     val missing = missingFiles(dir)
-    val outputs = loadAllOutputs(spark, dir)
+    val outputs = loadAllOutputs(spark, dir, PortalRules.DataFiles)
+    val maf = outputs(PortalRules.MafFile)
     val fileRule = ("required_files", missing.mkString(","), missing.isEmpty)
-    val mafRules = outputs.getOrElse("data_mutations.txt", None).toSeq.flatMap { maf =>
-      val missingCols = missingMafColumns(maf)
-      val colRule = ("maf_column_contract", missingCols.mkString(","), missingCols.isEmpty)
-      val neoRules = neo.toSeq.flatMap { n =>
-        MafPipeline.barcodesMatchNeoantigen(spark, maf, n).collect().toSeq
-          .map(r => (r.getString(0), r.getLong(1).toString, r.getBoolean(2)))
-      }
-      colRule +: neoRules
+    val neoRules = for (m <- maf; n <- neo) yield Async(spark)(
+      MafPipeline.barcodesMatchNeoantigen(spark, m, n).collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1).toString, r.getBoolean(2))))
+    val colRules = maf.map { m =>
+      val missingCols = missingMafColumns(m)
+      ("maf_column_contract", missingCols.mkString(","), missingCols.isEmpty)
     }
     // V18 — the portal validator's structural + strict-MAF rule set over
     // the same package (reference `validate.py:198-226` runs the external
     // validateData subprocess here; PortalRules is its native twin)
-    val portalRules = graft.validation.PortalRules
-      .validateStudyPackage(spark, dir).collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1).toString, r.getBoolean(2)))
-    (fileRule +: mafRules) ++ portalRules
+    val portalRules = PortalRules.check(spark, dir,
+      outputs(PortalRules.SampleFile), outputs(PortalRules.PatientFile), maf,
+      PortalRules.caseListIds(spark, dir))
+      .map { case (rule, v, ok) => (rule, v.toString, ok) }
+    (fileRule +: colRules.toSeq) ++ neoRules.toSeq.flatMap(Async.await) ++ portalRules
   }
 }

@@ -27,8 +27,7 @@ object DedupQueries {
   val K = 12
   val B = 4
   val R = 3
-  /** SimHash: 60-bit sketch, 4 bands x 15 bits, pair threshold. */
-  val SimBits = 60
+  /** SimHash pair threshold (60-bit sketch, 4 bands x 15 bits). */
   val HammingMax = 3
 
   /** documents + `toks` (normalized tokens) + `shingles` (3-token). */

@@ -756,7 +756,8 @@ object RefQueries {
     * id-containment as distributed aggregates/anti-joins over frames
     * derived deterministically from the corpus, plus the structural
     * package checks run against a real (small, deterministic) study
-    * package written through the cbio sinks. Field checks are ONE
+    * package written through the cbio sinks, all through the one engine
+    * [[graft.validation.PortalRules.check]]. Field checks are ONE
     * aggregate pass over the MAF-shaped fact frame; each containment is
     * one anti-join shuffle — the shapes that survive a 100 TB MAF.
     */
@@ -770,7 +771,6 @@ object RefQueries {
     // is ~1.8 s with or without the wrap (OPTIMIZATION_r15.md,
     // "Negative results").
     import s.implicits._
-    import graft.validation.{PortalRules, Rules}
     val customer = Tables.customer(s, dir)
     val pk = pmod(col("c_custkey"), lit(1000L))
     def mkSamples(df: DataFrame): DataFrame = df.select(
@@ -784,38 +784,6 @@ object RefQueries {
       .select(concat(lit("P"), pk.cast(StringType)).as("PATIENT_ID")).distinct()
 
     val maf = v18Maf(s, dir)
-
-    // Launch the fact-side distributed jobs FIRST — the driver-side
-    // package build below (collects + TSV/meta/case-list writes) costs
-    // 1-2 s that would otherwise serialize in front of them.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fieldF = Future(Rules.evaluate(s, maf, PortalRules.mafFieldRules(maf)))
-    val v1F = Future(PortalRules.subsetViolations(samples, "PATIENT_ID", patients, "PATIENT_ID"))
-    // row-level (maf_barcode_in_samples) and distinct (case-list) barcode
-    // containment share ONE anti-join: count + count-distinct over the
-    // same unmatched slice instead of two shuffles of the fact side
-    val barcodesF = Future {
-      // aggregate barcodes to (key, n) BEFORE the anti-join (the
-      // subsetViolations shape): the map-side combine moves |barcodes|
-      // rows instead of the 60M-row fact column
-      val r = maf.groupBy(col("Tumor_Sample_Barcode").as("bk"))
-        .agg(count(lit(1)).as("n"))
-        .join(samples.select(col("SAMPLE_ID").as("bk")).distinct(), Seq("bk"), "left_anti")
-        .agg(coalesce(sum(col("n")), lit(0L)), count(col("bk"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val dupF = Future(Rules.evaluate(s, samples, Seq(Rules.noKeyedDups("SAMPLE_ID")))
-      .head().getLong(1))
-    // tier 6: patient-key uniqueness + orphan patients (patients with no
-    // sample), both over the same small frames
-    val dupPatF = Future(Rules.evaluate(s, patients,
-      Seq(Rules.noKeyedDups("PATIENT_ID"))).head().getLong(1))
-    val orphanF = Future(PortalRules.subsetViolations(
-      patients, "PATIENT_ID", samples, "PATIENT_ID", distinctChild = true))
-    // tier 8: gene-identifier consistency
-    val geneF = Future(PortalRules.hugoEntrezInconsistencies(maf))
 
     // a small deterministic study package through the real sinks; the
     // structural rules then audit actual on-disk meta/header/case-list
@@ -930,50 +898,13 @@ object RefQueries {
           s"case_list_ids: ${sequencedIds.mkString("\t")}\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    val tmp = pkgRoot.toString
-    val structural = PortalRules.structuralReport(tmp)
-
-    // the remaining rule groups need the written package: value rules
-    // read the clinical files, the sequenced contract reads the list
-    val valF = Future(Seq("data_clinical_sample.txt",
-      "data_clinical_patient.txt")
-      .flatMap(n => PortalRules.clinicalValueViolations(s, tmp, n)))
-    val seqF = Future(PortalRules.casesSequencedViolations(
-      s, maf, sequencedIds, samplesSmall, "SAMPLE_ID"))
-    val fieldReport = Await.result(fieldF, Duration.Inf)
-    val (v1, (v2, v3), dup) = (Await.result(v1F, Duration.Inf),
-      Await.result(barcodesF, Duration.Inf), Await.result(dupF, Duration.Inf))
-    val (dupPat, orphans) =
-      (Await.result(dupPatF, Duration.Inf), Await.result(orphanF, Duration.Inf))
-    val valViol = Await.result(valF, Duration.Inf)
-    val numViol = valViol.map(_("number")).sum
-    val boolViol = valViol.map(_("boolean")).sum
-    val survViol = valViol.map(_("survival")).sum
-    val monthsViol = valViol.map(_("months")).sum
-    val naViol = valViol.map(_("na_spelling")).sum
-    val wsViol = valViol.map(_("whitespace")).sum
-    val decViol = valViol.map(_("deceased_months")).sum
-    val geneViol = Await.result(geneF, Duration.Inf)
-    val (unsequenced, unlisted) = Await.result(seqF, Duration.Inf)
-    (structural ++ Seq(
-      ("sample_patient_in_patients", v1, v1 == 0L),
-      ("maf_barcode_in_samples", v2, v2 == 0L),
-      ("case_list_ids_in_samples", v3, v3 == 0L),
-      ("no_dup_sample_id", dup, dup == 0L),
-      ("clinical_no_dup_patient_id", dupPat, dupPat == 0L),
-      ("clinical_orphan_patients", orphans, orphans == 0L),
-      ("clinical_number_attrs_numeric", numViol, numViol == 0L),
-      ("clinical_boolean_attrs_boolean", boolViol, boolViol == 0L),
-      ("clinical_survival_status_format", survViol, survViol == 0L),
-      ("clinical_survival_months_nonneg", monthsViol, monthsViol == 0L),
-      ("clinical_na_spellings", naViol, naViol == 0L),
-      ("clinical_value_whitespace", wsViol, wsViol == 0L),
-      ("clinical_deceased_months_present", decViol, decViol == 0L),
-      ("maf_hugo_entrez_consistent", geneViol, geneViol == 0L),
-      ("cases_sequenced_ids_have_mutations", unsequenced, unsequenced == 0L),
-      ("maf_barcodes_in_cases_sequenced", unlisted, unlisted == 0L)))
+    // the containment and key rules check the whole customer-derived
+    // frames, not the ≤500-sample package; the case-list ids are the
+    // MAF's barcodes. The value, structural and sequenced rules read the
+    // package.
+    graft.validation.PortalRules.check(s, pkgRoot.toString, Some(samples),
+      Some(patients), Some(maf), Some(maf.select(col("Tumor_Sample_Barcode"))))
       .toDF("rule", "value", "passed")
-      .unionByName(fieldReport)
   }
 
   /** The v18 fixture MAF (seeded strict-MAF violations over lineitem),

@@ -2,10 +2,13 @@ package graft.validation
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.concurrent.Future
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.Tsv
 
 /** V18 — the data-level rule set of the external cBioPortal validator the
   * reference shells out to (`validateData.py --no_portal_checks
@@ -25,9 +28,11 @@ import org.apache.spark.sql.functions._
   *    containment anti-join). This is the layer that must scale: the MAF
   *    is the fact table.
   *
-  * [[validateStudyPackage]] runs both layers over a study directory and
-  * is wired into the study lifecycle by
-  * [[graft.pipelines.StudyValidator.report]].
+  * [[check]] is the one engine that runs both layers: over a written
+  * package's own files ([[validateStudyPackage]], and
+  * [[graft.pipelines.StudyValidator.report]] in the study lifecycle) and
+  * over the `v18_portal_rules` fixture
+  * ([[graft.queries.RefQueries.v18PortalRules]]).
   */
 object PortalRules {
 
@@ -457,7 +462,7 @@ object PortalRules {
     * (symbol, id) pair set — the distinct pair projection map-side
     * collapses the fact-sized scan to gene-scale before the shuffle.
     */
-  def hugoEntrezInconsistencies(maf: DataFrame): Long = {
+  private def hugoEntrezInconsistencies(maf: DataFrame): Long = {
     if (!maf.columns.contains("Hugo_Symbol") ||
         !maf.columns.contains("Entrez_Gene_Id")) return 0L
     maf.filter(col("Hugo_Symbol").isNotNull && col("Hugo_Symbol") =!= "" &&
@@ -477,10 +482,10 @@ object PortalRules {
     * the clinical sample-id set join at sample scale.
     * Returns (ids_without_mutations, mutated_not_listed).
     */
-  def casesSequencedViolations(spark: SparkSession, maf: DataFrame,
-                               sequencedIds: Seq[String],
-                               samples: DataFrame,
-                               sampleKey: String): (Long, Long) = {
+  private def casesSequencedViolations(spark: SparkSession, maf: DataFrame,
+                                       sequencedIds: Seq[String],
+                                       samples: DataFrame,
+                                       sampleKey: String): (Long, Long) = {
     import spark.implicits._
     if (sequencedIds.isEmpty || !maf.columns.contains("Tumor_Sample_Barcode"))
       return (0L, 0L)
@@ -510,9 +515,9 @@ object PortalRules {
     * are cast to string first (the package's TSVs are untyped at rest, so
     * a numeric-inferred id must still match its string twin — J2).
     */
-  def subsetViolations(child: DataFrame, childKey: String,
-                       parent: DataFrame, parentKey: String,
-                       distinctChild: Boolean = false): Long = {
+  private def subsetViolations(child: DataFrame, childKey: String,
+                               parent: DataFrame, parentKey: String,
+                               distinctChild: Boolean = false): Long = {
     // Aggregate the child to (key, row-count) BEFORE the anti-join: the
     // child is the fact side (a 60M-row MAF barcode column at sf10) and
     // its key cardinality is sample-scale, so the partial aggregate
@@ -904,13 +909,12 @@ object PortalRules {
     *  - `whitespace` — leading/trailing whitespace in any value silently
     *    creates distinct category values on import (tier 8).
     *
-    * Header parse is driver-side (4 lines). None when the file is absent
-    * or its header block is malformed (the header rule already fires
-    * there).
+    * Header parse is driver-side (4 lines); `raw` is the file's
+    * raw-text scan, built only when a column needs a check. None when the file is absent or its header block is
+    * malformed (the header rule already fires there).
     */
-  def clinicalValueViolations(spark: SparkSession, dir: String,
-                              name: String): Option[Map[String, Long]] = {
-    val p = Paths.get(dir).resolve(name)
+  private def clinicalValueViolations(p: Path,
+                                      raw: => DataFrame): Option[Map[String, Long]] = {
     if (!Files.exists(p)) return None
     clinicalParts(p).headOption.flatMap { part =>
       val lines = headLines(part, 6)
@@ -943,13 +947,7 @@ object PortalRules {
         if (colsPer.values.forall(_.isEmpty) && monthsCols.isEmpty && cols.isEmpty)
           Some(keys.map(_ -> 0L).toMap)
         else {
-          // inferSchema=false: values must be validated against their RAW
-          // text. Inference would re-render them — a clean BOOLEAN column
-          // holding only TRUE/FALSE infers BooleanType, whose string cast
-          // is lowercase "true"/"false", failing '^(NA|TRUE|FALSE)$' on
-          // every row of a perfectly valid column.
-          val dfr = graft.sources.Tsv.read(spark, p.toString,
-            comment = Some('#'), inferSchema = false)
+          val dfr = raw
           val present = dfr.columns.toSet
           // tier-8 value hygiene over EVERY column: alternate NA
           // spellings, and leading/trailing whitespace (both silently
@@ -995,120 +993,143 @@ object PortalRules {
   }
 
   // ---------------------------------------------------------------------
-  // Full package validation (structural + data layers over a study dir)
+  // The rule engine (structural + data layers over a study package)
   // ---------------------------------------------------------------------
 
+  /** The package's data files the data rules check. */
+  val SampleFile = "data_clinical_sample.txt"
+  val PatientFile = "data_clinical_patient.txt"
+  val MafFile = "data_mutations.txt"
+  val DataFiles: Seq[String] = Seq(SampleFile, PatientFile, MafFile)
+
+  /** A package file read back through the comment-skipping TSV scan the
+    * portal importer uses; None when it is absent.
+    */
+  private def scan(spark: SparkSession, p: Path,
+                   inferSchema: Boolean): Option[DataFrame] =
+    if (!Files.exists(p)) None
+    else Some(Tsv.read(spark, p.toString, comment = Some('#'), inferSchema = inferSchema))
+
+  /** The `case_list_ids` of the package's case lists whose key-values
+    * pass `keep`.
+    */
+  private def listedIds(dir: String)(keep: Map[String, String] => Boolean): Seq[String] =
+    listFiles(Paths.get(dir).resolve("case_lists"), "cases_").map(parseKeyValueFile)
+      .filter(keep).flatMap(_.get("case_list_ids").toSeq.flatMap(_.split("\t")))
+
+  /** Every case list's `case_list_ids` in the package at `dir` as one
+    * `id` column (the containment input of [[check]]); None when no list
+    * carries an id.
+    */
+  def caseListIds(spark: SparkSession, dir: String): Option[DataFrame] = {
+    import spark.implicits._
+    val ids = listedIds(dir)(_ => true)
+    if (ids.isEmpty) None else Some(ids.toDF("id"))
+  }
+
   /** Everything `validateData --no_portal_checks --strict_maf_checks`
-    * checks over a written study package, as one report frame
-    * (rule, value, passed). Row data is read back through the same
-    * comment-skipping TSV scan the portal importer uses.
+    * checks, as (rule, value, passed) rows. The engine takes the frames
+    * it checks and the package directory:
+    *
+    *  - the containment, key-uniqueness, strict-MAF field and gene rules
+    *    check `sample`, `patient` and `maf`;
+    *  - `case_list_ids_in_samples` checks the first column of
+    *    `caseListIds` against `sample`'s SAMPLE_ID;
+    *  - the structural and clinical-value rules read the package at
+    *    `dir`, and so does the `cases_sequenced` contract: the package's
+    *    sequenced list and clinical sample file against `maf`.
+    *
+    * A rule whose frame, file or column is absent yields no row. Every
+    * distributed rule is submitted at once ([[Async]]), fact-side jobs
+    * first, and the driver-side structural layer runs while they do.
+    */
+  def check(spark: SparkSession, dir: String, sample: Option[DataFrame],
+            patient: Option[DataFrame], maf: Option[DataFrame],
+            caseListIds: Option[DataFrame]): Seq[(String, Long, Boolean)] = {
+    type Rows = Seq[(String, Long, Boolean)]
+    val root = Paths.get(dir)
+    def ruleRow(rule: String)(v: => Long): Future[Rows] =
+      Async(spark) { val n = v; Seq((rule, n, n == 0L)) }
+    def keyDups(df: DataFrame, key: String): Long =
+      Rules.evaluate(spark, df, Seq(Rules.noKeyedDups(key))).head().getLong(1)
+    def withCol(df: Option[DataFrame], c: String) = df.filter(_.columns.contains(c))
+    val sampleIds = withCol(sample, "SAMPLE_ID")
+    val samplePatients = withCol(sample, "PATIENT_ID")
+    val patients = withCol(patient, "PATIENT_ID")
+    val barcodes = withCol(maf, "Tumor_Sample_Barcode")
+    // one RAW-text scan per clinical file (inferSchema=false), shared by
+    // the value rules and the sequenced contract and built on first use,
+    // inside their tasks. Values must be validated against their written
+    // form: inference would re-render them — a clean BOOLEAN column
+    // holding only TRUE/FALSE infers BooleanType, whose string cast is
+    // lowercase "true"/"false", failing '^(NA|TRUE|FALSE)$' on every row
+    // of a perfectly valid column.
+    lazy val rawSample = scan(spark, root.resolve(SampleFile), inferSchema = false)
+    lazy val rawPatient = scan(spark, root.resolve(PatientFile), inferSchema = false)
+
+    val dataRules: Seq[Future[Rows]] = Seq(
+      maf.map(m => m -> mafFieldRules(m)).filter(_._2.nonEmpty).map {
+        case (m, rules) => Async(spark)(Rules.evaluate(spark, m, rules).collect().toSeq
+          .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))))
+      },
+      for (m <- barcodes; s <- sampleIds) yield ruleRow("maf_barcode_in_samples")(
+        subsetViolations(m, "Tumor_Sample_Barcode", s, "SAMPLE_ID")),
+      for (ids <- caseListIds; s <- sampleIds) yield ruleRow("case_list_ids_in_samples")(
+        subsetViolations(ids, ids.columns.head, s, "SAMPLE_ID", distinctChild = true)),
+      // tier 8: gene-identifier consistency across the MAF
+      maf.map(m => ruleRow("maf_hugo_entrez_consistent")(hugoEntrezInconsistencies(m))),
+      // tier 8: the cases_sequenced list must agree with the MAF in both
+      // directions (listed-but-unmutated, mutated-but-unlisted)
+      barcodes.map(m => Async(spark) {
+        rawSample.filter(_.columns.contains("SAMPLE_ID")).toSeq.flatMap { s =>
+          val seqIds = listedIds(dir)(_.get("stable_id").exists(_.endsWith("_sequenced")))
+          val (unsequenced, unlisted) =
+            casesSequencedViolations(spark, m, seqIds, s, "SAMPLE_ID")
+          Seq(("cases_sequenced_ids_have_mutations", unsequenced, unsequenced == 0L),
+            ("maf_barcodes_in_cases_sequenced", unlisted, unlisted == 0L))
+        }
+      }),
+      for (s <- samplePatients; p <- patients) yield ruleRow("sample_patient_in_patients")(
+        subsetViolations(s, "PATIENT_ID", p, "PATIENT_ID")),
+      sampleIds.map(s => ruleRow("no_dup_sample_id")(keyDups(s, "SAMPLE_ID"))),
+      // tier 6: the patient file's key must be unique too — a duplicated
+      // PATIENT_ID row makes attribute values nondeterministic on import
+      patients.map(p => ruleRow("clinical_no_dup_patient_id")(keyDups(p, "PATIENT_ID"))),
+      // tier 6: a patient with no sample never surfaces anywhere in the
+      // portal — validateData's orphan-patient warning, the mirror of
+      // the sample→patient containment
+      for (s <- samplePatients; p <- patients) yield ruleRow("clinical_orphan_patients")(
+        subsetViolations(p, "PATIENT_ID", s, "PATIENT_ID", distinctChild = true)),
+      // datatype/value conformance over every clinical output that has a
+      // well-formed header (one aggregate pass per file)
+      Some(Async(spark) {
+        val vs = Seq(
+          clinicalValueViolations(root.resolve(SampleFile), rawSample.get),
+          clinicalValueViolations(root.resolve(PatientFile), rawPatient.get)).flatten
+        if (vs.isEmpty) Seq.empty
+        else Seq("clinical_number_attrs_numeric" -> "number",
+          "clinical_boolean_attrs_boolean" -> "boolean",
+          "clinical_survival_status_format" -> "survival",
+          "clinical_survival_months_nonneg" -> "months",
+          "clinical_na_spellings" -> "na_spelling",
+          "clinical_value_whitespace" -> "whitespace",
+          "clinical_deceased_months_present" -> "deceased_months").map {
+          case (rule, k) => val n = vs.map(_(k)).sum; (rule, n, n == 0L)
+        }
+      })).flatten
+    val structural = structuralReport(dir)
+    structural ++ dataRules.flatMap(Async.await)
+  }
+
+  /** [[check]] over the written package at `dir`: the frames it checks
+    * are the package's own data files and its case-list ids are the
+    * package's lists.
     */
   def validateStudyPackage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.sources.Tsv
-    val root = Paths.get(dir)
-    def readIf(name: String): Option[DataFrame] =
-      if (Files.exists(root.resolve(name)))
-        Some(Tsv.read(spark, root.resolve(name).toString, comment = Some('#')))
-      else None
-
-    val sample = readIf("data_clinical_sample.txt")
-    val patient = readIf("data_clinical_patient.txt")
-    val maf = readIf("data_mutations.txt")
-
-    val dataRows = Seq.newBuilder[(String, Long, Boolean)]
-    for (s <- sample; p <- patient if s.columns.contains("PATIENT_ID") &&
-           p.columns.contains("PATIENT_ID")) {
-      val v = subsetViolations(s, "PATIENT_ID", p, "PATIENT_ID")
-      dataRows += (("sample_patient_in_patients", v, v == 0L))
-    }
-    for (s <- sample if s.columns.contains("SAMPLE_ID")) {
-      val dups = Rules.evaluate(spark, s, Seq(Rules.noKeyedDups("SAMPLE_ID")))
-        .head().getLong(1)
-      dataRows += (("no_dup_sample_id", dups, dups == 0L))
-    }
-    // tier 6: the patient file's key must be unique too — a duplicated
-    // PATIENT_ID row makes attribute values nondeterministic on import
-    for (p <- patient if p.columns.contains("PATIENT_ID")) {
-      val dups = Rules.evaluate(spark, p, Seq(Rules.noKeyedDups("PATIENT_ID")))
-        .head().getLong(1)
-      dataRows += (("clinical_no_dup_patient_id", dups, dups == 0L))
-    }
-    // tier 6: a patient with no sample never surfaces anywhere in the
-    // portal — validateData's orphan-patient warning, as a containment
-    // anti-join in the sample→patient direction's mirror
-    for (s <- sample; p <- patient if s.columns.contains("PATIENT_ID") &&
-           p.columns.contains("PATIENT_ID")) {
-      val orphans = subsetViolations(p, "PATIENT_ID", s, "PATIENT_ID",
-        distinctChild = true)
-      dataRows += (("clinical_orphan_patients", orphans, orphans == 0L))
-    }
-    for (m <- maf) {
-      val fieldRules = mafFieldRules(m)
-      if (fieldRules.nonEmpty)
-        Rules.evaluate(spark, m, fieldRules).collect().foreach(r =>
-          dataRows += ((r.getString(0), r.getLong(1), r.getBoolean(2))))
-      for (s <- sample if s.columns.contains("SAMPLE_ID") &&
-             m.columns.contains("Tumor_Sample_Barcode")) {
-        val v = subsetViolations(m, "Tumor_Sample_Barcode", s, "SAMPLE_ID")
-        dataRows += (("maf_barcode_in_samples", v, v == 0L))
-      }
-      // tier 8: gene-identifier consistency across the MAF
-      val geneInconsistent = hugoEntrezInconsistencies(m)
-      dataRows += (("maf_hugo_entrez_consistent", geneInconsistent,
-        geneInconsistent == 0L))
-      // tier 8: the cases_sequenced list must agree with the MAF in both
-      // directions (listed-but-unmutated, mutated-but-unlisted)
-      for (s <- sample if s.columns.contains("SAMPLE_ID") &&
-             m.columns.contains("Tumor_Sample_Barcode")) {
-        val seqIds = listFiles(root.resolve("case_lists"), "cases_")
-          .map(p => parseKeyValueFile(p))
-          .filter(_.get("stable_id").exists(_.endsWith("_sequenced")))
-          .flatMap(_.get("case_list_ids").toSeq.flatMap(_.split("\t").toSeq))
-        val (unsequenced, unlisted) =
-          casesSequencedViolations(spark, m, seqIds, s, "SAMPLE_ID")
-        dataRows += (("cases_sequenced_ids_have_mutations", unsequenced,
-          unsequenced == 0L))
-        dataRows += (("maf_barcodes_in_cases_sequenced", unlisted,
-          unlisted == 0L))
-      }
-    }
-    // Datatype/value conformance over every clinical output that has a
-    // well-formed header (one aggregate pass per file covers NUMBER,
-    // BOOLEAN, and survival-status checks together)
-    val valueViolations = Seq("data_clinical_sample.txt",
-      "data_clinical_patient.txt")
-      .flatMap(n => clinicalValueViolations(spark, dir, n))
-    if (valueViolations.nonEmpty) {
-      val num = valueViolations.map(_("number")).sum
-      val bool = valueViolations.map(_("boolean")).sum
-      val surv = valueViolations.map(_("survival")).sum
-      val months = valueViolations.map(_("months")).sum
-      val naSp = valueViolations.map(_("na_spelling")).sum
-      val ws = valueViolations.map(_("whitespace")).sum
-      val dec = valueViolations.map(_("deceased_months")).sum
-      dataRows += (("clinical_number_attrs_numeric", num, num == 0L))
-      dataRows += (("clinical_boolean_attrs_boolean", bool, bool == 0L))
-      dataRows += (("clinical_survival_status_format", surv, surv == 0L))
-      dataRows += (("clinical_survival_months_nonneg", months, months == 0L))
-      dataRows += (("clinical_na_spellings", naSp, naSp == 0L))
-      dataRows += (("clinical_value_whitespace", ws, ws == 0L))
-      dataRows += (("clinical_deceased_months_present", dec, dec == 0L))
-    }
-    // case-list ids ⊆ clinical sample ids (union of every list's ids)
-    for (s <- sample if s.columns.contains("SAMPLE_ID")) {
-      val listIds = listFiles(root.resolve("case_lists"), "cases_")
-        .flatMap(p => parseKeyValueFile(p).get("case_list_ids").toSeq
-          .flatMap(_.split("\t").toSeq))
-      if (listIds.nonEmpty) {
-        val idsDf = listIds.toDF("id").distinct()
-        val v = subsetViolations(idsDf, "id", s, "SAMPLE_ID")
-        dataRows += (("case_list_ids_in_samples", v, v == 0L))
-      }
-    }
-
-    (structuralReport(dir) ++ dataRows.result())
-      .toDF("rule", "value", "passed")
+    def read(name: String) = scan(spark, Paths.get(dir).resolve(name), inferSchema = true)
+    check(spark, dir, read(SampleFile), read(PatientFile), read(MafFile),
+      caseListIds(spark, dir)).toDF("rule", "value", "passed")
   }
 
   /** DuckDB oracle for the `v18_portal_rules` query

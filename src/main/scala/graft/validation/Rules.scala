@@ -113,6 +113,16 @@ object Rules {
   private def hasDistinctAgg(c: Column): Boolean =
     org.apache.spark.sql.graftbridge.Bridge.hasDistinctAggregate(c)
 
+  /** The pass routing [[evaluate]] uses: (fused single-scan rules,
+    * rules that get their own job). One distinct rule always rides the
+    * fused pass (no Expand below 2 distinct groups); only the 2nd+
+    * split. Exposed for the RulesSpec routing lock.
+    */
+  private[validation] def splitForEvaluation(rules: Seq[Rule]): (Seq[Rule], Seq[Rule]) = {
+    val (distinctAll, plainRules) = rules.partition(r => hasDistinctAgg(r.agg))
+    (plainRules ++ distinctAll.take(1), distinctAll.drop(1))
+  }
+
   /** Evaluate a set of rules over one frame, returning (rule, value,
     * passed) rows in the rules' order.
     *
@@ -129,39 +139,46 @@ object Rules {
     * (measured 60M→180M rows on the sf10 MAF report, the dominant cost
     * of the whole report).
     */
-  /** The pass routing [[evaluate]] uses: (fused single-scan rules,
-    * rules that get their own job). One distinct rule always rides the
-    * fused pass (no Expand below 2 distinct groups); only the 2nd+
-    * split. Exposed for the RulesSpec routing lock.
-    */
-  private[validation] def splitForEvaluation(rules: Seq[Rule]): (Seq[Rule], Seq[Rule]) = {
-    val (distinctAll, plainRules) = rules.partition(r => hasDistinctAgg(r.agg))
-    (plainRules ++ distinctAll.take(1), distinctAll.drop(1))
-  }
-
   def evaluate(spark: SparkSession, df: DataFrame, rules: Seq[Rule]): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.Future
     require(rules.map(_.name).distinct.size == rules.size,
       s"duplicate rule names: ${rules.groupBy(_.name).filter(_._2.size > 1).keys.mkString(", ")}")
     val (fused, distinctRules) = splitForEvaluation(rules)
     val plainF: Future[Map[String, Long]] =
       if (fused.isEmpty) Future.successful(Map.empty)
-      else Future {
+      else Async(spark) {
         val row = df.agg(fused.head.agg.as(fused.head.name),
           fused.tail.map(r => r.agg.as(r.name)): _*).head()
         fused.zipWithIndex.map { case (r, i) => r.name -> row.getLong(i) }.toMap
       }
     val distinctF = distinctRules.map(r =>
-      r.name -> Future(df.agg(r.agg.as(r.name)).head().getLong(0)))
-    val vals = Await.result(plainF, Duration.Inf) ++
-      distinctF.map { case (n, f) => n -> Await.result(f, Duration.Inf) }
+      r.name -> Async(spark)(df.agg(r.agg.as(r.name)).head().getLong(0)))
+    val vals = Async.await(plainF) ++
+      distinctF.map { case (n, f) => n -> Async.await(f) }
     rules.map { r =>
       val v = vals(r.name)
       (r.name, v, if (r.passWhenZero) v == 0L else v > 0L)
     }.toDF("rule", "value", "passed")
+  }
+
+  /** The two-sided set difference of two key columns as distinct-key
+    * counts: (keys only in `a`, keys only in `b`). Both directions in ONE
+    * job: tag sides, one shuffle on the key, then count keys seen on only
+    * one side. Equivalent to two `except`s (nulls group like values,
+    * matching EXCEPT's null-safe semantics) at half the shuffles — the
+    * shape that matters when the fact side is 100 TB.
+    */
+  def setDifference(a: DataFrame, aKey: Column, b: DataFrame, bKey: Column): (Long, Long) = {
+    val row = a.select(aKey.as("k"), lit(1).as("side"))
+      .unionByName(b.select(bKey.as("k"), lit(2).as("side")))
+      .groupBy(col("k"))
+      .agg(max(when(col("side") === 1, 1).otherwise(0)).as("in_a"),
+        max(when(col("side") === 2, 1).otherwise(0)).as("in_b"))
+      .agg(
+        sum(when(col("in_a") === 1 && col("in_b") === 0, 1L).otherwise(0L)),
+        sum(when(col("in_b") === 1 && col("in_a") === 0, 1L).otherwise(0L))).head()
+    (row.getLong(0), row.getLong(1))
   }
 
   /** V10/V12/A9: distinct-set equality between two key columns, both
@@ -170,19 +187,7 @@ object Rules {
   def setEquality(spark: SparkSession, name: String,
                   a: DataFrame, aKey: String, b: DataFrame, bKey: String): DataFrame = {
     import spark.implicits._
-    // Both directions in ONE job: tag sides, one shuffle on the key, then
-    // count keys seen on only one side. Equivalent to two `except`s (nulls
-    // group like values, matching EXCEPT's null-safe semantics) at half
-    // the shuffles — the shape that matters when the fact side is 100 TB.
-    val merged = a.select(col(aKey).as("k"), lit(1).as("side"))
-      .unionByName(b.select(col(bKey).as("k"), lit(2).as("side")))
-      .groupBy(col("k"))
-      .agg(max(when(col("side") === 1, 1).otherwise(0)).as("in_a"),
-        max(when(col("side") === 2, 1).otherwise(0)).as("in_b"))
-    val row = merged.agg(
-      sum(when(col("in_a") === 1 && col("in_b") === 0, 1L).otherwise(0L)),
-      sum(when(col("in_b") === 1 && col("in_a") === 0, 1L).otherwise(0L))).head()
-    val (aNotB, bNotA) = (row.getLong(0), row.getLong(1))
+    val (aNotB, bNotA) = setDifference(a, col(aKey), b, col(bKey))
     Seq((s"${name}_a_minus_b", aNotB, aNotB == 0L),
       (s"${name}_b_minus_a", bNotA, bNotA == 0L))
       .toDF("rule", "value", "passed")
@@ -202,29 +207,26 @@ object Rules {
     * tables: orders = "samples" table, lineitem = "MAF" fact table.
     */
   def standardReport(spark: SparkSession, dir: String): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val orders = graft.Tables.orders(spark, dir)
     val lineitem = graft.Tables.lineitem(spark, dir)
     // The three rule groups are independent Spark jobs over different
     // frames — submit them concurrently (the scheduler interleaves their
     // stages across executor slots) instead of serializing driver actions.
-    val ordersRules = Future(evaluate(spark, orders, Seq(
+    val ordersRules = Async(spark)(evaluate(spark, orders, Seq(
       rowCount("orders"),
       noNulls("o_orderkey"),
       noNulls("o_custkey"),
       noKeyedDups("o_orderkey"),
       notAllNa("o_orderstatus"))))
-    val lineitemRules = Future(evaluate(spark, lineitem, Seq(
+    val lineitemRules = Async(spark)(evaluate(spark, lineitem, Seq(
       rowCount("lineitem"),
       noNulls("l_orderkey"),
       notAllNa("l_quantity"))))
-    val sets = Future(setEquality(spark, "orderkeys",
+    val sets = Async(spark)(setEquality(spark, "orderkeys",
       orders, "o_orderkey", lineitem, "l_orderkey"))
-    Await.result(ordersRules, Duration.Inf)
-      .unionByName(Await.result(lineitemRules, Duration.Inf))
-      .unionByName(Await.result(sets, Duration.Inf))
+    Async.await(ordersRules)
+      .unionByName(Async.await(lineitemRules))
+      .unionByName(Async.await(sets))
   }
 
   /** DuckDB oracle for [[standardReport]] — same numbers via UNION ALL. */

@@ -42,6 +42,23 @@ object Bridge {
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
+  /** A copy of the calling thread's SparkContext local properties (job
+    * group, scheduler pool, job description); `getLocalProperties` is
+    * `private[spark]`.
+    */
+  def copyLocalProperties(sc: org.apache.spark.SparkContext): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+
+  /** Runs `body` with `props` as this thread's local properties, then
+    * puts the thread's own back.
+    */
+  def withLocalProperties[T](sc: org.apache.spark.SparkContext,
+                             props: java.util.Properties)(body: => T): T = {
+    val own = sc.getLocalProperties
+    sc.setLocalProperties(props)
+    try body finally sc.setLocalProperties(own)
+  }
+
   /** Does this (unresolved) Column contain a DISTINCT aggregate call?
     *
     * Since the Spark 4 Column/ColumnNode split, [[expression]] on an

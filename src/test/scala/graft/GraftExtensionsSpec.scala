@@ -5,13 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase.spark
 
-/** SQL registration of the custom expressions: per-session via
-  * `Fns.registerAll`, cluster-wide via the `GraftExtensions` injector.
+/** SQL registration of the custom expressions through the
+  * `GraftExtensions` injector, which every `LocalSession` installs.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("registered SQL functions evaluate correctly") {
-    graft.functions.Fns.registerAll(spark)
     val row = spark.sql(
       """SELECT
         |  replace_first('a_x_b_x', '_x', '') AS rf,
@@ -22,7 +21,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
         |  ws_token_count(' a  b c ') AS wt,
         |  ascii_class_count('ab1!', 0) AS alpha,
         |  ascii_class_count('ab1!', 1) AS punct,
-        |  size(winnow_fingerprints('abcdefgh')) AS nfp
+        |  size(winnow_fingerprints('abcdefgh')) AS nfp,
+        |  word_set_count('The cat saw the dog', 'the', 'dog') AS wsc,
+        |  py_title('3g spark') AS title
         |""".stripMargin).head()
     assert(row.getAs[String]("rf") == "a_b_x") // first occurrence only
     assert(row.getAs[Double]("dot") == 11.0)
@@ -38,6 +39,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(row.getAs[Int]("alpha") == 2)
     assert(row.getAs[Int]("punct") == 1)
     assert(row.getAs[Int]("nfp") >= 1)
+    assert(row.getAs[Int]("wsc") == 3)
+    assert(row.getAs[String]("title") == "3G Spark")
   }
 
   test("GraftExtensions injects without error (cluster-wide path)") {

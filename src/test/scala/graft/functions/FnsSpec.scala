@@ -86,8 +86,7 @@ class FnsSpec extends AnyFunSuite {
     val n = Seq(Option.empty[String]).toDF("s")
       .select(pyTitle($"s")).collect().head
     assert(n.isNullAt(0))
-    // SQL surface (GraftExtensions / registerAll)
-    graft.functions.Fns.registerAll(spark)
+    // SQL surface (GraftExtensions)
     assert(spark.sql("SELECT py_title('3g spark')").head.getString(0) == "3G Spark")
   }
 
@@ -140,7 +139,6 @@ class FnsSpec extends AnyFunSuite {
   }
 
   test("SQL registration: replace_first and format_12g usable from spark.sql") {
-    Fns.registerAll(spark)
     val r = spark.sql("SELECT replace_first('a_b_b', '_b', '') AS x, format_12g(0.1d) AS y").head()
     assert(r.getString(0) == "a_b")
     assert(r.getString(1) == "0.1")

@@ -901,4 +901,51 @@ class PortalRulesSpec extends AnyFunSuite {
     assert(!rep("portal_study_id_format")._2)
     assert(rep("clinical_survival_attrs_patient_level") == ((1L, false)))
   }
+
+  test("check: frames feed the data rules, the package feeds the rest") {
+    // the v18 shape: the frames passed in are NOT the package's files
+    val dir = healthyPackage()
+    // the package's patient file carries one alternate NA spelling
+    // (clinical_na_spellings reads the package, so it must count it)
+    Tsv.writeTsvFile(Seq(("p1", "N/A"), ("p2", "12")).toDF("PATIENT_ID", "OS_MONTHS"),
+      s"$dir/data_clinical_patient.txt",
+      Seq("#Patient ID\tOs Months", "#Patient identifier\tSurvival months",
+        "#STRING\tSTRING", "#1\t1"))
+    val sample = Seq(("s1", "p1"), ("s1", "p1"), ("s9", "pZ"))
+      .toDF("SAMPLE_ID", "PATIENT_ID")
+    val patient = Seq("p1", "p1", "p1", "p7").toDF("PATIENT_ID")
+    val maf = Seq(("s1", "99", "TP53", 1L), ("s2", "1", "TP53", 2L),
+      ("sX", "2", "EGFR", 3L))
+      .toDF("Tumor_Sample_Barcode", "Chromosome", "Hugo_Symbol", "Entrez_Gene_Id")
+    val ids = Seq("s1", "s9", "GHOST", "GHOST").toDF("barcode")
+    val rows = PortalRules.check(spark, dir, Some(sample), Some(patient),
+      Some(maf), Some(ids))
+    assert(rows.map(_._1).distinct.size == rows.size, "one row per rule")
+    val rep = rows.map { case (r, v, ok) => r -> ((v, ok)) }.toMap
+
+    // containment, key and MAF rules read the frames (over the package's
+    // own files every one of these is 0)
+    assert(rep("sample_patient_in_patients") == ((1L, false)), "pZ")
+    assert(rep("no_dup_sample_id") == ((1L, false)), "s1 twice")
+    assert(rep("clinical_no_dup_patient_id") == ((2L, false)), "p1 three times")
+    assert(rep("clinical_orphan_patients") == ((1L, false)), "p7")
+    assert(rep("maf_barcode_in_samples") == ((2L, false)), "s2, sX")
+    assert(rep("maf_chromosome_valid") == ((1L, false)), "chromosome 99")
+    assert(rep("maf_hugo_entrez_consistent") == ((1L, false)), "TP53 -> 1, 2")
+    // case_list_ids_in_samples reads the ids passed in: GHOST (the
+    // package's lists against the frame would give 2: s2, s3)
+    assert(rep("case_list_ids_in_samples") == ((1L, false)))
+    // the sequenced contract reads the package's list {s1, s3} and its
+    // samples {s1, s2, s3} against the MAF frame {s1, s2, sX}: s3 is
+    // listed but unmutated; s2 is a mutated package sample left off the
+    // list (the frame's samples would not know s2)
+    assert(rep("cases_sequenced_ids_have_mutations") == ((1L, false)))
+    assert(rep("maf_barcodes_in_cases_sequenced") == ((1L, false)))
+    // value and structural rules read the package
+    assert(rep("clinical_na_spellings") == ((1L, false)))
+    assert(rep("clinical_number_attrs_numeric") == ((0L, true)))
+    val structural = PortalRules.structuralReport(dir)
+    assert(structural.nonEmpty)
+    structural.foreach { case (r, v, ok) => assert(rep(r) == ((v, ok)), r) }
+  }
 }

@@ -207,4 +207,49 @@ class RulesSpec extends AnyFunSuite {
     val (t1, h1) = both(li, key)
     assert(t1 == h1, s"fingerprint collision on the corpus: tuple=$t1 hash=$h1")
   }
+
+  test("evaluate runs every job under the caller's job group") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // (job id, job group) of every job start, in the bus's posting order
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add((e.jobId, Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    def seenJob(group: String): Option[Int] =
+      seen.asScala.collectFirst { case (id, g) if g == group => id }
+    // a one-job marker on this thread: every job of a call made between
+    // two markers gets an id between theirs
+    def marker(group: String): Int = {
+      sc.setJobGroup(group, group)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (seenJob(group).isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      seenJob(group).getOrElse(fail(s"listener never saw marker $group"))
+    }
+    // two distinct rules: the fused pass and the split one are both
+    // submitted from pool threads
+    val df = Seq(("a", "x"), ("a", "y"), ("b", "y")).toDF("k", "v")
+    val rules = Seq(Rules.noKeyedDups("k"), Rules.noKeyedDups("v"))
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("rules-group-a", "a")
+      Rules.evaluate(spark, df, rules).collect()
+      val start = marker("rules-group-start")
+      sc.setJobGroup("rules-group-b", "b")
+      val r = Rules.evaluate(spark, df, rules).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val end = marker("rules-group-end")
+      assert(r == Map("no_dup_k" -> 1L, "no_dup_v" -> 1L))
+      val second = seen.asScala.filter { case (id, _) => id > start && id < end }.toSeq
+      assert(second.size >= 2, s"expected the rule jobs between the markers: $second")
+      assert(second.forall(_._2 == "rules-group-b"), s"jobs outside the caller's group: $second")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
+  }
 }
