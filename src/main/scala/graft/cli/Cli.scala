@@ -1,13 +1,11 @@
 package graft.cli
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
-import graft.{LocalSession, Schemas}
-import graft.pipelines.{ClinicalPipeline, LoadPipeline, MafPipeline, StudyValidator}
-import graft.sources.{SynapseStore, Tsv}
+import graft.LocalSession
+import graft.pipelines.{ClinicalPipeline, MafPipeline, StudyRunner, StudyValidator}
+import graft.sources.Tsv
 import graft.validation.Rules
 
 /** The reference's four argparse CLIs (`clinical.py:842-888`,
@@ -232,36 +230,13 @@ object LoadCli {
       .getOrElse("iatlas_" + args.get("dataset").map(_.head).getOrElse("study"))
     withSession { spark =>
     if (args.contains("create_case_lists")) {
-      val sample = Tsv.read(spark, s"$dir/data_clinical_sample.txt", comment = Some('#'))
-      val maf = Tsv.read(spark, s"$dir/data_mutations.txt", comment = Some('#'))
-      val written = LoadPipeline.generateCaseLists(sample, maf, studyId, s"$dir/case_lists")
+      val written = StudyRunner.createCaseLists(spark, dir, studyId)
       println(s"[load] wrote ${written.size} case lists under $dir/case_lists")
     }
     if (args.contains("upload")) {
-      val storeRoot = one(args, "store_root")
-      val folderId = one(args, "output_folder_synid")
-      val comment = args.get("version_comment").map(_.head).getOrElse("")
-      val caseLists = Option(Paths.get(dir, "case_lists").toFile.listFiles())
-        .map(_.toSeq.map(f => s"case_lists/${f.getName}")).getOrElse(Seq.empty)
-      // mirror StudyRunner's missing-output guard: an absent required
-      // file is never skipped silently — warn always, fail under
-      // --strict — or an incomplete package lands in the store with
-      // exit code 0
-      val missing = Schemas.RequiredOutputFiles
-        .filterNot(f => Files.exists(Paths.get(dir, f)))
-      if (missing.nonEmpty) {
-        val msg = s"[load] required outputs absent from $dir: ${missing.mkString(", ")}"
-        if (args.contains("strict")) sys.error(msg)
-        System.err.println(msg)
-      }
-      val stored = (Schemas.RequiredOutputFiles ++ caseLists)
-        .filter(f => Files.exists(Paths.get(dir, f)))
-        .map { f =>
-          val parent = if (f.startsWith("case_lists/")) s"$folderId/case_lists" else folderId
-          f -> graft.sources.SynapseStore.storeFile(storeRoot,
-            Paths.get(dir, f).toString, Paths.get(f).getFileName.toString,
-            parent, comment)
-        }
+      val (stored, _) = StudyRunner.upload(one(args, "store_root"), dir, studyId,
+        one(args, "output_folder_synid"), args.get("version_comment").map(_.head).getOrElse(""),
+        strict = args.contains("strict"))
       stored.foreach { case (f, id) => println(s"[load] stored $f -> $id") }
     }
     }

@@ -10,16 +10,18 @@ import graft.validation.Rules
 
 /** The reference's clinical export pipeline (`clinical.py main()`,
   * SURVEY §3.1) as a composable library: one lazy DataFrame chain for
-  * preprocessing — Catalyst fuses the projections/filters, the two
-  * mapping joins broadcast — materialized once before the per-dataset
-  * fan-out. Every step cites the operator it reproduces (SURVEY §2).
+  * preprocessing — Catalyst fuses the projections/filters, the mapping
+  * joins broadcast. Every step cites the operator it reproduces
+  * (SURVEY §2).
   *
-  * Scale design: the clinical table is the only big input; mappings are
-  * control tables (broadcast). The per-dataset loop filters a cached
-  * frame (P3) — at cluster scale the same code writes
-  * `partitionBy("Dataset")` and prunes. The all-NA column drop (P5) is
-  * the one planned action before the final projection, same two-phase
-  * shape as the reference.
+  * The clinical table is the only big input; mappings are control
+  * tables, collected or broadcast. Nothing persists the chain: each
+  * action of [[exportDataset]] (the two all-NA column aggregates of P5,
+  * the two file writes, the per-cancer-type case-list collect) re-runs
+  * it from the inputs, with the dataset filter (P3) applied to the
+  * uncached frame. [[exportAllDatasets]] is the whole-study form: it
+  * writes the frames once, partitioned by `Dataset`, and exports each
+  * dataset from a pruned read.
   */
 object ClinicalPipeline {
 
@@ -45,26 +47,14 @@ object ClinicalPipeline {
       .withColumn("PATIENT_ID", Fns.remapId(col("study_patient_name"), col("patient_name")))
       .drop("sample_name", "patient_name", "study_sample_name", "study_patient_name")
 
-  /** J3 + V16 — full outer neoantigen merge; growth beyond the clinical
-    * row count means neo-only samples (reference `clinical.py:265-287`).
-    * Returns the joined frame plus the count of neo-only keys (the
-    * validation value; 0 = pass) computed with one anti-join instead of
-    * two counts.
-    */
-  def mergeNeoantigen(clinical: DataFrame, neo: DataFrame): (DataFrame, Long) = {
-    val joined = clinical.join(neo, Seq("SAMPLE_ID"), "outer")
-    val neoOnly = neo.select("SAMPLE_ID")
-      .join(clinical.select("SAMPLE_ID"), Seq("SAMPLE_ID"), "left_anti").count()
-    (joined, neoOnly)
-  }
-
-  /** [[mergeNeoantigen]], observed form: the V16 neo-only count rides the
-    * joined frame's FIRST MATERIALIZATION as an `observe` metric — zero
-    * extra pass, same pattern as V2/V5/V6 in [[exportDataset]] — instead
-    * of the eager anti-join job. A clinical-side tag column marks which
-    * outer-join rows came from neo alone (its null count equals the
-    * anti-join's row count); the tag is projected away before return,
-    * the CollectMetrics node survives downstream projections.
+  /** J3 + V16 — full outer neoantigen merge (reference
+    * `clinical.py:265-287`); growth beyond the clinical row count means
+    * neo-only samples. The V16 neo-only count (0 = pass) rides the joined
+    * frame's FIRST MATERIALIZATION as an `observe` metric — no job of its
+    * own, same pattern as V2/V5/V6 in [[exportDataset]]. A clinical-side
+    * tag column marks which outer-join rows came from neo alone; the tag
+    * is projected away before return, the CollectMetrics node survives
+    * downstream projections.
     */
   def mergeNeoantigenObserved(clinical: DataFrame, neo: DataFrame)
       : (DataFrame, org.apache.spark.sql.Observation, Seq[Rules.Rule]) = {
@@ -129,25 +119,10 @@ object ClinicalPipeline {
   }
 
   /** The full preprocessing chain (reference `clinical.py:290-362`):
-    * J1 → F4 → J3/V16 → P7 → P1 → F5/F6 → F1 → F2/F3, one lazy plan.
-    */
-  def preprocess(clinical: DataFrame, oncotree: DataFrame, neo: DataFrame,
-                 attrMapping: DataFrame): (DataFrame, Long) = {
-    val (merged, neoOnly) =
-      mergeNeoantigen(remapToPaperIds(joinOncotree(clinical, oncotree)), neo)
-    val out = normalizeCase(
-      Fns.stripSuffixesFromStringColumns(
-        transformSurvival(
-          filterNonAnalysisSamples(
-            renameToNormalizedHeaders(merged, attrMapping)))),
-      attrMapping)
-    (out, neoOnly)
-  }
-
-  /** [[preprocess]] with V16 deferred: the neo-only count is an observe
-    * metric collected by whatever action first materializes the chain
-    * (in [[graft.pipelines.StudyRunner]], the export write itself) — no
-    * eager anti-join job on the driver's critical path.
+    * J1 → F4 → J3/V16 → P7 → P1 → F5/F6 → F1 → F2/F3, one lazy plan. The
+    * V16 neo-only count is an observe metric collected by whatever action
+    * first materializes the chain (in [[graft.pipelines.StudyRunner]],
+    * the export itself).
     */
   def preprocessObserved(clinical: DataFrame, oncotree: DataFrame, neo: DataFrame,
                          attrMapping: DataFrame)
@@ -163,23 +138,10 @@ object ClinicalPipeline {
     (out, obs, rules)
   }
 
-  /** J2 + V14/V15 — optional lens join: mapping key cast-normalized to
-    * string; returns frame + null-display-name count (0 = pass)
-    * (reference `clinical.py:199-262`).
-    */
-  def addLensDisplayName(df: DataFrame, lens: DataFrame): (DataFrame, Long) = {
-    val mapping = broadcast(lens
-      .select(col("study_sample_name").cast(StringType).as("SAMPLE_ID"),
-        col("lens_id").as("SAMPLE_DISPLAY_NAME")))
-    val joined = df.join(mapping, Seq("SAMPLE_ID"), "left")
-    val nulls = joined.filter(col("SAMPLE_DISPLAY_NAME").isNull).count()
-    (joined, nulls)
-  }
-
-  /** [[addLensDisplayName]], observed form: the V15 null-display-name
-    * count rides the joined frame's first materialization instead of a
-    * separate `count()` job — the zero-extra-pass pattern of
-    * [[exportDataset]]'s V2/V5/V6.
+  /** J2 + V14/V15 — optional lens join, mapping key cast-normalized to
+    * string (reference `clinical.py:199-262`). The V15 null-display-name
+    * count (0 = pass) rides the joined frame's first materialization —
+    * the no-extra-job pattern of [[exportDataset]]'s V2/V5/V6.
     */
   def addLensDisplayNameObserved(df: DataFrame, lens: DataFrame)
       : (DataFrame, org.apache.spark.sql.Observation, Seq[Rules.Rule]) = {
@@ -251,24 +213,15 @@ object ClinicalPipeline {
       .drop("__src", "__pos", "__rn")
   }
 
-  /** attrMeta as a driver-side map: header facts per normalized column
-    * (shared by the single-file and parted header paths so they cannot
-    * diverge).
-    */
-  private def attrMetaMap(attrMeta: DataFrame): Map[String, (String, String, String, String)] =
-    attrMeta
-      .select("NORMALIZED_COLUMN_HEADER", "DISPLAY_NAME", "DESCRIPTION", "DATA_TYPE", "PRIORITY")
-      .collect()
-      .map(r => r.getString(0) -> (r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
-      .toMap
-
   /** The 4 `#`-prefixed cBioPortal metadata lines for a frame's columns,
-    * from the attribute-metadata table (replaces the reference's
-    * insert_clinical_metadata.py subprocess; `clinical.py:550-620`).
-    * Missing attributes fall back to the column name / STRING / 1.
+    * from the collected attribute-metadata facts (display name,
+    * description, data type, priority per normalized column; replaces
+    * the reference's insert_clinical_metadata.py subprocess,
+    * `clinical.py:550-620`). Missing attributes fall back to the column
+    * name / STRING / 1.
     */
-  def cbioHeaderBlock(columns: Seq[String], attrMeta: DataFrame): Seq[String] = {
-    val meta = attrMetaMap(attrMeta)
+  private def cbioHeaderBlock(columns: Seq[String],
+                              meta: Map[String, (String, String, String, String)]): Seq[String] = {
     def line(f: ((String, String, String, String)) => String, dflt: String => String) =
       "#" + columns.map(c => meta.get(c).map(f).getOrElse(dflt(c))).mkString("\t")
     Seq(
@@ -276,34 +229,6 @@ object ClinicalPipeline {
       line(_._2, identity),
       line(_._3, _ => "STRING"),
       line(_._4, _ => "1"))
-  }
-
-  /** The attrMeta header facts as column metadata, so the distributed
-    * cbio sink reproduces EXACTLY the 4-line header the single-file path
-    * writes ([[cbioHeaderBlock]]): displayName / description / priority /
-    * dataType all ride `StructField.metadata` — the sink's headerBlock
-    * honors an explicit `dataType` over its Spark-type derivation, so a
-    * STRING-declared attribute that was inferred numeric on read still
-    * publishes STRING, and a NUMBER-declared string column keeps its
-    * declaration WITHOUT a value-nulling cast (cell values serialize
-    * identically to the single-file path).
-    */
-  def withCbioMetadata(df: DataFrame, attrMeta: DataFrame): DataFrame = {
-    val meta = attrMetaMap(attrMeta)
-    val cols = df.schema.fields.map { f =>
-      meta.get(f.name) match {
-        case Some((display, desc, dtype, prio)) =>
-          val mb = new org.apache.spark.sql.types.MetadataBuilder()
-            .putString("displayName", Option(display).getOrElse(f.name))
-            .putString("description", Option(desc).getOrElse(f.name))
-            .putString("dataType", Option(dtype).getOrElse("STRING"))
-            .putString("priority", Option(prio).getOrElse("1"))
-            .build()
-          col(f.name).as(f.name, mb)
-        case None => col(f.name)
-      }
-    }
-    df.select(cols.toIndexedSeq: _*)
   }
 
   /** The two clinical meta files every study package carries, written
@@ -328,17 +253,10 @@ object ClinicalPipeline {
   /** Per-dataset export (reference `clinical.py:922-950`): P3 filter →
     * P5 drop-all-NA → headered patient/sample TSVs + case lists. Returns
     * the V1–V7-style report rows for the dataset.
-    *
-    * `partedSink = true` is the 100×-scale mode: the clinical outputs are
-    * written as cbio dataset DIRECTORIES through the distributed DSv2
-    * sink — one part per partition, each carrying the full header block,
-    * no single-task `coalesce(1)` funnel — and read back identically by
-    * `format("cbio")` / [[graft.sources.Tsv.read]]. The default keeps the
-    * reference's single-file parity surface for small per-study outputs.
     */
   def exportDataset(patient: DataFrame, sample: DataFrame, dataset: String,
-                    attrMeta: DataFrame, studyId: String, outDir: String,
-                    partedSink: Boolean = false): Seq[(String, Long, Boolean)] = {
+                    attrMeta: DataFrame, studyId: String,
+                    outDir: String): Seq[(String, Long, Boolean)] = {
     val sampleDs = dropAllNaColumns(
       sample.filter(col("Dataset") === dataset).drop("Dataset"))
     val patientDs = dropAllNaColumns(
@@ -359,17 +277,16 @@ object ClinicalPipeline {
     val (sampleObserved, obs) =
       Rules.observed(sampleDs, s"graft_v_$dataset", exportRules)
 
-    if (partedSink) {
-      withCbioMetadata(patientDs, attrMeta).write.format("cbio")
-        .mode("overwrite").save(s"$outDir/data_clinical_patient.txt")
-      withCbioMetadata(sampleObserved, attrMeta).write.format("cbio")
-        .mode("overwrite").save(s"$outDir/data_clinical_sample.txt")
-    } else {
-      Tsv.writeTsvFile(patientDs, s"$outDir/data_clinical_patient.txt",
-        cbioHeaderBlock(patientDs.columns.toSeq, attrMeta))
-      Tsv.writeTsvFile(sampleObserved, s"$outDir/data_clinical_sample.txt",
-        cbioHeaderBlock(sampleDs.columns.toSeq, attrMeta))
-    }
+    // one collect of the control table serves both header blocks
+    val meta = attrMeta
+      .select("NORMALIZED_COLUMN_HEADER", "DISPLAY_NAME", "DESCRIPTION", "DATA_TYPE", "PRIORITY")
+      .collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
+      .toMap
+    Tsv.writeTsvFile(patientDs, s"$outDir/data_clinical_patient.txt",
+      cbioHeaderBlock(patientDs.columns.toSeq, meta))
+    Tsv.writeTsvFile(sampleObserved, s"$outDir/data_clinical_sample.txt",
+      cbioHeaderBlock(sampleDs.columns.toSeq, meta))
     if (sampleDs.columns.contains("CANCER_TYPE"))
       Tsv.writeCaseLists(sampleDs, "CANCER_TYPE", "SAMPLE_ID", studyId, s"$outDir/case_lists")
     Tsv.writeMetaFile(s"$outDir/meta_study.txt", Seq(

@@ -1,10 +1,11 @@
 package graft.pipelines
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.sources.Tsv
 
 /** The reference's load step (`load.py`, SURVEY §3.3 footnote): the
   * `cases_all` / `cases_sequenced` case lists. The Synapse upload itself
@@ -21,22 +22,6 @@ object LoadPipeline {
     sample.join(maf.select(col("Tumor_Sample_Barcode").as("SAMPLE_ID")).distinct(),
       Seq("SAMPLE_ID"), "left_semi")
 
-  /** Write a flat case list file (`cases_all` / `cases_sequenced`). */
-  def writeCaseList(ids: Seq[String], studyId: String, suffix: String,
-                    name: String, outDir: String): Path = {
-    Files.createDirectories(Paths.get(outDir))
-    val content =
-      s"""cancer_study_identifier: $studyId
-         |stable_id: ${studyId}_$suffix
-         |case_list_name: $name
-         |case_list_description: $name ($studyId)
-         |case_list_ids: ${ids.mkString("\t")}
-         |""".stripMargin
-    val p = Paths.get(outDir, s"cases_$suffix.txt")
-    Files.write(p, content.getBytes(StandardCharsets.UTF_8))
-    p
-  }
-
   /** Generate both case lists from the sample + mutation frames; the
     * collected id lists are per-study small (the grouped result, not the
     * fact table).
@@ -47,8 +32,9 @@ object LoadPipeline {
       .orderBy("SAMPLE_ID").collect().map(_.getString(0)).toSeq
     val seq = casesSequenced(sample, maf).select(col("SAMPLE_ID").cast("string")).distinct()
       .orderBy("SAMPLE_ID").collect().map(_.getString(0)).toSeq
-    Seq(
-      writeCaseList(all, studyId, "all", "All samples", outDir),
-      writeCaseList(seq, studyId, "sequenced", "Sequenced samples", outDir))
+    def write(ids: Seq[String], suffix: String, name: String): Path =
+      Tsv.writeCaseList(s"$outDir/cases_$suffix.txt", studyId, s"${studyId}_$suffix",
+        name, s"$name ($studyId)", None, ids)
+    Seq(write(all, "all", "All samples"), write(seq, "sequenced", "Sequenced samples"))
   }
 }

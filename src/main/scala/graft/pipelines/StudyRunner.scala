@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,8 +14,9 @@ import graft.sources.{SynapseStore, Tsv}
   * store by id (`syn.get` at the head), Spark plans in between, and
   * every produced required output stored back under one version
   * comment (`syn.store` at the tail, `load.py:38-82`). The pieces are
-  * the already-tested pipeline stages — this object only sequences
-  * them the way the reference's CLIs do.
+  * the already-tested pipeline stages — this object sequences them the
+  * way the reference's CLIs do. Its two `load.py` stages,
+  * [[createCaseLists]] and [[upload]], are also what `LoadCli` runs.
   */
 object StudyRunner {
 
@@ -73,27 +74,48 @@ object StudyRunner {
     MafPipeline.writeOutputs(MafPipeline.postprocess(annotated), studyId, outDir)
 
     // --- load.py --create_case_lists (cases_all + cases_sequenced)
-    val sampleOut = Tsv.read(spark, s"$outDir/data_clinical_sample.txt", comment = Some('#'))
-    val mafOut = Tsv.read(spark, s"$outDir/data_mutations.txt", comment = Some('#'))
-    LoadPipeline.generateCaseLists(sampleOut, mafOut, studyId, s"$outDir/case_lists")
+    createCaseLists(spark, outDir, studyId)
 
     // --- §3.3 validate main: cross-file report over what was written
     val validation = StudyValidator.report(spark, outDir, neo = Some(fetch(in.neoId)))
 
-    // --- load.py --upload: store back every produced required output
-    // verbatim (files as-is, like syn.store(File(...)) — load.py:57-66),
-    // plus the case-list folder's children
+    // --- load.py --upload: store back every produced output
+    val (stored, missingOutputs) =
+      upload(storeRoot, outDir, studyId, outputFolderId, versionComment, strictUpload)
+    StudyResult(outDir, clinicalChecks, validation, stored, missingOutputs)
+  }
+
+  /** `load.py --create_case_lists`: `cases_all` + `cases_sequenced` from
+    * the package's written sample and MAF files. Both are read as
+    * strings, so the lists carry the ids exactly as written — an inferred
+    * read would turn a `SAMPLE_ID` of `007` into 7 — and each read is one
+    * header job instead of a header job plus an inference pass.
+    */
+  def createCaseLists(spark: SparkSession, outDir: String, studyId: String): Seq[Path] = {
+    def written(file: String): DataFrame =
+      Tsv.read(spark, s"$outDir/$file", comment = Some('#'), inferSchema = false)
+    LoadPipeline.generateCaseLists(written("data_clinical_sample.txt"),
+      written("data_mutations.txt"), studyId, s"$outDir/case_lists")
+  }
+
+  /** `load.py --upload`: store back every produced required output
+    * verbatim (files as-is, like `syn.store(File(...))`, `load.py:57-66`),
+    * plus the case-list folder's children. Returns the stored file →
+    * entity id map and the required outputs that were absent.
+    *
+    * An absent required output never vanishes silently: `strict` fails
+    * like the reference's `syn.store` on a missing path, otherwise the
+    * absence is returned and warned about.
+    */
+  def upload(storeRoot: String, outDir: String, studyId: String, outputFolderId: String,
+             versionComment: String, strict: Boolean): (Map[String, String], Seq[String]) = {
     val caseLists = Option(Paths.get(outDir, "case_lists").toFile.listFiles())
       .map(_.toSeq.map(f => s"case_lists/${f.getName}")).getOrElse(Seq.empty)
-    // a required output that is absent at upload time must not vanish
-    // silently: strict mode fails like the reference's syn.store would,
-    // lenient mode records + warns
-    val missingOutputs = Schemas.RequiredOutputFiles
+    val missing = Schemas.RequiredOutputFiles
       .filterNot(f => Files.exists(Paths.get(outDir, f)))
-    if (missingOutputs.nonEmpty) {
-      val msg = s"study upload $studyId: required outputs absent: " +
-        missingOutputs.mkString(", ")
-      if (strictUpload) throw new IllegalStateException(msg)
+    if (missing.nonEmpty) {
+      val msg = s"study upload $studyId: required outputs absent: " + missing.mkString(", ")
+      if (strict) throw new IllegalStateException(msg)
       System.err.println(s"[graft] WARN $msg")
     }
     val stored = (Schemas.RequiredOutputFiles ++ caseLists)
@@ -106,6 +128,6 @@ object StudyRunner {
         f -> SynapseStore.storeFile(storeRoot, Paths.get(outDir, f).toString,
           Paths.get(f).getFileName.toString, parent, versionComment)
       }.toMap
-    StudyResult(outDir, clinicalChecks, validation, stored, missingOutputs)
+    (stored, missing)
   }
 }

@@ -879,24 +879,11 @@ object RefQueries {
       // tier 10: the global `_all` case list (the reference's V1
       // required-file set demands cases_all.txt) — a healthy package
       // carries it, so portal_cases_all_present stays a constant-0 row
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$tmp/case_lists/cases_all.txt"),
-        (s"cancer_study_identifier: $studyId\n" +
-          s"stable_id: ${studyId}_all\n" +
-          "case_list_name: All samples\n" +
-          "case_list_description: All samples in study\n" +
-          "case_list_category: all_cases_in_study\n" +
-          s"case_list_ids: ${allSampleIds.mkString("\t")}\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$tmp/case_lists/cases_sequenced.txt"),
-        (s"cancer_study_identifier: $studyId\n" +
-          s"stable_id: ${studyId}_sequenced\n" +
-          "case_list_name: Sequenced samples\n" +
-          "case_list_description: Samples with mutation data\n" +
-          "case_list_category: all_cases_with_mutation_data\n" +
-          s"case_list_ids: ${sequencedIds.mkString("\t")}\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Tsv.writeCaseList(s"$tmp/case_lists/cases_all.txt", studyId, s"${studyId}_all",
+        "All samples", "All samples in study", Some("all_cases_in_study"), allSampleIds)
+      Tsv.writeCaseList(s"$tmp/case_lists/cases_sequenced.txt", studyId,
+        s"${studyId}_sequenced", "Sequenced samples", "Samples with mutation data",
+        Some("all_cases_with_mutation_data"), sequencedIds)
     }
     // the containment and key rules check the whole customer-derived
     // frames, not the ≤500-sample package; the case-list ids are the

@@ -16,11 +16,11 @@ import graft.functions.Format12g.format12g
   *  - K3: case-list text files (key-value header + tab-joined id list)
   *  - K4: meta key-value files
   *
-  * The row sink is fully distributed (each column formatted by a codegen'd
-  * expression, lines assembled with `concat_ws`); single-file outputs
-  * coalesce to one partition and are renamed into place — the reference's
-  * outputs are small per-dataset files, while big exports should use
-  * `writeTsvDir` (multi-part, no coalesce).
+  * Each column is formatted by a codegen'd expression and lines are
+  * assembled with `concat_ws`, distributed; a file output then coalesces
+  * to one partition and streams into place — the reference's outputs are
+  * small per-dataset files. A multi-part output with the header block in
+  * every part is the `cbio` sink's (`CbioTsvSource`).
   */
 object Tsv {
 
@@ -97,10 +97,6 @@ object Tsv {
 
   def headerLine(df: DataFrame): String = df.columns.mkString("\t")
 
-  /** Distributed multi-part TSV sink for at-scale exports. */
-  def writeTsvDir(df: DataFrame, dir: String): Unit =
-    toLines(df).write.mode("overwrite").option("header", "false").text(dir)
-
   /** Single-file TSV with optional `#`-prefixed header block (the
     * cBioPortal 5-line clinical header) — K1 + the header-insertion step
     * the reference delegates to a subprocess
@@ -119,16 +115,32 @@ object Tsv {
     sb.append(headerLine(df)).append('\n')
     Files.write(target, sb.toString.getBytes(StandardCharsets.UTF_8))
     // stream the part file into place — never the whole file through a
-    // driver-side byte array (use partedSink/writeTsvDir for outputs too
-    // big for a single coalesced file at all)
+    // driver-side byte array
     val out = Files.newOutputStream(target, StandardOpenOption.APPEND)
     try Files.copy(part, out) finally out.close()
     deleteRecursively(tmp)
   }
 
-  /** K3 — one case-list file per group key: 5 key-value lines with the ids
-    * tab-joined (reference `clinical.py:683-718`, template
-    * `clinical.py:56-62`). The group/collect runs distributed; only the
+  /** K3 — one case-list file: the key-value template every case list
+    * shares (reference `clinical.py:56-62`), with the ids tab-joined and a
+    * `case_list_category` line when one is given.
+    */
+  def writeCaseList(file: String, studyId: String, stableId: String, name: String,
+                    description: String, category: Option[String], ids: Seq[String]): Path = {
+    val p = Paths.get(file)
+    Option(p.getParent).foreach(Files.createDirectories(_))
+    val content =
+      s"cancer_study_identifier: $studyId\n" +
+        s"stable_id: $stableId\n" +
+        s"case_list_name: $name\n" +
+        s"case_list_description: $description\n" +
+        category.fold("")(c => s"case_list_category: $c\n") +
+        s"case_list_ids: ${ids.mkString("\t")}\n"
+    Files.write(p, content.getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** K3 — one [[writeCaseList]] file per group key (reference
+    * `clinical.py:683-718`). The group/collect runs distributed; only the
     * tiny (cancer_type → ids) result is collected.
     */
   def writeCaseLists(df: DataFrame, keyCol: String, idCol: String,
@@ -137,22 +149,10 @@ object Tsv {
       .groupBy(col(keyCol))
       .agg(sort_array(collect_list(col(idCol).cast(StringType))).as("ids"))
       .collect()
-    Files.createDirectories(Paths.get(outDir))
     grouped.toIndexedSeq.map { row =>
-      val rawType = row.getString(0)
-      val cancerType = graft.functions.Fns.sanitizeCancerType(rawType)
-      val ids = row.getSeq[String](1)
-      val stableId = s"${studyId}_$cancerType"
-      val content =
-        s"""cancer_study_identifier: $studyId
-           |stable_id: $stableId
-           |case_list_name: Samples - $cancerType
-           |case_list_description: All samples ($cancerType)
-           |case_list_ids: ${ids.mkString("\t")}
-           |""".stripMargin
-      val p = Paths.get(outDir, s"cases_$cancerType.txt")
-      Files.write(p, content.getBytes(StandardCharsets.UTF_8))
-      p
+      val cancerType = graft.functions.Fns.sanitizeCancerType(row.getString(0))
+      writeCaseList(s"$outDir/cases_$cancerType.txt", studyId, s"${studyId}_$cancerType",
+        s"Samples - $cancerType", s"All samples ($cancerType)", None, row.getSeq[String](1))
     }
   }
 

@@ -836,9 +836,10 @@ object PortalRules {
         survivalAtSampleLevel == 0L))
   }
 
-  /** A clinical output may be a single file OR a parted cbio dataset
-    * directory (ClinicalPipeline partedSink) — every part file must
-    * carry the full header block.
+  /** A clinical output may be a single file OR a parted dataset
+    * directory, as the `cbio` sink writes one; a package validated here
+    * may come from outside the program. Every part file must carry the
+    * full header block.
     */
   private def clinicalParts(p: Path): Seq[Path] =
     if (!Files.isDirectory(p)) Seq(p)

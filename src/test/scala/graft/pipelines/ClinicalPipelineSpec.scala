@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase.spark
+import graft.validation.Rules
 
 /** End-to-end clinical pipeline over reference-shaped frames. Goldens are
   * lifted from the reference's own tests
@@ -43,11 +44,12 @@ class ClinicalPipelineSpec extends AnyFunSuite {
     .toDF("iATLAS_attribute", "NORMALIZED_HEADER", "ATTRIBUTE_TYPE", "Case")
 
   test("preprocess: id remap fallback, filter, recode, days->months goldens") {
-    val (out, neoOnly) = ClinicalPipeline.preprocess(
+    val (out, neoObs, neoRules) = ClinicalPipeline.preprocessObserved(
       clinicalFixture, oncotreeFixture, neoFixture, attrMappingFixture)
     val rows = out.collect().map(r => r.getAs[String]("SAMPLE_ID") -> r).toMap
 
-    assert(neoOnly == 0L)
+    // V16, observed by the collect above
+    assert(Rules.observedRows(neoObs, neoRules).map(_._2) == Seq(0L))
     // F4: paper id where present, fallback to original
     assert(rows.contains("ps1") && rows.contains("s2"))
     // P1: -nd- sample dropped ONLY inside Anders_JITC_2022
@@ -65,7 +67,7 @@ class ClinicalPipelineSpec extends AnyFunSuite {
   }
 
   test("split + per-dataset export: files, headers, case lists on disk") {
-    val (pre, _) = ClinicalPipeline.preprocess(
+    val (pre, _, _) = ClinicalPipeline.preprocessObserved(
       clinicalFixture, oncotreeFixture, neoFixture, attrMappingFixture)
     val withCt = pre.withColumn("CANCER_TYPE", col("ONCOTREE_CODE"))
     val (patient, sample) = ClinicalPipeline.splitPatientSample(withCt, attrMappingFixture)
@@ -92,57 +94,8 @@ class ClinicalPipelineSpec extends AnyFunSuite {
       .contains("reference_genome: hg38"))
   }
 
-  test("partedSink export: distributed cbio directories, header per part, same data back") {
-    val (pre, _) = ClinicalPipeline.preprocess(
-      clinicalFixture, oncotreeFixture, neoFixture, attrMappingFixture)
-    val withCt = pre.withColumn("CANCER_TYPE", col("ONCOTREE_CODE"))
-    val (patient, sample0) = ClinicalPipeline.splitPatientSample(withCt, attrMappingFixture)
-    // several partitions so the parted sink actually writes >1 part file
-    val sample = sample0.repartition(3)
-
-    val single = Files.createTempDirectory("clin-single").toString
-    val parted = Files.createTempDirectory("clin-parted").toString
-    val r1 = ClinicalPipeline.exportDataset(
-      patient, sample, "DsA", attrMetaFixture, "iatlas_test", single)
-    val r2 = ClinicalPipeline.exportDataset(
-      patient, sample, "DsA", attrMetaFixture, "iatlas_test", parted,
-      partedSink = true)
-    assert(r1.forall(_._3) && r2.forall(_._3))
-
-    // the parted output is a cbio dataset DIRECTORY with >1 part, each
-    // carrying the full 4-line header block (no coalesce(1) funnel)
-    val dirP = Paths.get(s"$parted/data_clinical_sample.txt")
-    assert(Files.isDirectory(dirP))
-    val parts = Files.list(dirP).iterator().asScala
-      .filter { f =>
-        val n = f.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".") // sidecar + CRC files
-      }.toSeq
-    assert(parts.size >= 2, s"expected multiple parts, got ${parts.map(_.getFileName)}")
-    parts.foreach { p =>
-      val lines = Files.readAllLines(p).asScala
-      assert(lines.take(4).forall(_.startsWith("#")), p.toString)
-      assert(lines(4).split("\t").contains("SAMPLE_ID"), p.toString)
-    }
-
-    // reads back identically through the cbio reader; NUMBER attrs typed
-    val back = spark.read.format("cbio").load(dirP.toString)
-    val viaFile = graft.sources.Tsv.read(spark,
-      s"$single/data_clinical_sample.txt", comment = Some('#'))
-    assert(back.count() == viaFile.count())
-    assert(back.schema("SNV").dataType == org.apache.spark.sql.types.DoubleType)
-    val key = back.columns.sorted.toSeq
-    assert(back.select("SAMPLE_ID").as[String].collect().sorted.toSeq ==
-      viaFile.select("SAMPLE_ID").as[String].collect().map(String.valueOf(_)).sorted.toSeq)
-
-    // the portal structural rules accept the directory-shaped output
-    val portal = graft.validation.PortalRules.structuralReport(parted)
-    val header = portal.find(_._1 == "portal_clinical_header_block").get
-    assert(header._3, header.toString)
-  }
-
   test("exportAllDatasets: partitioned fan-out writes every dataset from pruned reads") {
-    val (pre, _) = ClinicalPipeline.preprocess(
+    val (pre, _, _) = ClinicalPipeline.preprocessObserved(
       clinicalFixture, oncotreeFixture, neoFixture, attrMappingFixture)
     val withCt = pre.withColumn("CANCER_TYPE", col("ONCOTREE_CODE"))
     val (patient, sample) = ClinicalPipeline.splitPatientSample(withCt, attrMappingFixture)
@@ -187,9 +140,10 @@ class ClinicalPipelineSpec extends AnyFunSuite {
   test("lens join flags unmatched samples (V15)") {
     val df = Seq(("ps1", "DsA"), ("s2", "DsA")).toDF("SAMPLE_ID", "Dataset")
     val lens = Seq(("ps1", "lens-1")).toDF("study_sample_name", "lens_id")
-    val (joined, nulls) = ClinicalPipeline.addLensDisplayName(df, lens)
-    assert(nulls == 1L)
+    val (joined, obs, rules) = ClinicalPipeline.addLensDisplayNameObserved(df, lens)
     assert(joined.filter(col("SAMPLE_DISPLAY_NAME") === "lens-1").count() == 1L)
+    // V15, observed by the count above
+    assert(Rules.observedRows(obs, rules).map(_._2) == Seq(1L))
   }
 
   test("updateAttributeMetadata: new rows override, keep-last per header (A7/U2)") {

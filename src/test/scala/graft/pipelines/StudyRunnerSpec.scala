@@ -121,9 +121,35 @@ class StudyRunnerSpec extends AnyFunSuite {
     val stored = SynapseStore.getChildren(root, "synCliOut").map(_._2)
     assert(stored.contains("data_clinical_sample.txt"), stored.toString)
     assert(stored.contains("data_mutations.txt"))
+    // --strict fails exactly like StudyRunner.run(strictUpload = true)
+    val strict = intercept[IllegalStateException] {
+      graft.cli.LoadCli.main(Array(
+        "--dataset", "DsA", "--upload", "--strict",
+        "--output_folder_synid", "synCliStrict",
+        "--study_dir", dsDir, "--study_id", "iatlas_dsa", "--store_root", root))
+    }
+    Seq("data_gene_signatures.txt", "meta_gene_signatures.txt",
+      "data_rna_seq_mrna.txt", "meta_rna_seq_mrna.txt").foreach { f =>
+      assert(strict.getMessage.contains(f), strict.getMessage)
+    }
 
     // the shared test session must survive all four mains
     assert(!spark.sparkContext.isStopped)
+  }
+
+  test("LoadCli case lists carry numeric-looking sample ids as written") {
+    val dir = Files.createTempDirectory("cli-numeric-ids")
+    Files.writeString(dir.resolve("data_clinical_sample.txt"),
+      "#Sample Id\tPatient Id\n#Sample\tPatient\n#STRING\tSTRING\n#1\t1\n" +
+        "SAMPLE_ID\tPATIENT_ID\n010\tp2\n007\tp1\n")
+    Files.writeString(dir.resolve("data_mutations.txt"),
+      "#version 2.4\nHugo_Symbol\tTumor_Sample_Barcode\nTP53\t007\n")
+    graft.cli.LoadCli.main(Array(
+      "--create_case_lists", "--study_dir", dir.toString, "--study_id", "iatlas_num"))
+    val all = Files.readString(dir.resolve("case_lists/cases_all.txt"))
+    assert(all.contains("case_list_ids: 007\t010\n"), all)
+    val sequenced = Files.readString(dir.resolve("case_lists/cases_sequenced.txt"))
+    assert(sequenced.contains("case_list_ids: 007\n"), sequenced)
   }
 
   test("full lifecycle: fetch -> pipelines -> validate -> versioned upload") {

@@ -256,6 +256,17 @@ class CbioTsvSourceSpec extends AnyFunSuite {
     val clin = outputs("data_clinical_sample.txt")
     assert(clin.isDefined && clin.get.count() == 2)
     assert(clin.get.columns.toSeq == Seq("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE"))
+    // the portal structural rules accept directory-shaped clinical
+    // outputs and check every part's header block (a package of only the
+    // clinical files: the meta files above are directories too, which
+    // the structural rules do not parse)
+    val clinicalDirs = Files.createTempDirectory("cbio-clinical").toString
+    Seq("data_clinical_sample.txt", "data_clinical_patient.txt").foreach { f =>
+      sample.repartition(2).write.format("cbio").mode("overwrite").save(s"$clinicalDirs/$f")
+    }
+    val header = graft.validation.PortalRules.structuralReport(clinicalDirs)
+      .find(_._1 == "portal_clinical_header_block").get
+    assert(header._3, header.toString)
   }
 
   test("NUMBER cells: nan/inf/-inf (Format12g renderings) and NA parse leniently") {
