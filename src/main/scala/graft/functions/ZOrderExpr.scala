@@ -23,23 +23,9 @@ object ZOrderUtil {
     x
   }
 
-  /** Inverse of [[spread16]]: collect bits at even positions. */
-  def compact16(v: Long): Long = {
-    var x = v & 0x55555555L
-    x = (x | (x >> 1)) & 0x33333333L
-    x = (x | (x >> 2)) & 0x0F0F0F0FL
-    x = (x | (x >> 4)) & 0x00FF00FFL
-    x = (x | (x >> 8)) & 0x0000FFFFL
-    x
-  }
-
   /** 32-bit Z-value: x's low 16 bits on even positions, y's on odd. */
   def interleave16(x: Long, y: Long): Long =
     spread16(x) | (spread16(y) << 1)
-
-  /** (x, y) back from a 32-bit Z-value — spec round-trip support. */
-  def deinterleave16(z: Long): (Long, Long) =
-    (compact16(z), compact16(z >> 1))
 
   /** The same spread as a DuckDB SQL expression over `col` — the oracle
     * mirror of [[spread16]], one nested shift/mask chain (integer-only,

@@ -753,13 +753,14 @@ object RefQueries {
     * ([[graft.validation.PortalRules]]; reference `validate.py:198-226`
     * shells out to `validateData.py --no_portal_checks
     * --strict_maf_checks`) driven end-to-end: strict-MAF field checks +
-    * id-containment as distributed aggregates/anti-joins over frames
-    * derived deterministically from the corpus, plus the structural
-    * package checks run against a real (small, deterministic) study
-    * package written through the cbio sinks, all through the one engine
+    * id-set rules as distributed aggregates over frames derived
+    * deterministically from the corpus, plus the structural package
+    * checks run against a real (small, deterministic) study package
+    * written through the cbio sinks, all through the one engine
     * [[graft.validation.PortalRules.check]]. Field checks are ONE
-    * aggregate pass over the MAF-shaped fact frame; each containment is
-    * one anti-join shuffle — the shapes that survive a 100 TB MAF.
+    * aggregate pass over the MAF-shaped fact frame; every id-set, gene
+    * and build rule comes from ONE key census with one shuffle — the
+    * shapes that survive a 100 TB MAF.
     */
   def v18PortalRules: Q = (s, dir) => {
     // Measured negative result (r15): wrapping this construction in

@@ -190,17 +190,4 @@ object Layout {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(p).count(s => s.isFile && !s.getPath.getName.startsWith("_"))
   }
-
-  /** Compute table (and optionally column) statistics — what feeds the
-    * cost-based optimizer's row-count/selectivity estimates
-    * (`spark.sql.cbo.enabled`) for join reorder and broadcast decisions.
-    * Without stats Spark falls back to file sizes, which under-informs
-    * every post-filter cardinality estimate at scale.
-    */
-  def analyzeTable(spark: SparkSession, db: String, table: String,
-                   cols: Seq[String] = Nil): Unit = {
-    val forCols =
-      if (cols.isEmpty) "" else cols.mkString(" FOR COLUMNS ", ", ", "")
-    spark.sql(s"ANALYZE TABLE $db.$table COMPUTE STATISTICS$forCols")
-  }
 }

@@ -22,11 +22,14 @@ import graft.sources.Tsv
   *    control files (meta key-value files, case-list files, the
   *    4+1-line clinical header block). These files are kilobytes by
   *    contract, so driver-side parsing is the right altitude.
-  *  - [[mafFieldRules]] / [[subsetViolations]] — the strict-MAF field
-  *    checks and the id-containment checks, as distributed aggregates
-  *    (ONE pass over the MAF for all field rules; one shuffle per
-  *    containment anti-join). This is the layer that must scale: the MAF
-  *    is the fact table.
+  *  - the data rules, as distributed aggregates: [[mafFieldRules]], the
+  *    strict-MAF field checks in ONE pass over the MAF; the clinical value
+  *    rules, one pass per raw clinical file; and ONE key census
+  *    ([[Rules.keyCensus]]) that scans each frame once and yields every
+  *    id-set, key-uniqueness, gene and build rule from one group-by. This
+  *    is the layer that must scale: the MAF is the fact table, and the
+  *    census's partial aggregate collapses it to key scale before its
+  *    one shuffle.
   *
   * [[check]] is the one engine that runs both layers: over a written
   * package's own files ([[validateStudyPackage]], and
@@ -238,11 +241,6 @@ object PortalRules {
       b += Rules.Rule("maf_barcode_present",
         violation(col("Tumor_Sample_Barcode").isNull ||
           col("Tumor_Sample_Barcode") === ""))
-    if (cols("NCBI_Build"))
-      // clamped at 0: an empty MAF (or one whose builds are all null —
-      // countDistinct ignores nulls) is vacuously consistent, not -1
-      b += Rules.Rule("maf_ncbi_build_consistent",
-        greatest(countDistinct(col("NCBI_Build")) - lit(1L), lit(0L)))
     if (cols("Variant_Classification"))
       b += Rules.Rule("maf_variant_classification_valid",
         violation(notInVocab(col("Variant_Classification"),
@@ -451,85 +449,6 @@ object PortalRules {
           col("Tumor_Seq_Allele1") =!= col("Reference_Allele") &&
           col("Tumor_Seq_Allele1") =!= col("Tumor_Seq_Allele2")))
     b.result()
-  }
-
-  /** Tier 8 — gene-identifier consistency across the MAF: the count of
-    * non-blank Hugo symbols that map to MORE than one distinct
-    * non-null Entrez id (validateData's gene-table mismatch warning: an
-    * ambiguous symbol→id mapping silently splits one gene's mutations
-    * across two gene pages). Cross-ROW consistency, so it cannot ride
-    * the single-pass field rules: one aggregate on the gene-scale
-    * (symbol, id) pair set — the distinct pair projection map-side
-    * collapses the fact-sized scan to gene-scale before the shuffle.
-    */
-  private def hugoEntrezInconsistencies(maf: DataFrame): Long = {
-    if (!maf.columns.contains("Hugo_Symbol") ||
-        !maf.columns.contains("Entrez_Gene_Id")) return 0L
-    maf.filter(col("Hugo_Symbol").isNotNull && col("Hugo_Symbol") =!= "" &&
-        col("Entrez_Gene_Id").isNotNull)
-      .select(col("Hugo_Symbol").as("hugo"), col("Entrez_Gene_Id").as("eid"))
-      .distinct()
-      .groupBy(col("hugo")).agg(count(lit(1)).as("n_ids"))
-      .filter(col("n_ids") > 1)
-      .count()
-  }
-
-  /** Tier 8 — the `cases_sequenced` ↔ MAF contract, both directions
-    * (validateData warns on each): a sample the list claims was
-    * sequenced but that has NO mutation row, and a mutated sample
-    * (that IS a known clinical sample) missing from the list. One
-    * barcode-scale aggregate of the MAF feeds both counts; the list and
-    * the clinical sample-id set join at sample scale.
-    * Returns (ids_without_mutations, mutated_not_listed).
-    */
-  private def casesSequencedViolations(spark: SparkSession, maf: DataFrame,
-                                       sequencedIds: Seq[String],
-                                       samples: DataFrame,
-                                       sampleKey: String): (Long, Long) = {
-    import spark.implicits._
-    if (sequencedIds.isEmpty || !maf.columns.contains("Tumor_Sample_Barcode"))
-      return (0L, 0L)
-    // ONE action for both directions: the fact-sized MAF collapses
-    // map-side to its distinct barcodes, the (small) list full-outer
-    // joins them so listed-but-unmutated survive as maf-null rows, and
-    // the clinical sample set tags the mutated side — two .count()
-    // actions would scan the MAF twice (actions never share exchanges).
-    val barcodes = maf.select(col("Tumor_Sample_Barcode").cast("string").as("bk"))
-      .na.drop().distinct().withColumn("m", lit(1))
-    val listed = sequencedIds.toDF("bk").distinct().withColumn("l", lit(1))
-    val sampleIds = samples.select(col(sampleKey).cast("string").as("bk"))
-      .na.drop().distinct().withColumn("s", lit(1))
-    val r = barcodes
-      .join(listed, Seq("bk"), "full_outer")
-      .join(sampleIds, Seq("bk"), "left_outer")
-      .agg(
-        sum(when(col("l") === 1 && col("m").isNull, 1L).otherwise(0L)),
-        sum(when(col("m") === 1 && col("s") === 1 && col("l").isNull, 1L)
-          .otherwise(0L)))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  /** Containment check `child[childKey] ⊆ parent[parentKey]` as a
-    * violation count: distinct-or-row-level anti-join, ONE shuffle. Keys
-    * are cast to string first (the package's TSVs are untyped at rest, so
-    * a numeric-inferred id must still match its string twin — J2).
-    */
-  private def subsetViolations(child: DataFrame, childKey: String,
-                               parent: DataFrame, parentKey: String,
-                               distinctChild: Boolean = false): Long = {
-    // Aggregate the child to (key, row-count) BEFORE the anti-join: the
-    // child is the fact side (a 60M-row MAF barcode column at sf10) and
-    // its key cardinality is sample-scale, so the partial aggregate
-    // map-side-combines the shuffle down to |keys| rows where the plain
-    // anti-join would move every fact row. The anti-join then runs on
-    // key-sized frames and sum(n) restores the row-level count.
-    val c0 = child.select(col(childKey).cast("string").as("k")).na.drop()
-    val agg = if (distinctChild) c0.distinct().withColumn("n", lit(1L))
-              else c0.groupBy(col("k")).agg(count(lit(1)).as("n"))
-    agg.join(parent.select(col(parentKey).cast("string").as("k")).na.drop().distinct(),
-        Seq("k"), "left_anti")
-      .agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
   }
 
   // ---------------------------------------------------------------------
@@ -1012,47 +931,56 @@ object PortalRules {
     else Some(Tsv.read(spark, p.toString, comment = Some('#'), inferSchema = inferSchema))
 
   /** The `case_list_ids` of the package's case lists whose key-values
-    * pass `keep`.
+    * pass `keep`, empty tokens dropped (an empty `case_list_ids:` line
+    * lists no id); None when no such list carries the key.
     */
-  private def listedIds(dir: String)(keep: Map[String, String] => Boolean): Seq[String] =
-    listFiles(Paths.get(dir).resolve("case_lists"), "cases_").map(parseKeyValueFile)
-      .filter(keep).flatMap(_.get("case_list_ids").toSeq.flatMap(_.split("\t")))
+  private def listedIds(dir: String)(keep: Map[String, String] => Boolean): Option[Seq[String]] = {
+    val lines = listFiles(Paths.get(dir).resolve("case_lists"), "cases_")
+      .map(parseKeyValueFile).filter(keep).flatMap(_.get("case_list_ids"))
+    if (lines.isEmpty) None else Some(lines.flatMap(_.split("\t").filter(_.nonEmpty)))
+  }
 
   /** Every case list's `case_list_ids` in the package at `dir` as one
-    * `id` column (the containment input of [[check]]); None when no list
-    * carries an id.
+    * `id` column in one partition (the containment input of [[check]]);
+    * None when no list carries an id.
     */
   def caseListIds(spark: SparkSession, dir: String): Option[DataFrame] = {
     import spark.implicits._
-    val ids = listedIds(dir)(_ => true)
-    if (ids.isEmpty) None else Some(ids.toDF("id"))
+    listedIds(dir)(_ => true).filter(_.nonEmpty).map(_.toDF("id").coalesce(1))
   }
 
   /** Everything `validateData --no_portal_checks --strict_maf_checks`
     * checks, as (rule, value, passed) rows. The engine takes the frames
     * it checks and the package directory:
     *
-    *  - the containment, key-uniqueness, strict-MAF field and gene rules
-    *    check `sample`, `patient` and `maf`;
+    *  - the id-set, key-uniqueness, strict-MAF field and gene rules check
+    *    `sample`, `patient` and `maf`;
     *  - `case_list_ids_in_samples` checks the first column of
     *    `caseListIds` against `sample`'s SAMPLE_ID;
     *  - the structural and clinical-value rules read the package at
     *    `dir`, and so does the `cases_sequenced` contract: the package's
-    *    sequenced list and clinical sample file against `maf`.
+    *    sequenced list and raw (`inferSchema=false`) clinical sample file
+    *    against `maf`.
     *
-    * A rule whose frame, file or column is absent yields no row. Every
-    * distributed rule is submitted at once ([[Async]]), fact-side jobs
-    * first, and the driver-side structural layer runs while they do.
+    * Three concurrent passes carry the data rules: [[mafFieldRules]] as
+    * one aggregate pass over the MAF, the clinical value rules, and ONE
+    * key census ([[Rules.keyCensus]]) for every id-set, gene and build
+    * rule. The census scans each frame once under four namespaces —
+    * sample ids `s`, patient ids `p` (so a string that is both never
+    * matches across), Hugo symbols `g` valued by their Entrez ids, and
+    * NCBI builds `b` — with every key compared as a string. Containment
+    * rules ignore null keys; the dup rules are rows − distinct non-null
+    * keys. A rule whose frame, file or column is absent yields no row.
+    * The jobs are submitted at once ([[Async]]), fact-side first, and
+    * the driver-side structural layer runs while they do.
     */
   def check(spark: SparkSession, dir: String, sample: Option[DataFrame],
             patient: Option[DataFrame], maf: Option[DataFrame],
             caseListIds: Option[DataFrame]): Seq[(String, Long, Boolean)] = {
+    import spark.implicits._
+    import Rules.CensusKey
     type Rows = Seq[(String, Long, Boolean)]
     val root = Paths.get(dir)
-    def ruleRow(rule: String)(v: => Long): Future[Rows] =
-      Async(spark) { val n = v; Seq((rule, n, n == 0L)) }
-    def keyDups(df: DataFrame, key: String): Long =
-      Rules.evaluate(spark, df, Seq(Rules.noKeyedDups(key))).head().getLong(1)
     def withCol(df: Option[DataFrame], c: String) = df.filter(_.columns.contains(c))
     val sampleIds = withCol(sample, "SAMPLE_ID")
     val samplePatients = withCol(sample, "PATIENT_ID")
@@ -1068,58 +996,98 @@ object PortalRules {
     lazy val rawSample = scan(spark, root.resolve(SampleFile), inferSchema = false)
     lazy val rawPatient = scan(spark, root.resolve(PatientFile), inferSchema = false)
 
-    val dataRules: Seq[Future[Rows]] = Seq(
+    val fieldRules: Option[Future[Rows]] =
       maf.map(m => m -> mafFieldRules(m)).filter(_._2.nonEmpty).map {
         case (m, rules) => Async(spark)(Rules.evaluate(spark, m, rules).collect().toSeq
           .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))))
-      },
-      for (m <- barcodes; s <- sampleIds) yield ruleRow("maf_barcode_in_samples")(
-        subsetViolations(m, "Tumor_Sample_Barcode", s, "SAMPLE_ID")),
-      for (ids <- caseListIds; s <- sampleIds) yield ruleRow("case_list_ids_in_samples")(
-        subsetViolations(ids, ids.columns.head, s, "SAMPLE_ID", distinctChild = true)),
-      // tier 8: gene-identifier consistency across the MAF
-      maf.map(m => ruleRow("maf_hugo_entrez_consistent")(hugoEntrezInconsistencies(m))),
-      // tier 8: the cases_sequenced list must agree with the MAF in both
-      // directions (listed-but-unmutated, mutated-but-unlisted)
-      barcodes.map(m => Async(spark) {
-        rawSample.filter(_.columns.contains("SAMPLE_ID")).toSeq.flatMap { s =>
-          val seqIds = listedIds(dir)(_.get("stable_id").exists(_.endsWith("_sequenced")))
-          val (unsequenced, unlisted) =
-            casesSequencedViolations(spark, m, seqIds, s, "SAMPLE_ID")
-          Seq(("cases_sequenced_ids_have_mutations", unsequenced, unsequenced == 0L),
-            ("maf_barcodes_in_cases_sequenced", unlisted, unlisted == 0L))
-        }
-      }),
-      for (s <- samplePatients; p <- patients) yield ruleRow("sample_patient_in_patients")(
-        subsetViolations(s, "PATIENT_ID", p, "PATIENT_ID")),
-      sampleIds.map(s => ruleRow("no_dup_sample_id")(keyDups(s, "SAMPLE_ID"))),
-      // tier 6: the patient file's key must be unique too — a duplicated
-      // PATIENT_ID row makes attribute values nondeterministic on import
-      patients.map(p => ruleRow("clinical_no_dup_patient_id")(keyDups(p, "PATIENT_ID"))),
-      // tier 6: a patient with no sample never surfaces anywhere in the
-      // portal — validateData's orphan-patient warning, the mirror of
-      // the sample→patient containment
-      for (s <- samplePatients; p <- patients) yield ruleRow("clinical_orphan_patients")(
-        subsetViolations(p, "PATIENT_ID", s, "PATIENT_ID", distinctChild = true)),
-      // datatype/value conformance over every clinical output that has a
-      // well-formed header (one aggregate pass per file)
-      Some(Async(spark) {
-        val vs = Seq(
-          clinicalValueViolations(root.resolve(SampleFile), rawSample.get),
-          clinicalValueViolations(root.resolve(PatientFile), rawPatient.get)).flatten
-        if (vs.isEmpty) Seq.empty
-        else Seq("clinical_number_attrs_numeric" -> "number",
-          "clinical_boolean_attrs_boolean" -> "boolean",
-          "clinical_survival_status_format" -> "survival",
-          "clinical_survival_months_nonneg" -> "months",
-          "clinical_na_spellings" -> "na_spelling",
-          "clinical_value_whitespace" -> "whitespace",
-          "clinical_deceased_months_present" -> "deceased_months").map {
-          case (rule, k) => val n = vs.map(_(k)).sum; (rule, n, n == 0L)
-        }
-      })).flatten
+      }
+    val censusRules: Future[Rows] = Async(spark) {
+      // the sequenced contract: present when the MAF has barcodes and the
+      // raw sample file has SAMPLE_ID; vacuous (0, 0) without a list
+      val rawIds = barcodes.flatMap(_ => withCol(rawSample, "SAMPLE_ID"))
+      val seqIds = rawIds.flatMap(_ =>
+        listedIds(dir)(_.get("stable_id").exists(_.endsWith("_sequenced"))))
+      def str(c: String) = col(c).cast("string")
+      def keyed(df: Option[DataFrame], keys: (Seq[String], CensusKey)*) =
+        df.map(d => d -> keys.collect { case (cs, k) if cs.forall(d.columns.contains) => k })
+      val sources = Seq(
+        keyed(sample, Seq("SAMPLE_ID") -> CensusKey("s", "sid", str("SAMPLE_ID")),
+          Seq("PATIENT_ID") -> CensusKey("p", "spid", str("PATIENT_ID"))),
+        keyed(patient, Seq("PATIENT_ID") -> CensusKey("p", "ppid", str("PATIENT_ID"))),
+        keyed(maf,
+          Seq("Tumor_Sample_Barcode") -> CensusKey("s", "maf", str("Tumor_Sample_Barcode")),
+          // blank symbols and null ids are exempt from the gene rule
+          Seq("Hugo_Symbol", "Entrez_Gene_Id") -> CensusKey("g", "gene",
+            when(col("Hugo_Symbol") =!= "", str("Hugo_Symbol")), col("Entrez_Gene_Id")),
+          Seq("NCBI_Build") -> CensusKey("b", "build", str("NCBI_Build"))),
+        caseListIds.map(ids => ids -> Seq(CensusKey("s", "list", str(ids.columns.head)))),
+        rawIds.filter(_ => seqIds.isDefined).map(_ -> Seq(CensusKey("s", "raw", str("SAMPLE_ID")))),
+        // a driver-side list is one partition, not one slice per core
+        seqIds.map(_.toDF("id").coalesce(1) -> Seq(CensusKey("s", "seq", col("id"))))
+      ).flatten
+      val tags = sources.flatMap(_._2.map(_.tag)).toSet
+      def n(tag: String): Column = if (tags(tag)) col(tag) else lit(0L)
+      def inNs(ns: String) = col("ns") === ns && col("key").isNotNull
+      // distinct non-null keys of `ns` that meet `cond`
+      def keys(ns: String, cond: Column) = sum(when(inNs(ns) && cond, 1L).otherwise(0L))
+      // `tag`'s rows under the non-null keys of `ns` that meet `cond`
+      def rows(ns: String, tag: String, cond: Column) =
+        sum(when(inNs(ns) && cond, n(tag)).otherwise(0L))
+      // every `tag` row (null keys too) − its distinct non-null keys
+      def dups(ns: String, tag: String) =
+        sum(when(col("ns") === ns, n(tag)).otherwise(0L)) - keys(ns, n(tag) > 0)
+      val rules: Seq[(String, Column)] = Seq(
+        for (_ <- barcodes; _ <- sampleIds)
+          yield Seq("maf_barcode_in_samples" -> rows("s", "maf", n("sid") === 0)),
+        for (_ <- caseListIds; _ <- sampleIds)
+          yield Seq("case_list_ids_in_samples" -> keys("s", n("list") > 0 && n("sid") === 0)),
+        // tier 8: a symbol mapping to more than one Entrez id
+        maf.map(_ => Seq("maf_hugo_entrez_consistent" -> keys("g", col("lo") =!= col("hi")))),
+        // clamped at 0: an empty MAF (or one whose builds are all null) is
+        // vacuously consistent, not -1
+        withCol(maf, "NCBI_Build").map(_ => Seq("maf_ncbi_build_consistent" ->
+          greatest(keys("b", lit(true)) - lit(1L), lit(0L)))),
+        // tier 8: the cases_sequenced list must agree with the MAF in both
+        // directions (listed-but-unmutated, mutated-but-unlisted)
+        rawIds.map(_ => Seq(
+          "cases_sequenced_ids_have_mutations" -> keys("s", n("seq") > 0 && n("maf") === 0),
+          "maf_barcodes_in_cases_sequenced" ->
+            keys("s", n("maf") > 0 && n("raw") > 0 && n("seq") === 0))),
+        for (_ <- samplePatients; _ <- patients)
+          yield Seq("sample_patient_in_patients" -> rows("p", "spid", n("ppid") === 0)),
+        sampleIds.map(_ => Seq("no_dup_sample_id" -> dups("s", "sid"))),
+        // tier 6: the patient file's key must be unique too — a duplicated
+        // PATIENT_ID row makes attribute values nondeterministic on import
+        patients.map(_ => Seq("clinical_no_dup_patient_id" -> dups("p", "ppid"))),
+        // tier 6: a patient with no sample never surfaces anywhere in the
+        // portal — validateData's orphan-patient warning, the mirror of
+        // the sample→patient containment
+        for (_ <- samplePatients; _ <- patients)
+          yield Seq("clinical_orphan_patients" -> keys("p", n("ppid") > 0 && n("spid") === 0))
+      ).flatten.flatten
+      if (rules.isEmpty) Seq.empty
+      else rules.zip(Rules.censusCounts(sources, rules.map(_._2)))
+        .map { case ((rule, _), v) => (rule, v, v == 0L) }
+    }
+    // datatype/value conformance over every clinical output that has a
+    // well-formed header (one aggregate pass per file)
+    val valueRules: Future[Rows] = Async(spark) {
+      val vs = Seq(
+        clinicalValueViolations(root.resolve(SampleFile), rawSample.get),
+        clinicalValueViolations(root.resolve(PatientFile), rawPatient.get)).flatten
+      if (vs.isEmpty) Seq.empty
+      else Seq("clinical_number_attrs_numeric" -> "number",
+        "clinical_boolean_attrs_boolean" -> "boolean",
+        "clinical_survival_status_format" -> "survival",
+        "clinical_survival_months_nonneg" -> "months",
+        "clinical_na_spellings" -> "na_spelling",
+        "clinical_value_whitespace" -> "whitespace",
+        "clinical_deceased_months_present" -> "deceased_months").map {
+        case (rule, k) => val n = vs.map(_(k)).sum; (rule, n, n == 0L)
+      }
+    }
     val structural = structuralReport(dir)
-    structural ++ dataRules.flatMap(Async.await)
+    structural ++ (fieldRules.toSeq :+ censusRules :+ valueRules).flatMap(Async.await)
   }
 
   /** [[check]] over the written package at `dir`: the frames it checks

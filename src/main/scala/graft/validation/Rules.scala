@@ -162,23 +162,62 @@ object Rules {
     }.toDF("rule", "value", "passed")
   }
 
+  /** One keyed column a [[keyCensus]] source contributes: every row of
+    * the source adds one `(namespace, key, tag, value)` row. Keys compare
+    * in the type the caller gives them, so every key of one census shares
+    * one type; `value` compares by its string form.
+    */
+  final case class CensusKey(namespace: String, tag: String, key: Column,
+                             value: Column = lit(null))
+
+  /** The key census of several frames, one row per `(ns, key)`: a `tag`
+    * column per [[CensusKey]] tag counting that tag's rows under the key
+    * (so no tag is named `ns`, `key`, `lo` or `hi`), and `lo`/`hi`, the
+    * min/max over the key's non-null values of a 64-bit fingerprint
+    * (xxhash64) of the value's string form: `lo` ≠ `hi` exactly when the
+    * key saw two distinct values, up to a 2⁻⁶⁴ collision. The fingerprint
+    * keeps every aggregation buffer fixed-width, so the census plans as a
+    * hash aggregate; a string min/max makes Spark sort every input row.
+    * Null keys group like values. Each frame is scanned once — its keys
+    * leave it through one `inline(array(struct(…)))` projection — and the
+    * union of those projections takes one group-by, whose partial
+    * aggregate collapses a fact-sized frame to key scale before the
+    * shuffle.
+    */
+  def keyCensus(sources: Seq[(DataFrame, Seq[CensusKey])]): DataFrame = {
+    val tags = sources.flatMap(_._2.map(_.tag)).distinct
+    sources.filter(_._2.nonEmpty).map { case (df, keys) =>
+      df.select(inline(array(keys.map(k => struct(lit(k.namespace).as("ns"),
+        k.key.as("key"), lit(k.tag).as("tag"),
+        when(k.value.isNotNull, xxhash64(k.value.cast("string"))).as("value"))): _*)))
+    }.reduce(_ unionByName _)
+      .groupBy(col("ns"), col("key"))
+      .agg(min(col("value")).as("lo"), max(col("value")).as("hi") +:
+        tags.map(t => sum(when(col("tag") === t, 1L).otherwise(0L)).as(t)): _*)
+  }
+
+  /** Global aggregates over a [[keyCensus]] in one job, each coalesced to
+    * 0 (an empty census has no groups; one without keys runs no job).
+    */
+  def censusCounts(sources: Seq[(DataFrame, Seq[CensusKey])], aggs: Seq[Column]): Seq[Long] = {
+    if (sources.forall(_._2.isEmpty)) return aggs.map(_ => 0L)
+    val row = keyCensus(sources).agg(coalesce(aggs.head, lit(0L)),
+      aggs.tail.map(coalesce(_, lit(0L))): _*).head()
+    aggs.indices.map(row.getLong)
+  }
+
   /** The two-sided set difference of two key columns as distinct-key
-    * counts: (keys only in `a`, keys only in `b`). Both directions in ONE
-    * job: tag sides, one shuffle on the key, then count keys seen on only
-    * one side. Equivalent to two `except`s (nulls group like values,
-    * matching EXCEPT's null-safe semantics) at half the shuffles — the
-    * shape that matters when the fact side is 100 TB.
+    * counts: (keys only in `a`, keys only in `b`) — the two-source
+    * [[keyCensus]], both directions in ONE shuffle. Equivalent to two
+    * `except`s (nulls group like values, matching EXCEPT's null-safe
+    * semantics) at half the shuffles.
     */
   def setDifference(a: DataFrame, aKey: Column, b: DataFrame, bKey: Column): (Long, Long) = {
-    val row = a.select(aKey.as("k"), lit(1).as("side"))
-      .unionByName(b.select(bKey.as("k"), lit(2).as("side")))
-      .groupBy(col("k"))
-      .agg(max(when(col("side") === 1, 1).otherwise(0)).as("in_a"),
-        max(when(col("side") === 2, 1).otherwise(0)).as("in_b"))
-      .agg(
-        sum(when(col("in_a") === 1 && col("in_b") === 0, 1L).otherwise(0L)),
-        sum(when(col("in_b") === 1 && col("in_a") === 0, 1L).otherwise(0L))).head()
-    (row.getLong(0), row.getLong(1))
+    def only(in: String, out: String) = sum(when(col(in) > 0 && col(out) === 0, 1L).otherwise(0L))
+    val Seq(aOnly, bOnly) = censusCounts(
+      Seq(a -> Seq(CensusKey("k", "a", aKey)), b -> Seq(CensusKey("k", "b", bKey))),
+      Seq(only("a", "b"), only("b", "a")))
+    (aOnly, bOnly)
   }
 
   /** V10/V12/A9: distinct-set equality between two key columns, both
@@ -191,15 +230,6 @@ object Rules {
     Seq((s"${name}_a_minus_b", aNotB, aNotB == 0L),
       (s"${name}_b_minus_a", bNotA, bNotA == 0L))
       .toDF("rule", "value", "passed")
-  }
-
-  /** V16: no row growth after a left-side-preserving join (reference
-    * `clinical.py:283-287`).
-    */
-  def noRowGrowth(spark: SparkSession, name: String,
-                  before: Long, after: Long): DataFrame = {
-    import spark.implicits._
-    Seq((name, after - before, after <= before)).toDF("rule", "value", "passed")
   }
 
   /** The standard report over the test corpus — the `v_report` query.

@@ -43,28 +43,6 @@ class LayoutSpec extends AnyFunSuite {
     assert(checksum(spark.read.parquet(dir)) == beforeSum)
   }
 
-  test("analyzed table exposes exact row and column stats to the optimizer") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-layout-s").toString
-    val db = "graft_stats_spec"
-    Layout.ensureDb(spark, db, tmp)
-    Tables.customer(spark, sf001).select("c_custkey", "c_mktsegment")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"$db.cust_s")
-    Layout.analyzeTable(spark, db, "cust_s", Seq("c_custkey", "c_mktsegment"))
-    val prevCbo = spark.conf.get("spark.sql.cbo.enabled")
-    try {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      val t = spark.table(s"$db.cust_s")
-      val stats = t.queryExecution.optimizedPlan.stats
-      assert(stats.rowCount.contains(BigInt(t.count())),
-        s"expected exact rowCount from ANALYZE, got ${stats.rowCount}")
-      val distinctSegs = stats.attributeStats.collectFirst {
-        case (a, s) if a.name == "c_mktsegment" => s.distinctCount
-      }.flatten
-      assert(distinctSegs.contains(BigInt(5)),
-        s"expected 5 distinct segments in column stats, got $distinctSegs")
-    } finally spark.conf.set("spark.sql.cbo.enabled", prevCbo)
-  }
-
   test("z-ordered layout tightens per-file min/max on BOTH dimensions") {
     import org.apache.spark.sql.functions._
     val df = Tables.orders(spark, sf001)

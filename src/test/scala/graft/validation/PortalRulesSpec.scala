@@ -296,6 +296,8 @@ class PortalRulesSpec extends AnyFunSuite {
     val rep = reportMap(dir)
     assert(rep("portal_case_list_ids_nonempty") == ((1L, false)))
     assert(rep("portal_case_list_fields")._2, "all five keys are present")
+    // an empty line lists no id, not the id ""
+    assert(rep("case_list_ids_in_samples") == ((0L, true)))
   }
 
   test("duplicate ids inside one case list trip portal_case_list_dup_ids") {
@@ -749,6 +751,20 @@ class PortalRulesSpec extends AnyFunSuite {
     assert(rep("maf_barcodes_in_cases_sequenced") == ((1L, false)), "unlisted s3")
   }
 
+  test("empty cases_sequenced list: no phantom id, every mutated sample is unlisted") {
+    val dir = healthyPackage()
+    write(Paths.get(dir, "case_lists", "cases_sequenced.txt"),
+      "cancer_study_identifier: study1\n" +
+        "stable_id: study1_sequenced\n" +
+        "case_list_name: Sequenced samples\n" +
+        "case_list_description: Samples with mutation data\n" +
+        "case_list_category: all_cases_with_mutation_data\n" +
+        "case_list_ids: \n")
+    val rep = reportMap(dir)
+    assert(rep("cases_sequenced_ids_have_mutations") == ((0L, true)))
+    assert(rep("maf_barcodes_in_cases_sequenced") == ((2L, false)), "s1, s3")
+  }
+
   test("one Hugo symbol mapping to two Entrez ids trips maf_hugo_entrez_consistent") {
     val dir = healthyPackage()
     val maf = Seq(
@@ -947,5 +963,108 @@ class PortalRulesSpec extends AnyFunSuite {
     val structural = PortalRules.structuralReport(dir)
     assert(structural.nonEmpty)
     structural.foreach { case (r, v, ok) => assert(rep(r) == ((v, ok)), r) }
+  }
+
+  test("id-set, gene and build rules: hand-computed corner cases") {
+    val dir = healthyPackage()
+    // the raw sample file the sequenced contract reads as written
+    // (inferSchema=false): "007" stays "007", the blank cell is null
+    write(Paths.get(dir, "data_clinical_sample.txt"),
+      "#Sample ID\tPatient ID\n#Sample identifier\tPatient identifier\n" +
+        "#STRING\tSTRING\n#1\t1\nSAMPLE_ID\tPATIENT_ID\n" +
+        "007\tp1\n8\tp1\n9\tp2\n\tp2\ns1\tp1\n")
+    write(Paths.get(dir, "case_lists", "cases_sequenced.txt"),
+      "cancer_study_identifier: study1\n" +
+        "stable_id: study1_sequenced\n" +
+        "case_list_name: Sequenced samples\n" +
+        "case_list_description: Samples with mutation data\n" +
+        "case_list_category: all_cases_with_mutation_data\n" +
+        "case_list_ids: 007\t8\ts1\tGHOST\n")
+    // SAMPLE_ID as inference reads "007", "007", "8", "9": an integer
+    // column, so the raw file's "007" is not the frame's "7". "7" is also
+    // a PATIENT_ID (row 6); s1's duplicate and two null SAMPLE_IDs
+    val sample = Seq[(Option[Int], Option[String])](
+      (Some(7), Some("p1")), (Some(7), Some("p1")), (None, Some("p2")),
+      (None, None), (Some(8), Some("P8")), (Some(9), Some("7")))
+      .toDF("SAMPLE_ID", "PATIENT_ID")
+    // "8" is a PATIENT_ID here as well as a SAMPLE_ID
+    val patient = Seq[Option[String]](Some("p1"), Some("p2"), Some("p2"), None,
+      Some("8"), Some("p9")).toDF("PATIENT_ID")
+    val maf = Seq[(Option[String], Option[String], Option[Long])](
+      (Some("007"), Some("TP53"), Some(7157L)), (Some("7"), Some("TP53"), Some(7158L)),
+      (Some("8"), Some(""), None), (Some("9"), Some("KRAS"), None),
+      (None, Some("KRAS"), Some(3845L)), (Some("8"), None, Some(1L)),
+      (Some("x9"), Some("EGFR"), Some(1956L)), (Some("x9"), Some("EGFR"), Some(1956L)))
+      .toDF("Tumor_Sample_Barcode", "Hugo_Symbol", "Entrez_Gene_Id")
+      .withColumn("NCBI_Build", org.apache.spark.sql.functions.lit(null).cast("string"))
+    val ids = Seq[Option[String]](Some("7"), Some("7"), None, Some("p1"), Some("007"))
+      .toDF("id")
+    val rep = PortalRules.check(spark, dir, Some(sample), Some(patient), Some(maf),
+      Some(ids)).map { case (r, v, ok) => r -> ((v, ok)) }.toMap
+    // sample ids {7, 8, 9}: 6 rows − 3 distinct non-null keys
+    assert(rep("no_dup_sample_id") == ((3L, false)))
+    // patient ids {p1, p2, 8, p9}: 6 rows − 4
+    assert(rep("clinical_no_dup_patient_id") == ((2L, false)))
+    // sample rows whose patient is absent: P8 and "7" (a sample id only)
+    assert(rep("sample_patient_in_patients") == ((2L, false)))
+    // patients with no sample: p9 and "8" (a sample id only)
+    assert(rep("clinical_orphan_patients") == ((2L, false)))
+    // MAF rows under barcodes outside the sample ids: "007", "x9" ×2
+    assert(rep("maf_barcode_in_samples") == ((3L, false)))
+    // listed ids outside the sample ids: p1 (a patient id only), "007"
+    assert(rep("case_list_ids_in_samples") == ((2L, false)))
+    // listed {007, 8, s1, GHOST} vs mutated {007, 7, 8, 9, x9}: s1, GHOST
+    assert(rep("cases_sequenced_ids_have_mutations") == ((2L, false)))
+    // mutated raw samples {007, 8, 9} left off the list: 9
+    assert(rep("maf_barcodes_in_cases_sequenced") == ((1L, false)))
+    // TP53 → {7157, 7158}; KRAS's null id, the blank and null symbols exempt
+    assert(rep("maf_hugo_entrez_consistent") == ((1L, false)))
+    assert(rep("maf_ncbi_build_consistent") == ((0L, true)))
+    // the blank symbol with a null id has no usable identifier
+    assert(rep("maf_gene_identifier_present") == ((1L, false)))
+    // a MAF with no keyed column still reports the gene rule, as 0
+    val bare = PortalRules.check(spark, Files.createTempDirectory("portal-bare").toString,
+      None, None, Some(Seq("7").toDF("Chromosome")), None)
+    assert(bare.collect { case (r, v, ok) if !r.startsWith("portal_") &&
+      !r.startsWith("clinical_") => (r, v, ok) }.toSet ==
+      Set(("maf_chromosome_valid", 0L, true), ("maf_chromosome_present", 0L, true),
+        ("maf_chromosome_no_prefix", 0L, true), ("maf_hugo_entrez_consistent", 0L, true)))
+  }
+
+  test("check launches a bounded number of jobs on the healthy package") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = healthyPackage()
+    def read(f: String) = Some(Tsv.read(spark, s"$dir/$f", comment = Some('#')))
+    val (sample, patient, maf) =
+      (read(PortalRules.SampleFile), read(PortalRules.PatientFile), read(PortalRules.MafFile))
+    val ids = PortalRules.caseListIds(spark, dir)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("portal-check-jobs", "check")
+      val rows = PortalRules.check(spark, dir, sample, patient, maf, ids)
+      rows.foreach { case (r, v, ok) => assert(ok, s"$r value=$v") }
+      // the bus posts job starts in submission order: once the marker's
+      // start is seen, so is every job check launched
+      sc.setJobGroup("portal-check-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("portal-check-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("portal-check-end"), "listener never saw the marker")
+      val jobs = groups.asScala.count(_ == "portal-check-jobs")
+      info(s"check launched $jobs jobs")
+      assert(jobs > 0 && jobs <= 12, s"check launched $jobs jobs")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
   }
 }

@@ -45,11 +45,31 @@ class RulesSpec extends AnyFunSuite {
     assert(rows("ids_b_minus_a") == (0L, true))
   }
 
-  test("noRowGrowth flags outer-join growth (V16)") {
-    val grew = Rules.noRowGrowth(spark, "neo_merge", before = 10L, after = 12L).head()
-    assert(!grew.getBoolean(2) && grew.getLong(1) == 2L)
-    val ok = Rules.noRowGrowth(spark, "neo_merge", before = 10L, after = 10L).head()
-    assert(ok.getBoolean(2))
+  test("keyCensus: per-tag counts and value range per (namespace, key); nulls group") {
+    import org.apache.spark.sql.functions.{col, lit, xxhash64}
+    val a = Seq[(Option[String], Option[String])](
+      (Some("x"), Some("1")), (Some("x"), Some("2")), (None, None)).toDF("k", "v")
+    val b = Seq[Option[String]](Some("x"), Some("y"), None).toDF("k")
+    val census = Rules.keyCensus(Seq(
+      a -> Seq(Rules.CensusKey("n", "a", col("k"), col("v")), Rules.CensusKey("m", "a2", col("k"))),
+      b -> Seq(Rules.CensusKey("n", "b", col("k")))))
+    // the value range is over fingerprints of the values' string form,
+    // and a hash aggregate computes it (no sort of the input rows)
+    assert(!census.queryExecution.executedPlan.toString.contains("SortAggregate"))
+    val Seq(h1, h2) = Seq("1", "2").map(v => spark.range(1).select(xxhash64(lit(v))).head().getLong(0))
+    val rows = census.collect().map { r =>
+      (r.getAs[String]("ns"), Option(r.getAs[String]("key"))) ->
+        ((r.getAs[Long]("a"), r.getAs[Long]("a2"), r.getAs[Long]("b"),
+          Option(r.get(r.fieldIndex("lo"))), Option(r.get(r.fieldIndex("hi")))))
+    }.toMap
+    assert(rows == Map(
+      ("n", Some("x")) -> ((2L, 0L, 1L, Some(h1 min h2), Some(h1 max h2))),
+      ("n", None) -> ((1L, 0L, 1L, None, None)),
+      ("n", Some("y")) -> ((0L, 0L, 1L, None, None)),
+      ("m", Some("x")) -> ((0L, 2L, 0L, None, None)),
+      ("m", None) -> ((0L, 1L, 0L, None, None))))
+    // null is a key on both sides, so only y is one-sided
+    assert(Rules.setDifference(a, col("k"), b, col("k")) == ((0L, 1L)))
   }
 
   test("V15/V16 observed forms: neo-only and lens-null counts, zero extra job") {
