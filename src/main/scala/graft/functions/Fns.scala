@@ -24,12 +24,13 @@ object Fns {
     * `"_amadeus"` (`clinical.py:109-115`).
     */
   def stripSuffixesFromStringColumns(df: DataFrame): DataFrame = {
-    val stringCols = df.schema.fields
+    val stripped = df.schema.fields
       .filter(_.dataType == org.apache.spark.sql.types.StringType).map(_.name)
-    stringCols.foldLeft(df) { (acc, name) =>
-      val suffix = if (name == "AMADEUS_STUDY") "_amadeus" else "_" + name.toLowerCase
-      acc.withColumn(name, ReplaceFirst.replaceFirst(qcol(name), lit(suffix), lit("")))
-    }
+      .map { name =>
+        val suffix = if (name == "AMADEUS_STUDY") "_amadeus" else "_" + name.toLowerCase
+        name -> ReplaceFirst.replaceFirst(qcol(name), lit(suffix), lit(""))
+      }
+    df.withColumns(stripped.toMap)
   }
 
   /** F2 — `str.replace("_"," ").str.upper()` (`clinical.py:136-167`). */

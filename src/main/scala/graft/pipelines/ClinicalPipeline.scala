@@ -93,14 +93,11 @@ object ClinicalPipeline {
     * `clinical.py:515-535`).
     */
   def transformSurvival(df: DataFrame): DataFrame = {
-    val afterStatus = SurvivalStatusCols.foldLeft(df) { (acc, c) =>
-      if (acc.columns.contains(c))
-        acc.withColumn(c, Fns.recodeSurvivalStatus(col(c), "0:LIVING", "1:DECEASED"))
-      else acc
-    }
-    SurvivalMonthsCols.foldLeft(afterStatus) { (acc, c) =>
-      if (acc.columns.contains(c)) acc.withColumn(c, Fns.daysToMonths(col(c))) else acc
-    }
+    val present = df.columns.toSet
+    df.withColumns((
+      SurvivalStatusCols.filter(present).map(c =>
+        c -> Fns.recodeSurvivalStatus(col(c), "0:LIVING", "1:DECEASED")) ++
+        SurvivalMonthsCols.filter(present).map(c => c -> Fns.daysToMonths(col(c)))).toMap)
   }
 
   /** F2/F3 — mapping-driven case normalization: `Case == "CAPS"` → upper,
@@ -109,13 +106,12 @@ object ClinicalPipeline {
   def normalizeCase(df: DataFrame, attrMapping: DataFrame): DataFrame = {
     val cases = attrMapping.select("NORMALIZED_HEADER", "Case").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    df.columns.foldLeft(df) { (acc, name) =>
-      cases.get(name) match {
-        case Some("CAPS") => acc.withColumn(name, Fns.capsCase(Fns.qcol(name)))
-        case Some("Title Case") => acc.withColumn(name, Fns.titleCase(Fns.qcol(name)))
-        case _ => acc
+    df.withColumns(df.columns.toSeq.flatMap { name =>
+      cases.get(name).collect {
+        case "CAPS" => name -> Fns.capsCase(Fns.qcol(name))
+        case "Title Case" => name -> Fns.titleCase(Fns.qcol(name))
       }
-    }
+    }.toMap)
   }
 
   /** The full preprocessing chain (reference `clinical.py:290-362`):

@@ -186,9 +186,8 @@ object RefQueries {
 
   /** S9 — the `cbio` DataSource V2: write the cBioPortal headered TSV via
     * our sink, read it back through the custom source (typed NUMBER
-    * columns, metadata from the header block, reader-side column
-    * pruning), aggregate. The only full custom-source surface in the
-    * engine — see `sources/CbioTsvSource`.
+    * columns and metadata from the header block, scanned by Spark's CSV
+    * reader), aggregate — see `sources/CbioTsvSource`.
     */
   def s9CbioSource: Q = (s, dir) => {
     val tmp = java.nio.file.Files.createTempDirectory("graft-s9").toString

@@ -29,8 +29,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the distributed cbio sink, which also records the per-version
   * `version_comment` in its `_version.json` sidecar.
   *
-  * The read format resolves synId → version directory and delegates the
-  * scan to the cbio reader (typed NUMBER columns, metadata, pruning):
+  * The read format resolves synId → version directory and reads it as
+  * the cbio format does (header-block schema, Spark's CSV scan):
   *
   *   spark.read.format("synapse").option("store", root)
   *     .option("version", "2")          // omit for latest
@@ -256,8 +256,8 @@ class SynapseSource extends TableProvider with DataSourceRegister {
   }
 }
 
-/** Read-only view of one resolved entity version; scanning is the cbio
-  * reader's (writes go through [[SynapseStore.store]], which is what
+/** Read-only view of one resolved entity version; it scans like a cbio
+  * table (writes go through [[SynapseStore.store]], which is what
   * assigns version numbers — a raw path write would bypass them).
   */
 private[sources] class SynapseReadTable(path: String, schema: StructType)
@@ -266,6 +266,8 @@ private[sources] class SynapseReadTable(path: String, schema: StructType)
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
+  private lazy val csv = CbioTsvSource.csvTable(path, schema)
+
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CbioScanBuilder(path, schema)
+    new UnsizedCsvScanBuilder(csv)
 }

@@ -11,7 +11,8 @@ import graft.functions.Format12g.format12g
 
 /** TSV source/sink layer reproducing the reference's file surface
   * (SURVEY §2.1):
-  *  - S2/S3/S4: `pd.read_csv(sep="\t", comment="#")` scans
+  *  - S2/S3/S4: `pd.read_csv(sep="\t", comment="#")` scans: Spark's CSV
+  *    reader in [[Dialect]], as the `cbio` scan is
   *  - K1: `to_csv(sep="\t", index=False, float_format="%.12g")` sink
   *  - K3: case-list text files (key-value header + tab-joined id list)
   *  - K4: meta key-value files
@@ -20,9 +21,25 @@ import graft.functions.Format12g.format12g
   * assembled with `concat_ws`, distributed; a file output then coalesces
   * to one partition and streams into place — the reference's outputs are
   * small per-dataset files. A multi-part output with the header block in
-  * every part is the `cbio` sink's (`CbioTsvSource`).
+  * every part is the `cbio` sink's (`CbioTsvSource`, whose header-block
+  * schema and versioned commit stay hand-written).
   */
 object Tsv {
+
+  /** The one TSV dialect every scan here reads, as both sinks write it:
+    * tab-separated with a header row, empty cell = null, quotes escaped by
+    * doubling (RFC 4180 / pandas), `#` comment lines, and Format12g's
+    * `nan`/`inf`/`-inf` doubles (pandas reads them as floats too).
+    */
+  val Dialect: Map[String, String] = Map(
+    "sep" -> "\t", "header" -> "true", "nullValue" -> "", "escape" -> "\"",
+    "comment" -> "#",
+    "nanValue" -> "nan", "positiveInf" -> "inf", "negativeInf" -> "-inf")
+
+  private def reader(spark: SparkSession, comment: Option[Char], multiLine: Boolean) =
+    spark.read
+      .options(comment.fold(Dialect - "comment")(c => Dialect + ("comment" -> c.toString)))
+      .option("multiLine", multiLine)
 
   /** `multiLine` enables quoted records with embedded newlines (pandas
     * reads them by default; Spark must opt in). Costs splittability — a
@@ -34,17 +51,10 @@ object Tsv {
            inferSchema: Boolean = true,
            schema: Option[StructType] = None,
            multiLine: Boolean = false): DataFrame = {
-    var r = spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("nullValue", "")
-      .option("multiLine", multiLine.toString)
-      // doubled-quote escaping (RFC 4180 / pandas), not backslash
-      .option("escape", "\"")
-    comment.foreach(c => r = r.option("comment", c.toString))
+    val r = reader(spark, comment, multiLine)
     schema match {
       case Some(s) => r.schema(s).csv(path)
-      case None    => r.option("inferSchema", inferSchema.toString).csv(path)
+      case None    => r.option("inferSchema", inferSchema).csv(path)
     }
   }
 
@@ -56,17 +66,8 @@ object Tsv {
   def readMany(spark: SparkSession, paths: Seq[String],
                comment: Option[Char] = None,
                inferSchema: Boolean = true,
-               multiLine: Boolean = false): DataFrame = {
-    var r = spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("nullValue", "")
-      .option("multiLine", multiLine.toString)
-      .option("escape", "\"")
-      .option("inferSchema", inferSchema.toString)
-    comment.foreach(c => r = r.option("comment", c.toString))
-    r.csv(paths: _*)
-  }
+               multiLine: Boolean = false): DataFrame =
+    reader(spark, comment, multiLine).option("inferSchema", inferSchema).csv(paths: _*)
 
   /** Format one column to its TSV string per the reference's serialization:
     * doubles/floats via `%.12g`, everything else via cast-to-string; null →
@@ -74,8 +75,10 @@ object Tsv {
     * separator, a newline/CR, or a quote are minimally quoted with doubled
     * inner quotes (pandas QUOTE_MINIMAL) — Spark's CSV reader unquotes
     * them back, so embedded tabs round-trip instead of corrupting rows.
+    * In the `first` column a value beginning with `#` is quoted too, or
+    * the [[Dialect]]'s comment rule would drop its line on re-read.
     */
-  def cellToString(df: DataFrame, field: StructField): Column = {
+  def cellToString(df: DataFrame, field: StructField, first: Boolean): Column = {
     val c = graft.functions.Fns.qcol(field.name)
     val s = field.dataType match {
       case DoubleType            => format12g(c)
@@ -84,15 +87,19 @@ object Tsv {
       case DateType              => date_format(c, "yyyy-MM-dd")
       case _                     => c.cast(StringType)
     }
-    val quoted = when(s.rlike("[\t\n\r\"]"),
+    val quoted = when(s.rlike(if (first) "^#|[\t\n\r\"]" else "[\t\n\r\"]"),
       concat(lit("\""), regexp_replace(s, "\"", "\"\""), lit("\""))).otherwise(s)
     coalesce(quoted, lit("")) // concat_ws would silently drop nulls
   }
 
-  /** The whole frame as one `line` string column (header not included). */
+  /** The whole frame as one `line` string column (header not included).
+    * A one-column row whose cell is empty is written `""`, as Python's
+    * csv module does: the scan skips blank lines.
+    */
   def toLines(df: DataFrame): DataFrame = {
-    val cells = df.schema.fields.map(f => cellToString(df, f))
-    df.select(concat_ws("\t", cells.toIndexedSeq: _*).as("line"))
+    val cells = df.schema.fields.zipWithIndex.map { case (f, i) => cellToString(df, f, i == 0) }
+    val line = concat_ws("\t", cells.toIndexedSeq: _*)
+    df.select((if (cells.length == 1) when(line === "", lit("\"\"")).otherwise(line) else line).as("line"))
   }
 
   def headerLine(df: DataFrame): String = df.columns.mkString("\t")
@@ -106,19 +113,22 @@ object Tsv {
     val target = Paths.get(file)
     Option(target.getParent).foreach(Files.createDirectories(_))
     val tmp = Files.createTempDirectory("graft-tsv")
-    val tmpOut = tmp.resolve("out").toString
-    toLines(df).coalesce(1).write.option("header", "false").text(tmpOut)
-    val part = Files.list(Paths.get(tmpOut)).filter(_.getFileName.toString.startsWith("part-"))
-      .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $tmpOut"))
-    val sb = new StringBuilder
-    headerBlock.foreach { h => sb.append(h).append('\n') }
-    sb.append(headerLine(df)).append('\n')
-    Files.write(target, sb.toString.getBytes(StandardCharsets.UTF_8))
-    // stream the part file into place — never the whole file through a
-    // driver-side byte array
-    val out = Files.newOutputStream(target, StandardOpenOption.APPEND)
-    try Files.copy(part, out) finally out.close()
-    deleteRecursively(tmp)
+    try {
+      val tmpOut = tmp.resolve("out").toString
+      toLines(df).coalesce(1).write.option("header", "false").text(tmpOut)
+      val listing = Files.list(Paths.get(tmpOut))
+      val part = try listing.filter(_.getFileName.toString.startsWith("part-"))
+        .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $tmpOut"))
+      finally listing.close()
+      val sb = new StringBuilder
+      headerBlock.foreach { h => sb.append(h).append('\n') }
+      sb.append(headerLine(df)).append('\n')
+      Files.write(target, sb.toString.getBytes(StandardCharsets.UTF_8))
+      // stream the part file into place — never the whole file through a
+      // driver-side byte array
+      val out = Files.newOutputStream(target, StandardOpenOption.APPEND)
+      try Files.copy(part, out) finally out.close()
+    } finally deleteRecursively(tmp)
   }
 
   /** K3 — one case-list file: the key-value template every case list

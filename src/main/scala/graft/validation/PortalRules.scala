@@ -204,6 +204,12 @@ object PortalRules {
   private def violation(cond: Column): Column =
     sum(when(cond, 1L).otherwise(0L))
 
+  /** Null or empty in its written form: the cast keeps a column inferred
+    * as a number (ids like `007`) from failing the `""` comparison under
+    * ANSI.
+    */
+  private def blank(c: Column): Column = c.isNull || c.cast("string") === ""
+
   /** Non-null value OUTSIDE the vocabulary. NULL is exempt by design:
     * an empty cell is a presence concern (its own rules), not a
     * vocabulary one — and SQL's `x NOT IN (...)` (the oracle form)
@@ -239,8 +245,7 @@ object PortalRules {
         violation(notInVocab(col("Mutation_Status"), ValidMutationStatus.toSeq)))
     if (cols("Tumor_Sample_Barcode"))
       b += Rules.Rule("maf_barcode_present",
-        violation(col("Tumor_Sample_Barcode").isNull ||
-          col("Tumor_Sample_Barcode") === ""))
+        violation(blank(col("Tumor_Sample_Barcode"))))
     if (cols("Variant_Classification"))
       b += Rules.Rule("maf_variant_classification_valid",
         violation(notInVocab(col("Variant_Classification"),
@@ -327,7 +332,6 @@ object PortalRules {
     // cell is not a *vocabulary* violation), which means an ALL-blank
     // column would sail through them. Presence is therefore its own rule
     // tier — validateData's required-field errors.
-    def blank(c: Column): Column = c.isNull || c.cast("string") === ""
     if (cols("Reference_Allele") && cols("Tumor_Seq_Allele2"))
       b += Rules.Rule("maf_allele_present",
         violation(blank(col("Reference_Allele")) ||

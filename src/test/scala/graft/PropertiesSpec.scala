@@ -62,9 +62,17 @@ class PropertiesSpec extends AnyFunSuite {
           .map { case ((t, v), id) => (id.toLong, t, v) }
           .toDF("id", "txt", "num")
         df.repartition(3).write.format("cbio").mode("append").save(dir)
-        val back = spark.read.format("cbio").load(dir)
+        val cbio = spark.read.format("cbio").load(dir)
+        val back = cbio
           .collect().map(r => r.getAs[Double]("id") ->
             ((Option(r.getAs[String]("txt")), Option(r.getAs[Any]("num"))))).toMap
+        // one dialect: the plain TSV scan under the header-block schema
+        // reads the same rows
+        val viaTsv = graft.sources.Tsv.read(spark, dir, comment = Some('#'),
+          schema = Some(cbio.schema), multiLine = true)
+        def rowsOf(d: org.apache.spark.sql.DataFrame) =
+          d.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.head).toSeq
+        assert(rowsOf(viaTsv) == rowsOf(cbio))
         rows.zipWithIndex.foreach { case ((t, v), id) =>
           val (bt, bv) = back(id.toDouble)
           // empty string and null both serialize to an empty cell — the

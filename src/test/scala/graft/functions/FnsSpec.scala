@@ -49,6 +49,16 @@ class FnsSpec extends AnyFunSuite {
     assert(out.getLong(2) == 3L)         // non-string column untouched
   }
 
+  test("F1 stripSuffixesFromStringColumns adds one Project for any number of columns") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val df = spark.range(1).select((0 until 30).map(i => lit(s"v_c$i").as(s"c$i")): _*)
+    def projects(d: org.apache.spark.sql.DataFrame): Int =
+      d.queryExecution.analyzed.collect { case p: Project => p }.size
+    val out = Fns.stripSuffixesFromStringColumns(df)
+    assert(projects(out) == projects(df) + 1)
+    assert(out.head().getString(29) == "v")
+  }
+
   test("F1 strip preserves NA count (reference V17)") {
     val df = Seq(Some("liver_cancer_type"), None, Some("x")).toDF("CANCER_TYPE")
     val before = df.filter($"CANCER_TYPE".isNull).count()

@@ -12,8 +12,8 @@ import graft.SparkTestBase.spark
 
 /** The `cbio` DataSource V2: reads the reference's headered clinical TSV
   * (4 `#`-metadata lines + header + data), typing NUMBER columns as
-  * double, surfacing display-name/priority as field metadata, and pruning
-  * columns inside the reader.
+  * double, surfacing display-name/priority as field metadata, and
+  * scanning through Spark's CSV reader (pruning and pushdown included).
   */
 class CbioTsvSourceSpec extends AnyFunSuite {
   import spark.implicits._
@@ -109,12 +109,67 @@ class CbioTsvSourceSpec extends AnyFunSuite {
     assert(back("s4") == ("plain", "ok"))
   }
 
-  // ---- filter pushdown (reader-side row skip, residual re-checked) ----
+  // ---- filter pushdown (Spark's CSV scan, residual re-checked) ----
 
-  private def scanDescription(df: org.apache.spark.sql.DataFrame): String =
+  private def csvScan(df: org.apache.spark.sql.DataFrame) =
     df.queryExecution.executedPlan.collectLeaves().head
       .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-      .scan.description()
+      .scan.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.csv.CSVScan]
+
+  private def scanDescription(df: org.apache.spark.sql.DataFrame): String =
+    csvScan(df).description()
+
+  test("cbio and synapse both plan Spark's CSVScan with pruned columns and pushed filters") {
+    // a glob character in the directory name is read literally
+    val dir = Files.createTempDirectory("cbio-[plan]").toString
+    val root = s"$dir/store"
+    val id = SynapseStore.store(spark.read.format("cbio").load(writeFixture()), root,
+      "data_clinical_sample.txt", "synFolder")
+    Seq(spark.read.format("cbio").load(SynapseStore.get(root, id)),
+      spark.read.format("synapse").option("store", root).load(id)).foreach { src =>
+      val df = src.filter(col("TMB") > 5.0).select("SAMPLE_ID")
+      val scan = csvScan(df)
+      assert(scan.readSchema().fieldNames.toSeq == Seq("SAMPLE_ID", "TMB"))
+      assert(scan.pushedFilters.map(_.toString).toSeq
+        .contains("GreaterThan(TMB,5.0)"), scan.description())
+      assert(!scan.estimateStatistics().sizeInBytes().isPresent) // UnsizedCsvScanBuilder
+      assert(df.as[String].collect().toSeq == Seq("s1"))
+    }
+  }
+
+  test("a first-column cell starting with # survives every writer/reader pair") {
+    val tmp = Files.createTempDirectory("cbio-hash").toString
+    val df = Seq(("#x", "a"), ("y", "#b")).toDF("SAMPLE_ID", "NOTE")
+    val want = Seq(("#x", "a"), ("y", "#b"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    Tsv.writeTsvFile(df, s"$tmp/k1.txt")
+    assert(rows(spark.read.format("cbio").load(s"$tmp/k1.txt")) == want)
+    assert(rows(Tsv.read(spark, s"$tmp/k1.txt", comment = Some('#'))) == want)
+    df.write.format("cbio").mode("append").save(s"$tmp/sink")
+    assert(rows(spark.read.format("cbio").load(s"$tmp/sink")) == want)
+  }
+
+  test("a one-column row with a null cell survives every writer/reader pair") {
+    val tmp = Files.createTempDirectory("cbio-blank").toString
+    val df = Seq(Some("a"), None).toDF("SAMPLE_ID")
+    def ids(d: org.apache.spark.sql.DataFrame) = d.collect().map(r => Option(r.getString(0))).toSet
+    Tsv.writeTsvFile(df, s"$tmp/k1.txt")
+    assert(ids(spark.read.format("cbio").load(s"$tmp/k1.txt")) == Set(Some("a"), None))
+    assert(ids(Tsv.read(spark, s"$tmp/k1.txt", comment = Some('#'))) == Set(Some("a"), None))
+    df.write.format("cbio").mode("append").save(s"$tmp/sink")
+    assert(ids(spark.read.format("cbio").load(s"$tmp/sink")) == Set(Some("a"), None))
+  }
+
+  test("a part whose header differs from the schema fails the read") {
+    val dir = Files.createTempDirectory("cbio-hdr").toString + "/ds"
+    Seq(("s1", 1.0)).toDF("SAMPLE_ID", "SCORE").write.format("cbio").mode("append").save(dir)
+    // whichever part's header gives the schema, the other part's differs
+    Seq((2.0, "s2")).toDF("SCORE", "SAMPLE_ID").write.format("cbio").mode("append").save(dir)
+    val e = intercept[Exception](spark.read.format("cbio").load(dir).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("header"))), e.toString)
+  }
 
   test("pushdown: supported predicates reach the reader; result matches post-hoc filter") {
     val f = writeFixture()
@@ -148,9 +203,7 @@ class CbioTsvSourceSpec extends AnyFunSuite {
     val f = writeFixture()
     val src = spark.read.format("cbio").load(f)
     val ineq = src.filter(col("CANCER_TYPE") > "B")
-    assert(!scanDescription(ineq).contains("GreaterThan(CANCER_TYPE"),
-      "UTF-16 vs UTF-8 ordering: string > must not be pushed")
-    assert(ineq.count() == 3) // correctness unaffected: residual applies it
+    assert(ineq.count() == 3)
     val eq = src.filter(col("PATIENT_ID") === "p1")
     assert(scanDescription(eq).contains("EqualTo(PATIENT_ID,p1)"))
     assert(eq.count() == 2)

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase.spark
@@ -56,6 +58,22 @@ class TsvSpec extends AnyFunSuite {
     assert(back(2L) == "has\ttab")
     assert(back(3L) == "has \"quotes\"")
     assert(back(4L) == "multi\nline")
+  }
+
+  test("a failed write leaves no temp directory behind") {
+    def tsvTemps(): Set[String] = {
+      val listing = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+      try listing.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft-tsv")).toSet
+      finally listing.close()
+    }
+    val before = tsvTemps()
+    val df = Seq(1L, 2L).toDF("id")
+      .withColumn("boom", org.apache.spark.sql.functions.raise_error(
+        org.apache.spark.sql.functions.lit("boom")))
+    val target = Files.createTempDirectory("tsv-fail").resolve("out.tsv").toString
+    intercept[Exception](Tsv.writeTsvFile(df, target))
+    assert((tsvTemps() -- before).isEmpty)
   }
 
   test("roundtrip preserves values through write+read") {

@@ -1031,6 +1031,14 @@ class PortalRulesSpec extends AnyFunSuite {
         ("maf_chromosome_no_prefix", 0L, true), ("maf_hugo_entrez_consistent", 0L, true)))
   }
 
+  test("a MAF barcode column typed as a number is checked in its written form") {
+    // an all-numeric barcode column (ids like 007) infers as an integer
+    val maf = Seq(7, 8).toDF("Tumor_Sample_Barcode")
+    val rep = PortalRules.check(spark, Files.createTempDirectory("portal-int").toString,
+      None, None, Some(maf), None).map { case (r, v, ok) => r -> ((v, ok)) }.toMap
+    assert(rep("maf_barcode_present") == ((0L, true)))
+  }
+
   test("check launches a bounded number of jobs on the healthy package") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
