@@ -4,10 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AsciiClassCount, Format12g, MinHashSigs, PyTitleCase,
-  ReplaceFirst, SimHash60, VecDot, WinnowFingerprints, WordSetCount, WsTokenCount}
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** SQL-surface registration of the engine's custom expressions, for
+import graft.functions.{AsciiClassCount, Fns, Format12g, MinHashSigs, PyTitleCase,
+  SimHash60, VecDot, WinnowFingerprints, WordSetCount, WsTokenCount}
+
+/** SQL-surface registration of the engine's custom expressions (and of
+  * `replace_first`, a composition of built-ins), for
   * cluster deployment via `spark.sql.extensions=graft.GraftExtensions`
   * (every session built on the cluster gets the functions; no per-session
   * registration code). [[graft.LocalSession]] installs it on every
@@ -31,8 +34,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.UnwrapCastKeyJoin)
     ext.injectFunction((
       new FunctionIdentifier("replace_first"),
-      new ExpressionInfo(classOf[ReplaceFirst].getName, "replace_first"),
-      (exprs: Seq[Expression]) => ReplaceFirst(exprs(0), exprs(1), exprs(2))))
+      new ExpressionInfo(Fns.getClass.getName, "replace_first"),
+      (exprs: Seq[Expression]) => Bridge.expressionTree(Fns.replaceFirst(
+        Bridge.column(exprs(0)), Bridge.column(exprs(1)), Bridge.column(exprs(2))))))
     ext.injectFunction((
       new FunctionIdentifier("format_12g"),
       new ExpressionInfo(classOf[Format12g].getName, "format_12g"),

@@ -2,21 +2,23 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries.FrameCache
+
 /** Parquet table loaders for the driver-generated test corpus
   * (`/root/testdata/sf*`; see TESTDATA.md). At cluster scale these would
   * be catalog tables; the loader keeps scans declarative so Catalyst can
   * push filters/column pruning into the parquet reader.
   *
   * Optimization r14: the loaded DataFrame (the immutable logical READ
-  * plan, nothing persisted) is memoized per (session, path). A bare
-  * `spark.read.parquet` infers the schema by reading parquet footers on
-  * EVERY call — ~50-100 ms of driver-side metadata I/O per table per
-  * query construction, which a 200-query suite pays several hundred
-  * times over for the same ten files. This is exactly what a catalog
-  * does for a real table: resolve the schema once, reuse the relation.
-  * No data is cached — every action still scans parquet; only the
-  * footer-read/plan-construction is shared. Entries are evicted with
-  * their stopped session (the FrameCache discipline).
+  * plan, nothing persisted) is memoized per (session, path) through
+  * [[graft.queries.FrameCache.cachedValue]]. A bare `spark.read.parquet`
+  * infers the schema by reading parquet footers on EVERY call — ~50-100
+  * ms of driver-side metadata I/O per table per query construction,
+  * which a 200-query suite pays several hundred times over for the same
+  * ten files. This is exactly what a catalog does for a real table:
+  * resolve the schema once, reuse the relation. No data is cached —
+  * every action still scans parquet; only the footer-read/plan
+  * construction is shared. Entries leave with their stopped session.
   *
   * ASSUMPTION (r15, per advisor note): the corpus at a path is
   * immutable for the lifetime of a session. The memo pins the parquet
@@ -31,26 +33,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val perSession =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  private def sessionMap(spark: SparkSession) = perSession.synchronized {
-    val it = perSession.keySet().iterator()
-    while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
-    var m = perSession.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-      perSession.put(spark, m)
-    }
-    m
-  }
-
-  private def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    sessionMap(spark).computeIfAbsent(key, _ => build)
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo(spark, s"$dir/$name")(spark.read.parquet(s"$dir/$name.parquet"))
+    FrameCache.cachedValue(spark, s"tables:$dir/$name")(spark.read.parquet(s"$dir/$name.parquet"))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
@@ -71,7 +55,7 @@ object Tables {
     * the NTZ→TZ cast is value-identical).
     */
   def events(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"$dir/events#normalized") {
+    FrameCache.cachedValue(spark, s"tables:$dir/events#normalized") {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType}
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Composable column functions reproducing the reference's scalar-function
   * semantics (SURVEY §2.7). All are built-in compositions — codegen'd by
-  * Catalyst — except `replaceFirst`/`format12g`, which are custom
-  * expressions (F1 / K1 gaps).
+  * Catalyst — except `titleCase`, which calls the custom
+  * [[PyTitleCase]] expression.
   */
 object Fns {
 
@@ -16,6 +16,20 @@ object Fns {
     * (`validate.py:14-133`) — backtick-quote to keep the name literal.
     */
   def qcol(name: String): Column = col(s"`$name`")
+
+  /** F1 — replace the FIRST occurrence of the literal `find` in `c` with
+    * `repl`: pandas `str.replace(pat, repl, n=1, regex=False)`, the
+    * reference's suffix-strip operator (`clinical.py:98-133`). Spark's
+    * `regexp_replace`/`replace` substitute ALL occurrences, so this is a
+    * splice of built-ins: `overlay` at the first `position`. Any null
+    * input gives null; an empty `find` leaves `c` as it is.
+    */
+  def replaceFirst(c: Column, find: Column, repl: Column): Column = {
+    val at = position(find, c)
+    when(find.isNull || repl.isNull, lit(null))
+      .when(at > 0 && length(find) > 0, overlay(c, repl, at, length(find)))
+      .otherwise(c)
+  }
 
   /** F1 — strip the first occurrence of the literal `"_" + columnName
     * .toLowerCase` from every value of each string column (reference
@@ -28,7 +42,7 @@ object Fns {
       .filter(_.dataType == org.apache.spark.sql.types.StringType).map(_.name)
       .map { name =>
         val suffix = if (name == "AMADEUS_STUDY") "_amadeus" else "_" + name.toLowerCase
-        name -> ReplaceFirst.replaceFirst(qcol(name), lit(suffix), lit(""))
+        name -> replaceFirst(qcol(name), lit(suffix), lit(""))
       }
     df.withColumns(stripped.toMap)
   }

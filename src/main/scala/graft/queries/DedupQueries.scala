@@ -301,7 +301,7 @@ object DedupQueries {
   def ddSimhashPairs: Q = (s, dir) => {
     // One simhash pass, reused by both sides of the banded self-join.
     val sh = FrameCache.cached(s, s"dd_simhash:$dir")(ddSimhash(s, dir))
-    val nDocs = FrameCache.cachedCount(s, s"dd_n_docs:$dir")(
+    val nDocs = FrameCache.cachedValue(s, s"dd_n_docs:$dir")(
       Tables.documents(s, dir).count())
     simhashPairsOf(sh, wide = nDocs >= SimhashWideKeysMinDocs)
   }
@@ -863,7 +863,7 @@ object DedupQueries {
     val t2 = threshold * threshold
     // index-sizing parameter, computed once per (session, input) like
     // every other index artifact — not one count job per invocation
-    val p = lshPlanesPerBand(FrameCache.cachedCount(emb.sparkSession,
+    val p = lshPlanesPerBand(FrameCache.cachedValue(emb.sparkSession,
       "embedLshN:" + emb.queryExecution.analyzed.semanticHash())(emb.count()))
     val banded = SimQueries.explodeBands(emb
       .withColumn("nrm", graft.functions.VecExprs.dot(col("embedding"), col("embedding")))

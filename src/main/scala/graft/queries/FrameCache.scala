@@ -4,8 +4,12 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped cache for persisted build-side frames (LSH signature
-  * tables, benchmark gram sets, runtime-filter build sides). A bare
+/** The one owner of session-lifetime state: persisted build-side frames
+  * (LSH signature tables, benchmark gram sets, runtime-filter build
+  * sides) and driver-side values ([[cachedValue]]: sketches, counts,
+  * collected columns, the [[graft.Tables]] read plans). Build-once disk
+  * artifacts that outlive the session belong to
+  * [[graft.sources.DurableIndex]] instead. A bare
   * `.persist()` inside a query function leaks one cache entry per
   * invocation — a REPS=N bench accumulates N copies of the same frame.
   * Keying by the frame's INPUT identity bounds the cache at one entry
@@ -43,10 +47,10 @@ private[graft] object FrameCache {
 
   /** Drop entries owned by a session whose context has stopped — their
     * cached blocks are already gone with the executor; unpersist on a
-    * dead context is a no-op at best, so just drop the references. All
-    * three maps are pruned by the dead session's key prefix, so a JVM
-    * that cycles sessions cannot accumulate serialized sketches or
-    * counts any more than it can frames.
+    * dead context is a no-op at best, so just drop the references. Every
+    * map is pruned by the dead session's key prefix, so a JVM that
+    * cycles sessions cannot accumulate driver-side values any more than
+    * it can frames.
     */
   private def evictStopped(): Unit = {
     val it = sessionPrefixes.entrySet().iterator()
@@ -56,9 +60,7 @@ private[graft] object FrameCache {
         val prefix = e.getValue + ":"
         frames.keySet.removeIf(_.startsWith(prefix))
         ownedIdsCache.keySet.removeIf(_.startsWith(prefix))
-        bytesCache.keySet.removeIf(_.startsWith(prefix))
-        countCache.keySet.removeIf(_.startsWith(prefix))
-        stringsCache.keySet.removeIf(_.startsWith(prefix))
+        values.keySet.removeIf(_.startsWith(prefix))
         buildLocks.keySet.removeIf(_.startsWith(prefix))
         it.remove()
       }
@@ -141,44 +143,25 @@ private[graft] object FrameCache {
     memo(frames, s"${sessionKey(s)}:$key")(build.localCheckpoint())
   }
 
-  /** Driver-side artifacts derived from a cached frame (Bloom sketch
-    * serializations, index-sizing counts). They hold no session
-    * resources, but they are keyed by the SESSION like the frames:
-    * the key is plan identity (path + predicate hash), not data
-    * content, so a dataset rewritten at the same path between sessions
-    * must rebuild its artifacts with the session rather than serve a
-    * stale sketch. `clear()` bounds both caches identically.
+  /** Driver-side values keyed like the frames: Bloom sketch
+    * serializations, index-sizing counts, collected control-table
+    * columns, and the [[graft.Tables]] parquet read plans. None of them
+    * is persisted and [[ownedRddIds]] does not walk them. They are keyed
+    * by the SESSION because the key is plan identity (path + predicate
+    * hash), not data content: a dataset rewritten at the same path
+    * between sessions must rebuild its values with the session rather
+    * than serve a stale sketch.
     */
-  private val bytesCache = new ConcurrentHashMap[String, Array[Byte]]()
-  private val countCache = new ConcurrentHashMap[String, java.lang.Long]()
+  private val values = new ConcurrentHashMap[String, AnyRef]()
 
-  /** The serialized sketch for `key` under session `s`, building it on
-    * first use. */
-  def cachedBytes(s: SparkSession, key: String)(build: => Array[Byte]): Array[Byte] = {
+  /** The driver-side value for `key` under session `s`, computed once
+    * instead of one job (or footer read) per query construction. A key
+    * names one type: every caller of a key must ask for the same `V`.
+    * Callers must not mutate a returned array.
+    */
+  def cachedValue[V](s: SparkSession, key: String)(build: => V): V = {
     evictStopped()
-    memo(bytesCache, s"${sessionKey(s)}:$key")(build)
-  }
-
-  private val stringsCache = new ConcurrentHashMap[String, Array[String]]()
-
-  /** A collected control-table column for `key` under session `s` (e.g.
-    * the source catalog a bitmask plan is keyed by), computed once
-    * instead of one collect job per query construction. Typed — never
-    * packed through a separator-joined string, which cannot round-trip
-    * null or empty elements. Callers must not mutate the returned
-    * array. */
-  def cachedStrings(s: SparkSession, key: String)(build: => Array[String]): Array[String] = {
-    evictStopped()
-    memo(stringsCache, s"${sessionKey(s)}:$key")(build)
-  }
-
-  /** An index-sizing count for `key` under session `s` (e.g. the corpus
-    * cardinality an adaptive banding ladder derives its knob from),
-    * computed once instead of one count job per invocation. */
-  def cachedCount(s: SparkSession, key: String)(build: => Long): Long = {
-    evictStopped()
-    memo(countCache, s"${sessionKey(s)}:$key")(java.lang.Long.valueOf(build))
-      .longValue()
+    memo(values, s"${sessionKey(s)}:$key")(build.asInstanceOf[AnyRef]).asInstanceOf[V]
   }
 
   /** Memoized persisted-ancestor ids per frame entry ([[ownedRddIds]]).
@@ -232,9 +215,7 @@ private[graft] object FrameCache {
     }
     frames.clear()
     ownedIdsCache.clear()
-    bytesCache.clear()
-    countCache.clear()
-    stringsCache.clear()
+    values.clear()
     buildLocks.clear()
     sessionPrefixes.clear()
   }

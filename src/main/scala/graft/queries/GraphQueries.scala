@@ -25,6 +25,17 @@ import graft.functions.Hashing
   * DuckDB's sequential sum land on bit-identical ranks (a double-typed
   * PageRank differs in the last ulps between any two engines — or any
   * two RUNS — and can never hash-match an oracle).
+  *
+  * Width (optimization r15): every edge cache and round stage is one
+  * task per ~1 MB of lineitem bytes ([[Tuned.widthForBytes]]), not
+  * `spark.sql.shuffle.partitions` — at core-count width every round ran
+  * `cpus` near-empty tasks on KB-sized frames (g_sssp 6.35 s at 32 cores
+  * vs 0.94 s at 8 in the r14 driver bench). The iterative queries build
+  * their rounds inside [[Tuned.withWidth]]: shuffles width-matched to the
+  * co-located cache and AQE off, so each eager `localCheckpoint` round
+  * runs once as one tiny static job instead of AQE's blocking
+  * stage-materialization jobs (sssp 1.85 → 0.82 s at 32 cores,
+  * bit-equal output; OPTIMIZATION_r15.md, "Wave 1").
   */
 object GraphQueries {
 
@@ -39,46 +50,6 @@ object GraphQueries {
   /** Damping d = 0.85 as the integer pair 85/100 (never a float). */
   val PrDampNum = 85L
   val PrDampDen = 100L
-
-  /** Byte-derived stage width for the graph family (optimization r15):
-    * one task per ~1 MB of fact input, clamped to
-    * [1, 4 × defaultParallelism]. The edge caches were previously
-    * `repartition(col("src"))` → `spark.sql.shuffle.partitions`
-    * (= the core count in the bench), so every per-round stage ran
-    * `cpus` near-empty tasks on KB-sized frames — measured ANTI-scaling
-    * (g_sssp 6.35 s at 32 cores vs 0.94 s at 8 in the r14 driver bench;
-    * task/stage overhead, not compute). Width now follows DATA volume:
-    * sf0.1 (11 MB fact) → 11 tasks, sf10 (~1.1 GB) → cores-capped —
-    * and at cluster scale the cap scales with the cluster while the
-    * byte term keeps partitions at the guide's sane-grain range.
-    */
-  private[queries] def graphWidth(s: SparkSession, dir: String): Int = {
-    val bytes = graft.Tables.fileBytes(dir, "lineitem")
-    val cap = 4 * s.sparkContext.defaultParallelism
-    // floor 2, not 1: repartition(1, col) collapses to SinglePartition,
-    // which EnsureRequirements refuses to co-locate a join against — the
-    // cache would be RE-shuffled every round (PlanChecksSpec locks this)
-    math.max(2, math.min(cap.toLong, bytes / (1L << 20) + 1L)).toInt
-  }
-
-  /** Run `body` with the graph family's build-time SQL conf scoped on:
-    * shuffle partitions width-matched to the edge cache (so round
-    * exchanges are the same small width as the co-located cache) and
-    * adaptive execution OFF, so the per-round plans compile STATIC.
-    * With AQE on, every `localCheckpoint` materializes its stages as
-    * separate blocking jobs (measured 60–300 ms each on a 32-core
-    * local master) and the r14 LAZY checkpoints additionally
-    * RECOMPUTED all prior rounds inside the final fused job (per-round
-    * stage runSum grew 402→1120 ms). Static width-matched plans with
-    * EAGER checkpoints run each round exactly once as one tiny job:
-    * sssp 1.85 → 0.82 s at 32 cores, bit-equal output. The job/stage
-    * accounting and the A/B ladder are in OPTIMIZATION_r15.md,
-    * "Wave 1". AQE contributes nothing to
-    * these rounds at any scale: join strategy is hinted, the cache
-    * side's partitioning is fixed, and round frames are node-sized.
-    */
-  private[queries] def withGraphBuildConf[A](s: SparkSession, width: Int)(body: => A): A =
-    Tuned.withWidth(s, width)(body)
 
   /** The per-pair trade aggregate every graph edge view derives from:
     * one row per (suppkey, custkey) that ever traded, with the distinct
@@ -99,7 +70,7 @@ object GraphQueries {
           // small integers stored as double — exact under any reduction
           // order (the g_concomp contract)
           sum(col("l_quantity")).as("qty"))
-        .repartition(graphWidth(s, dir), col("sk"))
+        .repartition(Tuned.widthForBytes(s, Tables.fileBytes(dir, "lineitem"), 1L << 20), col("sk"))
     }
 
   /** The symmetrized trade graph: one edge per DISTINCT supplier–customer
@@ -120,7 +91,7 @@ object GraphQueries {
       // from the cache — only the (tiny) rank frame moves per round,
       // never the edge table
       e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        .repartition(graphWidth(s, dir), col("src"))
+        .repartition(Tuned.widthForBytes(s, Tables.fileBytes(dir, "lineitem"), 1L << 20), col("src"))
     }
 
   /** g_pagerank — damped PageRank (d = 0.85, [[PrIters]] rounds) over
@@ -135,13 +106,13 @@ object GraphQueries {
   def gPagerank: Q = (s, dir) => {
     val edges = tradeEdges(s, dir)
     val deg = tradeDeg(s, dir)
-    val n = FrameCache.cachedCount(s, s"g_trade_n:$dir")(deg.count())
+    val n = FrameCache.cachedValue(s, s"g_trade_n:$dir")(deg.count())
     // Compile the 4-round plan STATIC at the byte-derived width (r15;
-    // see withGraphBuildConf): the rounds are a linear plan over the
+    // see the object doc): the rounds are a linear plan over the
     // co-located cache, so AQE's only effect is ~10 blocking
     // stage-materialization jobs at action time. Touching executedPlan
     // inside the scope pins the static width-matched plan.
-    withGraphBuildConf(s, graphWidth(s, dir)) {
+    Tuned.withWidth(s, Tuned.widthForBytes(s, Tables.fileBytes(dir, "lineitem"), 1L << 20)) {
       val df = pagerank(edges, deg, n)
       df.queryExecution.executedPlan
       df
@@ -291,11 +262,11 @@ object GraphQueries {
       .filter(col("node").startsWith("S") &&
         substring(col("node"), 2, 18).cast("long") < KhopSeedMax)
       .select(col("node"))
-    // EAGER width-matched static rounds (r15; see withGraphBuildConf).
+    // EAGER width-matched static rounds (r15; see the object doc).
     // The r14 lazy checkpoints were measured RECOMPUTING prior rounds
     // inside the final fused job; eager cuts materialize each round
     // exactly once as one tiny static job at the byte-derived width.
-    withGraphBuildConf(s, graphWidth(s, dir)) {
+    Tuned.withWidth(s, Tuned.widthForBytes(s, Tables.fileBytes(dir, "lineitem"), 1L << 20)) {
       val init = seeds.withColumn("dist", lit(0)).localCheckpoint()
       val (visited, _) = (1 to KhopRounds).foldLeft((init, init.select(col("node")))) {
         case ((vis, frontier), i) =>
@@ -346,7 +317,7 @@ object GraphQueries {
   def gSssp: Q = (s, dir) => {
     val edges = weightedEdges(s, dir)
     // eager width-matched static rounds — see gKhop (r15)
-    withGraphBuildConf(s, graphWidth(s, dir)) {
+    Tuned.withWidth(s, Tuned.widthForBytes(s, Tables.fileBytes(dir, "lineitem"), 1L << 20)) {
       val init = edges
         .filter(col("src").startsWith("S") &&
           substring(col("src"), 2, 18).cast("long") < KhopSeedMax)
@@ -385,7 +356,7 @@ object GraphQueries {
           concat(lit("C"), col("ck")).as("dst"),
           greatest(lit(1L), lit(10L) - col("n_orders")).as("w"))
       e0.union(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-        .repartition(graphWidth(s, dir), col("src"))
+        .repartition(Tuned.widthForBytes(s, Tables.fileBytes(dir, "lineitem"), 1L << 20), col("src"))
     }
 
   /** Walk length for [[gRandomWalk]] (seeds share [[KhopSeedMax]]). */
@@ -419,7 +390,7 @@ object GraphQueries {
     // branch for step k re-derives steps 1..k-1 — the edge cache is
     // streamed 1+2+3+4 = 10 times instead of 4, quadratic in walk
     // length at any scale. Each step is tiny (|seeds| rows).
-    val (walks, _) = withGraphBuildConf(s, graphWidth(s, dir)) {
+    val (walks, _) = Tuned.withWidth(s, Tuned.widthForBytes(s, Tables.fileBytes(dir, "lineitem"), 1L << 20)) {
       (1 to WalkSteps).foldLeft((init, seeds)) {
         case ((acc, frontier), k) =>
           val next = walkStep(edges, frontier, k).localCheckpoint()

@@ -225,7 +225,7 @@ object OlapQueries {
     * aggregation cached per (session, sf) like every index artifact.
     */
   private def zorderExtent(s: SparkSession, dir: String): Seq[Long] =
-    graft.queries.FrameCache.cachedStrings(s, s"p10_zorder_extent:$dir") {
+    graft.queries.FrameCache.cachedValue(s, s"p10_zorder_extent:$dir") {
       val r = Tables.lineitem(s, dir).agg(
         min(col("l_partkey")), max(col("l_partkey")),
         min(col("l_suppkey")), max(col("l_suppkey"))).collect()(0)
@@ -881,7 +881,7 @@ object OlapQueries {
     val cents = Tables.lineitem(s, dir).select(
       round(col("l_extendedprice") * 100).cast("long").as("cents"),
       lit(1L).as("one"))
-    val n = FrameCache.cachedCount(s, s"a17_n_lineitem:$dir")(cents.count())
+    val n = FrameCache.cachedValue(s, s"a17_n_lineitem:$dir")(cents.count())
     graft.operators.PrefixSum.withRunningSum(cents, "cents", "one", "rank")
       .select(col("cents"),
         expr(s"((rank - 1) * $B) div $n").as("bucket_id"))

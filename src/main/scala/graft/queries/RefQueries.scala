@@ -7,7 +7,6 @@ import org.apache.spark.sql.types._
 
 import graft.{Schemas, Tables}
 import graft.functions.Fns
-import graft.functions.ReplaceFirst.replaceFirst
 import graft.sources.{Layout, Tsv}
 
 /** The reference's operator inventory (SURVEY.md §2) re-expressed as
@@ -79,18 +78,16 @@ object RefQueries {
     * listing.
     */
   def s5GlobScan: Q = (s, dir) => {
-    // The fixture package is memoized per (session, sf): the operator
-    // under test is the GLOB SCAN, and re-writing the fixtures per
-    // invocation both leaked one temp dir per bench rep and billed the
-    // driver-side writes to the scan's timing.
-    val tmp = FrameCache.cachedStrings(s, s"s5pkg:$dir") {
-      val t = java.nio.file.Files.createTempDirectory("graft-s5").toString
+    // The fixture package is a durable root keyed by the nation table's
+    // content: the operator under test is the GLOB SCAN, and re-writing
+    // the fixtures per invocation would bill the driver-side writes to
+    // the scan's timing.
+    val tmp = fixturePackage(s, dir, "graft-s5-pkg", Seq("nation")) { t =>
       val n = Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))
       Tsv.writeTsvFile(n.filter(col("n_nationkey") % 2 === 0), s"$t/even.maf")
       Tsv.writeTsvFile(n.filter(col("n_nationkey") % 2 === 1), s"$t/odd.maf")
       Tsv.writeTsvFile(n.limit(3), s"$t/ignore.txt") // must NOT be read
-      Array(t)
-    }.head
+    }
     Tsv.read(s, s"$tmp/*.maf")
       .select(col("n_nationkey").cast(IntegerType), col("n_name"))
   }
@@ -106,12 +103,9 @@ object RefQueries {
     * file, and absent branches are constant-folded single rows.
     */
   def s6LoadMap: Q = (s, dir) => {
-    // Fixture package memoized per (session, sf) — same rationale as
-    // [[s5GlobScan]]: the operator under test is the dict-of-files LOAD;
-    // per-invocation fixture writes leaked temp dirs across bench reps
-    // and polluted the load's timed region.
-    val tmp = FrameCache.cachedStrings(s, s"s6pkg:$dir") {
-      val t = java.nio.file.Files.createTempDirectory("graft-s6").toString
+    // Fixture package as a durable root — same rationale as
+    // [[s5GlobScan]]: the operator under test is the dict-of-files LOAD.
+    val tmp = fixturePackage(s, dir, "graft-s6-pkg", Seq("nation", "region", "supplier")) { t =>
       Tsv.writeTsvFile(
         Tables.nation(s, dir).select(col("n_nationkey"), col("n_name")),
         s"$t/data_clinical_patient.txt")
@@ -121,8 +115,7 @@ object RefQueries {
       Tsv.writeTsvFile(
         Tables.supplier(s, dir).select(col("s_suppkey"), col("s_name")),
         s"$t/data_mutations.txt")
-      Array(t)
-    }.head
+    }
     val loaded = graft.pipelines.StudyValidator.loadAllOutputs(s, tmp)
     Schemas.RequiredOutputFiles.map { f =>
       loaded(f) match {
@@ -132,6 +125,18 @@ object RefQueries {
           lit(f).as("file"), lit(false).as("present"), lit(-1L).as("n_rows"))
       }
     }.reduce(_.unionByName(_))
+  }
+
+  /** A fixture package written once per content of its source `tables`
+    * ([[graft.sources.DurableIndex]]); its directory as a string.
+    */
+  private def fixturePackage(s: SparkSession, dir: String, family: String,
+                             tables: Seq[String])(write: String => Unit): String = {
+    val ident = tables.map { t =>
+      val src = java.nio.file.Paths.get(dir).resolve(s"$t.parquet")
+      s"$src:${graft.sources.ContentIdent.of(src)}"
+    }.mkString(",")
+    graft.sources.DurableIndex.once(family, ident)(p => write(p.toString)).toString
   }
 
   /** S7 — JSONL sink/scan round-trip (beyond the reference's TSV-only
@@ -427,25 +432,18 @@ object RefQueries {
   }
 
   /** Build-once location of the mock annotation service's keyed store
-    * for `dir`'s part table (identity = source file size + mtime, the
-    * [[graft.queries.TextQueries]] decont-index idiom): the service's
-    * data outlives any one query session.
+    * for `dir`'s part table: the service's data outlives any one query
+    * session. The identity hashes the contained part files' names, sizes
+    * and mtimes ([[graft.sources.ContentIdent]]), not the directory's own
+    * metadata — an in-place same-name rewrite must invalidate the store.
     */
   private def annStoreRoot(s: SparkSession, dir: String): java.nio.file.Path = {
-    import java.nio.file.Paths
-    val src = Paths.get(dir).resolve("part.parquet")
-    // identity = hash of the contained part files' names+sizes+mtimes
-    // (ContentIdent), not the directory's own metadata — an in-place
-    // same-name rewrite must invalidate the store
+    val src = java.nio.file.Paths.get(dir).resolve("part.parquet")
     val ident = s"$src:${graft.sources.ContentIdent.of(src)}:annp25"
-    val hash = java.security.MessageDigest.getInstance("MD5")
-      .digest(ident.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val root = Paths.get(System.getProperty("java.io.tmpdir"), "graft-ann-store", hash)
-    graft.sources.KeyedStore.build(
+    graft.sources.DurableIndex.once("graft-ann-store", ident)(graft.sources.KeyedStore.build(
       Tables.part(s, dir).filter(col("p_size") > 25)
         .select(col("p_partkey"), col("p_type")),
-      "p_partkey", "p_type", root)
-    root
+      "p_partkey", "p_type", _))
   }
 
   /** J6 — semi-join case list: entities retained iff present in the fact
@@ -664,14 +662,14 @@ object RefQueries {
     c.except(o)
   }
 
-  /** F1 — first-literal-occurrence replace via the custom ReplaceFirst
-    * expression (reference `clinical.py:98-133`; Spark's regexp_replace
-    * hits ALL occurrences, so this needs the custom expression).
+  /** F1 — first-literal-occurrence replace, [[Fns.replaceFirst]]
+    * (reference `clinical.py:98-133`; Spark's regexp_replace hits ALL
+    * occurrences, so it splices built-ins at the first position).
     */
   def f1ReplaceFirst: Q = (s, dir) => {
     Tables.part(s, dir)
       .select(col("p_partkey"),
-        replaceFirst(col("p_name"), lit(" "), lit("_")).as("name_first_us"))
+        Fns.replaceFirst(col("p_name"), lit(" "), lit("_")).as("name_first_us"))
   }
 
   /** F2/F3 — case normalization: CAPS and Title Case after `_`→space
@@ -817,7 +815,7 @@ object RefQueries {
     // ids claim sequencing that produced no mutations. The id collect is
     // session-cached (control-table idiom): one ≤501-row collect per
     // (session, corpus), not one per invocation.
-    val allSampleIds = FrameCache.cachedStrings(s, s"v18_sample_ids:$dir")(
+    val allSampleIds = FrameCache.cachedValue(s, s"v18_sample_ids:$dir")(
       samplesSmall.select(col("SAMPLE_ID")).collect()
         .map(_.getString(0)).sorted).toSeq
     val sequencedIds = allSampleIds

@@ -182,7 +182,7 @@ object SimQueries {
     */
   def simKnnGraph: Q = (s, dir) => {
     val emb = graft.Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val p = DedupQueries.lshPlanesPerBand(FrameCache.cachedCount(s,
+    val p = DedupQueries.lshPlanesPerBand(FrameCache.cachedValue(s,
       s"sim_knn_n:$dir")(emb.count()))
     val banded = explodeBands(emb
       .withColumn("nrm", dotc(col("embedding"), col("embedding")))
@@ -553,7 +553,7 @@ object SimQueries {
     * round-trips exactly, so the snap grid survives the cache).
     */
   private[graft] def kmCents(s: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
-    FrameCache.cachedStrings(s, s"sim_kmeans_cents:$dir") {
+    FrameCache.cachedValue(s, s"sim_kmeans_cents:$dir") {
       val v = kmVecs(s, dir)
       val init = v.filter(col("vec_id") < KmK)
         .select(col("vec_id"), col("embedding"))

@@ -162,7 +162,7 @@ object TextQueries {
   private[graft] def sharedGramStream(s: SparkSession, dir: String): DataFrame =
     FrameCache.cached(s, s"ta_grams_stream:$dir") {
       val root = gramIndexRoot(s, dir)
-      // Byte-derived cache width (r15, the graphWidth idiom): the old
+      // Byte-derived cache width (r15, the graph family's idiom): the old
       // repartition(col) inherited spark.sql.shuffle.partitions — the
       // CORE COUNT in the bench — so every consumer stage ran `cpus`
       // near-empty tasks over a 2.3 MB index at sf0.1 (measured
@@ -310,7 +310,7 @@ object TextQueries {
     val fd = FrameCache.cached(s, s"ta_doc_tok_distinct:$dir")(
       cachedToks(s, dir).select(col("doc_id"), col("tok")).distinct()
         .repartition(width, col("doc_id")))
-    val nDocs = FrameCache.cachedCount(s, s"ta_n_docs:$dir")(
+    val nDocs = FrameCache.cachedValue(s, s"ta_n_docs:$dir")(
       Tables.documents(s, dir).count())
     val freq = fd.groupBy(col("tok")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= lit(nDocs * CoMinSupPct / 100L))
@@ -627,7 +627,7 @@ object TextQueries {
     // eager materialization: an unmaterialized cache reports its CHILD's
     // token-volume estimate, which would defeat the stats-driven
     // broadcast this plan's scale story relies on
-    FrameCache.cachedCount(s, s"ta_unigram_freq_n:$dir")(freq.count())
+    FrameCache.cachedValue(s, s"ta_unigram_freq_n:$dir")(freq.count())
     val total = freq.agg(sum(col("cnt")).cast("double").as("total"))
     toks.join(freq, Seq("tok"))
       .crossJoin(broadcast(total))
@@ -1009,7 +1009,7 @@ object TextQueries {
     // the serialized sketch is the other half of the one-time index
     // build: without caching it, every invocation re-aggregates the
     // benchmark grams to the driver just to rebuild identical bytes
-    val bytes = FrameCache.cachedBytes(docs.sparkSession, cacheKey) {
+    val bytes = FrameCache.cachedValue(docs.sparkSession, cacheKey) {
       val bloom = bench.select(xxhash64(col("gram")).as("h"))
         .stat.bloomFilter("h", benchGrams, DecontFpp)
       val b = new java.io.ByteArrayOutputStream(); bloom.writeTo(b); b.toByteArray
@@ -1071,11 +1071,10 @@ object TextQueries {
     * family — the dd_incremental index-table model taken to its
     * production conclusion: at 100 TB the benchmark gram table and its
     * Bloom sketch are corpus-version artifacts built ONCE and read by
-    * every later job, not a per-session cache. The index lives under
-    * the JVM temp dir keyed by corpus identity (source file
-    * size + mtime + n + predicate tag), so a rewritten corpus rebuilds
-    * it and concurrent builders race safely (build into a temp dir,
-    * ATOMIC_MOVE into place, loser keeps the winner's index).
+    * every later job, not a per-session cache. The index is a
+    * [[graft.sources.DurableIndex]] root keyed by corpus identity
+    * (source content + n + predicate tag), so a rewritten corpus
+    * rebuilds it and concurrent builders race safely.
     * Returns the index root containing `grams/` (parquet) and
     * `bloom.bin` (empty file ⟺ empty benchmark).
     */
@@ -1151,7 +1150,7 @@ object TextQueries {
     // the source-catalog job. Typed cache — null/empty source names
     // round-trip exactly as the uncached collect would produce them.
     val sources: Array[String] =
-      FrameCache.cachedStrings(s, s"ta_sources:$dir") {
+      FrameCache.cachedValue(s, s"ta_sources:$dir") {
         docs.select(col("source")).distinct().orderBy(col("source"))
           .collect().map(_.getString(0))
       }
@@ -1334,7 +1333,7 @@ object TextQueries {
     // (session, sf) like every other control artifact (g_trade_n
     // pattern) — a count over the PERSISTED token frame, so no second
     // tokenize pass and no global window in the query plan
-    val nAll = FrameCache.cachedCount(s, s"ta_n_tokens:$dir")(
+    val nAll = FrameCache.cachedValue(s, s"ta_n_tokens:$dir")(
       cachedToks(s, dir).count())
     keynessOf(cachedToks(s, dir), nAll)
   }
@@ -1509,12 +1508,12 @@ object TextQueries {
     val c2 = FrameCache.cached(s, s"ta_bigram_c2:$dir")(
       bi.groupBy(col("v"), col("w")).agg(count(lit(1)).as("c2"))
         .withColumn("c1", sum(col("c2")).over(Window.partitionBy(col("v")))))
-    FrameCache.cachedCount(s, s"ta_bigram_c2_n:$dir")(c2.count())
+    FrameCache.cachedValue(s, s"ta_bigram_c2_n:$dir")(c2.count())
     // |V| is the unigram vocabulary cardinality — an exact integer the
     // session already holds as an index-sizing count, embedded as a
     // literal instead of a countDistinct that re-scanned the whole
     // token stream on every run (one full corpus pass per invocation)
-    val vsz = FrameCache.cachedCount(s, s"ta_vocab_n:$dir")(
+    val vsz = FrameCache.cachedValue(s, s"ta_vocab_n:$dir")(
       cachedToks(s, dir).select(col("tok")).distinct().count())
     bi.join(c2, Seq("v", "w"))
       .groupBy(col("doc_id"))

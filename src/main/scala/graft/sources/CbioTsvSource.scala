@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.Bridge
@@ -78,6 +79,31 @@ object CbioTsvSource {
     */
   val VersionSidecar = "_version.json"
 
+  /** The one JSON mapper of the sidecars the sources write and read: this
+    * version sidecar and the synapse entity `meta.json`.
+    */
+  private[sources] val Json = new ObjectMapper()
+
+  private[sources] def readJson(fs: FileSystem, p: Path): JsonNode = {
+    val in = fs.open(p)
+    try Json.readTree(in) finally in.close()
+  }
+
+  private[sources] def writeJson(fs: FileSystem, p: Path, node: JsonNode): Unit = {
+    val out = fs.create(p, true)
+    try out.write(Json.writeValueAsBytes(node)) finally out.close()
+  }
+
+  /** Write the version sidecar of the dataset directory `dir`. */
+  private[sources] def writeVersion(fs: FileSystem, dir: Path, version: Long, comment: String,
+                                    queryId: Option[String], files: Seq[String]): Unit = {
+    val node = Json.createObjectNode().put("version", version).put("comment", comment)
+    queryId.foreach(q => node.put("queryId", q))
+    val names = node.putArray("files")
+    files.foreach(f => names.add(f))
+    writeJson(fs, new Path(dir, VersionSidecar), node)
+  }
+
   /** What the cbio format adds to [[Tsv.Dialect]]: quoted cells may span
     * lines (a file is never split across tasks), and a part whose header
     * differs from the schema fails the read instead of binding by position.
@@ -112,12 +138,9 @@ object CbioTsvSource {
     val sidecar = new Path(dir, VersionSidecar)
     if (!fs.exists(sidecar)) None
     else {
-      val in = fs.open(sidecar)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val version = """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
-      val comment = """"comment"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(text)
-        .map(m => CbioWriteSupport.unescapeJson(m.group(1)))
-      version.map(v => (v, comment.getOrElse("")))
+      val json = readJson(fs, sidecar)
+      Option(json.get("version")).filter(_.canConvertToLong).map(v =>
+        (v.asLong, Option(json.get("comment")).fold("")(_.asText)))
     }
   }
 
@@ -282,15 +305,8 @@ private[sources] class CbioBatchWrite(path: String, schema: StructType, queryId:
     }
     dropStaging(hfs, dir) // failed/speculative attempts' leftovers
     val files = CbioTsvSource.listDataFiles(hfs, dir).map(_.getName)
-    val json =
-      s"""{"version": ${priorVersion + 1L},
-         | "comment": "${CbioWriteSupport.escapeJson(comment.getOrElse(""))}",
-         | "queryId": "${CbioWriteSupport.escapeJson(queryId)}",
-         | "files": [${files.map(f => "\"" + CbioWriteSupport.escapeJson(f) + "\"").mkString(", ")}]}
-         |""".stripMargin
-    val out = hfs.create(new Path(dir, CbioTsvSource.VersionSidecar), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    CbioTsvSource.writeVersion(hfs, dir, priorVersion + 1L, comment.getOrElse(""),
+      Some(queryId), files.toSeq)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -444,40 +460,5 @@ private[sources] object CbioWriteSupport {
       i += 1
     }
     if (needs) "\"" + s.replace("\"", "\"\"") + "\"" else s
-  }
-
-  def escapeJson(s: String): String = {
-    val sb = new StringBuilder
-    s.foreach {
-      case '"'  => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append("\\u%04x".format(c.toInt))
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
-  def unescapeJson(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'n'  => sb.append('\n'); i += 2
-          case 'r'  => sb.append('\r'); i += 2
-          case 't'  => sb.append('\t'); i += 2
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 }

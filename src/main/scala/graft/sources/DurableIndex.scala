@@ -1,22 +1,35 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 
-/** Build-once root directory for a durable on-disk artifact keyed by an
-  * identity string — the corpus-version-index model the decontamination
-  * gram index and the annotation [[KeyedStore]] established: at 100 TB a
-  * corpus-derived index (gram table, Bloom sketch, signature store) is
-  * built ONCE per corpus version and read by every later job, not
-  * recomputed per session. The root lives under the JVM temp dir keyed
-  * by MD5(ident); concurrent builders race safely (each builds into its
-  * own temp dir, ATOMIC_MOVEs into place, the loser deletes its build
-  * and uses the winner's).
+/** The one owner of build-once on-disk artifacts: every root keyed by an
+  * identity string lives here — the decontamination and dedup gram
+  * indexes, the annotation [[KeyedStore]], the v18 fixture MAF and
+  * package, and the s5/s6 fixture packages. At 100 TB a corpus-derived
+  * index (gram table, Bloom sketch, signature store) is built ONCE per
+  * corpus version and read by every later job, not recomputed per
+  * session. The root lives at `<tmp>/<family>/<md5(ident)>`.
+  *
+  * A build runs into its own `build-*` temp dir, which gets a
+  * [[Marker]] file before it is ATOMIC_MOVEd into place; concurrent
+  * builders race safely (the loser deletes its build and uses the
+  * winner's). A root without the marker — one a `/tmp` cleaner has
+  * partly deleted, or one written before roots carried markers — is
+  * treated as absent: it is renamed to a `build-*` name, deleted, and
+  * rebuilt.
   */
 object DurableIndex {
 
+  /** Completion marker inside every root. The `_` prefix keeps it out of
+    * Spark's file scans, [[KeyedStore]]'s shard list and the portal
+    * validator's package listing.
+    */
+  val Marker = "_GRAFT_COMPLETE"
+
   /** The root for `ident` under `<tmp>/<family>/`, running `build` into
     * a private temp dir on first use. `build` must fully populate the
-    * directory it is given; the move into place is atomic.
+    * directory it is given (it may replace it, as a Spark overwrite
+    * does); the move into place is atomic.
     */
   def once(family: String, ident: String)(build: Path => Unit): Path = {
     val hash = java.security.MessageDigest.getInstance("MD5")
@@ -24,9 +37,16 @@ object DurableIndex {
     val base = Paths.get(System.getProperty("java.io.tmpdir"), family)
     Files.createDirectories(base)
     val root = base.resolve(hash)
+    if (Files.exists(root) && !Files.exists(root.resolve(Marker))) {
+      val stale = base.resolve(s"build-$hash-stale-${java.util.UUID.randomUUID()}")
+      try { Files.move(root, stale, StandardCopyOption.ATOMIC_MOVE); () }
+      catch { case _: NoSuchFileException => () } // another process retired it first
+      Tsv.deleteRecursively(stale)
+    }
     if (!Files.exists(root)) {
       val tmp = Files.createTempDirectory(base, s"build-$hash-")
       build(tmp)
+      Files.createFile(tmp.resolve(Marker))
       try { Files.move(tmp, root, StandardCopyOption.ATOMIC_MOVE); () }
       catch { case e: java.nio.file.FileSystemException
                    if Files.exists(root) || e.isInstanceOf[java.nio.file.FileAlreadyExistsException] =>
@@ -35,14 +55,7 @@ object DurableIndex {
         // DirectoryNotEmptyException (a FileSystemException), not
         // FileAlreadyExistsException; catch the family, but only when
         // the winner's index is actually there.
-        def del(p: Path): Unit = {
-          if (Files.isDirectory(p)) {
-            val s0 = Files.list(p)
-            try s0.forEach(c => del(c)) finally s0.close()
-          }
-          Files.deleteIfExists(p); ()
-        }
-        del(tmp)
+        Tsv.deleteRecursively(tmp)
       }
     }
     root

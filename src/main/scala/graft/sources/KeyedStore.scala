@@ -3,15 +3,16 @@ package graft.sources
 import java.nio.MappedByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, concat, concat_ws, lit, raise_error, when}
 
-/** A sorted on-disk key→value store: built ONCE as a distributed Spark
-  * job (global range-sort → ordered TSV shards), probed by executors
-  * through mmap'd binary search.
+/** A sorted on-disk key→value store: built ONCE per input as a
+  * distributed Spark job (global range-sort → ordered TSV shards) into a
+  * [[DurableIndex]] root, probed by executors through mmap'd binary
+  * search.
   *
   * This is the scale-honest stand-in for an external keyed service's
   * storage (the Genome Nexus case, reference `maf.py:95-130`): the
@@ -40,14 +41,11 @@ import org.apache.spark.sql.functions.{col, concat, concat_ws, lit, raise_error,
   */
 object KeyedStore {
 
-  /** Build the store at `dir` (replacing it atomically; concurrent
-    * builders race benignly — first move wins, losers adopt it).
+  /** Write the store into `dir` (replacing whatever is there). Build it
+    * once per input through [[DurableIndex.once]], which owns the
+    * build-once root, its completion marker and the builders' race.
     */
-  def build(df: DataFrame, keyCol: String, valueCol: String, dir: Path): Unit = {
-    if (Files.exists(dir)) return
-    Files.createDirectories(dir.getParent)
-    val tmp = Files.createTempDirectory(dir.getParent, s"build-${dir.getFileName}-")
-    val out = tmp.resolve("data")
+  def build(df: DataFrame, keyCol: String, valueCol: String, dir: Path): Unit =
     df.select(col(keyCol).cast("string").as("k"), col(valueCol).cast("string").as("v"))
       // NULL-valued keys are NOT stored: under the equivalent left-join
       // face a key mapped to NULL and an absent key both yield a null
@@ -67,22 +65,7 @@ object KeyedStore {
             lit("KeyedStore.build: tab/newline in key or value; key="),
             col("k"))))
         .otherwise(concat_ws("\t", col("k"), col("v"))))
-      .write.mode("overwrite").text(out.toString)
-    try { Files.move(out, dir, StandardCopyOption.ATOMIC_MOVE); () }
-    catch { case e: java.nio.file.FileSystemException
-                 if Files.exists(dir) || e.isInstanceOf[java.nio.file.FileAlreadyExistsException] =>
-      () // lost the race — the winner's store is equivalent
-    } finally {
-      // drop whatever of the temp build remains
-      def del(p: Path): Unit = {
-        if (Files.isDirectory(p)) {
-          val s = Files.list(p); try s.forEach(c => del(c)) finally s.close()
-        }
-        Files.deleteIfExists(p); ()
-      }
-      del(tmp)
-    }
-  }
+      .write.mode("overwrite").text(dir.toString)
 
   /** Numeric part index of a Spark output shard ("part-00042-uuid…" →
     * 42). Raw lexicographic filename order breaks at ≥100k build

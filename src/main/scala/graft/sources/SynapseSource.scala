@@ -106,15 +106,9 @@ object SynapseStore {
 
   private def writeEntityMeta(hfs: FileSystem, rootP: Path, id: String,
                               name: String, parentId: String, latest: Long): Unit = {
-    val meta =
-      s"""{"synId": "${CbioWriteSupport.escapeJson(id)}",
-         | "name": "${CbioWriteSupport.escapeJson(name)}",
-         | "parent": "${CbioWriteSupport.escapeJson(parentId)}",
-         | "latest": $latest}
-         |""".stripMargin
-    val out = hfs.create(new Path(rootP, s"$id/meta.json"), true)
-    try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    CbioTsvSource.writeJson(hfs, new Path(rootP, s"$id/meta.json"),
+      CbioTsvSource.Json.createObjectNode().put("synId", id).put("name", name)
+        .put("parent", parentId).put("latest", latest))
   }
 
   /** `syn.store(File(...), version_comment=...)`: writes the frame as a
@@ -153,14 +147,7 @@ object SynapseStore {
       org.apache.hadoop.fs.FileUtil.copy(
         hfs, new Path(localFile), hfs, new Path(vdir, name),
         false, true, Bridge.activeHadoopConf())
-      val sidecar =
-        s"""{"version": $next,
-           | "comment": "${CbioWriteSupport.escapeJson(versionComment)}",
-           | "files": ["${CbioWriteSupport.escapeJson(name)}"]}
-           |""".stripMargin
-      val sOut = hfs.create(new Path(vdir, CbioTsvSource.VersionSidecar), true)
-      try sOut.write(sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally sOut.close()
+      CbioTsvSource.writeVersion(hfs, vdir, next, versionComment, None, Seq(name))
     })
     // re-list after commit: a concurrent racer may have committed a HIGHER
     // version between our claim and now — meta.json's "latest" must never
@@ -196,12 +183,10 @@ object SynapseStore {
       val metaP = new Path(d.getPath, "meta.json")
       if (!hfs.exists(metaP)) None
       else {
-        val in = hfs.open(metaP)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val parent = """"parent"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(text).map(_.group(1))
-        val name = """"name"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(text).map(_.group(1))
-        if (parent.map(CbioWriteSupport.unescapeJson).contains(folderId))
-          name.map(n => d.getPath.getName -> CbioWriteSupport.unescapeJson(n))
+        val meta = CbioTsvSource.readJson(hfs, metaP)
+        def field(k: String) = Option(meta.get(k)).map(_.asText)
+        if (field("parent").contains(folderId))
+          field("name").map(d.getPath.getName -> _)
         else None
       }
     }.sortBy(_._2)

@@ -181,7 +181,8 @@ object Tsv {
     Files.createDirectories(p)
   }
 
-  private def deleteRecursively(p: Path): Unit = {
+  /** Delete `p` and everything under it; a missing `p` is a no-op. */
+  private[sources] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val s = Files.list(p)
       try s.forEach(deleteRecursively(_)) finally s.close()

@@ -32,9 +32,8 @@ import graft.sources.Tsv
   *    one shuffle.
   *
   * [[check]] is the one engine that runs both layers: over a written
-  * package's own files ([[validateStudyPackage]], and
-  * [[graft.pipelines.StudyValidator.report]] in the study lifecycle) and
-  * over the `v18_portal_rules` fixture
+  * package's own files ([[graft.pipelines.StudyValidator.report]] in the
+  * study lifecycle) and over the `v18_portal_rules` fixture
   * ([[graft.queries.RefQueries.v18PortalRules]]).
   */
 object PortalRules {
@@ -926,13 +925,12 @@ object PortalRules {
   val MafFile = "data_mutations.txt"
   val DataFiles: Seq[String] = Seq(SampleFile, PatientFile, MafFile)
 
-  /** A package file read back through the comment-skipping TSV scan the
-    * portal importer uses; None when it is absent.
+  /** A package file read back as raw text through the comment-skipping
+    * TSV scan the portal importer uses; None when it is absent.
     */
-  private def scan(spark: SparkSession, p: Path,
-                   inferSchema: Boolean): Option[DataFrame] =
+  private def rawScan(spark: SparkSession, p: Path): Option[DataFrame] =
     if (!Files.exists(p)) None
-    else Some(Tsv.read(spark, p.toString, comment = Some('#'), inferSchema = inferSchema))
+    else Some(Tsv.read(spark, p.toString, comment = Some('#'), inferSchema = false))
 
   /** The `case_list_ids` of the package's case lists whose key-values
     * pass `keep`, empty tokens dropped (an empty `case_list_ids:` line
@@ -997,8 +995,8 @@ object PortalRules {
     // holding only TRUE/FALSE infers BooleanType, whose string cast is
     // lowercase "true"/"false", failing '^(NA|TRUE|FALSE)$' on every row
     // of a perfectly valid column.
-    lazy val rawSample = scan(spark, root.resolve(SampleFile), inferSchema = false)
-    lazy val rawPatient = scan(spark, root.resolve(PatientFile), inferSchema = false)
+    lazy val rawSample = rawScan(spark, root.resolve(SampleFile))
+    lazy val rawPatient = rawScan(spark, root.resolve(PatientFile))
 
     val fieldRules: Option[Future[Rows]] =
       maf.map(m => m -> mafFieldRules(m)).filter(_._2.nonEmpty).map {
@@ -1092,17 +1090,6 @@ object PortalRules {
     }
     val structural = structuralReport(dir)
     structural ++ (fieldRules.toSeq :+ censusRules :+ valueRules).flatMap(Async.await)
-  }
-
-  /** [[check]] over the written package at `dir`: the frames it checks
-    * are the package's own data files and its case-list ids are the
-    * package's lists.
-    */
-  def validateStudyPackage(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    def read(name: String) = scan(spark, Paths.get(dir).resolve(name), inferSchema = true)
-    check(spark, dir, read(SampleFile), read(PatientFile), read(MafFile),
-      caseListIds(spark, dir)).toDF("rule", "value", "passed")
   }
 
   /** DuckDB oracle for the `v18_portal_rules` query

@@ -103,61 +103,28 @@ object Rules {
     observedRows(obs, rules).toDF("rule", "value", "passed")
   }
 
-  /** Does this aggregate column contain a DISTINCT aggregate? Delegates
-    * to the bridge: the naive Catalyst-tree check silently answered
-    * false for every DSL-built `countDistinct` since the Spark 4
-    * Column/ColumnNode split (the unresolved tree hides behind a leaf
-    * wrapper), which made EVERY rule fuse — including multi-distinct
-    * sets, the exact Expand shape this routing exists to avoid.
-    */
-  private def hasDistinctAgg(c: Column): Boolean =
-    org.apache.spark.sql.graftbridge.Bridge.hasDistinctAggregate(c)
-
-  /** The pass routing [[evaluate]] uses: (fused single-scan rules,
-    * rules that get their own job). One distinct rule always rides the
-    * fused pass (no Expand below 2 distinct groups); only the 2nd+
-    * split. Exposed for the RulesSpec routing lock.
-    */
-  private[validation] def splitForEvaluation(rules: Seq[Rule]): (Seq[Rule], Seq[Rule]) = {
-    val (distinctAll, plainRules) = rules.partition(r => hasDistinctAgg(r.agg))
-    (plainRules ++ distinctAll.take(1), distinctAll.drop(1))
-  }
-
-  /** Evaluate a set of rules over one frame, returning (rule, value,
-    * passed) rows in the rules' order.
+  /** Evaluate a set of rules over one frame in ONE aggregate pass,
+    * returning (rule, value, passed) rows in the rules' order. The job
+    * runs on the calling thread, under its job group; callers that
+    * overlap several evaluations wrap each in [[Async]].
     *
-    * Distinct-free rules — plus the FIRST distinct-containing rule —
-    * fuse into ONE aggregate pass: Spark only plans the row-replicating
-    * Expand at ≥2 distinct groups in one Aggregate (a single distinct
-    * alongside plain aggregates is the two-level partial-distinct
-    * shape), so one distinct always rides the fused scan for free where
-    * splitting it out would pay an extra full pass of an uncached frame.
-    * Each ADDITIONAL distinct rule runs as its OWN job, concurrently:
-    * fusing two-plus distinct aggregates makes Spark plan an Expand that
-    * replicates every input row once per distinct group — over a
-    * fact-sized frame that multiplies the shuffle by the rule count
-    * (measured 60M→180M rows on the sf10 MAF report, the dominant cost
-    * of the whole report).
+    * One distinct rule rides the pass for free: Spark plans the
+    * row-replicating Expand only at ≥2 distinct groups in one Aggregate
+    * (a single distinct alongside plain aggregates is the two-level
+    * partial-distinct shape). Every rule set the engine evaluates holds
+    * at most one — `maf_no_dup_variants` in [[PortalRules.mafFieldRules]],
+    * `no_dup_o_orderkey` in [[standardReport]] — so the pass never
+    * multiplies its input.
     */
   def evaluate(spark: SparkSession, df: DataFrame, rules: Seq[Rule]): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.Future
+    require(rules.nonEmpty, "evaluate() needs at least one rule")
     require(rules.map(_.name).distinct.size == rules.size,
       s"duplicate rule names: ${rules.groupBy(_.name).filter(_._2.size > 1).keys.mkString(", ")}")
-    val (fused, distinctRules) = splitForEvaluation(rules)
-    val plainF: Future[Map[String, Long]] =
-      if (fused.isEmpty) Future.successful(Map.empty)
-      else Async(spark) {
-        val row = df.agg(fused.head.agg.as(fused.head.name),
-          fused.tail.map(r => r.agg.as(r.name)): _*).head()
-        fused.zipWithIndex.map { case (r, i) => r.name -> row.getLong(i) }.toMap
-      }
-    val distinctF = distinctRules.map(r =>
-      r.name -> Async(spark)(df.agg(r.agg.as(r.name)).head().getLong(0)))
-    val vals = Async.await(plainF) ++
-      distinctF.map { case (n, f) => n -> Async.await(f) }
-    rules.map { r =>
-      val v = vals(r.name)
+    val row = df.agg(rules.head.agg.as(rules.head.name),
+      rules.tail.map(r => r.agg.as(r.name)): _*).head()
+    rules.zipWithIndex.map { case (r, i) =>
+      val v = row.getLong(i)
       (r.name, v, if (r.passWhenZero) v == 0L else v > 0L)
     }.toDF("rule", "value", "passed")
   }

@@ -13,6 +13,13 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `c` as a plain Catalyst tree. [[expression]] leaves a composed
+    * Column wrapped in a leaf that only a Dataset's analysis unwraps; a
+    * SQL function builder must hand the analyzer the tree itself.
+    */
+  def expressionTree(c: Column): Expression =
+    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
   /** The active session's Hadoop configuration (base conf + SQL session
     * overrides via `sessionState.newHadoopConf()`), so user-configured
     * filesystem settings (s3a credentials, defaultFS, …) reach every
@@ -57,36 +64,5 @@ object Bridge {
     val own = sc.getLocalProperties
     sc.setLocalProperties(props)
     try body finally sc.setLocalProperties(own)
-  }
-
-  /** Does this (unresolved) Column contain a DISTINCT aggregate call?
-    *
-    * Since the Spark 4 Column/ColumnNode split, [[expression]] on an
-    * unanalyzed Column returns a leaf `ColumnNodeExpression` wrapper —
-    * a Catalyst-tree `exists` never descends into it, so matching on
-    * `AggregateExpression.isDistinct` silently answers false for every
-    * `countDistinct(...)` built through the public DSL. The truth lives
-    * in the ColumnNode tree: walk it for `UnresolvedFunction(isDistinct
-    * = true)`, and for nodes wrapping pre-built Catalyst expressions
-    * (custom aggregates) fall back to the Catalyst-side check.
-    */
-  def hasDistinctAggregate(c: Column): Boolean = {
-    def catalystDistinct(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-      e.exists {
-        case ae: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression =>
-          ae.isDistinct
-        case uf: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction =>
-          uf.isDistinct // expr("count(DISTINCT ...)") parses to this
-        case _ => false
-      }
-    c.node.collect {
-      case f: org.apache.spark.sql.internal.UnresolvedFunction => f.isDistinct
-      case n: org.apache.spark.sql.classic.ExpressionColumnNode =>
-        catalystDistinct(n.expression)
-      case s: org.apache.spark.sql.internal.SqlExpression => // expr("...")
-        catalystDistinct(
-          org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-            .parseExpression(s.expression))
-    }.exists(identity)
   }
 }

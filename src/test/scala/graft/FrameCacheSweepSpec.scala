@@ -72,8 +72,8 @@ class FrameCacheSweepSpec extends AnyFunSuite {
       }
       assert(df.collect().map(_.getInt(0)).toSeq == Seq(i + 1))
     }
-    // scalar memo nested inside a frame build (the cachedCount path)
-    val n = FrameCache.cachedCount(spark, "nest-count") {
+    // scalar memo nested inside a frame build (the cachedValue path)
+    val n = FrameCache.cachedValue(spark, "nest-count") {
       FrameCache.cached(spark, "nest-count-frame")(Seq(1, 2, 3).toDF("v")).count()
     }
     assert(n == 3L)

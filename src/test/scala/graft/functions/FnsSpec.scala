@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase.spark
-import graft.functions.ReplaceFirst.replaceFirst
+import graft.functions.Fns.replaceFirst
 
 /** Golden tests lifted from the reference's parametrized tables
   * (reference tests/test_clinical.py; SURVEY §2.7) — the null/first-
@@ -38,6 +38,16 @@ class FnsSpec extends AnyFunSuite {
   test("F1 replace_first propagates null input") {
     val r = one(replaceFirst(lit(null).cast(StringType), lit("x"), lit("")))
     assert(r.isNullAt(0))
+  }
+
+  test("F1 replace_first: a null find or repl gives null, an empty find changes nothing") {
+    val nul = lit(null).cast(StringType)
+    assert(one(replaceFirst(lit("abc"), nul, lit("X"))).isNullAt(0))
+    assert(one(replaceFirst(lit("abc"), lit("b"), nul)).isNullAt(0))
+    assert(one(replaceFirst(lit("abc"), lit("z"), nul)).isNullAt(0)) // even without a hit
+    assert(one(replaceFirst(lit("abc"), lit(""), lit("X"))).getString(0) == "abc")
+    // positions are characters, not bytes
+    assert(one(replaceFirst(lit("é漢é漢"), lit("漢"), lit("-"))).getString(0) == "é-é漢")
   }
 
   test("F1 stripSuffixesFromStringColumns: per-column suffix + AMADEUS special case") {

@@ -57,14 +57,17 @@ class TradePairsSpec extends AnyFunSuite {
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
   }
 
-  test("graphWidth is data-derived: floor 2, byte-linear, core-capped") {
-    val w001 = GraphQueries.graphWidth(spark, "/root/testdata/sf0.001")
-    val w01 = GraphQueries.graphWidth(spark, "/root/testdata/sf0.01")
-    val w1 = GraphQueries.graphWidth(spark, "/root/testdata/sf0.1")
+  test("graph width is data-derived: floor 2, byte-linear, core-capped") {
+    // the width every graph edge cache and round stage is built at
+    def graphWidth(dir: String): Int =
+      Tuned.widthForBytes(spark, graft.Tables.fileBytes(dir, "lineitem"), 1L << 20)
+    val w001 = graphWidth("/root/testdata/sf0.001")
+    val w01 = graphWidth("/root/testdata/sf0.01")
+    val w1 = graphWidth("/root/testdata/sf0.1")
     assert(w001 >= 2, "SinglePartition would defeat co-location")
     assert(w001 <= w01 && w01 <= w1, s"width must grow with data: $w001 $w01 $w1")
     assert(w1 <= 4 * spark.sparkContext.defaultParallelism)
     // missing table → floor, never a crash
-    assert(GraphQueries.graphWidth(spark, "/nonexistent") == 2)
+    assert(graphWidth("/nonexistent") == 2)
   }
 }

@@ -52,10 +52,11 @@ class KeyedStoreSpec extends AnyFunSuite {
 
   test("null-valued keys are NOT stored (absent ≡ null-annotated); " +
     "rebuild is a no-op") {
-    val dir = freshDir()
+    // built once per ident through its owner, as j5_live_annotate builds it
+    val ident = s"keyed-store-spec:${java.util.UUID.randomUUID()}"
     val df = Seq((1L, "one"), (2L, null.asInstanceOf[String]), (3L, "three"))
       .toDF("k", "v")
-    KeyedStore.build(df, "k", "v", dir)
+    val dir = DurableIndex.once("graft-keyed-store-spec", ident)(KeyedStore.build(df, "k", "v", _))
     val r = KeyedStore.open(dir.toString)
     assert(r.lookup("1") == Some("one"))
     // a key whose value is NULL behaves exactly like an absent key —
@@ -63,10 +64,11 @@ class KeyedStoreSpec extends AnyFunSuite {
     // the live face must report a miss, never Some("")
     assert(r.lookup("2").isEmpty)
     assert(r.lookup("3") == Some("three"))
-    // second build against an existing store returns without touching it
+    // a second build of the same ident returns the store untouched
     val before = Files.getLastModifiedTime(dir)
-    KeyedStore.build(Seq((9L, "nine")).toDF("k", "v"), "k", "v", dir)
-    assert(Files.getLastModifiedTime(dir) == before)
+    val again = DurableIndex.once("graft-keyed-store-spec", ident)(
+      KeyedStore.build(Seq((9L, "nine")).toDF("k", "v"), "k", "v", _))
+    assert(again == dir && Files.getLastModifiedTime(dir) == before)
     assert(KeyedStore.open(dir.toString).lookup("9").isEmpty)
   }
 

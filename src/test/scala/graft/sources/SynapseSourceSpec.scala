@@ -54,6 +54,22 @@ class SynapseSourceSpec extends AnyFunSuite {
     assert(SynapseStore.versionComment(root, id, 2L).contains("fixed scores"))
   }
 
+  test("names, folder ids and version comments round-trip the JSON sidecars verbatim") {
+    val root = freshRoot()
+    val odd = "q\"b\\t\tn\nc\u0001 é–漢"
+    val folder = s"synFolder $odd"
+    val id = SynapseStore.store(df1, root, s"data $odd.txt", folder, s"comment $odd")
+    val local = Files.createTempFile("syn-file", ".txt")
+    Files.write(local, "x\n".getBytes("UTF-8"))
+    val fid = SynapseStore.storeFile(root, local.toString, s"file $odd.txt", folder, s"file comment $odd")
+    assert(SynapseStore.getChildren(root, folder) ==
+      Seq(id -> s"data $odd.txt", fid -> s"file $odd.txt"))
+    assert(SynapseStore.versionComment(root, id, 1L).contains(s"comment $odd"))
+    assert(SynapseStore.versionComment(root, fid, 1L).contains(s"file comment $odd"))
+    // a folder id that only prefixes or escapes differently lists nothing
+    assert(SynapseStore.getChildren(root, "synFolder").isEmpty)
+  }
+
   test("getChildren lists a folder's entities by name (the maf.py:23 surface)") {
     val root = freshRoot()
     val a = SynapseStore.store(df1, root, "a.maf", "synMafs")

@@ -79,9 +79,15 @@ class PortalRulesSpec extends AnyFunSuite {
     dir
   }
 
-  private def reportMap(dir: String): Map[String, (Long, Boolean)] =
-    PortalRules.validateStudyPackage(spark, dir).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+  /** [[PortalRules.check]] over the package's own three data files and
+    * case lists, each file read as the study validator reads it.
+    */
+  private def reportMap(dir: String): Map[String, (Long, Boolean)] = {
+    val files = graft.pipelines.StudyValidator.loadAllOutputs(spark, dir, PortalRules.DataFiles)
+    PortalRules.check(spark, dir, files(PortalRules.SampleFile), files(PortalRules.PatientFile),
+      files(PortalRules.MafFile), PortalRules.caseListIds(spark, dir))
+      .map { case (rule, v, passed) => rule -> (v, passed) }.toMap
+  }
 
   test("healthy package passes every portal rule") {
     val rep = reportMap(healthyPackage())

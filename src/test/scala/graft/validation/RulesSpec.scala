@@ -156,46 +156,30 @@ class RulesSpec extends AnyFunSuite {
     assert(e.getMessage.contains("rows_x"))
   }
 
-  test("evaluate fuses a lone distinct rule into the plain pass (no Expand), splits only the 2nd+") {
+  test("evaluate is one aggregate pass; a lone distinct plans no Expand") {
     import org.apache.spark.sql.functions.{countDistinct, col}
     val plain = Seq(Rules.rowCount("t"), Rules.noNulls("k"))
     val d1 = Rules.Rule("d1", countDistinct(col("k")), passWhenZero = false)
     val d2 = Rules.Rule("d2", countDistinct(col("v")), passWhenZero = false)
-    // routing: one distinct rides the fused scan; only the 2nd+ split
-    val (fused1, split1) = Rules.splitForEvaluation(plain :+ d1)
-    assert(fused1.map(_.name) == Seq("rows_t", "no_null_k", "d1") && split1.isEmpty)
-    // the detection itself: the naive Catalyst-tree check silently
-    // answered false for DSL countDistinct since the Spark 4 ColumnNode
-    // split (every rule fused -> multi-distinct Expand); lock the bridge
-    import org.apache.spark.sql.functions.{expr, greatest, lit, sum}
-    import org.apache.spark.sql.graftbridge.Bridge
-    assert(Bridge.hasDistinctAggregate(countDistinct(col("k"))))
-    assert(Bridge.hasDistinctAggregate(
-      greatest(countDistinct(col("k")) - lit(1L), lit(0L))))
-    assert(Bridge.hasDistinctAggregate(expr("count(DISTINCT k)")))
-    assert(!Bridge.hasDistinctAggregate(sum(col("k"))))
-    assert(!Bridge.hasDistinctAggregate(expr("sum(k)")))
-    val (fused2, split2) = Rules.splitForEvaluation(plain ++ Seq(d1, d2))
-    assert(fused2.map(_.name) == Seq("rows_t", "no_null_k", "d1") &&
-      split2.map(_.name) == Seq("d2"))
-    // the Spark contract the routing relies on: plains + ONE distinct in
-    // a single Aggregate plans the two-level partial-distinct shape with
-    // NO row-replicating Expand; a second distinct group introduces it.
-    // Checked on the OPTIMIZED LOGICAL plan (RewriteDistinctAggregates
-    // runs there) — the executed plan hides behind AdaptiveSparkPlanExec.
+    // the Spark contract the one-pass evaluate relies on: plains + ONE
+    // distinct in a single Aggregate plans the two-level partial-distinct
+    // shape with NO row-replicating Expand; a second distinct group
+    // introduces it. Checked on the OPTIMIZED LOGICAL plan
+    // (RewriteDistinctAggregates runs there) — the executed plan hides
+    // behind AdaptiveSparkPlanExec.
     val df = Seq(("a", 1), ("a", 2), ("b", 2)).toDF("k", "v")
     def hasExpand(frame: org.apache.spark.sql.DataFrame): Boolean =
       frame.queryExecution.optimizedPlan.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Expand])
-    val oneD = df.agg(fused1.head.agg.as(fused1.head.name),
-      fused1.tail.map(r => r.agg.as(r.name)): _*)
-    assert(!hasExpand(oneD), "lone distinct must not plan an Expand")
+    val oneD = plain :+ d1
+    assert(!hasExpand(df.agg(oneD.head.agg.as(oneD.head.name),
+      oneD.tail.map(r => r.agg.as(r.name)): _*)), "lone distinct must not plan an Expand")
     val twoD = df.agg(countDistinct(col("k")), countDistinct(col("v")))
     assert(hasExpand(twoD), "the >=2-distinct Expand premise no longer holds")
-    // values unchanged by the routing
+    // values, in the rules' order, whatever the distinct count
     val r1 = Rules.evaluate(spark, df, plain ++ Seq(d1, d2)).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(r1 == Map("rows_t" -> 3L, "no_null_k" -> 0L, "d1" -> 2L, "d2" -> 2L))
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(r1 == Seq("rows_t" -> 3L, "no_null_k" -> 0L, "d1" -> 2L, "d2" -> 2L))
   }
 
   test("tupleHash128 distinct count ≡ tuple distinct count: adversarial nulls + corpus audit") {
@@ -245,8 +229,8 @@ class RulesSpec extends AnyFunSuite {
       while (seenJob(group).isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
       seenJob(group).getOrElse(fail(s"listener never saw marker $group"))
     }
-    // two distinct rules: the fused pass and the split one are both
-    // submitted from pool threads
+    // two distinct rules: their pass plans an Expand over more than one
+    // shuffle stage, so the call runs several jobs
     val df = Seq(("a", "x"), ("a", "y"), ("b", "y")).toDF("k", "v")
     val rules = Seq(Rules.noKeyedDups("k"), Rules.noKeyedDups("v"))
     sc.addSparkListener(listener)
