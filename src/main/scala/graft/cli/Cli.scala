@@ -91,7 +91,11 @@ object ClinicalCli {
     if (args.contains("clear_workspace")) Tsv.clearDir(outDir)
 
     withSession { spark =>
-    val attrMapping = fetch(spark, storeRoot, one(args, "cli_to_cbio_mapping_synid"))
+    // control tables collected once: later collects of them run no job
+    val attrMapping = ClinicalPipeline.controlTable(
+      fetch(spark, storeRoot, one(args, "cli_to_cbio_mapping_synid")))
+    val attrMeta = ClinicalPipeline.controlTable(
+      fetch(spark, storeRoot, one(args, "attr_meta_synid")))
     val (pre0, neoObs, neoRules) = ClinicalPipeline.preprocessObserved(
       fetch(spark, storeRoot, one(args, "input_df_synid")),
       fetch(spark, storeRoot, one(args, "cli_to_oncotree_mapping_synid")),
@@ -111,7 +115,6 @@ object ClinicalCli {
         broadcast(fetch(spark, storeRoot, id)), Seq("ONCOTREE_CODE"), "left")
       case None => pre
     }
-    val attrMeta = fetch(spark, storeRoot, one(args, "attr_meta_synid"))
     val (patient, sample) = ClinicalPipeline.splitPatientSample(enriched, attrMapping)
     val datasets = args.get("dataset").map(_.toSeq).getOrElse(
       sample.select("Dataset").distinct().collect().map(_.getString(0)).toSeq.sorted)

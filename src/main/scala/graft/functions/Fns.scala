@@ -97,10 +97,11 @@ object Fns {
 
   /** F8 — cancer-type sanitize for case-list file names
     * (`clinical.py:699-705`): spaces→`_`, drop `,`, `/`→`_`,
-    * empty/`NA`→`no_oncotree_code`. Driver-side (runs on collected keys).
+    * null/empty/`NA`→`no_oncotree_code`. A column, so that the case lists
+    * group and sort by the sanitized name inside Spark.
     */
-  def sanitizeCancerType(raw: String): String = {
-    val s = Option(raw).getOrElse("").replace(" ", "_").replace(",", "").replace("/", "_")
-    if (s.isEmpty || s == "NA") "no_oncotree_code" else s
+  def sanitizeCancerType(raw: Column): Column = {
+    val s = translate(coalesce(raw.cast("string"), lit("")), " /,", "__")
+    when(s === "" || s === "NA", lit("no_oncotree_code")).otherwise(s)
   }
 }

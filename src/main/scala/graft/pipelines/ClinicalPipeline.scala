@@ -1,12 +1,12 @@
 package graft.pipelines
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.functions.Fns
 import graft.sources.{Layout, Tsv}
-import graft.validation.Rules
+import graft.validation.{Async, Rules}
 
 /** The reference's clinical export pipeline (`clinical.py main()`,
   * SURVEY §3.1) as a composable library: one lazy DataFrame chain for
@@ -15,13 +15,14 @@ import graft.validation.Rules
   * (SURVEY §2).
   *
   * The clinical table is the only big input; mappings are control
-  * tables, collected or broadcast. Nothing persists the chain: each
-  * action of [[exportDataset]] (the two all-NA column aggregates of P5,
-  * the two file writes, the per-cancer-type case-list collect) re-runs
-  * it from the inputs, with the dataset filter (P3) applied to the
-  * uncached frame. [[exportAllDatasets]] is the whole-study form: it
-  * writes the frames once, partitioned by `Dataset`, and exports each
-  * dataset from a pruned read.
+  * tables, collected once into driver-local frames ([[controlTable]])
+  * or broadcast. Nothing persists the chain, so each action re-runs it
+  * from the inputs with the dataset filter (P3) applied: a persisted
+  * frame writes the same rows in another order. [[exportDataset]] runs
+  * four actions per dataset, two at a time: one census per frame, then
+  * each frame's file write. [[exportAllDatasets]] is the whole-study form:
+  * it writes the frames once, partitioned by `Dataset`, and exports
+  * each dataset from a pruned read.
   */
 object ClinicalPipeline {
 
@@ -174,14 +175,25 @@ object ClinicalPipeline {
   /** P5 — drop columns with zero non-null values: one aggregate pass then
     * the pruned projection (reference `clinical.py:538-547`).
     */
-  def dropAllNaColumns(df: DataFrame): DataFrame = {
-    val counts = df.select(
-      df.columns.map(c => count(Fns.qcol(c)).as(c)).toIndexedSeq: _*).head()
-    val keep = df.columns.zipWithIndex.collect {
-      case (c, i) if counts.getLong(i) > 0 => c
-    }
-    df.select(keep.map(Fns.qcol).toIndexedSeq: _*)
-  }
+  def dropAllNaColumns(df: DataFrame): DataFrame =
+    df.select(nonNullColumns(df, census(df)).map(Fns.qcol): _*)
+
+  /** One aggregate pass over `df`: the non-null count of every column, in
+    * column order, then the `extra` aggregates.
+    */
+  private def census(df: DataFrame, extra: Column*): Row =
+    df.select(df.columns.toSeq.map(c => count(Fns.qcol(c)).as(c)) ++ extra: _*).head()
+
+  /** The columns of `df` whose [[census]] count is above zero. */
+  private def nonNullColumns(df: DataFrame, census: Row): Seq[String] =
+    df.columns.toSeq.zipWithIndex.collect { case (c, i) if census.getLong(i) > 0 => c }
+
+  /** A control table collected once into a driver-local frame: every
+    * later collect of it (the rename, case and split maps, the header
+    * blocks) reads the local relation and runs no job.
+    */
+  def controlTable(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
 
   /** A7 + U2 — merge new mapping rows into the attribute-metadata table,
     * keep-LAST per NORMALIZED_COLUMN_HEADER (new rows override existing;
@@ -247,31 +259,21 @@ object ClinicalPipeline {
   }
 
   /** Per-dataset export (reference `clinical.py:922-950`): P3 filter →
-    * P5 drop-all-NA → headered patient/sample TSVs + case lists. Returns
-    * the V1–V7-style report rows for the dataset.
+    * P5 drop-all-NA → headered patient/sample TSVs + K3 case lists.
+    * Returns the V1–V7-style report rows for the dataset.
+    *
+    * Each frame's order-free facts come from one census pass: the
+    * non-null count of every column (P5's keep-set) and, for the sample
+    * frame, the (cancer type, sample id) pairs of the per-type case
+    * lists. Each frame's census and then its write run on a thread of
+    * their own, so the two censuses run at once, and so do the writes.
     */
   def exportDataset(patient: DataFrame, sample: DataFrame, dataset: String,
                     attrMeta: DataFrame, studyId: String,
                     outDir: String): Seq[(String, Long, Boolean)] = {
-    val sampleDs = dropAllNaColumns(
-      sample.filter(col("Dataset") === dataset).drop("Dataset"))
-    val patientDs = dropAllNaColumns(
-      patient.filter(col("Dataset") === dataset).drop("Dataset")).distinct()
-
-    // V2/V5/V6 ride the export write itself (Rules.observed → df.observe):
-    // the counters are computed by the SAME pass that serializes the
-    // rows, where the reference re-scans once per rule
-    // (`clinical.py:809-837`) — at 100 TB each separate validation
-    // aggregate is another full pass.
-    import graft.validation.Rules
-    val exportRules = Seq(
-      Rules.rowCount(dataset),
-      Rules.Rule(s"no_null_sample_id_$dataset",
-        sum(when(col("SAMPLE_ID").isNull, 1L).otherwise(0L))),
-      Rules.Rule(s"no_null_patient_id_$dataset",
-        sum(when(col("PATIENT_ID").isNull, 1L).otherwise(0L))))
-    val (sampleObserved, obs) =
-      Rules.observed(sampleDs, s"graft_v_$dataset", exportRules)
+    val spark = sample.sparkSession
+    val sampleIn = sample.filter(col("Dataset") === dataset).drop("Dataset")
+    val patientIn = patient.filter(col("Dataset") === dataset).drop("Dataset")
 
     // one collect of the control table serves both header blocks
     val meta = attrMeta
@@ -279,12 +281,41 @@ object ClinicalPipeline {
       .collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
       .toMap
-    Tsv.writeTsvFile(patientDs, s"$outDir/data_clinical_patient.txt",
-      cbioHeaderBlock(patientDs.columns.toSeq, meta))
-    Tsv.writeTsvFile(sampleObserved, s"$outDir/data_clinical_sample.txt",
-      cbioHeaderBlock(sampleDs.columns.toSeq, meta))
-    if (sampleDs.columns.contains("CANCER_TYPE"))
-      Tsv.writeCaseLists(sampleDs, "CANCER_TYPE", "SAMPLE_ID", studyId, s"$outDir/case_lists")
+    def writeHeadered(df: DataFrame, file: String): Unit =
+      Tsv.writeTsvFile(df, s"$outDir/$file", cbioHeaderBlock(df.columns.toSeq, meta))
+
+    // V2/V5/V6 ride the export write itself (Rules.observed → df.observe):
+    // the counters are computed by the SAME pass that serializes the
+    // rows, where the reference re-scans once per rule
+    // (`clinical.py:809-837`) — at 100 TB each separate validation
+    // aggregate is another full pass.
+    val exportRules = Seq(
+      Rules.rowCount(dataset),
+      Rules.Rule(s"no_null_sample_id_$dataset",
+        sum(when(col("SAMPLE_ID").isNull, 1L).otherwise(0L))),
+      Rules.Rule(s"no_null_patient_id_$dataset",
+        sum(when(col("PATIENT_ID").isNull, 1L).otherwise(0L))))
+
+    // each frame's census, then its write; the two frames at once
+    val patientExport = Async(spark) {
+      val keep = nonNullColumns(patientIn, census(patientIn))
+      writeHeadered(patientIn.select(keep.map(Fns.qcol): _*).distinct(),
+        "data_clinical_patient.txt")
+    }
+    val byType = sampleIn.columns.contains("CANCER_TYPE")
+    val (_, obs) = Async.alongside(patientExport) {
+      val counts = census(sampleIn,
+        (if (byType) Seq(Tsv.caseListPairs("CANCER_TYPE", "SAMPLE_ID")) else Nil): _*)
+      val keep = nonNullColumns(sampleIn, counts)
+      // the case lists of the kept CANCER_TYPE column, from the census
+      if (keep.contains("CANCER_TYPE"))
+        Tsv.writeCaseListPairs(counts.getSeq[Row](sampleIn.columns.length), studyId,
+          s"$outDir/case_lists")
+      val (sampleObserved, obs) = Rules.observed(
+        sampleIn.select(keep.map(Fns.qcol): _*), s"graft_v_$dataset", exportRules)
+      writeHeadered(sampleObserved, "data_clinical_sample.txt")
+      obs
+    }
     Tsv.writeMetaFile(s"$outDir/meta_study.txt", Seq(
       "type_of_cancer" -> "mixed",
       "cancer_study_identifier" -> studyId,

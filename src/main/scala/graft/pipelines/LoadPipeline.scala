@@ -14,27 +14,24 @@ import graft.sources.Tsv
   */
 object LoadPipeline {
 
-  /** J6 — `cases_sequenced` = clinical samples that appear among the MAF
-    * barcodes: a left-semi join, never a collect of the fact side
-    * (reference `load.py:12-35`, README case-list semantics).
-    */
-  def casesSequenced(sample: DataFrame, maf: DataFrame): DataFrame =
-    sample.join(maf.select(col("Tumor_Sample_Barcode").as("SAMPLE_ID")).distinct(),
-      Seq("SAMPLE_ID"), "left_semi")
-
-  /** Generate both case lists from the sample + mutation frames; the
-    * collected id lists are per-study small (the grouped result, not the
-    * fact table).
+  /** Both case lists from the sample + mutation frames in ONE query: the
+    * distinct sample ids, left-joined to the distinct MAF barcodes (J6 —
+    * `cases_sequenced` is the samples found among the barcodes, reference
+    * `load.py:12-35`), sorted and collected once. Only the per-study id
+    * list reaches the driver, never the fact side.
     */
   def generateCaseLists(sample: DataFrame, maf: DataFrame, studyId: String,
                         outDir: String): Seq[Path] = {
-    val all = sample.select(col("SAMPLE_ID").cast("string")).distinct()
-      .orderBy("SAMPLE_ID").collect().map(_.getString(0)).toSeq
-    val seq = casesSequenced(sample, maf).select(col("SAMPLE_ID").cast("string")).distinct()
-      .orderBy("SAMPLE_ID").collect().map(_.getString(0)).toSeq
+    val barcodes = maf.select(col("Tumor_Sample_Barcode").as("SAMPLE_ID")).distinct()
+      .withColumn("sequenced", lit(true))
+    val ids = sample.select("SAMPLE_ID").distinct()
+      .join(barcodes, Seq("SAMPLE_ID"), "left")
+      .select(col("SAMPLE_ID").cast("string").as("SAMPLE_ID"), col("sequenced").isNotNull)
+      .orderBy("SAMPLE_ID").collect().toSeq
     def write(ids: Seq[String], suffix: String, name: String): Path =
       Tsv.writeCaseList(s"$outDir/cases_$suffix.txt", studyId, s"${studyId}_$suffix",
         name, s"$name ($studyId)", None, ids)
-    Seq(write(all, "all", "All samples"), write(seq, "sequenced", "Sequenced samples"))
+    Seq(write(ids.map(_.getString(0)), "all", "All samples"),
+      write(ids.filter(_.getBoolean(1)).map(_.getString(0)), "sequenced", "Sequenced samples"))
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Schemas
 import graft.sources.{SynapseStore, Tsv}
+import graft.validation.{Async, Rules}
 
 /** The reference's full study lifecycle as one callable (SURVEY §3:
   * `clinical.py main` → `maf.py main` → `validate.py main` →
@@ -14,8 +15,10 @@ import graft.sources.{SynapseStore, Tsv}
   * store by id (`syn.get` at the head), Spark plans in between, and
   * every produced required output stored back under one version
   * comment (`syn.store` at the tail, `load.py:38-82`). The pieces are
-  * the already-tested pipeline stages — this object sequences them the
-  * way the reference's CLIs do. Its two `load.py` stages,
+  * the already-tested pipeline stages. `clinical.py` and `maf.py` are
+  * independent programs whose outputs meet only in the case lists and
+  * validation, so the two stages run at once; the load and validate
+  * stages follow in the reference's order. Its two `load.py` stages,
   * [[createCaseLists]] and [[upload]], are also what `LoadCli` runs.
   */
 object StudyRunner {
@@ -47,31 +50,35 @@ object StudyRunner {
     def fetch(id: String): DataFrame =
       spark.read.format("synapse").option("store", storeRoot).load(id)
 
-    // --- §3.1 clinical main: preprocess -> enrich -> split -> export
-    val attrMapping = fetch(in.attrMappingId)
-    // V16 rides the export write as an observe metric (zero extra pass);
-    // read back below once the clinical export has materialized the plan
-    val (pre, neoObs, neoRules) = ClinicalPipeline.preprocessObserved(
-      fetch(in.clinicalId), fetch(in.oncotreeId), fetch(in.neoId), attrMapping)
-    // J4: oncotree code -> cancer-type names via broadcast lookup (the
-    // reference shells out to a converter tool here, clinical.py:477-496)
-    val enriched = pre.join(
-      broadcast(fetch(in.oncotreeNamesId)), Seq("ONCOTREE_CODE"), "left")
-    val (patient, sample) = ClinicalPipeline.splitPatientSample(enriched, attrMapping)
-    val exportChecks = ClinicalPipeline.exportDataset(
-      patient, sample, dataset, fetch(in.attrMetaId), studyId, outDir)
-    // the export writes above materialized the observed chain — the V16
-    // metric is ready without any extra job
-    val clinicalChecks =
-      exportChecks ++ graft.validation.Rules.observedRows(neoObs, neoRules)
-    ClinicalPipeline.writeClinicalMetas(outDir, studyId)
+    // --- §3.2 maf main: folder merge -> annotate -> postprocess -> write,
+    // on a pool thread while the clinical stage runs on this one; both
+    // have finished, whatever either threw, before anything below runs
+    val mafStage = Async(spark) {
+      val maf = MafPipeline.readAndMergeMafsFromStore(spark, storeRoot, in.mafFolderId)
+        .getOrElse(throw new IllegalArgumentException(
+          s"no .maf children under ${in.mafFolderId}"))
+      val (annotated, _) = MafPipeline.annotate(maf, fetch(in.annotationsId))
+      MafPipeline.writeOutputs(MafPipeline.postprocess(annotated), studyId, outDir)
+    }
 
-    // --- §3.2 maf main: folder merge -> annotate -> postprocess -> write
-    val maf = MafPipeline.readAndMergeMafsFromStore(spark, storeRoot, in.mafFolderId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no .maf children under ${in.mafFolderId}"))
-    val (annotated, _) = MafPipeline.annotate(maf, fetch(in.annotationsId))
-    MafPipeline.writeOutputs(MafPipeline.postprocess(annotated), studyId, outDir)
+    // --- §3.1 clinical main: preprocess -> enrich -> split -> export
+    val (_, clinicalChecks) = Async.alongside(mafStage) {
+      val attrMapping = ClinicalPipeline.controlTable(fetch(in.attrMappingId))
+      val attrMeta = ClinicalPipeline.controlTable(fetch(in.attrMetaId))
+      // V16 rides the chain's first action as an observe metric (zero
+      // extra pass); read back below once the export has run
+      val (pre, neoObs, neoRules) = ClinicalPipeline.preprocessObserved(
+        fetch(in.clinicalId), fetch(in.oncotreeId), fetch(in.neoId), attrMapping)
+      // J4: oncotree code -> cancer-type names via broadcast lookup (the
+      // reference shells out to a converter tool here, clinical.py:477-496)
+      val enriched = pre.join(
+        broadcast(fetch(in.oncotreeNamesId)), Seq("ONCOTREE_CODE"), "left")
+      val (patient, sample) = ClinicalPipeline.splitPatientSample(enriched, attrMapping)
+      val exportChecks = ClinicalPipeline.exportDataset(
+        patient, sample, dataset, attrMeta, studyId, outDir)
+      ClinicalPipeline.writeClinicalMetas(outDir, studyId)
+      exportChecks ++ Rules.observedRows(neoObs, neoRules)
+    }
 
     // --- load.py --create_case_lists (cases_all + cases_sequenced)
     createCaseLists(spark, outDir, studyId)

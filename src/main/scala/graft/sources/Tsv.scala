@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -44,14 +44,16 @@ object Tsv {
   /** `multiLine` enables quoted records with embedded newlines (pandas
     * reads them by default; Spark must opt in). Costs splittability — a
     * multiLine file is read by ONE task — so leave it off unless the data
-    * actually embeds newlines.
+    * actually embeds newlines. `fileGlob` keeps only the files of a
+    * directory `path` whose names match it, inside Spark's file index.
     */
   def read(spark: SparkSession, path: String,
            comment: Option[Char] = None,
            inferSchema: Boolean = true,
            schema: Option[StructType] = None,
-           multiLine: Boolean = false): DataFrame = {
-    val r = reader(spark, comment, multiLine)
+           multiLine: Boolean = false,
+           fileGlob: Option[String] = None): DataFrame = {
+    val r = reader(spark, comment, multiLine).options(fileGlob.map("pathGlobFilter" -> _).toMap)
     schema match {
       case Some(s) => r.schema(s).csv(path)
       case None    => r.option("inferSchema", inferSchema).csv(path)
@@ -149,22 +151,33 @@ object Tsv {
     Files.write(p, content.getBytes(StandardCharsets.UTF_8))
   }
 
-  /** K3 — one [[writeCaseList]] file per group key (reference
-    * `clinical.py:683-718`). The group/collect runs distributed; only the
-    * tiny (cancer_type → ids) result is collected.
+  /** K3 — one [[writeCaseList]] file per sanitized group key (reference
+    * `clinical.py:683-718`): one aggregate pass, and only the small
+    * (type, id) pair list reaches the driver.
     */
   def writeCaseLists(df: DataFrame, keyCol: String, idCol: String,
-                     studyId: String, outDir: String): Seq[Path] = {
-    val grouped = df
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(col(idCol).cast(StringType))).as("ids"))
-      .collect()
-    grouped.toIndexedSeq.map { row =>
-      val cancerType = graft.functions.Fns.sanitizeCancerType(row.getString(0))
+                     studyId: String, outDir: String): Seq[Path] =
+    writeCaseListPairs(df.select(caseListPairs(keyCol, idCol)).head().getSeq[Row](0),
+      studyId, outDir)
+
+  /** The aggregate behind [[writeCaseLists]]: every (sanitized key, id)
+    * pair, sorted inside Spark — by name, then by id in Spark's UTF-8
+    * order. Keys that sanitize to one name (null, `""` and `NA`; `A/B`
+    * and `A_B`) share one file, so they must share one sorted list.
+    */
+  def caseListPairs(keyCol: String, idCol: String): Column =
+    sort_array(collect_list(struct(graft.functions.Fns.sanitizeCancerType(col(keyCol)),
+      col(idCol).cast(StringType))))
+
+  /** One case list per name of a collected [[caseListPairs]] value, ids
+    * in their collected order; null ids are skipped.
+    */
+  def writeCaseListPairs(pairs: Seq[Row], studyId: String, outDir: String): Seq[Path] =
+    pairs.groupBy(_.getString(0)).toSeq.map { case (cancerType, rows) =>
       writeCaseList(s"$outDir/cases_$cancerType.txt", studyId, s"${studyId}_$cancerType",
-        s"Samples - $cancerType", s"All samples ($cancerType)", None, row.getSeq[String](1))
+        s"Samples - $cancerType", s"All samples ($cancerType)", None,
+        rows.flatMap(r => Option(r.getString(1))))
     }
-  }
 
   /** K4 — key-value meta file (reference `clinical.py:623-656`). */
   def writeMetaFile(file: String, entries: Seq[(String, String)]): Path = {

@@ -1,13 +1,15 @@
 package graft.validation
 
-import scala.concurrent.{Await, ExecutionContext, Future}
+import java.util.concurrent.ExecutionException
+
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** Rule jobs submitted together from driver threads, keeping the
-  * caller's Spark local properties. A global-pool thread carries the
+/** Jobs submitted together from driver threads (rule passes, study
+  * stages), keeping the caller's Spark local properties. A global-pool thread carries the
   * properties of whichever thread created it, so a job started from a
   * plain `Future` runs under a stale job group: `cancelJobGroup`,
   * scheduler pools and per-group job accounting all miss it. [[apply]]
@@ -17,14 +19,48 @@ import org.apache.spark.sql.graftbridge.Bridge
   * broadcasts). Each task gets its own copy: Spark sets
   * `spark.sql.execution.id` in the running thread's properties, so two
   * tasks must never share one object.
+  *
+  * Every task completes its future, whatever it throws: `Future.apply`
+  * leaves a future pending on a fatal error (a `LinkageError`, say),
+  * and an [[await]] on it would never return. [[await]] rethrows the
+  * task's own exception: a promise boxes an `Error` or an
+  * `InterruptedException` in an `ExecutionException`, which it unboxes.
   */
 private[graft] object Async {
 
   def apply[T](spark: SparkSession)(body: => T): Future[T] = {
     val sc = spark.sparkContext
     val props = Bridge.copyLocalProperties(sc)
-    Future(Bridge.withLocalProperties(sc, props)(body))(ExecutionContext.global)
+    val done = Promise[T]()
+    ExecutionContext.global.execute { () =>
+      try done.success(Bridge.withLocalProperties(sc, props)(body))
+      catch { case t: Throwable => done.failure(t) }
+    }
+    done.future
   }
 
-  def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+  /** Runs `body` on the calling thread while `task` runs, and returns
+    * both results once both have finished. A failure is rethrown only
+    * then, never while the other side still runs: the body's exception
+    * first, with the task's suppressed onto it.
+    */
+  def alongside[A, B](task: Future[A])(body: => B): (A, B) = {
+    def attempt[T](t: => T): Either[Throwable, T] =
+      try Right(t) catch { case e: Throwable => Left(e) }
+    (attempt(body), attempt(await(task))) match {
+      case (Right(b), Right(a)) => (a, b)
+      case (Left(e), a) =>
+        a.swap.foreach(s => if (s ne e) e.addSuppressed(s))
+        throw e
+      case (_, Left(e)) => throw e
+    }
+  }
+
+  def await[T](f: Future[T]): T =
+    try Await.result(f, Duration.Inf)
+    catch {
+      case e: ExecutionException
+          if e.getCause.isInstanceOf[Error] || e.getCause.isInstanceOf[InterruptedException] =>
+        throw e.getCause
+    }
 }

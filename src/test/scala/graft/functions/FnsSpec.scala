@@ -151,11 +151,10 @@ class FnsSpec extends AnyFunSuite {
 
   test("F8 sanitizeCancerType") {
     // reference clinical.py:699-705
-    assert(Fns.sanitizeCancerType("Head and Neck") == "Head_and_Neck")
-    assert(Fns.sanitizeCancerType("a,b/c") == "ab_c")
-    assert(Fns.sanitizeCancerType("") == "no_oncotree_code")
-    assert(Fns.sanitizeCancerType("NA") == "no_oncotree_code")
-    assert(Fns.sanitizeCancerType(null) == "no_oncotree_code")
+    val raw = Seq(Some("Head and Neck"), Some("a,b/c"), Some(""), Some("NA"), None)
+    val out = raw.toDF("t").select(Fns.sanitizeCancerType($"t")).collect().map(_.getString(0))
+    assert(out.toSeq == Seq("Head_and_Neck", "ab_c", "no_oncotree_code", "no_oncotree_code",
+      "no_oncotree_code"))
   }
 
   test("SQL registration: replace_first and format_12g usable from spark.sql") {

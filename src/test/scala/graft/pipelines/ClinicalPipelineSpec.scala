@@ -94,6 +94,24 @@ class ClinicalPipelineSpec extends AnyFunSuite {
       .contains("reference_genome: hg38"))
   }
 
+  test("per-dataset export: cancer types that sanitize to one name share one case list") {
+    // null, "" and "NA" all name cases_no_oncotree_code.txt, "A/B" and
+    // "A_B" both cases_A_B.txt; the other dataset's row stays out
+    val sample = Seq[(String, String, String, String)](
+      ("s5", "p5", null, "DsA"), ("s1", "p1", "NA", "DsA"), ("s3", "p3", "", "DsA"),
+      ("s4", "p4", "A/B", "DsA"), ("s2", "p2", "A_B", "DsA"), (null, "p6", "A_B", "DsA"),
+      ("s0", "p0", "A/B", "DsB"))
+      .toDF("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE", "Dataset")
+    val patient = sample.select("PATIENT_ID", "Dataset")
+    val tmp = Files.createTempDirectory("clin-collide").toString
+    ClinicalPipeline.exportDataset(patient, sample, "DsA", attrMetaFixture, "st", tmp)
+    val lists = Files.list(Paths.get(tmp, "case_lists")).iterator().asScala
+      .map(p => p.getFileName.toString -> Files.readAllLines(p).get(4)).toMap
+    assert(lists == Map(
+      "cases_no_oncotree_code.txt" -> "case_list_ids: s1\ts3\ts5",
+      "cases_A_B.txt" -> "case_list_ids: s2\ts4"), lists.toString)
+  }
+
   test("exportAllDatasets: partitioned fan-out writes every dataset from pruned reads") {
     val (pre, _, _) = ClinicalPipeline.preprocessObserved(
       clinicalFixture, oncotreeFixture, neoFixture, attrMappingFixture)

@@ -1,6 +1,8 @@
 package graft.pipelines
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -226,6 +228,93 @@ class StudyRunnerSpec extends AnyFunSuite {
     res2.storedOutputs.foreach { case (f, id) =>
       assert(SynapseStore.latestVersion(root, id).contains(2L), f)
       assert(SynapseStore.versionComment(root, id, 2L).contains("round-5 export v2"), f)
+    }
+  }
+
+  /** Every regular file under `root` → its bytes' SHA-256. */
+  private def tree(root: Path): Map[String, String] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+      val digest = java.security.MessageDigest.getInstance("SHA-256").digest(Files.readAllBytes(p))
+      root.relativize(p).toString -> digest.map("%02x".format(_)).mkString
+    }.toMap
+    finally s.close()
+  }
+
+  test("the concurrent export is deterministic: three runs, one package") {
+    val root = Files.createTempDirectory("study-det").toString
+    val in = seedInputs(root)
+    val runs = (1 to 3).map { i =>
+      val out = Files.createTempDirectory(s"study-det-out$i")
+      val res = StudyRunner.run(spark, root, in, "DsA", "iatlas_DsA", out.toString,
+        "synDetOut", s"export $i")
+      (tree(out), res.clinicalChecks)
+    }
+    val (first, checks) = runs.head
+    assert(first.keySet.contains("data_clinical_sample.txt") &&
+      first.keySet.contains("data_mutations.txt") &&
+      first.keySet.contains("case_lists/cases_sequenced.txt"), first.keySet.toString)
+    runs.tail.foreach { case (t, c) =>
+      assert(t == first, "package bytes differ between runs")
+      assert(c == checks)
+    }
+    // V2/V5/V6 from the sample write, V16 from whichever census ran first
+    assert(checks == Seq(("rows_DsA", 3L, true), ("no_null_sample_id_DsA", 0L, true),
+      ("no_null_patient_id_DsA", 0L, true), ("neo_only_samples", 0L, true)), checks.toString)
+  }
+
+  test("a failed stage fails the run only once no stage writes") {
+    val root = Files.createTempDirectory("study-fail").toString
+    val in = seedInputs(root).copy(mafFolderId = "synNoSuchFolder")
+    val out = Files.createTempDirectory("study-fail-out")
+    val e = intercept[IllegalArgumentException] {
+      StudyRunner.run(spark, root, in, "DsA", "iatlas_DsA", out.toString, "synFailOut", "fail")
+    }
+    assert(e.getMessage.contains("synNoSuchFolder"), e.getMessage)
+    // the clinical stage, run alongside the failed MAF stage, had finished
+    // its package part when run threw; nothing appears or changes later
+    val atThrow = tree(out)
+    assert(Seq("data_clinical_sample.txt", "data_clinical_patient.txt",
+      "meta_clinical_sample.txt", "meta_clinical_patient.txt").forall(atThrow.contains),
+      atThrow.keySet.toString)
+    assert(!atThrow.contains("data_mutations.txt"))
+    Thread.sleep(2000)
+    assert(tree(out) == atThrow)
+  }
+
+  test("one export runs at most 59 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = Files.createTempDirectory("study-jobs").toString
+    val in = seedInputs(root)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("study-run-jobs", "export")
+      StudyRunner.run(spark, root, in, "DsA", "iatlas_DsA",
+        Files.createTempDirectory("study-jobs-out").toString, "synJobsOut", "jobs")
+      // the bus posts job starts in submission order: once the marker's
+      // start is seen, so is every job the run launched
+      sc.setJobGroup("study-run-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("study-run-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("study-run-end"), "listener never saw the marker")
+      val jobs = groups.asScala.count(_ == "study-run-jobs")
+      info(s"one export launched $jobs jobs")
+      // 71 when the stages ran in sequence, the control tables were
+      // collected per use and each drop-all-NA aggregate and the case-list
+      // collect re-ran the clinical chain
+      assert(jobs > 0 && jobs <= 59, s"one export launched $jobs jobs")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
     }
   }
 }

@@ -99,6 +99,26 @@ class TsvSpec extends AnyFunSuite {
     assert(lung.get(4) == "case_list_ids: s1\ts2")
   }
 
+  test("K3 case lists: types that sanitize to one name share one sorted list") {
+    val tmp = Files.createTempDirectory("tsv-spec").toString
+    // null, "" and "NA" all name cases_no_oncotree_code.txt; "A/B" and
+    // "A_B" both name cases_A_B.txt. Each file must hold every id of its
+    // name in one list, sorted in Spark's order — not the last group's.
+    val df = Seq[(String, String)](
+      (null, "s9"), ("", "s3"), ("NA", "s1"), ("NA", null),
+      ("A/B", "s4"), ("A_B", "s2"), ("A/B", "s0"),
+      // UTF-8 order puts U+FF21 before U+1F600; a JVM String sort
+      // (UTF-16 units, surrogate 0xD83D < 0xFF21) would not
+      ("A/B", "\uD83D\uDE00"), ("A_B", "\uFF21"))
+      .toDF("CANCER_TYPE", "SAMPLE_ID")
+    val written = Tsv.writeCaseLists(df, "CANCER_TYPE", "SAMPLE_ID", "study1", tmp)
+    assert(written.map(_.getFileName.toString).sorted ==
+      Seq("cases_A_B.txt", "cases_no_oncotree_code.txt"))
+    def ids(f: String) = Files.readAllLines(Paths.get(tmp, f)).get(4)
+    assert(ids("cases_no_oncotree_code.txt") == "case_list_ids: s1\ts3\ts9")
+    assert(ids("cases_A_B.txt") == "case_list_ids: s0\ts2\ts4\t\uFF21\t\uD83D\uDE00")
+  }
+
   test("K4 meta file: key-value lines") {
     val tmp = Files.createTempDirectory("tsv-spec").toString
     Tsv.writeMetaFile(s"$tmp/meta_study.txt", Seq(

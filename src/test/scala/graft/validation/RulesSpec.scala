@@ -251,4 +251,35 @@ class RulesSpec extends AnyFunSuite {
       sc.clearJobGroup()
     }
   }
+
+  test("Async.await rethrows a task's own exception, a fatal one included") {
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val plain = intercept[IllegalStateException] {
+      Async.await(Async(spark)(throw new IllegalStateException("plain")))
+    }
+    assert(plain.getMessage == "plain")
+    // Future.apply leaves its future pending on a fatal error; Async's
+    // completes it (the bounded wait fails this test instead of hanging)
+    val fatal = Async(spark)(throw new LinkageError("fatal"))
+    Await.ready(fatal, 30.seconds)
+    assert(intercept[LinkageError](Async.await(fatal)).getMessage == "fatal")
+  }
+
+  test("Async.alongside rethrows only once both sides have finished") {
+    val taskDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val task = Async(spark) { Thread.sleep(500); taskDone.set(true); 1 }
+    val e = intercept[IllegalArgumentException] {
+      Async.alongside(task)(throw new IllegalArgumentException("body"))
+    }
+    assert(e.getMessage == "body" && taskDone.get)
+    // a failed task is rethrown after the body has finished
+    val bodyDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failing = Async(spark)(throw new IllegalStateException("task"))
+    val t = intercept[IllegalStateException] {
+      Async.alongside(failing) { Thread.sleep(500); bodyDone.set(true) }
+    }
+    assert(t.getMessage == "task" && bodyDone.get)
+    assert(Async.alongside(Async(spark)(1))(2) == (1, 2))
+  }
 }
