@@ -2,8 +2,9 @@ package graft.pipelines
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.Tsv
 
@@ -14,24 +15,50 @@ import graft.sources.Tsv
   */
 object LoadPipeline {
 
-  /** Both case lists from the sample + mutation frames in ONE query: the
-    * distinct sample ids, left-joined to the distinct MAF barcodes (J6 —
-    * `cases_sequenced` is the samples found among the barcodes, reference
-    * `load.py:12-35`), sorted and collected once. Only the per-study id
-    * list reaches the driver, never the fact side.
+  /** Both case lists from the sample + mutation frames in two jobs:
+    * [[sampleIds]] and [[sequencedBarcodes]], joined on the driver by
+    * [[writeCaseLists]] (J6 — `cases_sequenced` is the samples found
+    * among the barcodes, reference `load.py:12-35`). Only the per-study
+    * id list reaches the driver, never the fact side.
     */
   def generateCaseLists(sample: DataFrame, maf: DataFrame, studyId: String,
-                        outDir: String): Seq[Path] = {
-    val barcodes = maf.select(col("Tumor_Sample_Barcode").as("SAMPLE_ID")).distinct()
-      .withColumn("sequenced", lit(true))
-    val ids = sample.select("SAMPLE_ID").distinct()
-      .join(barcodes, Seq("SAMPLE_ID"), "left")
-      .select(col("SAMPLE_ID").cast("string").as("SAMPLE_ID"), col("sequenced").isNotNull)
-      .orderBy("SAMPLE_ID").collect().toSeq
+                        outDir: String): Seq[Path] =
+    writeCaseLists(sampleIds(sample), sequencedBarcodes(maf), studyId, outDir)
+
+  /** Every row's SAMPLE_ID in its string form (null stays null), in one
+    * job.
+    */
+  def sampleIds(sample: DataFrame): Seq[String] =
+    sample.select(col("SAMPLE_ID").cast("string")).collect().toSeq.map(_.getString(0))
+
+  /** The distinct Tumor_Sample_Barcode strings of `maf`, in one job:
+    * each partition sends its own distinct set, so a fact-sized MAF
+    * reaches the driver at key scale.
+    */
+  def sequencedBarcodes(maf: DataFrame): Set[String] =
+    maf.select(col("Tumor_Sample_Barcode").cast("string")).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().toSet
+
+  /** Spark's string order — UTF-8 bytes, unsigned — with null first, as
+    * an ascending `orderBy` sorts.
+    */
+  private val SparkStringOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      if (a == null || b == null) (a != null).compare(b != null)
+      else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+  }
+
+  /** `cases_all` (the distinct `ids`, a null id once) and
+    * `cases_sequenced` (those among `barcodes`; never null), each sorted
+    * in Spark's string order.
+    */
+  def writeCaseLists(ids: Seq[String], barcodes: Set[String], studyId: String,
+                     outDir: String): Seq[Path] = {
+    val all = ids.distinct.sorted(SparkStringOrder)
     def write(ids: Seq[String], suffix: String, name: String): Path =
       Tsv.writeCaseList(s"$outDir/cases_$suffix.txt", studyId, s"${studyId}_$suffix",
         name, s"$name ($studyId)", None, ids)
-    Seq(write(ids.map(_.getString(0)), "all", "All samples"),
-      write(ids.filter(_.getBoolean(1)).map(_.getString(0)), "sequenced", "Sequenced samples"))
+    Seq(write(all, "all", "All samples"),
+      write(all.filter(id => id != null && barcodes(id)), "sequenced", "Sequenced samples"))
   }
 }

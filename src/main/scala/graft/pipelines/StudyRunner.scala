@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Schemas
-import graft.sources.{SynapseStore, Tsv}
-import graft.validation.{Async, Rules}
+import graft.sources.SynapseStore
+import graft.validation.{Async, PortalRules, Rules}
 
 /** The reference's full study lifecycle as one callable (SURVEY §3:
   * `clinical.py main` → `maf.py main` → `validate.py main` →
@@ -15,11 +15,19 @@ import graft.validation.{Async, Rules}
   * store by id (`syn.get` at the head), Spark plans in between, and
   * every produced required output stored back under one version
   * comment (`syn.store` at the tail, `load.py:38-82`). The pieces are
-  * the already-tested pipeline stages. `clinical.py` and `maf.py` are
-  * independent programs whose outputs meet only in the case lists and
-  * validation, so the two stages run at once; the load and validate
-  * stages follow in the reference's order. Its two `load.py` stages,
-  * [[createCaseLists]] and [[upload]], are also what `LoadCli` runs.
+  * the already-tested pipeline stages.
+  *
+  * `clinical.py` and `maf.py` are independent programs whose outputs
+  * meet only in the case lists and validation, so [[run]] runs them as
+  * two lanes at once. Each lane reads back what it wrote once, as
+  * strings: the MAF lane checks its file there (V12, V13 and the
+  * strict-MAF field pass, as `maf.py` checks its own output) and takes
+  * the barcodes `cases_sequenced` needs; the clinical lane reads the
+  * sample and patient files and collects the sample ids. The package
+  * step then writes the case lists from those and runs the rest of the
+  * report over the same frames (the clinical value rules, the key
+  * census, the structural layer) alongside the upload. Its two `load.py` stages, [[createCaseLists]] and
+  * [[upload]], are also what `LoadCli` runs.
   */
 object StudyRunner {
 
@@ -42,6 +50,10 @@ object StudyRunner {
     * `load.py:57-66`); the default records the absences in
     * [[StudyResult.missingOutputs]] and warns, for studies that
     * legitimately carry a subset of the global data types.
+    *
+    * `validation` is row for row what [[StudyValidator.report]] returns
+    * over the written package. A failure is rethrown only once every
+    * task the run started has finished.
     */
   def run(spark: SparkSession, storeRoot: String, in: StudyInputs,
           dataset: String, studyId: String, outDir: String,
@@ -51,58 +63,74 @@ object StudyRunner {
       spark.read.format("synapse").option("store", storeRoot).load(id)
 
     // --- §3.2 maf main: folder merge -> annotate -> postprocess -> write,
-    // on a pool thread while the clinical stage runs on this one; both
-    // have finished, whatever either threw, before anything below runs
-    val mafStage = Async(spark) {
+    // then the MAF's own checks over the file as written, on a pool
+    // thread while the clinical lane runs on this one; both have
+    // finished, whatever either threw, before anything below runs
+    val mafLane = Async(spark) {
       val maf = MafPipeline.readAndMergeMafsFromStore(spark, storeRoot, in.mafFolderId)
         .getOrElse(throw new IllegalArgumentException(
           s"no .maf children under ${in.mafFolderId}"))
       val (annotated, _) = MafPipeline.annotate(maf, fetch(in.annotationsId))
       MafPipeline.writeOutputs(MafPipeline.postprocess(annotated), studyId, outDir)
+      val written = StudyValidator.readWritten(spark, outDir, PortalRules.MafFile).get
+      val barcodes = Async(spark)(LoadPipeline.sequencedBarcodes(written))
+      val (ids, checks) = Async.alongside(barcodes)(
+        StudyValidator.mafChecks(spark, written, Some(fetch(in.neoId))))
+      (written, checks, ids)
     }
 
     // --- §3.1 clinical main: preprocess -> enrich -> split -> export
-    val (_, clinicalChecks) = Async.alongside(mafStage) {
-      val attrMapping = ClinicalPipeline.controlTable(fetch(in.attrMappingId))
-      val attrMeta = ClinicalPipeline.controlTable(fetch(in.attrMetaId))
-      // V16 rides the chain's first action as an observe metric (zero
-      // extra pass); read back below once the export has run
-      val (pre, neoObs, neoRules) = ClinicalPipeline.preprocessObserved(
-        fetch(in.clinicalId), fetch(in.oncotreeId), fetch(in.neoId), attrMapping)
-      // J4: oncotree code -> cancer-type names via broadcast lookup (the
-      // reference shells out to a converter tool here, clinical.py:477-496)
-      val enriched = pre.join(
-        broadcast(fetch(in.oncotreeNamesId)), Seq("ONCOTREE_CODE"), "left")
-      val (patient, sample) = ClinicalPipeline.splitPatientSample(enriched, attrMapping)
-      val exportChecks = ClinicalPipeline.exportDataset(
-        patient, sample, dataset, attrMeta, studyId, outDir)
-      ClinicalPipeline.writeClinicalMetas(outDir, studyId)
-      exportChecks ++ Rules.observedRows(neoObs, neoRules)
-    }
+    val ((maf, mafChecks, barcodes), (clinicalChecks, sample, patient, sampleIds)) =
+      Async.alongside(mafLane) {
+        val attrMapping = ClinicalPipeline.controlTable(fetch(in.attrMappingId))
+        val attrMeta = ClinicalPipeline.controlTable(fetch(in.attrMetaId))
+        // V16 rides the chain's first action as an observe metric (zero
+        // extra pass); read back below once the export has run
+        val (pre, neoObs, neoRules) = ClinicalPipeline.preprocessObserved(
+          fetch(in.clinicalId), fetch(in.oncotreeId), fetch(in.neoId), attrMapping)
+        // J4: oncotree code -> cancer-type names via broadcast lookup (the
+        // reference shells out to a converter tool here, clinical.py:477-496)
+        val enriched = pre.join(
+          broadcast(fetch(in.oncotreeNamesId)), Seq("ONCOTREE_CODE"), "left")
+        val (patient, sample) = ClinicalPipeline.splitPatientSample(enriched, attrMapping)
+        val exportChecks = ClinicalPipeline.exportDataset(
+          patient, sample, dataset, attrMeta, studyId, outDir)
+        ClinicalPipeline.writeClinicalMetas(outDir, studyId)
+        // the written clinical files, read back as strings: the patient
+        // file on a pool thread while the sample ids are collected
+        val patientRead = Async(spark)(
+          StudyValidator.readWritten(spark, outDir, PortalRules.PatientFile))
+        val sampleRead = StudyValidator.readWritten(spark, outDir, PortalRules.SampleFile)
+        val (patientWritten, ids) =
+          Async.alongside(patientRead)(LoadPipeline.sampleIds(sampleRead.get))
+        (exportChecks ++ Rules.observedRows(neoObs, neoRules), sampleRead, patientWritten, ids)
+      }
 
-    // --- load.py --create_case_lists (cases_all + cases_sequenced)
-    createCaseLists(spark, outDir, studyId)
-
-    // --- §3.3 validate main: cross-file report over what was written
-    val validation = StudyValidator.report(spark, outDir, neo = Some(fetch(in.neoId)))
-
-    // --- load.py --upload: store back every produced output
-    val (stored, missingOutputs) =
-      upload(storeRoot, outDir, studyId, outputFolderId, versionComment, strictUpload)
+    // --- the package step: the clinical value rules; then load.py
+    // --create_case_lists (cases_all + cases_sequenced), and load.py
+    // --upload alongside the rest of §3.3 validate main
+    val values = Async(spark)(PortalRules.valueRows(spark, outDir, sample, patient))
+    LoadPipeline.writeCaseLists(sampleIds, barcodes, studyId, s"$outDir/case_lists")
+    val uploaded = Async(spark)(
+      upload(storeRoot, outDir, studyId, outputFolderId, versionComment, strictUpload))
+    val ((stored, missingOutputs), validation) = Async.alongside(uploaded)(
+      StudyValidator.packageReport(spark, outDir, sample, patient, Some(maf), Some(mafChecks),
+        values))
     StudyResult(outDir, clinicalChecks, validation, stored, missingOutputs)
   }
 
   /** `load.py --create_case_lists`: `cases_all` + `cases_sequenced` from
     * the package's written sample and MAF files. Both are read as
-    * strings, so the lists carry the ids exactly as written — an inferred
-    * read would turn a `SAMPLE_ID` of `007` into 7 — and each read is one
-    * header job instead of a header job plus an inference pass.
+    * strings ([[StudyValidator.readWritten]]), so the lists carry the ids
+    * exactly as written — an inferred read would turn a `SAMPLE_ID` of
+    * `007` into 7 — and each read is one header job instead of a header
+    * job plus an inference pass.
     */
   def createCaseLists(spark: SparkSession, outDir: String, studyId: String): Seq[Path] = {
-    def written(file: String): DataFrame =
-      Tsv.read(spark, s"$outDir/$file", comment = Some('#'), inferSchema = false)
-    LoadPipeline.generateCaseLists(written("data_clinical_sample.txt"),
-      written("data_mutations.txt"), studyId, s"$outDir/case_lists")
+    def written(file: String): DataFrame = StudyValidator.readWritten(spark, outDir, file)
+      .getOrElse(throw new IllegalArgumentException(s"no $file under $outDir"))
+    LoadPipeline.generateCaseLists(written(PortalRules.SampleFile),
+      written(PortalRules.MafFile), studyId, s"$outDir/case_lists")
   }
 
   /** `load.py --upload`: store back every produced required output

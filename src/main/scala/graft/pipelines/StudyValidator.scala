@@ -2,6 +2,8 @@ package graft.pipelines
 
 import java.nio.file.{Files, Paths}
 
+import scala.concurrent.Future
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Schemas
@@ -12,7 +14,7 @@ import graft.validation.{Async, PortalRules}
   * SURVEY §3.3): load the study's outputs (S6), check presence (V1),
   * the MAF column contract (V13), barcode↔neoantigen consistency
   * (V12, via [[MafPipeline.barcodesMatchNeoantigen]]) and the portal
-  * validator's rule set (V18, [[graft.validation.PortalRules.check]]).
+  * validator's rule set (V18, the parts of [[graft.validation.PortalRules]]).
   */
 object StudyValidator {
 
@@ -28,6 +30,17 @@ object StudyValidator {
       else None)
     }.toMap
 
+  /** A package file read back as written: every column a string, `#`
+    * lines skipped, one header job and no inference pass; None when the
+    * file is absent. Ids keep their written form (`007` stays `007`) and
+    * values are checked as the portal's importer reads them.
+    */
+  def readWritten(spark: SparkSession, dir: String, file: String): Option[DataFrame] = {
+    val p = Paths.get(dir, file)
+    if (!Files.exists(p)) None
+    else Some(Tsv.read(spark, p.toString, comment = Some('#'), inferSchema = false))
+  }
+
   /** V1 — required files missing from the output directory. */
   def missingFiles(dir: String,
                    required: Seq[String] = Schemas.RequiredOutputFiles): Seq[String] =
@@ -37,31 +50,67 @@ object StudyValidator {
   def missingMafColumns(maf: DataFrame): Seq[String] =
     MafPipeline.missingRequiredColumns(maf, Schemas.RequiredMafCols)
 
+  /** What the MAF alone decides: the V13 column contract and the V12
+    * neoantigen rows (`rows`), and the strict-MAF field rows (`fields`).
+    */
+  final case class MafChecks(rows: Seq[(String, String, Boolean)],
+                             fields: Seq[(String, Long, Boolean)])
+
+  /** [[MafChecks]] over a MAF as written: V12 runs alongside the field
+    * pass, so the MAF is scanned by two jobs at once.
+    */
+  def mafChecks(spark: SparkSession, maf: DataFrame, neo: Option[DataFrame]): MafChecks = {
+    val missingCols = missingMafColumns(maf)
+    val colRule = ("maf_column_contract", missingCols.mkString(","), missingCols.isEmpty)
+    def fields = PortalRules.fieldRows(spark, maf)
+    val (neoRows, fieldRows) = neo match {
+      case Some(n) => Async.alongside(Async(spark)(
+        MafPipeline.barcodesMatchNeoantigen(spark, maf, n).collect().toSeq
+          .map(r => (r.getString(0), r.getLong(1).toString, r.getBoolean(2)))))(fields)
+      case None => (Seq.empty, fields)
+    }
+    MafChecks(colRule +: neoRows, fieldRows)
+  }
+
   /** The full cross-file report: (rule, detail, passed). Each data file
-    * the rules check is read (and schema-inferred) once, here; the
-    * portal engine gets those frames, and the V12 neoantigen check runs
-    * alongside it.
+    * is read once, as strings ([[readWritten]]); the MAF's own checks
+    * ([[mafChecks]]) run alongside the package's.
     */
   def report(spark: SparkSession, dir: String,
              neo: Option[DataFrame] = None): Seq[(String, String, Boolean)] = {
+    val maf = readWritten(spark, dir, PortalRules.MafFile)
+    val checks = maf.map(m => Async(spark)(mafChecks(spark, m, neo)))
+    val sample = readWritten(spark, dir, PortalRules.SampleFile)
+    val patient = readWritten(spark, dir, PortalRules.PatientFile)
+    val values = Async(spark)(PortalRules.valueRows(spark, dir, sample, patient))
+    packageReport(spark, dir, sample, patient, maf, checks.map(Async.await), values)
+  }
+
+  /** The report over the package at `dir` from its data files read as
+    * strings and the MAF's [[MafChecks]], in [[report]]'s row order:
+    * `required_files`, the MAF's V13 and V12 rows, then V18 — the portal
+    * validator's structural, field, census and clinical value rules
+    * (reference `validate.py:198-226` runs the external validateData
+    * subprocess here; PortalRules is its native twin). `values` is the
+    * running [[PortalRules.valueRows]] pass; the census runs alongside it
+    * while the structural layer reads the control files on this thread,
+    * and `checks` is taken once they are running. The census and value
+    * rules check the string frames themselves, so no file is scanned a
+    * second time.
+    */
+  private[pipelines] def packageReport(spark: SparkSession, dir: String,
+                                       sample: Option[DataFrame], patient: Option[DataFrame],
+                                       maf: Option[DataFrame], checks: => Option[MafChecks],
+                                       values: Future[Seq[(String, Long, Boolean)]])
+      : Seq[(String, String, Boolean)] = {
     val missing = missingFiles(dir)
-    val outputs = loadAllOutputs(spark, dir, PortalRules.DataFiles)
-    val maf = outputs(PortalRules.MafFile)
-    val fileRule = ("required_files", missing.mkString(","), missing.isEmpty)
-    val neoRules = for (m <- maf; n <- neo) yield Async(spark)(
-      MafPipeline.barcodesMatchNeoantigen(spark, m, n).collect().toSeq
-        .map(r => (r.getString(0), r.getLong(1).toString, r.getBoolean(2))))
-    val colRules = maf.map { m =>
-      val missingCols = missingMafColumns(m)
-      ("maf_column_contract", missingCols.mkString(","), missingCols.isEmpty)
-    }
-    // V18 — the portal validator's structural + strict-MAF rule set over
-    // the same package (reference `validate.py:198-226` runs the external
-    // validateData subprocess here; PortalRules is its native twin)
-    val portalRules = PortalRules.check(spark, dir,
-      outputs(PortalRules.SampleFile), outputs(PortalRules.PatientFile), maf,
-      PortalRules.caseListIds(spark, dir))
-      .map { case (rule, v, ok) => (rule, v.toString, ok) }
-    (fileRule +: colRules.toSeq) ++ neoRules.toSeq.flatMap(Async.await) ++ portalRules
+    val census = Async(spark)(PortalRules.censusRows(spark, dir, sample, patient, maf,
+      PortalRules.caseListIds(spark, dir), sample))
+    val structural = PortalRules.structuralReport(dir)
+    val ofMaf = checks
+    val portal = structural ++ ofMaf.toSeq.flatMap(_.fields) ++
+      Async.await(census) ++ Async.await(values)
+    (("required_files", missing.mkString(","), missing.isEmpty) +: ofMaf.toSeq.flatMap(_.rows)) ++
+      portal.map { case (rule, v, ok) => (rule, v.toString, ok) }
   }
 }

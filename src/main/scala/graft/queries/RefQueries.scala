@@ -47,10 +47,10 @@ object RefQueries {
     * (reference `clinical.py:353-358` write, `clinical.py:319` read).
     */
   def s2TsvRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-s2").toString
-    val f = s"$tmp/part.tsv"
-    Tsv.writeTsvFile(Tables.part(s, dir), f)
-    Tsv.read(s, f)
+    val tmp = fixturePackage(s, dir, "graft-s2", Seq("part")) { t =>
+      Tsv.writeTsvFile(Tables.part(s, dir), s"$t/part.tsv")
+    }
+    Tsv.read(s, s"$tmp/part.tsv")
       .agg(
         count(lit(1)).as("n"),
         sum(col("p_size").cast(LongType)).as("sum_size"),
@@ -63,11 +63,11 @@ object RefQueries {
     * `comment='#'` (reference `maf.py:28`, `clinical.py:798-808`).
     */
   def s3CommentScan: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-s3").toString
-    val f = s"$tmp/region.tsv"
-    Tsv.writeTsvFile(Tables.region(s, dir), f,
-      headerBlock = Seq("#Display", "#Description", "#STRING", "#1"))
-    Tsv.read(s, f, comment = Some('#'))
+    val tmp = fixturePackage(s, dir, "graft-s3", Seq("region")) { t =>
+      Tsv.writeTsvFile(Tables.region(s, dir), s"$t/region.tsv",
+        headerBlock = Seq("#Display", "#Description", "#STRING", "#1"))
+    }
+    Tsv.read(s, s"$tmp/region.tsv", comment = Some('#'))
       .select(col("r_regionkey").cast(IntegerType), col("r_name"))
   }
 
@@ -129,8 +129,10 @@ object RefQueries {
     }.reduce(_.unionByName(_))
   }
 
-  /** A fixture package written once per content of its source `tables`
-    * ([[graft.sources.DurableIndex]]); its directory as a string.
+  /** A fixture directory written once per content of its source
+    * `tables` ([[graft.sources.DurableIndex]]); its path as a string. The
+    * sink/scan round-trips (s2, s3, s5–s12) write their fixtures here, so
+    * a run leaves no directory behind and repeat runs time the scan.
     */
   private def fixturePackage(s: SparkSession, dir: String, family: String,
                              tables: Seq[String])(write: String => Unit): String = {
@@ -147,9 +149,10 @@ object RefQueries {
     * original parquet, proving type-faithful serialization.
     */
   def s7JsonlRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-s7").toString
-    Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("source"))
-      .write.mode("overwrite").json(s"$tmp/docs")
+    val tmp = fixturePackage(s, dir, "graft-s7", Seq("documents")) { t =>
+      Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("source"))
+        .write.mode("overwrite").json(s"$t/docs")
+    }
     s.read.json(s"$tmp/docs")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_ids"),
@@ -165,11 +168,12 @@ object RefQueries {
     * path provides.
     */
   def s10XmlRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-s10").toString
     val out = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-    out.write.mode("overwrite").format("xml").option("rowTag", "customer")
-      .save(s"$tmp/cust")
+    val tmp = fixturePackage(s, dir, "graft-s10", Seq("customer")) { t =>
+      out.write.mode("overwrite").format("xml").option("rowTag", "customer")
+        .save(s"$t/cust")
+    }
     // read with the KNOWN write schema — XML schema inference is a
     // second full pass over the written files (r10: half the sf10 cost)
     s.read.format("xml").option("rowTag", "customer").schema(out.schema)
@@ -183,9 +187,10 @@ object RefQueries {
     * predicate/column pushdown surface as parquet.
     */
   def s8OrcRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-s8").toString
-    Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderstatus"))
-      .write.mode("overwrite").orc(s"$tmp/orders")
+    val tmp = fixturePackage(s, dir, "graft-s8", Seq("orders")) { t =>
+      Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderstatus"))
+        .write.mode("overwrite").orc(s"$t/orders")
+    }
     s.read.orc(s"$tmp/orders")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("sum_keys"))
@@ -197,14 +202,14 @@ object RefQueries {
     * reader), aggregate — see `sources/CbioTsvSource`.
     */
   def s9CbioSource: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-s9").toString
-    val f = s"$tmp/region.txt"
-    Tsv.writeTsvFile(Tables.region(s, dir), f, headerBlock = Seq(
-      "#Region Key\tRegion Name",
-      "#The region key\tThe region name",
-      "#NUMBER\tSTRING",
-      "#1\t1"))
-    s.read.format("cbio").load(f)
+    val tmp = fixturePackage(s, dir, "graft-s9", Seq("region")) { t =>
+      Tsv.writeTsvFile(Tables.region(s, dir), s"$t/region.txt", headerBlock = Seq(
+        "#Region Key\tRegion Name",
+        "#The region key\tThe region name",
+        "#NUMBER\tSTRING",
+        "#1\t1"))
+    }
+    s.read.format("cbio").load(s"$tmp/region.txt")
       .agg(count(lit(1)).as("n"),
         sum(col("r_regionkey")).cast(LongType).as("sum_keys"),
         countDistinct(col("r_name")).as("n_names"))
@@ -219,14 +224,15 @@ object RefQueries {
     * commit visibility and overwrite semantics are all on the hash.
     */
   def s11CbioStoreRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-s11").toString + "/customer"
     val df = Tables.customer(s, dir).select(
       col("c_name"), col("c_mktsegment"),
       col("c_acctbal").cast(DoubleType).as("c_acctbal"))
-    df.write.format("cbio").option("versionComment", "initial export")
-      .mode("overwrite").save(tmp)
-    df.write.format("cbio").option("versionComment", "refresh")
-      .mode("overwrite").save(tmp)
+    val tmp = fixturePackage(s, dir, "graft-s11", Seq("customer")) { t =>
+      df.write.format("cbio").option("versionComment", "initial export")
+        .mode("overwrite").save(s"$t/customer")
+      df.write.format("cbio").option("versionComment", "refresh")
+        .mode("overwrite").save(s"$t/customer")
+    } + "/customer"
     require(graft.sources.CbioTsvSource.currentVersion(tmp).contains((2L, "refresh")),
       "cbio store must bump the version sidecar per commit")
     s.read.format("cbio").load(tmp)
@@ -248,14 +254,17 @@ object RefQueries {
     * and the folder-children surface are all on the hash.
     */
   def s12SynapseFetch: Q = (s, dir) => {
-    val root = java.nio.file.Files.createTempDirectory("graft-s12").toString
-    val region = Tables.region(s, dir).select(col("r_regionkey"), col("r_name"))
-    val id = graft.sources.SynapseStore.store(region, root, "region.txt", "synFolder", "initial")
-    graft.sources.SynapseStore.store(
-      region.withColumn("r_name", upper(col("r_name"))),
-      root, "region.txt", "synFolder", "recased")
-    require(graft.sources.SynapseStore.getChildren(root, "synFolder").map(_._2) == Seq("region.txt"),
+    val root = fixturePackage(s, dir, "graft-s12", Seq("region")) { t =>
+      val region = Tables.region(s, dir).select(col("r_regionkey"), col("r_name"))
+      graft.sources.SynapseStore.store(region, t, "region.txt", "synFolder", "initial")
+      graft.sources.SynapseStore.store(
+        region.withColumn("r_name", upper(col("r_name"))),
+        t, "region.txt", "synFolder", "recased")
+    }
+    val children = graft.sources.SynapseStore.getChildren(root, "synFolder")
+    require(children.map(_._2) == Seq("region.txt"),
       "folder listing must see exactly the stored entity")
+    val id = children.head._1
     val v1 = s.read.format("synapse").option("store", root)
       .option("version", "1").load(id)
       .select(lit("v1").as("ver"), col("r_name"))

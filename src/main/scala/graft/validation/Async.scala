@@ -1,17 +1,18 @@
 package graft.validation
 
-import java.util.concurrent.ExecutionException
+import java.util.concurrent.{ExecutionException, Executors, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
 
-import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.{Await, Future, Promise}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Jobs submitted together from driver threads (rule passes, study
-  * stages), keeping the caller's Spark local properties. A global-pool thread carries the
-  * properties of whichever thread created it, so a job started from a
-  * plain `Future` runs under a stale job group: `cancelJobGroup`,
+  * stages), keeping the caller's Spark local properties. A pool thread
+  * carries the properties of whichever thread created it, so a job
+  * started from a plain `Future` runs under a stale job group: `cancelJobGroup`,
   * scheduler pools and per-group job accounting all miss it. [[apply]]
   * copies the caller's properties at submission, installs them for the
   * task and restores the pool thread's own afterwards (Spark's
@@ -25,14 +26,31 @@ import org.apache.spark.sql.graftbridge.Bridge
   * and an [[await]] on it would never return. [[await]] rethrows the
   * task's own exception: a promise boxes an `Error` or an
   * `InterruptedException` in an `ExecutionException`, which it unboxes.
+  *
+  * Tasks run on a cached pool of daemon threads of their own, never on
+  * `ExecutionContext.global`: that pool has one slot per core, and a
+  * task blocked in a Spark action keeps its slot (Spark's `awaitReady`
+  * does not mark its wait `blocking`, SPARK-13747), so with more tasks
+  * in flight than cores the extra ones would queue behind running jobs.
+  * A task never waits for a thread here; idle threads exit after a
+  * minute.
   */
 private[graft] object Async {
+
+  private val pool = Executors.newCachedThreadPool(new ThreadFactory {
+    private val n = new AtomicInteger()
+    def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"graft-async-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  })
 
   def apply[T](spark: SparkSession)(body: => T): Future[T] = {
     val sc = spark.sparkContext
     val props = Bridge.copyLocalProperties(sc)
     val done = Promise[T]()
-    ExecutionContext.global.execute { () =>
+    pool.execute { () =>
       try done.success(Bridge.withLocalProperties(sc, props)(body))
       catch { case t: Throwable => done.failure(t) }
     }

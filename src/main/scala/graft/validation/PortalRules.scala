@@ -2,11 +2,11 @@ package graft.validation
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.concurrent.Future
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
 import graft.sources.Tsv
 
@@ -31,10 +31,11 @@ import graft.sources.Tsv
   *    census's partial aggregate collapses it to key scale before its
   *    one shuffle.
   *
-  * [[check]] is the one engine that runs both layers: over a written
-  * package's own files ([[graft.pipelines.StudyValidator.report]] in the
-  * study lifecycle) and over the `v18_portal_rules` fixture
-  * ([[graft.queries.RefQueries.v18PortalRules]]).
+  * [[check]] runs both layers over the `v18_portal_rules` fixture
+  * ([[graft.queries.RefQueries.v18PortalRules]]). A written study
+  * package ([[graft.pipelines.StudyValidator.report]]) is checked by the
+  * same parts — [[structuralReport]], [[fieldRows]], [[censusRows]],
+  * [[valueRows]] — over its files read once each as strings.
   */
 object PortalRules {
 
@@ -219,13 +220,31 @@ object PortalRules {
   private def notInVocab(c: Column, vocab: Seq[String]): Column =
     coalesce(!c.isin(vocab: _*), lit(false))
 
+  /** The MAF columns the field rules compare or add as numbers. */
+  val NumericMafColumns: Set[String] = Set("Start_Position", "End_Position",
+    "Entrez_Gene_Id", "t_ref_count", "t_alt_count", "t_depth", "n_ref_count", "n_alt_count")
+
   /** The strict-MAF field checks present in `maf`'s schema, as rules for
     * ONE aggregate pass (Rules.evaluate) — never one scan per rule.
     * Column subset is honored because pipeline-internal MAF frames carry
     * only the columns their study provides.
+    *
+    * A [[NumericMafColumns]] column read as text (`inferSchema=false`)
+    * is compared as a number: the rules `try_cast` it to double, since
+    * as text `'100' < '99'` holds and `End_Position - Start_Position`
+    * does not analyze. A value that is not a number reads as null there,
+    * like an empty cell: the rules that exempt null pass it, and
+    * `maf_position_present` counts a non-numeric position as missing.
+    * A column of any other type is used as it is, so a typed frame's
+    * plan is unchanged.
     */
   def mafFieldRules(maf: DataFrame): Seq[Rules.Rule] = {
     val cols = maf.columns.toSet
+    val textual = maf.schema.fields.collect {
+      case f if f.dataType == StringType && NumericMafColumns(f.name) => f.name }.toSet
+    // every rule below reads its columns through this `col`
+    def col(c: String): Column =
+      if (textual(c)) functions.col(c).try_cast(DoubleType) else functions.col(c)
     val b = Seq.newBuilder[Rules.Rule]
     if (cols("Chromosome"))
       b += Rules.Rule("maf_chromosome_valid",
@@ -964,132 +983,156 @@ object PortalRules {
     *    sequenced list and raw (`inferSchema=false`) clinical sample file
     *    against `maf`.
     *
-    * Three concurrent passes carry the data rules: [[mafFieldRules]] as
-    * one aggregate pass over the MAF, the clinical value rules, and ONE
-    * key census ([[Rules.keyCensus]]) for every id-set, gene and build
-    * rule. The census scans each frame once under four namespaces —
-    * sample ids `s`, patient ids `p` (so a string that is both never
-    * matches across), Hugo symbols `g` valued by their Entrez ids, and
-    * NCBI builds `b` — with every key compared as a string. Containment
-    * rules ignore null keys; the dup rules are rows − distinct non-null
-    * keys. A rule whose frame, file or column is absent yields no row.
-    * The jobs are submitted at once ([[Async]]), fact-side first, and
-    * the driver-side structural layer runs while they do.
+    * The rows are [[structuralReport]], then [[fieldRows]], [[censusRows]]
+    * and [[valueRows]]: three concurrent passes ([[Async]]), fact-side
+    * first, while the driver-side structural layer runs. Each clinical
+    * file is scanned as raw text at most once, on first use, and shared
+    * by the census and the value rules. A written package whose files
+    * were already read as strings is checked from those frames by
+    * [[graft.pipelines.StudyValidator.report]], from the same parts.
     */
   def check(spark: SparkSession, dir: String, sample: Option[DataFrame],
             patient: Option[DataFrame], maf: Option[DataFrame],
             caseListIds: Option[DataFrame]): Seq[(String, Long, Boolean)] = {
+    val root = Paths.get(dir)
+    // Values must be validated against their written form: inference
+    // would re-render them — a clean BOOLEAN column holding only
+    // TRUE/FALSE infers BooleanType, whose string cast is lowercase
+    // "true"/"false", failing '^(NA|TRUE|FALSE)$' on every row of a
+    // perfectly valid column.
+    lazy val rawSample = rawScan(spark, root.resolve(SampleFile))
+    lazy val rawPatient = rawScan(spark, root.resolve(PatientFile))
+    val field = maf.map(m => Async(spark)(fieldRows(spark, m)))
+    val census = Async(spark)(
+      censusRows(spark, dir, sample, patient, maf, caseListIds, rawSample))
+    val values = Async(spark)(valueRows(spark, dir, rawSample, rawPatient))
+    val structural = structuralReport(dir)
+    structural ++ (field.toSeq :+ census :+ values).flatMap(Async.await)
+  }
+
+  /** [[mafFieldRules]] over `maf` in one aggregate pass; no rows (and no
+    * job) when `maf` has none of their columns.
+    */
+  def fieldRows(spark: SparkSession, maf: DataFrame): Seq[(String, Long, Boolean)] = {
+    val rules = mafFieldRules(maf)
+    if (rules.isEmpty) Seq.empty
+    else Rules.evaluate(spark, maf, rules).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2)))
+  }
+
+  /** Every id-set, key-uniqueness, gene and build rule from ONE key
+    * census ([[Rules.keyCensus]]) with one shuffle. The census scans each frame
+    * once under four namespaces — sample ids `s`, patient ids `p` (so a
+    * string that is both never matches across), Hugo symbols `g` valued
+    * by their Entrez ids, and NCBI builds `b` — with every key compared
+    * as a string. Containment rules ignore null keys; the dup rules are
+    * rows − distinct non-null keys. A rule whose frame, file or column
+    * is absent yields no row. `rawSample`, the sample file as written,
+    * is read only when `maf` has barcodes (the `cases_sequenced`
+    * contract).
+    */
+  def censusRows(spark: SparkSession, dir: String, sample: Option[DataFrame],
+                 patient: Option[DataFrame], maf: Option[DataFrame],
+                 caseListIds: Option[DataFrame],
+                 rawSample: => Option[DataFrame]): Seq[(String, Long, Boolean)] = {
     import spark.implicits._
     import Rules.CensusKey
-    type Rows = Seq[(String, Long, Boolean)]
-    val root = Paths.get(dir)
     def withCol(df: Option[DataFrame], c: String) = df.filter(_.columns.contains(c))
     val sampleIds = withCol(sample, "SAMPLE_ID")
     val samplePatients = withCol(sample, "PATIENT_ID")
     val patients = withCol(patient, "PATIENT_ID")
     val barcodes = withCol(maf, "Tumor_Sample_Barcode")
-    // one RAW-text scan per clinical file (inferSchema=false), shared by
-    // the value rules and the sequenced contract and built on first use,
-    // inside their tasks. Values must be validated against their written
-    // form: inference would re-render them — a clean BOOLEAN column
-    // holding only TRUE/FALSE infers BooleanType, whose string cast is
-    // lowercase "true"/"false", failing '^(NA|TRUE|FALSE)$' on every row
-    // of a perfectly valid column.
-    lazy val rawSample = rawScan(spark, root.resolve(SampleFile))
-    lazy val rawPatient = rawScan(spark, root.resolve(PatientFile))
+    // the sequenced contract: present when the MAF has barcodes and the
+    // raw sample file has SAMPLE_ID; vacuous (0, 0) without a list
+    val rawIds = barcodes.flatMap(_ => withCol(rawSample, "SAMPLE_ID"))
+    val seqIds = rawIds.flatMap(_ =>
+      listedIds(dir)(_.get("stable_id").exists(_.endsWith("_sequenced"))))
+    def str(c: String) = col(c).cast("string")
+    def keyed(df: Option[DataFrame], keys: (Seq[String], CensusKey)*) =
+      df.map(d => d -> keys.collect { case (cs, k) if cs.forall(d.columns.contains) => k })
+    val sources = Seq(
+      keyed(sample, Seq("SAMPLE_ID") -> CensusKey("s", "sid", str("SAMPLE_ID")),
+        Seq("PATIENT_ID") -> CensusKey("p", "spid", str("PATIENT_ID"))),
+      keyed(patient, Seq("PATIENT_ID") -> CensusKey("p", "ppid", str("PATIENT_ID"))),
+      keyed(maf,
+        Seq("Tumor_Sample_Barcode") -> CensusKey("s", "maf", str("Tumor_Sample_Barcode")),
+        // blank symbols and null ids are exempt from the gene rule
+        Seq("Hugo_Symbol", "Entrez_Gene_Id") -> CensusKey("g", "gene",
+          when(col("Hugo_Symbol") =!= "", str("Hugo_Symbol")), col("Entrez_Gene_Id")),
+        Seq("NCBI_Build") -> CensusKey("b", "build", str("NCBI_Build"))),
+      caseListIds.map(ids => ids -> Seq(CensusKey("s", "list", str(ids.columns.head)))),
+      rawIds.filter(_ => seqIds.isDefined).map(_ -> Seq(CensusKey("s", "raw", str("SAMPLE_ID")))),
+      // a driver-side list is one partition, not one slice per core
+      seqIds.map(_.toDF("id").coalesce(1) -> Seq(CensusKey("s", "seq", col("id"))))
+    ).flatten
+    val tags = sources.flatMap(_._2.map(_.tag)).toSet
+    def n(tag: String): Column = if (tags(tag)) col(tag) else lit(0L)
+    def inNs(ns: String) = col("ns") === ns && col("key").isNotNull
+    // distinct non-null keys of `ns` that meet `cond`
+    def keys(ns: String, cond: Column) = sum(when(inNs(ns) && cond, 1L).otherwise(0L))
+    // `tag`'s rows under the non-null keys of `ns` that meet `cond`
+    def rows(ns: String, tag: String, cond: Column) =
+      sum(when(inNs(ns) && cond, n(tag)).otherwise(0L))
+    // every `tag` row (null keys too) − its distinct non-null keys
+    def dups(ns: String, tag: String) =
+      sum(when(col("ns") === ns, n(tag)).otherwise(0L)) - keys(ns, n(tag) > 0)
+    val rules: Seq[(String, Column)] = Seq(
+      for (_ <- barcodes; _ <- sampleIds)
+        yield Seq("maf_barcode_in_samples" -> rows("s", "maf", n("sid") === 0)),
+      for (_ <- caseListIds; _ <- sampleIds)
+        yield Seq("case_list_ids_in_samples" -> keys("s", n("list") > 0 && n("sid") === 0)),
+      // tier 8: a symbol mapping to more than one Entrez id
+      maf.map(_ => Seq("maf_hugo_entrez_consistent" -> keys("g", col("lo") =!= col("hi")))),
+      // clamped at 0: an empty MAF (or one whose builds are all null) is
+      // vacuously consistent, not -1
+      withCol(maf, "NCBI_Build").map(_ => Seq("maf_ncbi_build_consistent" ->
+        greatest(keys("b", lit(true)) - lit(1L), lit(0L)))),
+      // tier 8: the cases_sequenced list must agree with the MAF in both
+      // directions (listed-but-unmutated, mutated-but-unlisted)
+      rawIds.map(_ => Seq(
+        "cases_sequenced_ids_have_mutations" -> keys("s", n("seq") > 0 && n("maf") === 0),
+        "maf_barcodes_in_cases_sequenced" ->
+          keys("s", n("maf") > 0 && n("raw") > 0 && n("seq") === 0))),
+      for (_ <- samplePatients; _ <- patients)
+        yield Seq("sample_patient_in_patients" -> rows("p", "spid", n("ppid") === 0)),
+      sampleIds.map(_ => Seq("no_dup_sample_id" -> dups("s", "sid"))),
+      // tier 6: the patient file's key must be unique too — a duplicated
+      // PATIENT_ID row makes attribute values nondeterministic on import
+      patients.map(_ => Seq("clinical_no_dup_patient_id" -> dups("p", "ppid"))),
+      // tier 6: a patient with no sample never surfaces anywhere in the
+      // portal — validateData's orphan-patient warning, the mirror of
+      // the sample→patient containment
+      for (_ <- samplePatients; _ <- patients)
+        yield Seq("clinical_orphan_patients" -> keys("p", n("ppid") > 0 && n("spid") === 0))
+    ).flatten.flatten
+    if (rules.isEmpty) Seq.empty
+    else rules.zip(Rules.censusCounts(sources, rules.map(_._2)))
+      .map { case ((rule, _), v) => (rule, v, v == 0L) }
+  }
 
-    val fieldRules: Option[Future[Rows]] =
-      maf.map(m => m -> mafFieldRules(m)).filter(_._2.nonEmpty).map {
-        case (m, rules) => Async(spark)(Rules.evaluate(spark, m, rules).collect().toSeq
-          .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))))
-      }
-    val censusRules: Future[Rows] = Async(spark) {
-      // the sequenced contract: present when the MAF has barcodes and the
-      // raw sample file has SAMPLE_ID; vacuous (0, 0) without a list
-      val rawIds = barcodes.flatMap(_ => withCol(rawSample, "SAMPLE_ID"))
-      val seqIds = rawIds.flatMap(_ =>
-        listedIds(dir)(_.get("stable_id").exists(_.endsWith("_sequenced"))))
-      def str(c: String) = col(c).cast("string")
-      def keyed(df: Option[DataFrame], keys: (Seq[String], CensusKey)*) =
-        df.map(d => d -> keys.collect { case (cs, k) if cs.forall(d.columns.contains) => k })
-      val sources = Seq(
-        keyed(sample, Seq("SAMPLE_ID") -> CensusKey("s", "sid", str("SAMPLE_ID")),
-          Seq("PATIENT_ID") -> CensusKey("p", "spid", str("PATIENT_ID"))),
-        keyed(patient, Seq("PATIENT_ID") -> CensusKey("p", "ppid", str("PATIENT_ID"))),
-        keyed(maf,
-          Seq("Tumor_Sample_Barcode") -> CensusKey("s", "maf", str("Tumor_Sample_Barcode")),
-          // blank symbols and null ids are exempt from the gene rule
-          Seq("Hugo_Symbol", "Entrez_Gene_Id") -> CensusKey("g", "gene",
-            when(col("Hugo_Symbol") =!= "", str("Hugo_Symbol")), col("Entrez_Gene_Id")),
-          Seq("NCBI_Build") -> CensusKey("b", "build", str("NCBI_Build"))),
-        caseListIds.map(ids => ids -> Seq(CensusKey("s", "list", str(ids.columns.head)))),
-        rawIds.filter(_ => seqIds.isDefined).map(_ -> Seq(CensusKey("s", "raw", str("SAMPLE_ID")))),
-        // a driver-side list is one partition, not one slice per core
-        seqIds.map(_.toDF("id").coalesce(1) -> Seq(CensusKey("s", "seq", col("id"))))
-      ).flatten
-      val tags = sources.flatMap(_._2.map(_.tag)).toSet
-      def n(tag: String): Column = if (tags(tag)) col(tag) else lit(0L)
-      def inNs(ns: String) = col("ns") === ns && col("key").isNotNull
-      // distinct non-null keys of `ns` that meet `cond`
-      def keys(ns: String, cond: Column) = sum(when(inNs(ns) && cond, 1L).otherwise(0L))
-      // `tag`'s rows under the non-null keys of `ns` that meet `cond`
-      def rows(ns: String, tag: String, cond: Column) =
-        sum(when(inNs(ns) && cond, n(tag)).otherwise(0L))
-      // every `tag` row (null keys too) − its distinct non-null keys
-      def dups(ns: String, tag: String) =
-        sum(when(col("ns") === ns, n(tag)).otherwise(0L)) - keys(ns, n(tag) > 0)
-      val rules: Seq[(String, Column)] = Seq(
-        for (_ <- barcodes; _ <- sampleIds)
-          yield Seq("maf_barcode_in_samples" -> rows("s", "maf", n("sid") === 0)),
-        for (_ <- caseListIds; _ <- sampleIds)
-          yield Seq("case_list_ids_in_samples" -> keys("s", n("list") > 0 && n("sid") === 0)),
-        // tier 8: a symbol mapping to more than one Entrez id
-        maf.map(_ => Seq("maf_hugo_entrez_consistent" -> keys("g", col("lo") =!= col("hi")))),
-        // clamped at 0: an empty MAF (or one whose builds are all null) is
-        // vacuously consistent, not -1
-        withCol(maf, "NCBI_Build").map(_ => Seq("maf_ncbi_build_consistent" ->
-          greatest(keys("b", lit(true)) - lit(1L), lit(0L)))),
-        // tier 8: the cases_sequenced list must agree with the MAF in both
-        // directions (listed-but-unmutated, mutated-but-unlisted)
-        rawIds.map(_ => Seq(
-          "cases_sequenced_ids_have_mutations" -> keys("s", n("seq") > 0 && n("maf") === 0),
-          "maf_barcodes_in_cases_sequenced" ->
-            keys("s", n("maf") > 0 && n("raw") > 0 && n("seq") === 0))),
-        for (_ <- samplePatients; _ <- patients)
-          yield Seq("sample_patient_in_patients" -> rows("p", "spid", n("ppid") === 0)),
-        sampleIds.map(_ => Seq("no_dup_sample_id" -> dups("s", "sid"))),
-        // tier 6: the patient file's key must be unique too — a duplicated
-        // PATIENT_ID row makes attribute values nondeterministic on import
-        patients.map(_ => Seq("clinical_no_dup_patient_id" -> dups("p", "ppid"))),
-        // tier 6: a patient with no sample never surfaces anywhere in the
-        // portal — validateData's orphan-patient warning, the mirror of
-        // the sample→patient containment
-        for (_ <- samplePatients; _ <- patients)
-          yield Seq("clinical_orphan_patients" -> keys("p", n("ppid") > 0 && n("spid") === 0))
-      ).flatten.flatten
-      if (rules.isEmpty) Seq.empty
-      else rules.zip(Rules.censusCounts(sources, rules.map(_._2)))
-        .map { case ((rule, _), v) => (rule, v, v == 0L) }
+  /** Datatype/value conformance over every clinical output that has a
+    * well-formed header, one aggregate pass per file over its raw text
+    * (`rawSample`, `rawPatient`, each read only when its file needs a
+    * check), the two passes at once; no rows when neither file has such
+    * a header.
+    */
+  def valueRows(spark: SparkSession, dir: String, rawSample: => Option[DataFrame],
+                rawPatient: => Option[DataFrame]): Seq[(String, Long, Boolean)] = {
+    val root = Paths.get(dir)
+    val (sampleVs, patientVs) = Async.alongside(Async(spark)(
+      clinicalValueViolations(root.resolve(SampleFile), rawSample.get)))(
+      clinicalValueViolations(root.resolve(PatientFile), rawPatient.get))
+    val vs = Seq(sampleVs, patientVs).flatten
+    if (vs.isEmpty) Seq.empty
+    else Seq("clinical_number_attrs_numeric" -> "number",
+      "clinical_boolean_attrs_boolean" -> "boolean",
+      "clinical_survival_status_format" -> "survival",
+      "clinical_survival_months_nonneg" -> "months",
+      "clinical_na_spellings" -> "na_spelling",
+      "clinical_value_whitespace" -> "whitespace",
+      "clinical_deceased_months_present" -> "deceased_months").map {
+      case (rule, k) => val n = vs.map(_(k)).sum; (rule, n, n == 0L)
     }
-    // datatype/value conformance over every clinical output that has a
-    // well-formed header (one aggregate pass per file)
-    val valueRules: Future[Rows] = Async(spark) {
-      val vs = Seq(
-        clinicalValueViolations(root.resolve(SampleFile), rawSample.get),
-        clinicalValueViolations(root.resolve(PatientFile), rawPatient.get)).flatten
-      if (vs.isEmpty) Seq.empty
-      else Seq("clinical_number_attrs_numeric" -> "number",
-        "clinical_boolean_attrs_boolean" -> "boolean",
-        "clinical_survival_status_format" -> "survival",
-        "clinical_survival_months_nonneg" -> "months",
-        "clinical_na_spellings" -> "na_spelling",
-        "clinical_value_whitespace" -> "whitespace",
-        "clinical_deceased_months_present" -> "deceased_months").map {
-        case (rule, k) => val n = vs.map(_(k)).sum; (rule, n, n == 0L)
-      }
-    }
-    val structural = structuralReport(dir)
-    structural ++ (fieldRules.toSeq :+ censusRules :+ valueRules).flatMap(Async.await)
   }
 
   /** DuckDB oracle for the `v18_portal_rules` query

@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase.{sf001, spark}
@@ -20,6 +22,24 @@ class RefQueriesSpec extends AnyFunSuite {
       assert(df.count() >= 0, s"$name failed to execute")
     }
     oracle.keys.foreach(k => assert(qs.contains(k), s"oracle $k has no query"))
+  }
+
+  test("the sink/scan round-trips leave no graft-s* temp dir behind") {
+    import RefQueries._
+    val roundTrips = Seq(s2TsvRoundtrip, s3CommentScan, s7JsonlRoundtrip, s8OrcRoundtrip,
+      s9CbioSource, s10XmlRoundtrip, s11CbioStoreRoundtrip, s12SynapseFetch)
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def entries(): Set[String] = {
+      val s = java.nio.file.Files.list(tmp)
+      try s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("graft-s")).toSet
+      finally s.close()
+    }
+    def runAll(): Unit = roundTrips.foreach(q => q(spark, sf001).collect())
+    runAll()
+    val before = entries()
+    runAll()
+    val added = entries() -- before
+    assert(added.isEmpty, added.toString)
   }
 
   test("q1_agg groups cover the 6 returnflag/linestatus combos") {

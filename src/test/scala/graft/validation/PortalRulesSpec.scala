@@ -1037,6 +1037,18 @@ class PortalRulesSpec extends AnyFunSuite {
         ("maf_chromosome_no_prefix", 0L, true), ("maf_hugo_entrez_consistent", 0L, true)))
   }
 
+  test("a string MAF's positions compare as numbers; a non-number reads as missing") {
+    def rep(start: String, end: String): Map[String, Long] = {
+      val maf = Seq((start, end)).toDF("Start_Position", "End_Position")
+      PortalRules.fieldRows(spark, maf).map(r => r._1 -> r._2).toMap
+    }
+    // as text, '100' < '99' and '99' < '100' is false
+    assert(rep("99", "100")("maf_extent_valid") == 0L)
+    assert(rep("100", "99")("maf_extent_valid") == 1L)
+    val bad = rep("abc", "100")
+    assert(bad("maf_extent_valid") == 0L && bad("maf_position_present") == 1L)
+  }
+
   test("a MAF barcode column typed as a number is checked in its written form") {
     // an all-numeric barcode column (ids like 007) infers as an integer
     val maf = Seq(7, 8).toDF("Tumor_Sample_Barcode")

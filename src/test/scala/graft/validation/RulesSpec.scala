@@ -266,6 +266,19 @@ class RulesSpec extends AnyFunSuite {
     assert(intercept[LinkageError](Async.await(fatal)).getMessage == "fatal")
   }
 
+  test("Async starts every task at once, more tasks than cores included") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val n = Runtime.getRuntime.availableProcessors + 1
+    val started = new CountDownLatch(n)
+    // each task waits until all have started; a task queued behind the
+    // others would leave them to time out
+    val tasks = (1 to n).map(_ => Async(spark) {
+      started.countDown()
+      started.await(30, TimeUnit.SECONDS)
+    })
+    assert(tasks.map(Async.await).forall(identity), "a task waited for a pool thread")
+  }
+
   test("Async.alongside rethrows only once both sides have finished") {
     val taskDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val task = Async(spark) { Thread.sleep(500); taskDone.set(true); 1 }
