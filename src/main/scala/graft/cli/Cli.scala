@@ -1,20 +1,20 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 import graft.LocalSession
 import graft.pipelines.{ClinicalPipeline, MafPipeline, StudyRunner, StudyValidator}
 import graft.sources.Tsv
-import graft.validation.Rules
 
 /** The reference's four argparse CLIs (`clinical.py:842-888`,
   * `maf.py:273-308`, `validate.py:230-251`, `load.py:85-133`) as thin
-  * `main`s over the pipeline library — same flag names where the concept
-  * survives the port, with the network-Synapse ids resolving against the
-  * local entity store (`--store_root`, the sandbox stand-in for a Synapse
-  * connection). Everything here is argument plumbing; all data work is
-  * the already-tested pipeline stages.
+  * `main`s over [[StudyRunner]]'s stages — same flag names where the
+  * concept survives the port, with the network-Synapse ids resolving
+  * against the local entity store (`--store_root`, the sandbox stand-in
+  * for a Synapse connection). Everything here is argument plumbing: each
+  * stage has its one definition in [[StudyRunner]], so a package the
+  * CLIs write has the bytes of [[StudyRunner.run]]'s.
   *
   * Run via `sbt "runMain graft.cli.ClinicalCli --store_root ... "` or a
   * spark-submit with the same class names.
@@ -60,25 +60,24 @@ private[cli] object CliUtil {
     try f(spark) finally if (existing.isEmpty) spark.stop()
   }
 
-  def fetch(spark: SparkSession, storeRoot: String, id: String): DataFrame =
-    spark.read.format("synapse").option("store", storeRoot).load(id)
-
   def printChecks(prefix: String, rows: Seq[(String, Long, Boolean)]): Unit =
     rows.foreach { case (rule, v, ok) =>
       println(s"[$prefix] ${if (ok) "PASS" else "FAIL"} $rule value=$v")
     }
 }
 
-/** `clinical.py main()` — preprocess, optional lens join, oncotree
-  * enrichment, patient/sample split, per-dataset export. Reference flags
-  * kept: `--dataset` (nargs +, default = every dataset present),
-  * `--input_df_synid`, `--cli_to_cbio_mapping_synid` (the attribute
-  * mapping), `--cli_to_oncotree_mapping_synid`, `--lens_id_mapping_synid`
-  * (optional — skipped when absent, like the reference),
-  * `--neoantigen_data_synid`, `--clear_workspace`. Added for the library
-  * model: `--store_root`, `--attr_meta_synid`, `--oncotree_names_synid`,
-  * `--out_dir`, `--study_id` (the reference hardcodes `iatlas_...` ids
-  * and a datahub checkout path).
+/** `clinical.py main()` — a thin main over [[StudyRunner]]'s clinical
+  * stage: preprocess, the optional lens join, then per dataset the
+  * oncotree enrichment, patient/sample split and export, into
+  * `$out_dir/$dataset` under the study id `${study_id}_${dataset.lower}`.
+  * Reference flags kept: `--dataset` (nargs +, default = every dataset
+  * present), `--input_df_synid`, `--cli_to_cbio_mapping_synid` (the
+  * attribute mapping), `--cli_to_oncotree_mapping_synid`,
+  * `--lens_id_mapping_synid` (optional — skipped when absent, like the
+  * reference), `--neoantigen_data_synid`, `--clear_workspace`. Added for
+  * the library model: `--store_root`, `--attr_meta_synid`,
+  * `--oncotree_names_synid`, `--out_dir`, `--study_id` (the reference
+  * hardcodes `iatlas_...` ids and a datahub checkout path).
   */
 object ClinicalCli {
   import CliUtil._
@@ -91,54 +90,34 @@ object ClinicalCli {
     if (args.contains("clear_workspace")) Tsv.clearDir(outDir)
 
     withSession { spark =>
-    // control tables collected once: later collects of them run no job
-    val attrMapping = ClinicalPipeline.controlTable(
-      fetch(spark, storeRoot, one(args, "cli_to_cbio_mapping_synid")))
-    val attrMeta = ClinicalPipeline.controlTable(
-      fetch(spark, storeRoot, one(args, "attr_meta_synid")))
-    val (pre0, neoObs, neoRules) = ClinicalPipeline.preprocessObserved(
-      fetch(spark, storeRoot, one(args, "input_df_synid")),
-      fetch(spark, storeRoot, one(args, "cli_to_oncotree_mapping_synid")),
-      fetch(spark, storeRoot, one(args, "neoantigen_data_synid")),
-      attrMapping)
+    val preprocessed = StudyRunner.preprocessClinical(spark, storeRoot,
+      one(args, "input_df_synid"), one(args, "cli_to_oncotree_mapping_synid"),
+      one(args, "neoantigen_data_synid"), one(args, "cli_to_cbio_mapping_synid"),
+      one(args, "attr_meta_synid"))
     // optional lens id mapping (reference clinical.py:199-262): absent
     // flag -> join skipped entirely
-    val (pre, lensObserved) = oneOpt(args, "lens_id_mapping_synid") match {
-      case Some(id) =>
-        val (joined, obs, rules) = ClinicalPipeline.addLensDisplayNameObserved(
-          pre0, fetch(spark, storeRoot, id))
-        (joined, Some((obs, rules)))
-      case None => (pre0, None)
+    val pre = oneOpt(args, "lens_id_mapping_synid").fold(preprocessed) { id =>
+      val (joined, obs, rules) = ClinicalPipeline.addLensDisplayNameObserved(
+        preprocessed.frame, StudyRunner.fetch(spark, storeRoot, id))
+      preprocessed.copy(frame = joined, observed = preprocessed.observed :+ (obs -> rules))
     }
-    val enriched = oneOpt(args, "oncotree_names_synid") match {
-      case Some(id) => pre.join(
-        broadcast(fetch(spark, storeRoot, id)), Seq("ONCOTREE_CODE"), "left")
-      case None => pre
-    }
-    val (patient, sample) = ClinicalPipeline.splitPatientSample(enriched, attrMapping)
-    val datasets = args.get("dataset").map(_.toSeq).getOrElse(
-      sample.select("Dataset").distinct().collect().map(_.getString(0)).toSeq.sorted)
+    val datasets = args.get("dataset").getOrElse(
+      pre.frame.select("Dataset").distinct().collect().map(_.getString(0)).toSeq.sorted)
     datasets.foreach { ds =>
-      val dsStudyId = s"${studyId}_${ds.toLowerCase}"
-      val checks = ClinicalPipeline.exportDataset(
-        patient, sample, ds, attrMeta, dsStudyId, s"$outDir/$ds")
-      // per-dataset package dir: each dataset is its own study package,
-      // metas sit next to their data files like StudyRunner's single-
-      // dataset package at outDir
-      ClinicalPipeline.writeClinicalMetas(s"$outDir/$ds", dsStudyId)
-      printChecks(s"clinical:$ds", checks)
+      // each dataset is its own study package
+      printChecks(s"clinical:$ds", StudyRunner.exportClinical(spark, storeRoot, pre,
+        oneOpt(args, "oncotree_names_synid"), ds, s"${studyId}_${ds.toLowerCase}",
+        s"$outDir/$ds"))
     }
     // V15/V16 metrics were collected by the export writes — no extra job
-    printChecks("clinical", Rules.observedRows(neoObs, neoRules))
-    lensObserved.foreach { case (obs, rules) =>
-      printChecks("clinical", Rules.observedRows(obs, rules))
-    }
+    printChecks("clinical", pre.observedRows)
     }
   }
 }
 
-/** `maf.py main()` — folder merge, annotation join with error channel,
-  * postprocess, write. Reference flags kept: `--dataset`,
+/** `maf.py main()` — a thin main over [[StudyRunner]]'s MAF stage
+  * (folder merge, annotation join with error channel, postprocess,
+  * write), plus the failure report. Reference flags kept: `--dataset`,
   * `--input_folder_synid`, `--max_rows` (default 40000 — the error
   * report carries the same consecutive chunk ids the reference's
   * per-chunk error MAFs had), `--clear_workspace`. Added:
@@ -160,27 +139,22 @@ object MafCli {
     if (args.contains("clear_workspace")) Tsv.clearDir(outDir)
 
     withSession { spark =>
-    val maf = MafPipeline.readAndMergeMafsFromStore(
-        spark, storeRoot, one(args, "input_folder_synid"))
-      .getOrElse(sys.error(s"no .maf children under ${one(args, "input_folder_synid")}"))
-    val chunked = MafPipeline.assignChunks(maf, "Tumor_Sample_Barcode", maxRows)
-    // persist before the fan-out: three actions read this frame (the
-    // output write, the failure count, the failure report) and each
-    // would otherwise re-run the whole merge + annotation DAG — on a
-    // 10k-file study folder that triples the dominant I/O
-    val (annotated, _) = MafPipeline.annotate(
-      chunked, fetch(spark, storeRoot, one(args, "annotations_synid")))
-    annotated.persist()
+    val annotated = StudyRunner.exportMaf(spark, storeRoot, one(args, "input_folder_synid"),
+      one(args, "annotations_synid"), studyId, outDir)
+    // failed_annotations.txt: the FAILED rows with their chunk, the
+    // rank of every annotated row in barcode order (F9). The narrow
+    // input is cached after the write, so the rank's two passes, the
+    // count and the report write share one run of the merge and join.
+    val keyed = annotated.select((MafPipeline.VariantKey ++
+      Seq("Tumor_Sample_Barcode", "Annotation_Status")).map(col): _*).persist()
     try {
-      MafPipeline.writeOutputs(
-        MafPipeline.postprocess(annotated).drop("chunk"), studyId, outDir)
-      val failed = annotated.filter(col("Annotation_Status") === "FAILED")
-        .select((MafPipeline.VariantKey ++ Seq("Tumor_Sample_Barcode", "chunk")).map(col): _*)
+      val failed = MafPipeline.assignChunks(keyed, "Tumor_Sample_Barcode", maxRows)
+        .filter(col("Annotation_Status") === "FAILED").drop("Annotation_Status")
       val nErr = failed.count()
       if (nErr > 0)
         Tsv.writeTsvFile(failed, s"$outDir/failed_annotations.txt")
       println(s"[maf] wrote $outDir/data_mutations.txt; failed_annotations=$nErr")
-    } finally annotated.unpersist()
+    } finally keyed.unpersist()
     }
   }
 }
@@ -202,7 +176,7 @@ object ValidateCli {
     val dir = one(args, "study_dir")
     val failed = withSession { spark =>
       val neo = oneOpt(args, "neoantigen_data_synid")
-        .map(id => fetch(spark, one(args, "store_root"), id))
+        .map(StudyRunner.fetch(spark, one(args, "store_root"), _))
       val rows = StudyValidator.report(spark, dir, neo)
       rows.foreach { case (rule, v, ok) =>
         println(s"[validate] ${if (ok) "PASS" else "FAIL"} $rule value=$v")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.functions.Fns
-import graft.sources.{Layout, Tsv}
+import graft.sources.Tsv
 import graft.validation.{Async, Rules}
 
 /** The reference's clinical export pipeline (`clinical.py main()`,
@@ -20,9 +20,8 @@ import graft.validation.{Async, Rules}
   * from the inputs with the dataset filter (P3) applied: a persisted
   * frame writes the same rows in another order. [[exportDataset]] runs
   * four actions per dataset, two at a time: one census per frame, then
-  * each frame's file write. [[exportAllDatasets]] is the whole-study form:
-  * it writes the frames once, partitioned by `Dataset`, and exports
-  * each dataset from a pruned read.
+  * each frame's file write. [[graft.pipelines.StudyRunner]]'s clinical
+  * stage composes these steps, once per dataset.
   */
 object ClinicalPipeline {
 
@@ -240,9 +239,7 @@ object ClinicalPipeline {
   }
 
   /** The two clinical meta files every study package carries, written
-    * next to their data files — ONE definition shared by StudyRunner and
-    * ClinicalCli so the key-value contract cannot drift between the
-    * lifecycle runner and the CLI (meta_clinical_{patient,sample}.txt,
+    * next to their data files (meta_clinical_{patient,sample}.txt,
     * cBioPortal's `meta_*` ingestion descriptors).
     */
   def writeClinicalMetas(outDir: String, studyId: String): Unit = {
@@ -325,29 +322,5 @@ object ClinicalPipeline {
 
     // the metrics were collected during the sample write — no re-scan
     Rules.observedRows(obs, exportRules)
-  }
-
-  /** The whole-study fan-out at scale: materialize the preprocessed
-    * frames ONCE, Hive-partitioned by `Dataset`, then run each dataset's
-    * export against the partitioned layout — every `Dataset === ds`
-    * filter prunes to one directory instead of re-scanning the pan-study
-    * table per iteration (the reference re-filters the full frame 23
-    * times, `clinical.py:572-578` / `clinical.py:922-950`; at 100 TB
-    * that's 23 full scans vs one write + 23 pruned reads).
-    */
-  def exportAllDatasets(patient: DataFrame, sample: DataFrame,
-                        attrMeta: DataFrame, studyId: String,
-                        outBase: String, scratchDir: String): Map[String, Seq[(String, Long, Boolean)]] = {
-    val spark = sample.sparkSession
-    Layout.writePartitioned(sample, s"$scratchDir/sample_by_ds", "Dataset")
-    Layout.writePartitioned(patient, s"$scratchDir/patient_by_ds", "Dataset")
-    val sampleP = spark.read.parquet(s"$scratchDir/sample_by_ds")
-    val patientP = spark.read.parquet(s"$scratchDir/patient_by_ds")
-    val datasets = sampleP.select("Dataset").distinct()
-      .collect().map(_.getString(0)).sorted
-    datasets.map { ds =>
-      ds -> exportDataset(patientP, sampleP, ds, attrMeta,
-        s"${studyId}_${ds.toLowerCase}", s"$outBase/$ds")
-    }.toMap
   }
 }

@@ -16,14 +16,16 @@ import graft.sources.Tsv
 object LoadPipeline {
 
   /** Both case lists from the sample + mutation frames in two jobs:
-    * [[sampleIds]] and [[sequencedBarcodes]], joined on the driver by
-    * [[writeCaseLists]] (J6 — `cases_sequenced` is the samples found
-    * among the barcodes, reference `load.py:12-35`). Only the per-study
-    * id list reaches the driver, never the fact side.
+    * [[sampleIds]] and the MAF's distinct barcodes ([[distinctStrings]]),
+    * joined on the driver by [[writeCaseLists]] (J6 — `cases_sequenced`
+    * is the samples found among the barcodes, reference
+    * `load.py:12-35`). Only the per-study id list reaches the driver,
+    * never the fact side.
     */
   def generateCaseLists(sample: DataFrame, maf: DataFrame, studyId: String,
                         outDir: String): Seq[Path] =
-    writeCaseLists(sampleIds(sample), sequencedBarcodes(maf), studyId, outDir)
+    writeCaseLists(sampleIds(sample), distinctStrings(maf, "Tumor_Sample_Barcode"), studyId,
+      outDir)
 
   /** Every row's SAMPLE_ID in its string form (null stays null), in one
     * job.
@@ -31,12 +33,12 @@ object LoadPipeline {
   def sampleIds(sample: DataFrame): Seq[String] =
     sample.select(col("SAMPLE_ID").cast("string")).collect().toSeq.map(_.getString(0))
 
-  /** The distinct Tumor_Sample_Barcode strings of `maf`, in one job:
-    * each partition sends its own distinct set, so a fact-sized MAF
-    * reaches the driver at key scale.
+  /** The distinct strings of column `c` of `df` (null kept as a key), in
+    * one job: each partition sends its own distinct set, so a fact-sized
+    * frame reaches the driver at key scale.
     */
-  def sequencedBarcodes(maf: DataFrame): Set[String] =
-    maf.select(col("Tumor_Sample_Barcode").cast("string")).as(Encoders.STRING)
+  def distinctStrings(df: DataFrame, c: String): Set[String] =
+    df.select(col(c).cast("string")).as(Encoders.STRING)
       .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().toSet
 
   /** Spark's string order — UTF-8 bytes, unsigned — with null first, as

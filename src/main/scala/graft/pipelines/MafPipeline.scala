@@ -2,7 +2,6 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 
 import graft.functions.Fns
 import graft.sources.Tsv
@@ -195,18 +194,6 @@ object MafPipeline {
     */
   def missingRequiredColumns(df: DataFrame, required: Seq[String]): Seq[String] =
     required.diff(df.columns.toSeq)
-
-  /** V12 — MAF barcodes vs neoantigen sample ids, both cast to string
-    * first (reference `validate.py:135-157`).
-    */
-  def barcodesMatchNeoantigen(spark: SparkSession, maf: DataFrame, neo: DataFrame): DataFrame = {
-    import spark.implicits._
-    val (mafOnly, neoOnly) = Rules.setDifference(
-      maf, col("Tumor_Sample_Barcode").cast(StringType), neo, col("Sample_ID").cast(StringType))
-    Seq(("maf_not_in_neo", mafOnly, mafOnly == 0L),
-      ("neo_not_in_maf", neoOnly, neoOnly == 0L))
-      .toDF("rule", "value", "passed")
-  }
 
   /** K1 + K4 — write `data_mutations.txt` (%.12g floats) and its meta
     * file (reference `maf.py:168-216`).

@@ -2,20 +2,22 @@ package graft.pipelines
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
 import graft.Schemas
-import graft.sources.SynapseStore
+import graft.sources.{SynapseStore, Tsv}
 import graft.validation.{Async, PortalRules, Rules}
 
-/** The reference's full study lifecycle as one callable (SURVEY §3:
-  * `clinical.py main` → `maf.py main` → `validate.py main` →
-  * `load.py` store): inputs fetched from the Synapse-shaped entity
-  * store by id (`syn.get` at the head), Spark plans in between, and
-  * every produced required output stored back under one version
-  * comment (`syn.store` at the tail, `load.py:38-82`). The pieces are
-  * the already-tested pipeline stages.
+/** The reference's full study lifecycle (SURVEY §3: `clinical.py main`
+  * → `maf.py main` → `validate.py main` → `load.py` store), one
+  * definition per stage: inputs fetched from the Synapse-shaped entity
+  * store by id ([[fetch]], `syn.get`), the clinical stage
+  * ([[preprocessClinical]], then [[exportClinical]] per dataset), the
+  * MAF stage ([[exportMaf]]), the case lists ([[createCaseLists]]) and
+  * the store-back upload ([[upload]], `syn.store`, `load.py:38-82`).
+  * [[run]] runs every stage for one dataset; the `graft.cli` mains run
+  * the same stages one program at a time.
   *
   * `clinical.py` and `maf.py` are independent programs whose outputs
   * meet only in the case lists and validation, so [[run]] runs them as
@@ -26,8 +28,7 @@ import graft.validation.{Async, PortalRules, Rules}
   * sample and patient files and collects the sample ids. The package
   * step then writes the case lists from those and runs the rest of the
   * report over the same frames (the clinical value rules, the key
-  * census, the structural layer) alongside the upload. Its two `load.py` stages, [[createCaseLists]] and
-  * [[upload]], are also what `LoadCli` runs.
+  * census, the structural layer) alongside the upload.
   */
 object StudyRunner {
 
@@ -45,6 +46,73 @@ object StudyRunner {
                          storedOutputs: Map[String, String],
                          missingOutputs: Seq[String])
 
+  /** `syn.get`: the latest version of entity `id` in the store at
+    * `storeRoot`, read through the `synapse` format.
+    */
+  def fetch(spark: SparkSession, storeRoot: String, id: String): DataFrame =
+    spark.read.format("synapse").option("store", storeRoot).load(id)
+
+  /** The clinical stage's preprocessed frame, with what the rest of the
+    * stage reads: the control tables, collected once, and the
+    * observations whose checks the frame's first action collects (V16;
+    * V15 too once a lens join is added).
+    */
+  final case class Preprocessed(frame: DataFrame, attrMapping: DataFrame, attrMeta: DataFrame,
+                                observed: Seq[(Observation, Seq[Rules.Rule])]) {
+    /** The observed checks, in order; read them once an export has run. */
+    def observedRows: Seq[(String, Long, Boolean)] =
+      observed.flatMap { case (obs, rules) => Rules.observedRows(obs, rules) }
+  }
+
+  /** `clinical.py main()` up to the preprocessed frame (reference
+    * `clinical.py:290-362`): the attribute mapping and metadata control
+    * tables collected once, so later collects of them run no job, then
+    * [[ClinicalPipeline.preprocessObserved]].
+    */
+  def preprocessClinical(spark: SparkSession, storeRoot: String, clinicalId: String,
+                         oncotreeId: String, neoId: String, attrMappingId: String,
+                         attrMetaId: String): Preprocessed = {
+    def get(id: String) = fetch(spark, storeRoot, id)
+    val attrMapping = ClinicalPipeline.controlTable(get(attrMappingId))
+    val attrMeta = ClinicalPipeline.controlTable(get(attrMetaId))
+    val (pre, obs, rules) = ClinicalPipeline.preprocessObserved(
+      get(clinicalId), get(oncotreeId), get(neoId), attrMapping)
+    Preprocessed(pre, attrMapping, attrMeta, Seq(obs -> rules))
+  }
+
+  /** The rest of `clinical.py main()` for one dataset: the oncotree code
+    * → cancer-type names join (J4; skipped without `oncotreeNamesId`),
+    * the patient/sample split, and the dataset's export and clinical
+    * metas into `outDir` under `studyId`. Returns the export's checks.
+    */
+  def exportClinical(spark: SparkSession, storeRoot: String, pre: Preprocessed,
+                     oncotreeNamesId: Option[String], dataset: String, studyId: String,
+                     outDir: String): Seq[(String, Long, Boolean)] = {
+    // a broadcast lookup, where the reference shells out to a converter
+    // tool (clinical.py:477-496)
+    val enriched = oncotreeNamesId.fold(pre.frame)(id => pre.frame.join(
+      broadcast(fetch(spark, storeRoot, id)), Seq("ONCOTREE_CODE"), "left"))
+    val (patient, sample) = ClinicalPipeline.splitPatientSample(enriched, pre.attrMapping)
+    val checks = ClinicalPipeline.exportDataset(
+      patient, sample, dataset, pre.attrMeta, studyId, outDir)
+    ClinicalPipeline.writeClinicalMetas(outDir, studyId)
+    checks
+  }
+
+  /** `maf.py main()`: the folder merge, the annotation join (J5),
+    * postprocess, and `data_mutations.txt` with its meta file written
+    * into `outDir` under `studyId`. Returns the annotated frame, chrM
+    * rows included, for checks of the annotation itself.
+    */
+  def exportMaf(spark: SparkSession, storeRoot: String, mafFolderId: String,
+                annotationsId: String, studyId: String, outDir: String): DataFrame = {
+    val maf = MafPipeline.readAndMergeMafsFromStore(spark, storeRoot, mafFolderId)
+      .getOrElse(throw new IllegalArgumentException(s"no .maf children under $mafFolderId"))
+    val (annotated, _) = MafPipeline.annotate(maf, fetch(spark, storeRoot, annotationsId))
+    MafPipeline.writeOutputs(MafPipeline.postprocess(annotated), studyId, outDir)
+    annotated
+  }
+
   /** `strictUpload = true` makes a missing required output fail the run
     * (the reference's `syn.store(File(...))` raises on an absent path —
     * `load.py:57-66`); the default records the absences in
@@ -59,58 +127,36 @@ object StudyRunner {
           dataset: String, studyId: String, outDir: String,
           outputFolderId: String, versionComment: String,
           strictUpload: Boolean = false): StudyResult = {
-    def fetch(id: String): DataFrame =
-      spark.read.format("synapse").option("store", storeRoot).load(id)
-
-    // --- §3.2 maf main: folder merge -> annotate -> postprocess -> write,
-    // then the MAF's own checks over the file as written, on a pool
-    // thread while the clinical lane runs on this one; both have
-    // finished, whatever either threw, before anything below runs
+    // --- §3.2 the MAF stage, then the MAF's own checks over the file as
+    // written, on a pool thread while the clinical lane runs on this one;
+    // both have finished, whatever either threw, before anything below runs
     val mafLane = Async(spark) {
-      val maf = MafPipeline.readAndMergeMafsFromStore(spark, storeRoot, in.mafFolderId)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no .maf children under ${in.mafFolderId}"))
-      val (annotated, _) = MafPipeline.annotate(maf, fetch(in.annotationsId))
-      MafPipeline.writeOutputs(MafPipeline.postprocess(annotated), studyId, outDir)
-      val written = StudyValidator.readWritten(spark, outDir, PortalRules.MafFile).get
-      val barcodes = Async(spark)(LoadPipeline.sequencedBarcodes(written))
-      val (ids, checks) = Async.alongside(barcodes)(
-        StudyValidator.mafChecks(spark, written, Some(fetch(in.neoId))))
-      (written, checks, ids)
+      exportMaf(spark, storeRoot, in.mafFolderId, in.annotationsId, studyId, outDir)
+      val written = Tsv.readWritten(spark, outDir, PortalRules.MafFile).get
+      (written, StudyValidator.mafChecks(spark, written, Some(fetch(spark, storeRoot, in.neoId))))
     }
 
-    // --- §3.1 clinical main: preprocess -> enrich -> split -> export
-    val ((maf, mafChecks, barcodes), (clinicalChecks, sample, patient, sampleIds)) =
+    // --- §3.1 the clinical stage
+    val ((maf, mafChecks), (clinicalChecks, sample, patient, sampleIds)) =
       Async.alongside(mafLane) {
-        val attrMapping = ClinicalPipeline.controlTable(fetch(in.attrMappingId))
-        val attrMeta = ClinicalPipeline.controlTable(fetch(in.attrMetaId))
-        // V16 rides the chain's first action as an observe metric (zero
-        // extra pass); read back below once the export has run
-        val (pre, neoObs, neoRules) = ClinicalPipeline.preprocessObserved(
-          fetch(in.clinicalId), fetch(in.oncotreeId), fetch(in.neoId), attrMapping)
-        // J4: oncotree code -> cancer-type names via broadcast lookup (the
-        // reference shells out to a converter tool here, clinical.py:477-496)
-        val enriched = pre.join(
-          broadcast(fetch(in.oncotreeNamesId)), Seq("ONCOTREE_CODE"), "left")
-        val (patient, sample) = ClinicalPipeline.splitPatientSample(enriched, attrMapping)
-        val exportChecks = ClinicalPipeline.exportDataset(
-          patient, sample, dataset, attrMeta, studyId, outDir)
-        ClinicalPipeline.writeClinicalMetas(outDir, studyId)
+        val pre = preprocessClinical(spark, storeRoot, in.clinicalId, in.oncotreeId, in.neoId,
+          in.attrMappingId, in.attrMetaId)
+        val exportChecks = exportClinical(spark, storeRoot, pre, Some(in.oncotreeNamesId),
+          dataset, studyId, outDir)
         // the written clinical files, read back as strings: the patient
         // file on a pool thread while the sample ids are collected
-        val patientRead = Async(spark)(
-          StudyValidator.readWritten(spark, outDir, PortalRules.PatientFile))
-        val sampleRead = StudyValidator.readWritten(spark, outDir, PortalRules.SampleFile)
+        val patientRead = Async(spark)(Tsv.readWritten(spark, outDir, PortalRules.PatientFile))
+        val sampleRead = Tsv.readWritten(spark, outDir, PortalRules.SampleFile)
         val (patientWritten, ids) =
           Async.alongside(patientRead)(LoadPipeline.sampleIds(sampleRead.get))
-        (exportChecks ++ Rules.observedRows(neoObs, neoRules), sampleRead, patientWritten, ids)
+        (exportChecks ++ pre.observedRows, sampleRead, patientWritten, ids)
       }
 
     // --- the package step: the clinical value rules; then load.py
     // --create_case_lists (cases_all + cases_sequenced), and load.py
     // --upload alongside the rest of §3.3 validate main
     val values = Async(spark)(PortalRules.valueRows(spark, outDir, sample, patient))
-    LoadPipeline.writeCaseLists(sampleIds, barcodes, studyId, s"$outDir/case_lists")
+    LoadPipeline.writeCaseLists(sampleIds, mafChecks.barcodes, studyId, s"$outDir/case_lists")
     val uploaded = Async(spark)(
       upload(storeRoot, outDir, studyId, outputFolderId, versionComment, strictUpload))
     val ((stored, missingOutputs), validation) = Async.alongside(uploaded)(
@@ -121,13 +167,13 @@ object StudyRunner {
 
   /** `load.py --create_case_lists`: `cases_all` + `cases_sequenced` from
     * the package's written sample and MAF files. Both are read as
-    * strings ([[StudyValidator.readWritten]]), so the lists carry the ids
+    * strings ([[Tsv.readWritten]]), so the lists carry the ids
     * exactly as written — an inferred read would turn a `SAMPLE_ID` of
     * `007` into 7 — and each read is one header job instead of a header
     * job plus an inference pass.
     */
   def createCaseLists(spark: SparkSession, outDir: String, studyId: String): Seq[Path] = {
-    def written(file: String): DataFrame = StudyValidator.readWritten(spark, outDir, file)
+    def written(file: String): DataFrame = Tsv.readWritten(spark, outDir, file)
       .getOrElse(throw new IllegalArgumentException(s"no $file under $outDir"))
     LoadPipeline.generateCaseLists(written(PortalRules.SampleFile),
       written(PortalRules.MafFile), studyId, s"$outDir/case_lists")

@@ -13,7 +13,7 @@ import graft.validation.{Async, PortalRules}
 /** The reference's cross-file validation entry point (`validate.py main()`,
   * SURVEY §3.3): load the study's outputs (S6), check presence (V1),
   * the MAF column contract (V13), barcode↔neoantigen consistency
-  * (V12, via [[MafPipeline.barcodesMatchNeoantigen]]) and the portal
+  * (V12, from the MAF's barcode set, [[mafChecks]]) and the portal
   * validator's rule set (V18, the parts of [[graft.validation.PortalRules]]).
   */
 object StudyValidator {
@@ -30,17 +30,6 @@ object StudyValidator {
       else None)
     }.toMap
 
-  /** A package file read back as written: every column a string, `#`
-    * lines skipped, one header job and no inference pass; None when the
-    * file is absent. Ids keep their written form (`007` stays `007`) and
-    * values are checked as the portal's importer reads them.
-    */
-  def readWritten(spark: SparkSession, dir: String, file: String): Option[DataFrame] = {
-    val p = Paths.get(dir, file)
-    if (!Files.exists(p)) None
-    else Some(Tsv.read(spark, p.toString, comment = Some('#'), inferSchema = false))
-  }
-
   /** V1 — required files missing from the output directory. */
   def missingFiles(dir: String,
                    required: Seq[String] = Schemas.RequiredOutputFiles): Seq[String] =
@@ -51,37 +40,49 @@ object StudyValidator {
     MafPipeline.missingRequiredColumns(maf, Schemas.RequiredMafCols)
 
   /** What the MAF alone decides: the V13 column contract and the V12
-    * neoantigen rows (`rows`), and the strict-MAF field rows (`fields`).
+    * neoantigen rows (`rows`), the strict-MAF field rows (`fields`), and
+    * the distinct barcodes `cases_sequenced` lists (`barcodes`).
     */
   final case class MafChecks(rows: Seq[(String, String, Boolean)],
-                             fields: Seq[(String, Long, Boolean)])
+                             fields: Seq[(String, Long, Boolean)],
+                             barcodes: Set[String])
 
-  /** [[MafChecks]] over a MAF as written: V12 runs alongside the field
-    * pass, so the MAF is scanned by two jobs at once.
+  /** [[MafChecks]] over a MAF as written. The distinct barcodes and the
+    * neoantigen `Sample_ID`s, both as strings, are collected at key scale
+    * alongside the field pass, one job each; V12 (reference
+    * `validate.py:135-157`) compares the two sets on the driver, with
+    * null counted as a key as [[graft.validation.Rules.setDifference]]
+    * counts it. A MAF without a barcode column has no barcodes.
     */
   def mafChecks(spark: SparkSession, maf: DataFrame, neo: Option[DataFrame]): MafChecks = {
     val missingCols = missingMafColumns(maf)
     val colRule = ("maf_column_contract", missingCols.mkString(","), missingCols.isEmpty)
-    def fields = PortalRules.fieldRows(spark, maf)
-    val (neoRows, fieldRows) = neo match {
-      case Some(n) => Async.alongside(Async(spark)(
-        MafPipeline.barcodesMatchNeoantigen(spark, maf, n).collect().toSeq
-          .map(r => (r.getString(0), r.getLong(1).toString, r.getBoolean(2)))))(fields)
-      case None => (Seq.empty, fields)
+    val barcodes = Async(spark)(
+      if (maf.columns.contains("Tumor_Sample_Barcode"))
+        LoadPipeline.distinctStrings(maf, "Tumor_Sample_Barcode")
+      else Set.empty[String])
+    val neoSampleIds = Async(spark)(neo.map(LoadPipeline.distinctStrings(_, "Sample_ID")))
+    val (ids, (neoIds, fields)) = Async.alongside(barcodes)(
+      Async.alongside(neoSampleIds)(PortalRules.fieldRows(spark, maf)))
+    val neoRows = neoIds.toSeq.flatMap { n =>
+      val mafOnly = ids.diff(n).size.toLong
+      val neoOnly = n.diff(ids).size.toLong
+      Seq(("maf_not_in_neo", mafOnly.toString, mafOnly == 0L),
+        ("neo_not_in_maf", neoOnly.toString, neoOnly == 0L))
     }
-    MafChecks(colRule +: neoRows, fieldRows)
+    MafChecks(colRule +: neoRows, fields, ids)
   }
 
   /** The full cross-file report: (rule, detail, passed). Each data file
-    * is read once, as strings ([[readWritten]]); the MAF's own checks
+    * is read once, as strings ([[Tsv.readWritten]]); the MAF's own checks
     * ([[mafChecks]]) run alongside the package's.
     */
   def report(spark: SparkSession, dir: String,
              neo: Option[DataFrame] = None): Seq[(String, String, Boolean)] = {
-    val maf = readWritten(spark, dir, PortalRules.MafFile)
+    val maf = Tsv.readWritten(spark, dir, PortalRules.MafFile)
     val checks = maf.map(m => Async(spark)(mafChecks(spark, m, neo)))
-    val sample = readWritten(spark, dir, PortalRules.SampleFile)
-    val patient = readWritten(spark, dir, PortalRules.PatientFile)
+    val sample = Tsv.readWritten(spark, dir, PortalRules.SampleFile)
+    val patient = Tsv.readWritten(spark, dir, PortalRules.PatientFile)
     val values = Async(spark)(PortalRules.valueRows(spark, dir, sample, patient))
     packageReport(spark, dir, sample, patient, maf, checks.map(Async.await), values)
   }

@@ -2,26 +2,16 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
-/** Physical-layout utilities — the two table layouts that decide shuffle
-  * cost at 100 TB, both absent from the reference (single-process pandas
-  * has no layout: `clinical.py:572-578` re-filters the whole frame per
-  * dataset).
+/** Physical-layout utilities, all absent from the reference
+  * (single-process pandas has no layout):
   *
-  *  - Hive-style partitioned directories: the per-`Dataset` fan-out
-  *    becomes partition pruning — a query touching one dataset lists and
-  *    reads ONLY that directory, instead of scanning the pan-study table
-  *    per iteration (SURVEY §2.2 P3).
   *  - Bucketed tables: facts bucketed on the join key join WITHOUT any
   *    exchange — at 1000 executors the repeated clinical⋈mutation joins
   *    (SURVEY §2.3) pay the shuffle once at write time, then never again.
+  *  - The input-width guard ([[spread]]), small-file compaction
+  *    ([[compact]]) and Z-order clustering ([[writeZOrdered]]).
   */
 object Layout {
-
-  /** Write Hive-partitioned parquet; reads filtered on `partCols` prune
-    * to matching directories (assert: `PartitionFilters` in the scan).
-    */
-  def writePartitioned(df: DataFrame, path: String, partCols: String*): Unit =
-    df.write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
 
   /** Round-robin spread of a frame to the session's default parallelism
     * when its current plan would execute on fewer than half that many

@@ -71,6 +71,17 @@ object Tsv {
                multiLine: Boolean = false): DataFrame =
     reader(spark, comment, multiLine).option("inferSchema", inferSchema).csv(paths: _*)
 
+  /** A study package file read back as written: every column a string,
+    * `#` lines skipped, one header job and no inference pass; None when
+    * the file is absent. Ids keep their written form (`007` stays `007`)
+    * and values are checked as the portal's importer reads them.
+    */
+  def readWritten(spark: SparkSession, dir: String, file: String): Option[DataFrame] = {
+    val p = Paths.get(dir, file)
+    if (!Files.exists(p)) None
+    else Some(read(spark, p.toString, comment = Some('#'), inferSchema = false))
+  }
+
   /** Format one column to its TSV string per the reference's serialization:
     * doubles/floats via `%.12g`, everything else via cast-to-string; null →
     * empty string (pandas `to_csv` NaN rendering). Values containing the

@@ -944,13 +944,6 @@ object PortalRules {
   val MafFile = "data_mutations.txt"
   val DataFiles: Seq[String] = Seq(SampleFile, PatientFile, MafFile)
 
-  /** A package file read back as raw text through the comment-skipping
-    * TSV scan the portal importer uses; None when it is absent.
-    */
-  private def rawScan(spark: SparkSession, p: Path): Option[DataFrame] =
-    if (!Files.exists(p)) None
-    else Some(Tsv.read(spark, p.toString, comment = Some('#'), inferSchema = false))
-
   /** The `case_list_ids` of the package's case lists whose key-values
     * pass `keep`, empty tokens dropped (an empty `case_list_ids:` line
     * lists no id); None when no such list carries the key.
@@ -994,14 +987,13 @@ object PortalRules {
   def check(spark: SparkSession, dir: String, sample: Option[DataFrame],
             patient: Option[DataFrame], maf: Option[DataFrame],
             caseListIds: Option[DataFrame]): Seq[(String, Long, Boolean)] = {
-    val root = Paths.get(dir)
     // Values must be validated against their written form: inference
     // would re-render them — a clean BOOLEAN column holding only
     // TRUE/FALSE infers BooleanType, whose string cast is lowercase
     // "true"/"false", failing '^(NA|TRUE|FALSE)$' on every row of a
     // perfectly valid column.
-    lazy val rawSample = rawScan(spark, root.resolve(SampleFile))
-    lazy val rawPatient = rawScan(spark, root.resolve(PatientFile))
+    lazy val rawSample = Tsv.readWritten(spark, dir, SampleFile)
+    lazy val rawPatient = Tsv.readWritten(spark, dir, PatientFile)
     val field = maf.map(m => Async(spark)(fieldRows(spark, m)))
     val census = Async(spark)(
       censusRows(spark, dir, sample, patient, maf, caseListIds, rawSample))

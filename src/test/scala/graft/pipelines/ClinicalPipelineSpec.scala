@@ -112,30 +112,6 @@ class ClinicalPipelineSpec extends AnyFunSuite {
       "cases_A_B.txt" -> "case_list_ids: s2\ts4"), lists.toString)
   }
 
-  test("exportAllDatasets: partitioned fan-out writes every dataset from pruned reads") {
-    val (pre, _, _) = ClinicalPipeline.preprocessObserved(
-      clinicalFixture, oncotreeFixture, neoFixture, attrMappingFixture)
-    val withCt = pre.withColumn("CANCER_TYPE", col("ONCOTREE_CODE"))
-    val (patient, sample) = ClinicalPipeline.splitPatientSample(withCt, attrMappingFixture)
-
-    val out = Files.createTempDirectory("clin-fanout").toString
-    val scratch = Files.createTempDirectory("clin-scratch").toString
-    val reports = ClinicalPipeline.exportAllDatasets(
-      patient, sample, attrMetaFixture, "iatlas_test", out, scratch)
-
-    val datasets = sample.select("Dataset").distinct().collect().map(_.getString(0))
-    assert(reports.keySet == datasets.toSet)
-    datasets.foreach { ds =>
-      assert(Files.exists(Paths.get(s"$out/$ds/data_clinical_sample.txt")), ds)
-      assert(Files.exists(Paths.get(s"$out/$ds/data_clinical_patient.txt")), ds)
-      assert(reports(ds).forall(_._3), s"$ds failed: ${reports(ds).filterNot(_._3)}")
-    }
-    // the scratch layout is Hive-partitioned by Dataset
-    datasets.foreach { ds =>
-      assert(Files.exists(Paths.get(s"$scratch/sample_by_ds/Dataset=$ds")), ds)
-    }
-  }
-
   private def attrMetaFixture = Seq(
     ("OS_STATUS", "Overall Survival Status", "OS status", "STRING", "1"),
     ("OS_MONTHS", "Overall Survival (Months)", "OS months", "NUMBER", "1"),

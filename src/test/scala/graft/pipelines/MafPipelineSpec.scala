@@ -84,12 +84,41 @@ class MafPipelineSpec extends AnyFunSuite {
       Seq("Chromosome", "Hugo_Symbol", "NCBI_Build")) == Seq("Hugo_Symbol", "NCBI_Build"))
   }
 
+  /** V12's rows of [[StudyValidator.mafChecks]], as rule -> value. */
+  private def v12(maf: org.apache.spark.sql.DataFrame,
+                  neo: org.apache.spark.sql.DataFrame): Map[String, String] =
+    StudyValidator.mafChecks(spark, maf, Some(neo)).rows
+      .collect { case (r, v, _) if r.endsWith("_in_neo") || r.endsWith("_in_maf") => r -> v }
+      .toMap
+
   test("V12: barcode/neoantigen equality is string-normalized both sides") {
     val neo = Seq(("SAMP-1"), ("SAMP-9")).toDF("Sample_ID")
-    val rep = MafPipeline.barcodesMatchNeoantigen(spark, maf, neo).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(rep("maf_not_in_neo") == 1L) // SAMP-2
-    assert(rep("neo_not_in_maf") == 1L) // SAMP-9
+    val rep = v12(maf, neo)
+    assert(rep("maf_not_in_neo") == "1") // SAMP-2
+    assert(rep("neo_not_in_maf") == "1") // SAMP-9
+    // numeric neoantigen ids compare as strings
+    val numeric = Seq(7L, 10L).toDF("Sample_ID")
+    val mafNumeric = Seq("7", "10", "11").toDF("Tumor_Sample_Barcode")
+    assert(v12(mafNumeric, numeric) == Map("maf_not_in_neo" -> "1", "neo_not_in_maf" -> "0"))
+  }
+
+  test("V12 counts distinct keys with null as a key, as Rules.setDifference does") {
+    val mafNull = Seq[String]("A", "A", null, "B", null).toDF("Tumor_Sample_Barcode")
+    val cases = Seq(
+      Seq[String]("A", null, "C"),   // null on both sides: no difference from it
+      Seq[String]("A", "B", "C", "C"), // null only in the MAF
+      Seq[String](null))             // null only key of neo
+    cases.foreach { ids =>
+      val neo = ids.toDF("Sample_ID")
+      val (mafOnly, neoOnly) = graft.validation.Rules.setDifference(
+        mafNull, col("Tumor_Sample_Barcode").cast("string"), neo, col("Sample_ID").cast("string"))
+      assert(v12(mafNull, neo) == Map("maf_not_in_neo" -> mafOnly.toString,
+        "neo_not_in_maf" -> neoOnly.toString), ids.toString)
+    }
+    val checks = StudyValidator.mafChecks(spark, mafNull, Some(Seq("A").toDF("Sample_ID")))
+    assert(checks.barcodes == Set("A", "B", null))
+    assert(checks.rows.collect { case (r, v, ok) if r.endsWith("_in_maf") || r.endsWith("_in_neo") =>
+      (r, v, ok) } == Seq(("maf_not_in_neo", "2", false), ("neo_not_in_maf", "0", true)))
   }
 
   test("readAndMergeMafs: by-name union of mixed-column .maf files; None when empty") {

@@ -18,19 +18,10 @@ import graft.sources.SynapseStore
 class StudyRunnerSpec extends AnyFunSuite {
   import spark.implicits._
 
-  private def seedInputs(root: String): StudyRunner.StudyInputs = {
-    def put(df: org.apache.spark.sql.DataFrame, name: String, parent: String): String =
-      SynapseStore.store(df, root, name, parent, s"seed $name")
-
-    val clinical = Seq(
-      ("s1", "p1", "ps1", "pp1", "DsA", "LUAD", "amA", Some(0), Some(231.0)),
-      ("s2", "p2", null, null, "DsA", "LUAD", "amA", Some(1), Some(706.208)),
-      ("s3", "p3", "ps3", "pp3", "DsA", "SKCM", "amA", Some(0), None))
-      .toDF("sample_name", "patient_name", "study_sample_name", "study_patient_name",
-        "Dataset", "TCGA_Study", "AMADEUS_Study", "OS_STATUS", "OS_MONTHS")
-    val oncotree = Seq(("LUAD", "amA", "DsA", "LUAD"), ("SKCM", "amA", "DsA", "SKCM"))
-      .toDF("TCGA_Study", "AMADEUS_Study", "Dataset", "ONCOTREE_CODE")
-    val neo = Seq(("ps1", 12L)).toDF("SAMPLE_ID", "SNV")
+  /** The attribute mapping, attribute metadata and oncotree names tables
+    * both seeds share.
+    */
+  private def controlTables = {
     val attrMapping = Seq(
       ("OS_STATUS", "OS_STATUS", "PATIENT", null),
       ("OS_MONTHS", "OS_MONTHS", "PATIENT", null),
@@ -47,6 +38,23 @@ class StudyRunnerSpec extends AnyFunSuite {
       ("LUAD", "Lung Adenocarcinoma", "Lung Adenocarcinoma"),
       ("SKCM", "Melanoma", "Cutaneous Melanoma"))
       .toDF("ONCOTREE_CODE", "CANCER_TYPE", "CANCER_TYPE_DETAILED")
+    (attrMapping, attrMeta, oncotreeNames)
+  }
+
+  private def seedInputs(root: String): StudyRunner.StudyInputs = {
+    def put(df: org.apache.spark.sql.DataFrame, name: String, parent: String): String =
+      SynapseStore.store(df, root, name, parent, s"seed $name")
+
+    val clinical = Seq(
+      ("s1", "p1", "ps1", "pp1", "DsA", "LUAD", "amA", Some(0), Some(231.0)),
+      ("s2", "p2", null, null, "DsA", "LUAD", "amA", Some(1), Some(706.208)),
+      ("s3", "p3", "ps3", "pp3", "DsA", "SKCM", "amA", Some(0), None))
+      .toDF("sample_name", "patient_name", "study_sample_name", "study_patient_name",
+        "Dataset", "TCGA_Study", "AMADEUS_Study", "OS_STATUS", "OS_MONTHS")
+    val oncotree = Seq(("LUAD", "amA", "DsA", "LUAD"), ("SKCM", "amA", "DsA", "SKCM"))
+      .toDF("TCGA_Study", "AMADEUS_Study", "Dataset", "ONCOTREE_CODE")
+    val neo = Seq(("ps1", 12L)).toDF("SAMPLE_ID", "SNV")
+    val (attrMapping, attrMeta, oncotreeNames) = controlTables
     val mafA = Seq(("ps1", "chr17", 7675000L, 7675001L, "C", "T"))
       .toDF("Tumor_Sample_Barcode", "Chromosome", "Start_Position",
         "End_Position", "Reference_Allele", "Tumor_Seq_Allele2")
@@ -74,6 +82,146 @@ class StudyRunnerSpec extends AnyFunSuite {
         "synMafInputs"
       },
       annotationsId = put(annotations, "annotations.txt", "synInputs"))
+  }
+
+  /** Two datasets: DsA's 12 samples each have a `.maf` file of 100+
+    * rows (every tenth variant unannotated, one chrM row each), stored
+    * out of barcode order and of unequal sizes, so a writer that reorders
+    * the rows shows; DsB's 3 samples have no MAF.
+    */
+  private lazy val wide: (String, StudyRunner.StudyInputs) = {
+    val root = Files.createTempDirectory("study-wide").toString
+    def put(df: org.apache.spark.sql.DataFrame, name: String, parent: String): String =
+      SynapseStore.store(df, root, name, parent, s"seed $name")
+    val samples = (0 until 12).map(i => (f"s$i%02d", f"p$i%02d", "DsA",
+      if (i % 3 == 0) "SKCM" else "LUAD", if (i % 2 == 0) Some(1) else Some(0), Some(30.0 * i))) ++
+      (0 until 3).map(i => (s"t$i", s"q$i", "DsB", "SKCM", Some(0), Some(61.0 + i)))
+    val clinical = samples.map { case (sid, pid, ds, tcga, st, mo) =>
+      (sid, pid, null: String, null: String, ds, tcga, "amA", st, mo)
+    }.toDF("sample_name", "patient_name", "study_sample_name", "study_patient_name",
+      "Dataset", "TCGA_Study", "AMADEUS_Study", "OS_STATUS", "OS_MONTHS")
+    val oncotree = Seq(("LUAD", "amA", "DsA", "LUAD"), ("SKCM", "amA", "DsA", "SKCM"),
+      ("SKCM", "amA", "DsB", "SKCM"))
+      .toDF("TCGA_Study", "AMADEUS_Study", "Dataset", "ONCOTREE_CODE")
+    val neo = Seq(("s00", 12L), ("s05", 3L), ("t1", 7L)).toDF("SAMPLE_ID", "SNV")
+    val (attrMapping, attrMeta, oncotreeNames) = controlTables
+    def mafRows(i: Int) = (0 until 100 + 7 * i).map { j =>
+      val chrom = if (j == 0) "chrM" else s"chr${1 + j % 22}"
+      (f"s$i%02d", chrom, 1000000L * i + 10L * j, 1000000L * i + 10L * j + 1, "C", "T")
+    }
+    val annotations = (0 until 12).flatMap(mafRows).filter { case (_, _, start, _, _, _) =>
+      (start / 10) % 10 != 3
+    }.map { case (_, chrom, start, end, ref, alt) =>
+      (chrom, start, end, ref, alt, "TP53", "missense_variant")
+    }.toDF("Chromosome", "Start_Position", "End_Position",
+      "Reference_Allele", "Tumor_Seq_Allele2", "Hugo_Symbol", "Consequence")
+    Seq(7, 2, 11, 0, 9, 4, 1, 10, 5, 3, 8, 6).foreach { i =>
+      SynapseStore.store(mafRows(i).toDF("Tumor_Sample_Barcode", "Chromosome", "Start_Position",
+        "End_Position", "Reference_Allele", "Tumor_Seq_Allele2"), root, f"s$i%02d.maf",
+        "synWideMafs")
+    }
+    (root, StudyRunner.StudyInputs(
+      clinicalId = put(clinical, "clinical.txt", "synInputs"),
+      oncotreeId = put(oncotree, "oncotree_mapping.txt", "synInputs"),
+      neoId = put(neo, "neoantigen.txt", "synInputs"),
+      attrMappingId = put(attrMapping, "attr_mapping.txt", "synInputs"),
+      attrMetaId = put(attrMeta, "attr_meta.txt", "synInputs"),
+      oncotreeNamesId = put(oncotreeNames, "oncotree_names.txt", "synInputs"),
+      mafFolderId = "synWideMafs",
+      annotationsId = put(annotations, "annotations.txt", "synInputs")))
+  }
+
+  private def clinicalCli(root: String, in: StudyRunner.StudyInputs, outDir: String,
+                          datasets: String*): Unit =
+    graft.cli.ClinicalCli.main(((if (datasets.isEmpty) Nil else "--dataset" +: datasets) ++ Seq(
+      "--input_df_synid", in.clinicalId,
+      "--cli_to_cbio_mapping_synid", in.attrMappingId,
+      "--cli_to_oncotree_mapping_synid", in.oncotreeId,
+      "--neoantigen_data_synid", in.neoId,
+      "--oncotree_names_synid", in.oncotreeNamesId,
+      "--attr_meta_synid", in.attrMetaId,
+      "--store_root", root, "--out_dir", outDir, "--study_id", "iatlas")).toArray)
+
+  private def mafCli(root: String, in: StudyRunner.StudyInputs, outDir: String,
+                     maxRows: Int): Unit =
+    graft.cli.MafCli.main(Array("--dataset", "DsA",
+      "--input_folder_synid", in.mafFolderId, "--annotations_synid", in.annotationsId,
+      "--max_rows", maxRows.toString, "--study_id", "iatlas_dsa",
+      "--store_root", root, "--out_dir", outDir))
+
+  test("ClinicalCli -> MafCli -> LoadCli write the package StudyRunner.run writes, byte for byte") {
+    val (root, in) = wide
+    val cliOut = Files.createTempDirectory("wide-cli")
+    clinicalCli(root, in, cliOut.toString, "DsA")
+    val dsDir = cliOut.resolve("DsA")
+    mafCli(root, in, dsDir.toString, 40000)
+    graft.cli.LoadCli.main(Array("--dataset", "DsA", "--create_case_lists",
+      "--study_dir", dsDir.toString, "--study_id", "iatlas_dsa"))
+    val runOut = Files.createTempDirectory("wide-run")
+    StudyRunner.run(spark, root, in, "DsA", "iatlas_dsa", runOut.toString, "synWideOut", "wide")
+
+    val cli = tree(dsDir)
+    val ran = tree(runOut)
+    assert(cli.contains("failed_annotations.txt"))
+    val shared = cli - "failed_annotations.txt"
+    assert(shared == ran,
+      "files that differ: " + (shared.keySet ++ ran.keySet).filter(f => shared.get(f) != ran.get(f)))
+    // the clinical files, the MAF, and both kinds of case list
+    assert(Seq("data_mutations.txt", "data_clinical_sample.txt", "case_lists/cases_all.txt",
+      "case_lists/cases_sequenced.txt").forall(ran.contains), ran.keySet.toString)
+    assert(ran.keySet.count(_.startsWith("case_lists/")) == 4, ran.keySet.toString)
+  }
+
+  test("MafCli's failure report: exactly the FAILED rows, chunked by rank in barcode order") {
+    val (root, in) = wide
+    val out = Files.createTempDirectory("wide-maf")
+    val maxRows = 250
+    mafCli(root, in, out.toString, maxRows)
+    val merged = MafPipeline.readAndMergeMafsFromStore(spark, root, in.mafFolderId).get
+    val annotations = spark.read.format("synapse").option("store", root).load(in.annotationsId)
+    val keyCols = MafPipeline.VariantKey :+ "Tumor_Sample_Barcode"
+    def strings(df: org.apache.spark.sql.DataFrame) =
+      df.select(keyCols.map(c => org.apache.spark.sql.functions.col(c).cast("string")): _*)
+        .collect().map(r => keyCols.indices.map(r.getString)).toSeq
+    val expected = strings(merged.join(annotations, MafPipeline.VariantKey, "left_anti"))
+    val report = graft.sources.Tsv.read(spark, out.resolve("failed_annotations.txt").toString,
+      inferSchema = false)
+    assert(report.columns.toSeq == keyCols :+ "chunk")
+    assert(strings(report).sortBy(_.mkString("|")) == expected.sortBy(_.mkString("|")))
+    assert(expected.nonEmpty)
+
+    // a barcode's rows hold ranks (before, before + count]: its rows before
+    // it in barcode order, then its own
+    val counts = merged.groupBy("Tumor_Sample_Barcode").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
+    val n = counts.map(_._2).sum
+    val before = counts.map(_._1).zip(counts.map(_._2).scanLeft(0L)(_ + _)).toMap
+    val countOf = counts.toMap
+    report.select("Tumor_Sample_Barcode", "chunk").collect().foreach { r =>
+      val (b, chunk) = (r.getString(0), r.getString(1).toLong)
+      assert(chunk >= 0 && chunk < (n + maxRows - 1) / maxRows, s"$b chunk $chunk")
+      assert(chunk >= before(b) / maxRows && chunk <= (before(b) + countOf(b) - 1) / maxRows,
+        s"$b chunk $chunk: rows ${before(b) + 1}..${before(b) + countOf(b)}")
+    }
+  }
+
+  test("ClinicalCli without --dataset writes each dataset's clinical files as run does") {
+    val (root, in) = wide
+    val cliOut = Files.createTempDirectory("wide-clinical")
+    clinicalCli(root, in, cliOut.toString)
+    assert(Files.list(cliOut).iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("DsA", "DsB"))
+    Seq("DsA", "DsB").foreach { ds =>
+      val runOut = Files.createTempDirectory(s"wide-run-$ds")
+      StudyRunner.run(spark, root, in, ds, s"iatlas_${ds.toLowerCase}", runOut.toString,
+        s"synWide$ds", "wide")
+      val cli = tree(cliOut.resolve(ds))
+      val ran = tree(runOut)
+      assert(Seq("data_clinical_sample.txt", "data_clinical_patient.txt",
+        "meta_clinical_sample.txt", "meta_study.txt").forall(cli.contains) &&
+        cli.keySet.exists(_.startsWith("case_lists/cases_")), s"$ds: ${cli.keySet}")
+      cli.foreach { case (f, digest) => assert(ran.get(f).contains(digest), s"$ds: $f") }
+    }
   }
 
   test("CLI mains mirror the reference's four argparse surfaces end-to-end") {
@@ -319,7 +467,7 @@ class StudyRunnerSpec extends AnyFunSuite {
     assert(tree(out) == atThrow)
   }
 
-  test("one export runs at most 50 Spark jobs") {
+  test("one export runs at most 46 Spark jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = Files.createTempDirectory("study-jobs").toString
     val in = seedInputs(root)
@@ -349,8 +497,9 @@ class StudyRunnerSpec extends AnyFunSuite {
       // collected per use and each drop-all-NA aggregate and the case-list
       // collect re-ran the clinical chain; 59 when the validator re-read
       // every written file, with inference, and the case lists took a
-      // join and a sort
-      assert(jobs > 0 && jobs <= 50, s"one export launched $jobs jobs")
+      // join and a sort; 48 when V12 ran a three-job key census beside
+      // the barcode collect
+      assert(jobs > 0 && jobs <= 46, s"one export launched $jobs jobs")
     } finally {
       sc.removeSparkListener(listener)
       sc.clearJobGroup()

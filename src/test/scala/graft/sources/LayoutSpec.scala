@@ -6,27 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase.{sf001, spark}
 import graft.Tables
 
-/** The two physical layouts that decide shuffle cost at scale: partition
-  * pruning for the per-dataset fan-out, bucketed co-located joins for the
-  * repeated key joins. Both asserted at the PLAN level — a layout that
-  * silently stops pruning or starts shuffling is a perf regression the
-  * row-level tests can't see.
+/** The physical layouts: small-file compaction, Z-order clustering, and
+  * bucketed co-located joins for the repeated key joins, the last
+  * asserted at the PLAN level — a layout that silently starts shuffling
+  * is a perf regression the row-level tests can't see.
   */
 class LayoutSpec extends AnyFunSuite {
-
-  test("partitioned write + filtered read prunes to one partition directory") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-layout-p").toString
-    Layout.writePartitioned(
-      Tables.orders(spark, sf001), s"$tmp/orders_p", "o_orderstatus")
-    val re = spark.read.parquet(s"$tmp/orders_p").filter(col("o_orderstatus") === "O")
-    val plan = re.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters") && plan.contains("o_orderstatus"),
-      s"expected partition filters in scan:\n$plan")
-    // pruned read must agree with the unpartitioned filter
-    val expected = Tables.orders(spark, sf001)
-      .filter(col("o_orderstatus") === "O").count()
-    assert(re.count() == expected)
-  }
 
   test("compact merges a many-small-file directory, preserving the data") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-layout-c").toString
