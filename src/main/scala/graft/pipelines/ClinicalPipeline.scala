@@ -220,24 +220,6 @@ object ClinicalPipeline {
       .drop("__src", "__pos", "__rn")
   }
 
-  /** The 4 `#`-prefixed cBioPortal metadata lines for a frame's columns,
-    * from the collected attribute-metadata facts (display name,
-    * description, data type, priority per normalized column; replaces
-    * the reference's insert_clinical_metadata.py subprocess,
-    * `clinical.py:550-620`). Missing attributes fall back to the column
-    * name / STRING / 1.
-    */
-  private def cbioHeaderBlock(columns: Seq[String],
-                              meta: Map[String, (String, String, String, String)]): Seq[String] = {
-    def line(f: ((String, String, String, String)) => String, dflt: String => String) =
-      "#" + columns.map(c => meta.get(c).map(f).getOrElse(dflt(c))).mkString("\t")
-    Seq(
-      line(_._1, identity),
-      line(_._2, identity),
-      line(_._3, _ => "STRING"),
-      line(_._4, _ => "1"))
-  }
-
   /** The two clinical meta files every study package carries, written
     * next to their data files (meta_clinical_{patient,sample}.txt,
     * cBioPortal's `meta_*` ingestion descriptors).
@@ -272,14 +254,17 @@ object ClinicalPipeline {
     val sampleIn = sample.filter(col("Dataset") === dataset).drop("Dataset")
     val patientIn = patient.filter(col("Dataset") === dataset).drop("Dataset")
 
-    // one collect of the control table serves both header blocks
+    // one collect of the control table serves both header blocks; an
+    // attribute it does not describe takes name / name / STRING / 1
     val meta = attrMeta
       .select("NORMALIZED_COLUMN_HEADER", "DISPLAY_NAME", "DESCRIPTION", "DATA_TYPE", "PRIORITY")
       .collect()
-      .map(r => r.getString(0) -> (r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
+      .map(r => r.getString(0) ->
+        Tsv.HeaderFields(r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
       .toMap
     def writeHeadered(df: DataFrame, file: String): Unit =
-      Tsv.writeTsvFile(df, s"$outDir/$file", cbioHeaderBlock(df.columns.toSeq, meta))
+      Tsv.writeTsvFile(df, s"$outDir/$file", Tsv.headerBlock(df.columns.toSeq.map(c =>
+        (c, meta.getOrElse(c, Tsv.HeaderFields.Unknown), "STRING"))))
 
     // V2/V5/V6 ride the export write itself (Rules.observed → df.observe):
     // the counters are computed by the SAME pass that serializes the

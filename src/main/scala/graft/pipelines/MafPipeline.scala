@@ -31,8 +31,8 @@ object MafPipeline {
     * file's header positionally, silently misaligning folders whose MAFs
     * carry different column sets. But per-file `inferSchema` reads pay
     * TWO driver-coordinated passes per file (~20k file opens for a
-    * 10k-file folder) — so instead a HEADER CENSUS: read only the first
-    * non-comment line of each file driver-side (a few KB per file), group
+    * 10k-file folder) — so instead a HEADER CENSUS: read only the column
+    * line of each file up front ([[Tsv.readHead]]), group
     * files by their exact ordered header, and run ONE distributed
     * inference+data scan per header GROUP. Positional binding within a
     * group is safe by construction; groups (typically 1-3 per study)
@@ -49,30 +49,6 @@ object MafPipeline {
     if (files.isEmpty) None else mergeByHeader(spark, files.toSeq)
   }
 
-  /** First non-comment line of a TSV, split on tabs — the header census
-    * probe. Reads a handful of KB through a buffered stream and closes;
-    * never the file body. MAF headers are plain identifiers, so a raw
-    * tab split (no quote handling) is faithful.
-    */
-  private def headerTokens(fs: org.apache.hadoop.fs.FileSystem,
-                           file: org.apache.hadoop.fs.Path): Option[Seq[String]] = {
-    // a store entity resolves to a version DIRECTORY (Spark's csv reader
-    // accepts it directly); sniff its first visible file — one entity's
-    // files share one header
-    if (fs.getFileStatus(file).isDirectory) {
-      val children = fs.listStatus(file).map(_.getPath)
-        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-        .sortBy(_.getName)
-      return children.headOption.flatMap(headerTokens(fs, _))
-    }
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(file), java.nio.charset.StandardCharsets.UTF_8))
-    try Iterator.continually(in.readLine()).takeWhile(_ != null)
-      .find(l => l.nonEmpty && l.charAt(0) != '#')
-      .map(_.split("\t", -1).toSeq)
-    finally in.close()
-  }
-
   /** By-name merge of TSV files via the header census (see
     * [[readAndMergeMafs]]). Files with no header line (empty or
     * all-comment) contribute no rows and are skipped, like pandas'
@@ -81,10 +57,10 @@ object MafPipeline {
   private[pipelines] def mergeByHeader(spark: SparkSession,
                                        files: Seq[String]): Option[DataFrame] = {
     if (files.isEmpty) return None
-    val fs = new org.apache.hadoop.fs.Path(files.head)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    // a store entity resolves to a version directory, whose files share
+    // one header: Tsv.readHead reads its first data file
     val withHeader = files.flatMap { f =>
-      headerTokens(fs, new org.apache.hadoop.fs.Path(f)).map(h => (h, f))
+      Tsv.readHead(f).map(_.columns).filter(_.nonEmpty).map(h => (h, f))
     }
     if (withHeader.isEmpty) return None
     // first-appearance group order keeps the merge deterministic

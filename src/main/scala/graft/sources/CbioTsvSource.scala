@@ -19,6 +19,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
   WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.execution.datasources.v2.csv.{CSVScan, CSVScanBuilder, CSVTable}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -33,7 +34,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   spark.read.format("cbio").load("data_clinical_sample.txt")
   *
   * The READ side's own part is the schema: the header block of one file
-  * types `NUMBER` columns as DoubleType and puts display-name /
+  * ([[Tsv.readHead]]) types `NUMBER` columns as DoubleType and puts display-name /
   * description / priority in each field's `Metadata` — the
   * schema-at-rest the reference keeps in a side table. The scan is
   * Spark's CSV reader in [[CbioTsvSource.ScanOptions]], with Spark's
@@ -42,9 +43,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * The WRITE side (the reference's `save_to_synapse`, `load.py:38-82`)
   * is the same format produced distributed: each task streams its
-  * partition to a staged part file (own `#` header block + header row,
-  * QUOTE_MINIMAL cells, `%.12g` doubles — byte-compatible with the K1
-  * sink), and the driver-side commit renames staged files into place and
+  * partition to a staged part file (own `#` header block + header row +
+  * rows, written by [[Tsv.headerBlock]] and [[Tsv.RowRenderer]], the K1
+  * sink's own rules), and one commit step renames staged files into place and
   * bumps a `_version.json` sidecar carrying the Synapse-style version
   * number and `version_comment`. Uncommitted attempts never become
   * visible (readers skip `_`-prefixed files), so a failed or speculative
@@ -144,41 +145,19 @@ object CbioTsvSource {
     }
   }
 
-  /** Lines of the header block + the column header line of a file (for a
-    * directory: of its first data file — all parts share the schema).
+  /** The schema the header block of `path` declares (for a directory, of
+    * its first data file): NUMBER columns typed double, every other
+    * column a string, display name / description / priority in each
+    * field's metadata. A file without a block reads as all strings.
     */
-  private[sources] def headerLines(path: String): (Seq[String], String) = {
-    var p = new Path(path)
-    val fs = FileSystem.get(p.toUri, Bridge.activeHadoopConf())
-    if (fs.getFileStatus(p).isDirectory) {
-      val files = listDataFiles(fs, p)
-      require(files.nonEmpty, s"no data files in $path")
-      p = files.head
-    }
-    val in = fs.open(p)
-    try {
-      val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-      // explicit loop, NOT takeWhile over an Iterator.continually — that
-      // would consume (and lose) the first non-# line, the column header
-      val block = scala.collection.mutable.ArrayBuffer.empty[String]
-      var line = reader.readLine()
-      while (line != null && line.startsWith("#")) { block += line; line = reader.readLine() }
-      require(line != null, s"no header row in $path")
-      (block.toSeq, line)
-    } finally in.close()
-  }
-
   private[sources] def inferFromFile(path: String): StructType = {
-    val (block, header) = headerLines(path)
-    val names = header.split("\t", -1)
+    val head = Tsv.readHead(path).filter(_.columns.nonEmpty)
+      .getOrElse(throw new IllegalArgumentException(s"no header row in $path"))
     // the writer's block: #display, #description, #datatype, #priority
-    def row(i: Int): Array[String] =
-      if (block.length > i) block(i).stripPrefix("#").split("\t", -1)
-      else Array.empty
-    val (display, desc, dtype, prio) = (row(0), row(1), row(2), row(3))
-    def at(a: Array[String], i: Int): Option[String] =
+    val Seq(display, desc, dtype, prio) = (0 until 4).map(head.blockRow)
+    def at(a: Seq[String], i: Int): Option[String] =
       if (i < a.length && a(i).nonEmpty) Some(a(i)) else None
-    StructType(names.zipWithIndex.map { case (name, i) =>
+    StructType(head.columns.zipWithIndex.map { case (name, i) =>
       val t = at(dtype, i) match {
         case Some("NUMBER") => DoubleType
         case _              => StringType
@@ -234,18 +213,20 @@ private[sources] class CbioWriteBuilder(path: String, info: LogicalWriteInfo)
   // mode("overwrite") plans OverwriteByExpression(true) -> truncate()
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
 
+  // the session time zone is read here, at planning, for the tasks
   override def build(): Write = {
-    CbioWriteSupport.validateSchema(info.schema())
-    new CbioWrite(path, info.schema(), info.queryId(),
+    Tsv.requireWritable(info.schema())
+    new CbioWrite(path, info.schema(), SQLConf.get.sessionLocalTimeZone, info.queryId(),
       Option(info.options.get("versionComment")), truncateFirst)
   }
 }
 
-private[sources] class CbioWrite(path: String, schema: StructType, queryId: String,
-                                 comment: Option[String], truncateFirst: Boolean)
+private[sources] class CbioWrite(path: String, schema: StructType, timeZone: String,
+                                 queryId: String, comment: Option[String],
+                                 truncateFirst: Boolean)
     extends Write {
   override def toBatch: BatchWrite =
-    new CbioBatchWrite(path, schema, queryId, comment, truncateFirst)
+    new CbioBatchWrite(path, schema, timeZone, queryId, comment, truncateFirst)
 }
 
 /** Task commit message: the staged file this attempt produced (None for an
@@ -254,8 +235,9 @@ private[sources] class CbioWrite(path: String, schema: StructType, queryId: Stri
 private[sources] case class CbioCommit(partitionId: Int, staged: Option[String])
     extends WriterCommitMessage
 
-private[sources] class CbioBatchWrite(path: String, schema: StructType, queryId: String,
-                                      comment: Option[String], truncateFirst: Boolean)
+private[sources] class CbioBatchWrite(path: String, schema: StructType, timeZone: String,
+                                      queryId: String, comment: Option[String],
+                                      truncateFirst: Boolean)
     extends BatchWrite {
 
   private def fs(): (FileSystem, Path) = {
@@ -266,7 +248,7 @@ private[sources] class CbioBatchWrite(path: String, schema: StructType, queryId:
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val (hfs, dir) = fs()
     hfs.mkdirs(dir) // driver-side, before any task runs
-    CbioWriterFactory(path, schema, queryId, Bridge.serializableConf())
+    CbioWriterFactory(path, schema, timeZone, queryId, Bridge.serializableConf())
   }
 
   /** Driver-side commit: the only place staged data becomes visible.
@@ -321,21 +303,21 @@ private[sources] class CbioBatchWrite(path: String, schema: StructType, queryId:
 }
 
 private[sources] case class CbioWriterFactory(path: String, schema: StructType,
-                                              queryId: String,
+                                              timeZone: String, queryId: String,
                                               conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new CbioDataWriter(path, schema, queryId, partitionId, taskId, conf)
+    new CbioDataWriter(path, schema, timeZone, queryId, partitionId, taskId, conf)
 }
 
-private[sources] class CbioDataWriter(path: String, schema: StructType, queryId: String,
-                                      partitionId: Int, taskId: Long,
+private[sources] class CbioDataWriter(path: String, schema: StructType, timeZone: String,
+                                      queryId: String, partitionId: Int, taskId: Long,
                                       conf: SerializableConfiguration)
     extends DataWriter[InternalRow] {
 
   private val staged = s"$path/_staging-$queryId-p$partitionId-t$taskId.cbio.txt"
   private var out: java.io.Writer = _
-  private val cells = schema.fields.map(f => CbioWriteSupport.cellWriter(f.dataType))
+  private val renderer = new Tsv.RowRenderer(schema, java.time.ZoneId.of(timeZone))
 
   // opened on first row: empty partitions produce no file at all
   private def writer(): java.io.Writer = {
@@ -344,7 +326,17 @@ private[sources] class CbioDataWriter(path: String, schema: StructType, queryId:
       val hfs = FileSystem.get(p.toUri, conf.value)
       out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
         hfs.create(p, true), java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
-      CbioWriteSupport.headerBlock(schema).foreach { l => out.write(l); out.write('\n') }
+      // the block round-trips the field metadata a cbio read surfaced;
+      // an explicit "dataType" wins over the Spark type, so a
+      // STRING-declared attribute inferred numeric still publishes STRING
+      Tsv.headerBlock(schema.fields.toSeq.map { f =>
+        def meta(key: String) = if (f.metadata.contains(key)) f.metadata.getString(key) else null
+        (f.name, Tsv.HeaderFields(meta("displayName"), meta("description"), meta("dataType"),
+          meta("priority")), f.dataType match {
+          case _: NumericType => "NUMBER"
+          case _              => "STRING"
+        })
+      }).foreach { l => out.write(l); out.write('\n') }
       out.write(schema.fieldNames.mkString("\t")); out.write('\n')
     }
     out
@@ -352,13 +344,7 @@ private[sources] class CbioDataWriter(path: String, schema: StructType, queryId:
 
   override def write(row: InternalRow): Unit = {
     val w = writer()
-    var i = 0
-    while (i < cells.length) {
-      if (i > 0) w.write('\t')
-      val cell = if (row.isNullAt(i)) "" else CbioWriteSupport.quoteMinimal(cells(i)(row, i), i == 0)
-      w.write(if (cell.isEmpty && cells.length == 1) "\"\"" else cell) // as Tsv.toLines
-      i += 1
-    }
+    w.write(renderer.line(row))
     w.write('\n')
   }
 
@@ -375,90 +361,4 @@ private[sources] class CbioDataWriter(path: String, schema: StructType, queryId:
   }
 
   override def close(): Unit = ()
-}
-
-/** Serialization rules shared by every cbio part writer — the same bytes
-  * the K1 sink emits ([[Tsv.cellToString]]): `%.12g` doubles, ISO dates,
-  * empty cell for null, QUOTE_MINIMAL quoting.
-  */
-private[sources] object CbioWriteSupport {
-
-  def validateSchema(schema: StructType): Unit = {
-    val bad = schema.fields.filterNot(f => f.dataType match {
-      case StringType | DoubleType | FloatType | LongType | IntegerType |
-           ShortType | ByteType | BooleanType | DateType | TimestampType => true
-      case _: DecimalType => true
-      case _ => false
-    })
-    require(bad.isEmpty,
-      s"cbio sink supports flat string/numeric/boolean/date columns; " +
-        s"unsupported: ${bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")}")
-  }
-
-  /** The 4-line `#` metadata block (display/description/datatype/priority),
-    * round-tripping field metadata the reader surfaced — a cbio read →
-    * transform → cbio write keeps the clinical header intact.
-    */
-  def headerBlock(schema: StructType): Seq[String] = {
-    def meta(f: StructField, key: String, default: String): String = {
-      val v = if (f.metadata.contains(key)) f.metadata.getString(key) else default
-      v.replaceAll("[\t\n\r]", " ")
-    }
-    val display = schema.fields.map(f => meta(f, "displayName", f.name))
-    val desc = schema.fields.map(f => meta(f, "description", f.name))
-    // an explicit "dataType" metadata wins over the Spark-type derivation:
-    // a STRING-declared attribute whose values happen to be numeric (and
-    // was inferred numeric on read) must still publish STRING, and a
-    // NUMBER-declared string column keeps its declaration without a
-    // value-nulling cast — header parity with the attrMeta contract
-    val dtype = schema.fields.map(f => meta(f, "dataType", f.dataType match {
-      case _: NumericType => "NUMBER"
-      case _              => "STRING"
-    }))
-    val prio = schema.fields.map(f => meta(f, "priority", "1"))
-    Seq(display, desc, dtype, prio).map(_.mkString("#", "\t", ""))
-  }
-
-  /** Per-type cell renderer, resolved once per column — no per-row
-    * dataType dispatch in the write loop.
-    */
-  def cellWriter(dt: DataType): (InternalRow, Int) => String = dt match {
-    case StringType  => (r, i) => r.getUTF8String(i).toString
-    case DoubleType  => (r, i) => graft.functions.Format12gUtil.formatString(r.getDouble(i))
-    case FloatType   => (r, i) => graft.functions.Format12gUtil.formatString(r.getFloat(i).toDouble)
-    case LongType    => (r, i) => r.getLong(i).toString
-    case IntegerType => (r, i) => r.getInt(i).toString
-    case ShortType   => (r, i) => r.getShort(i).toString
-    case ByteType    => (r, i) => r.getByte(i).toString
-    case BooleanType => (r, i) => r.getBoolean(i).toString
-    case d: DecimalType =>
-      (r, i) => r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString
-    case DateType =>
-      (r, i) => java.time.LocalDate.ofEpochDay(r.getInt(i).toLong).toString
-    case TimestampType => // micros since epoch, rendered in UTC like the parquet fixtures
-      (r, i) => {
-        val us = r.getLong(i)
-        java.time.LocalDateTime.ofEpochSecond(
-          Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L).toInt * 1000,
-          java.time.ZoneOffset.UTC)
-          .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-      }
-    case other => throw new IllegalArgumentException(s"unsupported cbio cell type $other")
-  }
-
-  /** pandas QUOTE_MINIMAL: quote only cells containing a separator, line
-    * break or quote; double inner quotes. A `first`-column cell that
-    * begins with `#` is quoted too: unquoted, the `comment = "#"` scan
-    * would drop its line. Mirrors [[Tsv.cellToString]].
-    */
-  def quoteMinimal(s: String, first: Boolean): String = {
-    var needs = first && s.startsWith("#")
-    var i = 0
-    while (i < s.length && !needs) {
-      val c = s.charAt(i)
-      needs = c == '\t' || c == '\n' || c == '\r' || c == '"'
-      i += 1
-    }
-    if (needs) "\"" + s.replace("\"", "\"\"") + "\"" else s
-  }
 }

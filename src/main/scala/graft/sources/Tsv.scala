@@ -1,28 +1,42 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.time.{ZoneId, ZoneOffset}
+import java.time.format.DateTimeFormatter
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, TimeZoneAwareExpression,
+  UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.Format12g.format12g
+import graft.functions.Format12gUtil
 
-/** TSV source/sink layer reproducing the reference's file surface
-  * (SURVEY §2.1):
+/** The one owner of the cBioPortal file format (SURVEY §2.1): every
+  * module that writes or parses a package file calls it.
   *  - S2/S3/S4: `pd.read_csv(sep="\t", comment="#")` scans: Spark's CSV
   *    reader in [[Dialect]], as the `cbio` scan is
-  *  - K1: `to_csv(sep="\t", index=False, float_format="%.12g")` sink
+  *  - K1: `to_csv(sep="\t", index=False, float_format="%.12g")`: the
+  *    cell and row rules in [[RowRenderer]], which both sinks apply —
+  *    [[writeTsvFile]] through one projection ([[RenderLine]]), the `cbio`
+  *    sink per row
+  *  - the clinical `#` header block: written by [[headerBlock]], read back
+  *    with the column line by [[readHead]]
   *  - K3: case-list text files (key-value header + tab-joined id list)
   *  - K4: meta key-value files
   *
-  * Each column is formatted by a codegen'd expression and lines are
-  * assembled with `concat_ws`, distributed; a file output then coalesces
-  * to one partition and streams into place — the reference's outputs are
-  * small per-dataset files. A multi-part output with the header block in
-  * every part is the `cbio` sink's (`CbioTsvSource`, whose header-block
-  * schema and versioned commit stay hand-written).
+  * A single-file output coalesces to one partition and streams into
+  * place — the reference's outputs are small per-dataset files. A
+  * multi-part output with the header block in every part is the `cbio`
+  * sink's (`CbioTsvSource`, whose versioned commit stays its own).
   */
 object Tsv {
 
@@ -60,82 +74,190 @@ object Tsv {
     }
   }
 
-  /** [[read]] over many files in ONE distributed scan. Only safe when
-    * every file carries the SAME header (multi-file CSV binds each file
-    * to the first file's header positionally) — callers group by header
-    * first (see MafPipeline.mergeByHeader).
+  /** [[read]] over many files in ONE distributed scan, `inferSchema` on.
+    * Only safe when every file carries the SAME header (multi-file CSV
+    * binds each file to the first file's header positionally) — callers
+    * group by header first (see MafPipeline.mergeByHeader).
     */
   def readMany(spark: SparkSession, paths: Seq[String],
-               comment: Option[Char] = None,
-               inferSchema: Boolean = true,
-               multiLine: Boolean = false): DataFrame =
-    reader(spark, comment, multiLine).option("inferSchema", inferSchema).csv(paths: _*)
+               comment: Option[Char] = None): DataFrame =
+    reader(spark, comment, multiLine = false).option("inferSchema", true).csv(paths: _*)
 
   /** A study package file read back as written: every column a string,
     * `#` lines skipped, one header job and no inference pass; None when
     * the file is absent. Ids keep their written form (`007` stays `007`)
-    * and values are checked as the portal's importer reads them.
+    * and values are checked as the portal's importer reads them. Quoted
+    * values may span lines, as the sinks write them and the `cbio` scan
+    * reads them, so each file is one task.
     */
   def readWritten(spark: SparkSession, dir: String, file: String): Option[DataFrame] = {
     val p = Paths.get(dir, file)
     if (!Files.exists(p)) None
-    else Some(read(spark, p.toString, comment = Some('#'), inferSchema = false))
+    else Some(read(spark, p.toString, comment = Some('#'), inferSchema = false, multiLine = true))
   }
 
-  /** Format one column to its TSV string per the reference's serialization:
-    * doubles/floats via `%.12g`, everything else via cast-to-string; null →
-    * empty string (pandas `to_csv` NaN rendering). Values containing the
-    * separator, a newline/CR, or a quote are minimally quoted with doubled
-    * inner quotes (pandas QUOTE_MINIMAL) — Spark's CSV reader unquotes
-    * them back, so embedded tabs round-trip instead of corrupting rows.
-    * In the `first` column a value beginning with `#` is quoted too, or
-    * the [[Dialect]]'s comment rule would drop its line on re-read.
+  /** Each column type's K1 cell rule: `%.12g` doubles and floats, plain
+    * decimals, ISO dates, timestamps in the session time zone `zone` (as
+    * Spark's own CSV writer renders them), every other value as its
+    * string. Flat types only, and the all-null type of a `lit(null)`.
     */
-  def cellToString(df: DataFrame, field: StructField, first: Boolean): Column = {
-    val c = graft.functions.Fns.qcol(field.name)
-    val s = field.dataType match {
-      case DoubleType            => format12g(c)
-      case FloatType             => format12g(c.cast(DoubleType))
-      case TimestampType         => date_format(c, "yyyy-MM-dd HH:mm:ss")
-      case DateType              => date_format(c, "yyyy-MM-dd")
-      case _                     => c.cast(StringType)
+  private def cellRule(zone: ZoneId): PartialFunction[DataType, (InternalRow, Int) => String] = {
+    case StringType     => (r, i) => r.getUTF8String(i).toString
+    case DoubleType     => (r, i) => Format12gUtil.formatString(r.getDouble(i))
+    case FloatType      => (r, i) => Format12gUtil.formatString(r.getFloat(i).toDouble)
+    case LongType       => (r, i) => r.getLong(i).toString
+    case IntegerType    => (r, i) => r.getInt(i).toString
+    case ShortType      => (r, i) => r.getShort(i).toString
+    case ByteType       => (r, i) => r.getByte(i).toString
+    case BooleanType    => (r, i) => r.getBoolean(i).toString
+    case d: DecimalType =>
+      (r, i) => r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString
+    case DateType       => (r, i) => java.time.LocalDate.ofEpochDay(r.getInt(i).toLong).toString
+    case TimestampType  =>
+      val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(zone)
+      (r, i) => fmt.format(DateTimeUtils.microsToInstant(r.getLong(i)))
+    case NullType       => (_, _) => "" // every cell is null
+  }
+
+  /** Fails, naming the offending columns, unless both sinks can write
+    * every column of `schema`.
+    */
+  private[sources] def requireWritable(schema: StructType): Unit = {
+    val bad = schema.fields.filterNot(f => cellRule(ZoneOffset.UTC).isDefinedAt(f.dataType))
+    require(bad.isEmpty,
+      s"cbio sink supports flat string/numeric/boolean/date columns; " +
+        s"unsupported: ${bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")}")
+  }
+
+  /** The K1 line of a row (no line break): each cell by its column's
+    * [[cellRule]], resolved once per column, and null as an empty cell.
+    * Cells holding a tab, line break or quote are quoted with inner
+    * quotes doubled (pandas QUOTE_MINIMAL), and so is a first cell that
+    * begins with `#`, which the [[Dialect]]'s comment rule would drop on
+    * re-read. A one-column row whose cell is empty is written `""`, as
+    * Python's csv module does: the scan skips blank lines.
+    */
+  private[sources] final class RowRenderer(schema: StructType, zone: ZoneId) {
+    requireWritable(schema)
+    private val cells = schema.fields.map(f => cellRule(zone)(f.dataType))
+
+    def line(row: InternalRow): String = {
+      val sb = new java.lang.StringBuilder
+      var i = 0
+      while (i < cells.length) {
+        if (i > 0) sb.append('\t')
+        if (!row.isNullAt(i)) quoteMinimal(sb, cells(i)(row, i), i == 0)
+        i += 1
+      }
+      if (sb.length == 0 && cells.length == 1) "\"\"" else sb.toString
     }
-    val quoted = when(s.rlike(if (first) "^#|[\t\n\r\"]" else "[\t\n\r\"]"),
-      concat(lit("\""), regexp_replace(s, "\"", "\"\""), lit("\""))).otherwise(s)
-    coalesce(quoted, lit("")) // concat_ws would silently drop nulls
+
+    private def quoteMinimal(sb: java.lang.StringBuilder, s: String, first: Boolean): Unit = {
+      var needs = first && s.startsWith("#")
+      var i = 0
+      while (i < s.length && !needs) {
+        val c = s.charAt(i)
+        needs = c == '\t' || c == '\n' || c == '\r' || c == '"'
+        i += 1
+      }
+      if (needs) sb.append('"').append(s.replace("\"", "\"\"")).append('"') else sb.append(s)
+    }
   }
 
-  /** The whole frame as one `line` string column (header not included).
-    * A one-column row whose cell is empty is written `""`, as Python's
-    * csv module does: the scan skips blank lines.
+  /** One column's cBioPortal clinical header fields; a null field is
+    * unknown and takes its default in [[headerBlock]].
     */
-  def toLines(df: DataFrame): DataFrame = {
-    val cells = df.schema.fields.zipWithIndex.map { case (f, i) => cellToString(df, f, i == 0) }
-    val line = concat_ws("\t", cells.toIndexedSeq: _*)
-    df.select((if (cells.length == 1) when(line === "", lit("\"\"")).otherwise(line) else line).as("line"))
+  final case class HeaderFields(displayName: String, description: String,
+                                dataType: String, priority: String)
+
+  object HeaderFields {
+    val Unknown: HeaderFields = HeaderFields(null, null, null, null)
   }
 
-  def headerLine(df: DataFrame): String = df.columns.mkString("\t")
+  /** The 4-line `#` clinical header block — display names, descriptions,
+    * datatypes, priorities — for columns given as (name, fields, default
+    * datatype). An unknown field defaults to the name, the name, the
+    * default datatype and `1`. Tabs, CR and LF in a field become spaces,
+    * so every row keeps one field per column. Replaces the reference's
+    * `insert_clinical_metadata.py` subprocess (`clinical.py:550-620`).
+    */
+  def headerBlock(columns: Seq[(String, HeaderFields, String)]): Seq[String] = {
+    def row(field: HeaderFields => String, default: (String, String) => String): String =
+      columns.map { case (name, fields, dataType) =>
+        Option(field(fields)).getOrElse(default(name, dataType)).replaceAll("[\t\n\r]", " ")
+      }.mkString("#", "\t", "")
+    Seq(row(_.displayName, (name, _) => name), row(_.description, (name, _) => name),
+      row(_.dataType, (_, dataType) => dataType), row(_.priority, (_, _) => "1"))
+  }
+
+  /** A TSV file's head: its `#` lines and its column names (empty when
+    * the file has no column line).
+    */
+  final case class Head(block: Seq[String], columns: Seq[String]) {
+    /** Row `i` of the `#` block split into its per-column fields; empty
+      * when the block has no row `i`.
+      */
+    def blockRow(i: Int): Seq[String] =
+      if (i < block.length) block(i).stripPrefix("#").split("\t", -1).toSeq else Nil
+  }
+
+  /** The files a scan of `path` reads: `path` itself, or a directory's
+    * data files by name ([[CbioTsvSource.listDataFiles]]).
+    */
+  def dataFiles(path: String): Seq[String] = {
+    val p = new HPath(path)
+    val fs = p.getFileSystem(Bridge.activeHadoopConf())
+    if (fs.getFileStatus(p).isDirectory) CbioTsvSource.listDataFiles(fs, p).map(_.toString).toSeq
+    else Seq(path)
+  }
+
+  /** The head of `path` — for a directory, of its first data file: all
+    * parts share one header. Read through Hadoop FS a line at a time,
+    * never the file body: `#` lines form the block, blank lines are
+    * skipped (as pandas and Spark's CSV scan skip them), and the first
+    * other line is the column line, split on tabs (headers are plain
+    * identifiers, never quoted). None when a directory has no data file.
+    */
+  def readHead(path: String): Option[Head] =
+    dataFiles(path).headOption.map { file =>
+      val p = new HPath(file)
+      val in = new BufferedReader(new InputStreamReader(
+        p.getFileSystem(Bridge.activeHadoopConf()).open(p), StandardCharsets.UTF_8))
+      try {
+        val block = scala.collection.mutable.ArrayBuffer.empty[String]
+        var line = in.readLine()
+        while (line != null && (line.isEmpty || line.startsWith("#"))) {
+          if (line.nonEmpty) block += line
+          line = in.readLine()
+        }
+        Head(block.toSeq, if (line == null) Nil else line.split("\t", -1).toSeq)
+      } finally in.close()
+    }
 
   /** Single-file TSV with optional `#`-prefixed header block (the
-    * cBioPortal 5-line clinical header) — K1 + the header-insertion step
-    * the reference delegates to a subprocess
+    * cBioPortal 5-line clinical header, [[headerBlock]]) — K1 + the
+    * header-insertion step the reference delegates to a subprocess
     * (reference `clinical.py:550-620`). Small per-dataset outputs only.
+    * The rows are rendered by a Dataset write, so `observe` metrics on
+    * `df` reach their `Observation`.
     */
   def writeTsvFile(df: DataFrame, file: String, headerBlock: Seq[String] = Nil): Unit = {
+    requireWritable(df.schema)
     val target = Paths.get(file)
     Option(target.getParent).foreach(Files.createDirectories(_))
     val tmp = Files.createTempDirectory("graft-tsv")
     try {
       val tmpOut = tmp.resolve("out").toString
-      toLines(df).coalesce(1).write.option("header", "false").text(tmpOut)
+      val row = struct(df.columns.toIndexedSeq.map(graft.functions.Fns.qcol): _*)
+      df.select(Bridge.column(RenderLine(Bridge.expression(row))).as("line"))
+        .coalesce(1).write.option("header", "false").text(tmpOut)
       val listing = Files.list(Paths.get(tmpOut))
       val part = try listing.filter(_.getFileName.toString.startsWith("part-"))
         .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $tmpOut"))
       finally listing.close()
       val sb = new StringBuilder
       headerBlock.foreach { h => sb.append(h).append('\n') }
-      sb.append(headerLine(df)).append('\n')
+      sb.append(df.columns.mkString("\t")).append('\n')
       Files.write(target, sb.toString.getBytes(StandardCharsets.UTF_8))
       // stream the part file into place — never the whole file through a
       // driver-side byte array
@@ -213,4 +335,31 @@ object Tsv {
     }
     Files.deleteIfExists(p)
   }
+}
+
+/** [[Tsv.RowRenderer]] over a struct of every column of a frame: each
+  * row's K1 line, in the session time zone the analyzer resolves.
+  */
+private[sources] case class RenderLine(child: Expression, timeZoneId: Option[String] = None)
+    extends UnaryExpression with TimeZoneAwareExpression {
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = false
+
+  @transient private lazy val renderer =
+    new Tsv.RowRenderer(child.dataType.asInstanceOf[StructType], zoneId)
+
+  def render(row: InternalRow): UTF8String = UTF8String.fromString(renderer.line(row))
+
+  override protected def nullSafeEval(row: Any): Any = render(row.asInstanceOf[InternalRow])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("renderLine", this)
+    defineCodeGen(ctx, ev, row => s"$self.render($row)")
+  }
+
+  override def withTimeZone(timeZoneId: String): TimeZoneAwareExpression =
+    copy(timeZoneId = Option(timeZoneId))
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

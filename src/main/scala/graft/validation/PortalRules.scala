@@ -19,9 +19,11 @@ import graft.sources.Tsv
   * reproduced here in two layers:
   *
   *  - [[structuralReport]] — driver-side checks over the package's small
-  *    control files (meta key-value files, case-list files, the
-  *    4+1-line clinical header block). These files are kilobytes by
-  *    contract, so driver-side parsing is the right altitude.
+  *    control files (meta key-value files, case-list files) and the
+  *    4+1-line clinical header block of each clinical part, read by
+  *    [[graft.sources.Tsv.readHead]] without the file body. These are
+  *    kilobytes by contract, so parsing them in one process is the right
+  *    altitude.
   *  - the data rules, as distributed aggregates: [[mafFieldRules]], the
   *    strict-MAF field checks in ONE pass over the MAF; the clinical value
   *    rules, one pass per raw clinical file; and ONE key census
@@ -555,33 +557,26 @@ object PortalRules {
     val dataOrphans = listFiles(root, "data_")
       .count(p => !referenced(p.getFileName.toString)).toLong
 
-    // ONE read of each clinical part's header region yields the
-    // header-block shape check, the duplicate-attribute-column count, AND
-    // the attribute-id-format count (each part of a parted dataset repeats
+    // ONE head read of each clinical part yields the header-block shape
+    // check, the duplicate-attribute-column count, AND the
+    // attribute-id-format count (each part of a parted dataset repeats
     // the header and is checked on its own)
     val clinicalHeaderStats = listFiles(root, "data_clinical_")
-      .flatMap(clinicalParts).map { p =>
-        val lines = headLines(p, 6)
-        val block = lines.takeWhile(_.startsWith("#"))
-        val cols = lines.drop(block.size).headOption.getOrElse("")
-          .split("\t", -1).toSeq
+      .flatMap(p => Tsv.dataFiles(p.toString)).flatMap(Tsv.readHead(_)).map { head =>
+        val cols = head.columns
+        val rows = head.block.indices.map(head.blockRow)
         val headerBad =
-          if (block.size != 4) 1L
+          if (rows.size != 4) 1L
           else {
-            val counts = block.map(_.stripPrefix("#").split("\t", -1).length)
-            val datatypes = block(2).stripPrefix("#").split("\t", -1)
-            val priorities = block(3).stripPrefix("#").split("\t", -1)
-            val bad = counts.exists(_ != cols.length) ||
-              datatypes.exists(d => !ValidHeaderDatatypes(d)) ||
-              priorities.exists(pr => scala.util.Try(pr.trim.toInt).isFailure)
+            val bad = rows.exists(_.length != cols.length) ||
+              rows(2).exists(d => !ValidHeaderDatatypes(d)) ||
+              rows(3).exists(pr => scala.util.Try(pr.trim.toInt).isFailure)
             if (bad) 1L else 0L
           }
         // display names (header row 1) must be unique too — two
         // attributes rendering under one label are indistinguishable in
         // the portal's clinical tables (validateData warns)
-        val displayNames =
-          if (block.isEmpty) Seq.empty
-          else block.head.stripPrefix("#").split("\t", -1).toSeq
+        val displayNames = head.blockRow(0)
         (headerBad, (cols.size - cols.distinct.size).toLong,
           cols.count(c => !c.matches(AttrIdPattern)).toLong,
           (displayNames.size - displayNames.distinct.size).toLong)
@@ -647,12 +642,7 @@ object PortalRules {
     // file PATIENT_ID — and the patient file must NOT carry SAMPLE_ID
     def headerCols(name: String): Option[Seq[String]] = {
       val p = root.resolve(name)
-      if (!Files.exists(p)) None
-      else clinicalParts(p).headOption.map { part =>
-        val lines = headLines(part, 6)
-        lines.drop(lines.takeWhile(_.startsWith("#")).size)
-          .headOption.getOrElse("").split("\t", -1).toSeq
-      }
+      if (!Files.exists(p)) None else Tsv.readHead(p.toString).map(_.columns)
     }
     val sampleCols = headerCols("data_clinical_sample.txt")
     val patientCols = headerCols("data_clinical_patient.txt")
@@ -777,33 +767,6 @@ object PortalRules {
         survivalAtSampleLevel == 0L))
   }
 
-  /** A clinical output may be a single file OR a parted dataset
-    * directory, as the `cbio` sink writes one; a package validated here
-    * may come from outside the program. Every part file must carry the
-    * full header block.
-    */
-  private def clinicalParts(p: Path): Seq[Path] =
-    if (!Files.isDirectory(p)) Seq(p)
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala.filter { f =>
-        val n = f.getFileName.toString
-        Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
-      }.toSeq.sortBy(_.toString)
-      finally s.close()
-    }
-
-  /** Only the header block + column line are needed — stream the first
-    * few lines instead of Files.readAllLines (a parted clinical output's
-    * part files are DATA files; loading them whole would put the corpus
-    * on the driver).
-    */
-  private def headLines(p: Path, n: Int): Seq[String] = {
-    val r = Files.newBufferedReader(p)
-    try Iterator.continually(r.readLine()).takeWhile(_ != null).take(n).toList
-    finally r.close()
-  }
-
   /** Numeric-literal shape a NUMBER-typed clinical value must match
     * (validateData accepts ints, decimals, scientific notation, and the
     * portal's `NA` missing marker).
@@ -858,13 +821,11 @@ object PortalRules {
   private def clinicalValueViolations(p: Path,
                                       raw: => DataFrame): Option[Map[String, Long]] = {
     if (!Files.exists(p)) return None
-    clinicalParts(p).headOption.flatMap { part =>
-      val lines = headLines(part, 6)
-      val block = lines.takeWhile(_.startsWith("#"))
-      if (block.size != 4) None
+    Tsv.readHead(p.toString).flatMap { head =>
+      if (head.block.size != 4) None
       else {
-        val cols = lines.drop(4).headOption.getOrElse("").split("\t", -1).toSeq
-        val datatypes = block(2).stripPrefix("#").split("\t", -1).toSeq
+        val cols = head.columns
+        val datatypes = head.blockRow(2)
         def badValue(c: String, pattern: String): Column =
           when(col(c).isNotNull && col(c).cast("string") =!= "" &&
             !col(c).cast("string").rlike(pattern), 1L).otherwise(0L)

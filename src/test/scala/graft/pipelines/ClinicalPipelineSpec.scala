@@ -94,6 +94,27 @@ class ClinicalPipelineSpec extends AnyFunSuite {
       .contains("reference_genome: hg38"))
   }
 
+  test("a header block from attrMeta with a tab, a newline and a null datatype stays one block") {
+    val sample = Seq(("s1", "p1", "LUAD", 2.5, "DsA"), ("s2", "p2", "SKCM", 4.0, "DsA"))
+      .toDF("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE", "TMB", "Dataset")
+    val patient = Seq(("p1", "DsA"), ("p2", "DsA")).toDF("PATIENT_ID", "Dataset")
+    val attrMeta = Seq(
+      ("CANCER_TYPE", "Cancer\tType", "Cancer type", null: String, "1"),
+      ("TMB", "TMB", "Mutation\nburden", "NUMBER", "2"))
+      .toDF("NORMALIZED_COLUMN_HEADER", "DISPLAY_NAME", "DESCRIPTION", "DATA_TYPE", "PRIORITY")
+    val tmp = Files.createTempDirectory("clin-dirty-meta").toString
+    ClinicalPipeline.exportDataset(patient, sample, "DsA", attrMeta, "iatlas_test", tmp)
+    val header = graft.validation.PortalRules.structuralReport(tmp)
+      .find(_._1 == "portal_clinical_header_block").get
+    assert(header._3, header.toString)
+    val back = spark.read.format("cbio").load(s"$tmp/data_clinical_sample.txt")
+    assert(back.columns.toSeq == Seq("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE", "TMB"))
+    assert(back.schema.map(_.dataType.typeName) == Seq("string", "string", "string", "double"))
+    assert(back.schema("CANCER_TYPE").metadata.getString("displayName") == "Cancer Type")
+    assert(back.schema("TMB").metadata.getString("description") == "Mutation burden")
+    assert(back.count() == 2)
+  }
+
   test("per-dataset export: cancer types that sanitize to one name share one case list") {
     // null, "" and "NA" all name cases_no_oncotree_code.txt, "A/B" and
     // "A_B" both cases_A_B.txt; the other dataset's row stays out

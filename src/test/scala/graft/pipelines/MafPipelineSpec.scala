@@ -166,9 +166,13 @@ class MafPipelineSpec extends AnyFunSuite {
     graft.sources.SynapseStore.store(
       Seq(("TP53", "chr17", 10.0)).toDF("Hugo_Symbol", "Chromosome", "t_ref_count"),
       root, "a.maf", folder, "v2 final")
-    graft.sources.SynapseStore.store(
+    val b = graft.sources.SynapseStore.store(
       Seq(("chr12", "KRAS", "x")).toDF("Chromosome", "Hugo_Symbol", "Extra_Col"),
       root, "b.maf", folder, "one-off")
+    // an entity resolves to a version directory: the census reads the
+    // columns of its first data file, past the sidecars
+    assert(graft.sources.Tsv.readHead(graft.sources.SynapseStore.get(root, b))
+      .map(_.columns).contains(Seq("Chromosome", "Hugo_Symbol", "Extra_Col")))
     // a non-.maf sibling must be excluded by the extension filter
     graft.sources.SynapseStore.store(
       Seq(("s1", "p1")).toDF("SAMPLE_ID", "PATIENT_ID"), root, "clin.txt", folder)

@@ -334,6 +334,33 @@ class StudyRunnerSpec extends AnyFunSuite {
     }
   }
 
+  test("a written sample value holding a newline: cases_all and the id rules see the written ids") {
+    def pkg(note: String): String = {
+      val dir = Files.createTempDirectory("report-newline").toString
+      def block(cols: String*) = Seq(cols, cols, cols.map(_ => "STRING"), cols.map(_ => "1"))
+        .map(_.mkString("#", "\t", ""))
+      graft.sources.Tsv.writeTsvFile(Seq(("s1", "p1", note), ("s2", "p2", "plain"))
+        .toDF("SAMPLE_ID", "PATIENT_ID", "NOTE"), s"$dir/data_clinical_sample.txt",
+        block("SAMPLE_ID", "PATIENT_ID", "NOTE"))
+      graft.sources.Tsv.writeTsvFile(Seq("p1", "p2").toDF("PATIENT_ID"),
+        s"$dir/data_clinical_patient.txt", block("PATIENT_ID"))
+      graft.sources.Tsv.writeTsvFile(Seq(("TP53", "s1"), ("KRAS", "s2"))
+        .toDF("Hugo_Symbol", "Tumor_Sample_Barcode"), s"$dir/data_mutations.txt")
+      StudyRunner.createCaseLists(spark, dir, "iatlas_nl")
+      dir
+    }
+    val withNewline = pkg("line1\nline2")
+    val all = Files.readString(Paths.get(withNewline, "case_lists", "cases_all.txt"))
+    assert(all.contains("case_list_ids: s1\ts2\n"), all)
+    val idRules = Set("case_list_ids_in_samples", "maf_barcode_in_samples", "no_dup_sample_id",
+      "sample_patient_in_patients", "clinical_no_dup_patient_id", "clinical_orphan_patients",
+      "cases_sequenced_ids_have_mutations", "maf_barcodes_in_cases_sequenced")
+    def ids(dir: String) = StudyValidator.report(spark, dir, None).filter(r => idRules(r._1))
+    val got = ids(withNewline)
+    assert(got.map(_._1).toSet == idRules)
+    assert(got == ids(pkg("line1 line2")))
+  }
+
   test("full lifecycle: fetch -> pipelines -> validate -> versioned upload") {
     val root = Files.createTempDirectory("study-run").toString
     val outDir = Files.createTempDirectory("study-out").toString

@@ -35,14 +35,24 @@ class CbioTsvSourceSpec extends AnyFunSuite {
   }
 
   test("schema: NUMBER -> double, metadata from the header block") {
-    val df = spark.read.format("cbio").load(writeFixture())
-    val s = df.schema
-    assert(s.fieldNames.toSeq == Seq("SAMPLE_ID", "PATIENT_ID", "TMB", "CANCER_TYPE"))
-    assert(s("TMB").dataType == DoubleType)
-    assert(s("SAMPLE_ID").dataType == StringType)
-    assert(s("TMB").metadata.getString("displayName") == "TMB Score")
-    assert(s("TMB").metadata.getString("priority") == "2")
-    assert(s("CANCER_TYPE").metadata.getString("description") == "Oncotree name")
+    val f = writeFixture()
+    // a blank line between the block and the column line is skipped, as
+    // the scan skips it
+    val blank = java.nio.file.Paths.get(f.replace(".txt", "_blank.txt"))
+    val lines = Files.readAllLines(java.nio.file.Paths.get(f))
+    lines.add(4, "")
+    Files.write(blank, lines)
+    Seq(f, blank.toString).foreach { path =>
+      val df = spark.read.format("cbio").load(path)
+      val s = df.schema
+      assert(s.fieldNames.toSeq == Seq("SAMPLE_ID", "PATIENT_ID", "TMB", "CANCER_TYPE"))
+      assert(s("TMB").dataType == DoubleType)
+      assert(s("SAMPLE_ID").dataType == StringType)
+      assert(s("TMB").metadata.getString("displayName") == "TMB Score")
+      assert(s("TMB").metadata.getString("priority") == "2")
+      assert(s("CANCER_TYPE").metadata.getString("description") == "Oncotree name")
+      assert(df.count() == 3)
+    }
   }
 
   test("values: rows parsed, empty cell -> null, numbers typed") {
@@ -148,6 +158,39 @@ class CbioTsvSourceSpec extends AnyFunSuite {
     assert(rows(Tsv.read(spark, s"$tmp/k1.txt", comment = Some('#'))) == want)
     df.write.format("cbio").mode("append").save(s"$tmp/sink")
     assert(rows(spark.read.format("cbio").load(s"$tmp/sink")) == want)
+  }
+
+  test("both sinks write the same data lines for every type at a non-UTC session zone") {
+    val ny = spark.newSession()
+    ny.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val tmp = Files.createTempDirectory("cbio-parity").toString
+    val id = col("id")
+    // row 2 is all nulls; rows 0 and 1 straddle the 2024 DST switch
+    def v(c: org.apache.spark.sql.Column) = when(id =!= 2, c)
+    val df = ny.range(0, 3, 1, 1).select(
+      v(concat(lit("#s"), id, lit("\t\"q\""))).as("STR"),
+      v(id / 3.0).as("DBL"),
+      v((id / 3.0).cast("float")).as("FLT"),
+      v(id * 10000000000L).as("LNG"),
+      v(id.cast("int") - 5).as("INT"),
+      v(id.cast("short")).as("SHT"),
+      v(id.cast("byte")).as("BYT"),
+      v(id % 2 === 0).as("BOOL"),
+      v((id / 7).cast("decimal(12,4)")).as("DEC"),
+      v(date_add(lit("2024-03-09").cast("date"), id.cast("int"))).as("DT"),
+      v(timestamp_seconds(lit(1710052200L) + id * 3600)).as("TS"))
+    Tsv.writeTsvFile(df, s"$tmp/k1.txt")
+    df.write.format("cbio").mode("append").save(s"$tmp/sink")
+    val k1 = Files.readAllLines(java.nio.file.Paths.get(s"$tmp/k1.txt")).asScala.toSeq
+    val parts = Files.list(java.nio.file.Paths.get(s"$tmp/sink")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.size == 1)
+    val sink = Files.readAllLines(parts.head).asScala.toSeq
+    assert(sink.drop(4) == k1, s"K1:\n${k1.mkString("\n")}\ncbio:\n${sink.mkString("\n")}")
+    // 06:30 UTC is 01:30 EST; an hour later the clocks have moved to EDT
+    assert(k1(1).endsWith("\t2024-03-09\t2024-03-10 01:30:00"), k1(1))
+    assert(k1(2).endsWith("\t2024-03-10\t2024-03-10 03:30:00"), k1(2))
+    assert(k1(3) == "\t" * 10)
   }
 
   test("a one-column row with a null cell survives every writer/reader pair") {
@@ -317,9 +360,13 @@ class CbioTsvSourceSpec extends AnyFunSuite {
     Seq("data_clinical_sample.txt", "data_clinical_patient.txt").foreach { f =>
       sample.repartition(2).write.format("cbio").mode("overwrite").save(s"$clinicalDirs/$f")
     }
-    val header = graft.validation.PortalRules.structuralReport(clinicalDirs)
+    def headerRule() = graft.validation.PortalRules.structuralReport(clinicalDirs)
       .find(_._1 == "portal_clinical_header_block").get
-    assert(header._3, header.toString)
+    assert(headerRule()._3, headerRule().toString)
+    // a later part with a short block is caught on its own
+    Files.writeString(java.nio.file.Paths.get(clinicalDirs, "data_clinical_sample.txt",
+      "part-99999-bad.cbio.txt"), "#Sample ID\n#STRING\nSAMPLE_ID\ns9\n")
+    assert(headerRule() == (("portal_clinical_header_block", 1L, false)))
   }
 
   test("NUMBER cells: nan/inf/-inf (Format12g renderings) and NA parse leniently") {
