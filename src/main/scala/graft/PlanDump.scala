@@ -7,8 +7,9 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Optimization-round plan snapshots: `explain("formatted")` for a list
   * of queries, one file per query, named `<query>_<suffix>.txt` under an
   * output directory — the before/after evidence files the optimization
-  * rounds commit (plans/rNN/). Unlike [[Plans]] (the curated human-audit
-  * PLANS.md), this is a mechanical dump for diffing.
+  * rounds commit (plans/rNN/), a mechanical dump for diffing. The
+  * audited scale property of each headline plan is asserted in
+  * PlanSweepSpec and PlanChecksSpec.
   *
   * Run: `sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,..>"`
   */

@@ -22,10 +22,8 @@ object MafPipeline {
   val VariantKey: Seq[String] =
     Seq("Chromosome", "Start_Position", "End_Position", "Reference_Allele", "Tumor_Seq_Allele2")
 
-  /** S3/S5/U1 — read every `*.maf` TSV under a folder (comment lines
-    * skipped) and union BY NAME, missing columns null-filled (pandas
-    * outer `concat`; reference `maf.py:14-36`). None when the folder has
-    * no `.maf` files (the reference returns None and exits, `maf.py:30`).
+  /** By-name merge of TSV files (pandas outer `concat`; reference
+    * `maf.py:14-36`): missing columns are null-filled.
     *
     * Not one glob: a multi-file CSV glob binds every file to the FIRST
     * file's header positionally, silently misaligning folders whose MAFs
@@ -38,21 +36,9 @@ object MafPipeline {
     * group is safe by construction; groups (typically 1-3 per study)
     * union by name with null fill. File opens for N files with g distinct
     * headers: N header sniffs + 2g distributed scans, vs 2N before.
-    */
-  def readAndMergeMafs(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val files =
-      if (!fs.exists(p)) Array.empty[String]
-      else fs.listStatus(p).filter(s => s.isFile && s.getPath.getName.endsWith(".maf"))
-        .map(_.getPath.toString).sorted
-    if (files.isEmpty) None else mergeByHeader(spark, files.toSeq)
-  }
-
-  /** By-name merge of TSV files via the header census (see
-    * [[readAndMergeMafs]]). Files with no header line (empty or
-    * all-comment) contribute no rows and are skipped, like pandas'
-    * EmptyDataError path; None when nothing readable remains.
+    * Files with no header line (empty or all-comment) contribute no rows
+    * and are skipped, like pandas' EmptyDataError path; None when nothing
+    * readable remains.
     */
   private[pipelines] def mergeByHeader(spark: SparkSession,
                                        files: Seq[String]): Option[DataFrame] = {

@@ -200,8 +200,6 @@ object DedupQueries {
     * Verification is exact Jaccard ≥ 1/2 on the distinct candidate
     * pairs; every arrival reports its dup count, first duplicate match,
     * and a novelty flag (left join — silence is "novel", not absence).
-    * The streaming face runs this same function per micro-batch via
-    * foreachBatch against the static index (StreamingDedupSpec).
     */
   def ddIncremental: Q = (s, dir) => {
     // split the SHARED persisted signature table instead of re-shingling
@@ -211,13 +209,6 @@ object DedupQueries {
     val sig = cachedSigs(s, dir)
     incrementalDedupFromSigs(sig.filter(col("doc_id") % 2 === 0),
       sig.filter(col("doc_id") % 2 === 1))
-  }
-
-  private[graft] def incrementalDedup(indexDocs: DataFrame,
-                                      arrivals: DataFrame): DataFrame = {
-    def sigs(d: DataFrame) = minhashSigsFrame(d)
-      .withColumn("shd", array_distinct(col("shingles"))).drop("shingles")
-    incrementalDedupFromSigs(sigs(indexDocs), sigs(arrivals))
   }
 
   /** The band/verify/report core over already-computed signature frames

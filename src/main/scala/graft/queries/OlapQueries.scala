@@ -190,9 +190,7 @@ object OlapQueries {
     * Partitions` at write time; the z-value itself is 10 shift-mask ops
     * in whole-stage codegen, and THIS query (the stats pass) is one
     * map-only projection + one bounded-key aggregation (≤ 4096 groups)
-    * after a once-per-corpus 4-scalar extent aggregation (cached, the
-    * same shape [[graft.sources.Layout.writeZOrdered]] runs at write
-    * time).
+    * after a once-per-corpus 4-scalar extent aggregation (cached).
     *
     * Cross-engine exactness of the grid: keys are integers < 2⁵³, so
     * (x − lo) is an exact double in both engines, / and × are IEEE
@@ -331,7 +329,7 @@ object OlapQueries {
     * Both subqueries correlate on l1.l_orderkey AND the outer
     * o_orderdate; the planner must produce one left-semi and one
     * left-anti join over lineitem — three scans of lineitem total, no
-    * nested-loop re-execution. PLANS.md records the semi/anti shape.
+    * nested-loop re-execution. PlanSweepSpec checks the semi/anti shape.
     */
   def sqlTpchQ21: Q = (s, dir) => {
     registerSqlViews(s, dir)
@@ -968,6 +966,8 @@ object OlapQueries {
       .groupBy(col("user_id")).agg(min(col("day")).as("first_day"))
     firstSeen.groupBy(col("first_day").as("day"))
       .agg(count(lit(1)).as("n_new"))
+      // a deliberate global window: its input is one row per first-seen day
+      // (Spark still logs `WindowExec: No Partition Defined`)
       .withColumn("cum_users",
         sum(col("n_new")).over(Window.orderBy(col("day").asc)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1027,6 +1027,8 @@ object OlapQueries {
       .select(col("day"),
         coalesce(col("dau"), lit(0L)).as("dau"),
         coalesce(col("net"), lit(0L)).as("net"))
+      // a deliberate global window: its input is the day grid, one row per
+      // day of the event range (Spark still logs `WindowExec: No Partition Defined`)
       .withColumn("wau", sum(col("net")).over(Window.orderBy(col("day").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select(col("day"), col("dau"), col("wau"),
@@ -1380,6 +1382,8 @@ object OlapQueries {
     val Seq(idC, dateC, centsC) = points.columns.toSeq
     val dmax = points.groupBy(col(dateC))
       .agg(max(col(centsC)).as("dmax"))
+    // a deliberate global window: its input is the per-date maxima, one
+    // row per date (Spark still logs `WindowExec: No Partition Defined`)
     val prevW = Window.orderBy(col(dateC).asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val front = dmax

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.{Schemas, Tables}
 import graft.functions.Fns
+import graft.pipelines.ClinicalPipeline
 import graft.sources.{Layout, Tsv}
 
 /** The reference's operator inventory (SURVEY.md §2) re-expressed as
@@ -304,20 +305,14 @@ object RefQueries {
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
   }
 
-  /** P5 — dynamic projection dropping all-NA columns: one aggregate pass
-    * counts non-nulls, then the projection excludes empty columns
-    * (reference `clinical.py:538-547`). The all-null `junk` column must
-    * vanish from the output schema.
+  /** P5 — [[ClinicalPipeline.dropAllNaColumns]] (reference
+    * `clinical.py:538-547`) over orders plus an all-null `junk` column,
+    * which must vanish from the output schema.
     */
-  def p5DropAllNaCols: Q = (s, dir) => {
-    val df = Tables.orders(s, dir)
+  def p5DropAllNaCols: Q = (s, dir) =>
+    ClinicalPipeline.dropAllNaColumns(Tables.orders(s, dir)
       .withColumn("junk", lit(null).cast(StringType))
-      .select("o_orderkey", "o_orderstatus", "junk", "o_custkey")
-    val counts = df.select(
-      df.columns.map(c => count(Fns.qcol(c)).as(c)).toIndexedSeq: _*).head()
-    val keep = df.columns.zipWithIndex.filter { case (_, i) => counts.getLong(i) > 0 }.map(_._1)
-    df.select(keep.map(Fns.qcol).toIndexedSeq: _*)
-  }
+      .select("o_orderkey", "o_orderstatus", "junk", "o_custkey"))
 
   /** P6+A6 — attribute-driven split projection + distinct (one row per
     * patient after projecting patient attributes; reference
@@ -930,11 +925,15 @@ object RefQueries {
     // on 32 cores. Spread, the table lands as ~parallelism files and
     // every component pass scans at full width.
     val ident = s"$src:${graft.sources.ContentIdent.of(src)}:v18maf5"
+    val exprs = v18MafExprs(s, dir)
     val root = graft.sources.DurableIndex.once("graft-v18-maf", ident) { tmp =>
-      graft.sources.Layout.spread(v18MafExprs(s, dir)).write.mode("overwrite")
+      graft.sources.Layout.spread(exprs).write.mode("overwrite")
         .parquet(tmp.resolve("maf").toString)
     }
-    s.read.parquet(root.resolve("maf").toString)
+    // the build's schema, as parquet reads it back (every column
+    // nullable): the readback runs no schema-inference job
+    val written = StructType(exprs.schema.fields.map(_.copy(nullable = true)))
+    s.read.schema(written).parquet(root.resolve("maf").toString)
   }
 
   /** The expression-stack form of [[v18Maf]] (the build side). */

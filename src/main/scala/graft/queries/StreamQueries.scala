@@ -16,14 +16,9 @@ object StreamQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** ev_tumbling — 1-hour tumbling window counts + exact decimal sums. */
+  /** ev_tumbling — [[EventStreams.tumblingCounts]] over the events table. */
   def evTumbling: Q = (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).as("sum_value"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n"), col("sum_value").cast("double").as("sum_value"))
+    EventStreams.tumblingCounts(Tables.events(s, dir))
 
   /** ev_transitions — the Markov next-event transition matrix: counts
     * and probabilities of event_type → immediately-following event_type

@@ -685,6 +685,8 @@ object TextQueries {
     val dfTab = FrameCache.cached(s, s"ta_bm25_df:$dir")(
       toks.groupBy(col("tok")).agg(countDistinct(col("doc_id")).as("df")))
     val q = dfTab.orderBy(col("df").desc, col("tok").asc).limit(Bm25RankHi)
+      // a deliberate global window: its input is the Bm25RankHi rows the
+      // limit keeps (Spark still logs `WindowExec: No Partition Defined`)
       .withColumn("rn",
         row_number().over(Window.orderBy(col("df").desc, col("tok").asc)))
       .filter(col("rn") >= Bm25RankLo)
@@ -802,14 +804,8 @@ object TextQueries {
     * Plan: ONE pass over the corpus token stream, parity split INSIDE
     * the aggregate (two conditional sums per measure), one vocab-keyed
     * exchange, then the touched-terms filter — no join and no second
-    * scan. Against a real STANDING on-disk df table the same job is the
-    * batch-side aggregate left-joined to the table on the batch's terms
-    * only (postings of the batch's terms move, not the index), which is
-    * how the streaming face runs it per micro-batch via foreachBatch
-    * (StreamingIndexSpec: per-batch state = the standing table, updated
-    * by keys touched; shuffle volume = batch token volume). Here both
-    * sides derive from the same corpus so engine and oracle agree
-    * bit-for-bit.
+    * scan. Both sides derive from the same corpus so engine and oracle
+    * agree bit-for-bit.
     */
   def taIndexDelta: Q = (s, dir) => indexDeltaOf(
     tokTfStream(Tables.documents(s, dir))
@@ -823,31 +819,9 @@ object TextQueries {
       explode(graft.functions.TextExprs.tokTf(lower(trim(col("text"))))).as("p"))
       .select(col("doc_id"), col("p.tok").as("tok"), col("p.tf").as("tf"))
 
-  /** The write set of one arriving batch against a STANDING df table
-    * (tok, df, tf_total) — the shape the per-micro-batch maintenance
-    * job actually runs at scale: the batch aggregates to its own
-    * distinct terms first, then LEFT-joins the table, so only the
-    * touched keys' postings move and per-batch cost is independent of
-    * index size. Equivalence with the parity-split one-shot
-    * ([[indexDeltaOf]]) and with a full rebuild after applying every
-    * write set is spec-locked (CorpusOpsSpec).
-    */
-  private[graft] def indexDeltaAgainstTable(table: DataFrame,
-                                            batchTf: DataFrame): DataFrame =
-    batchTf.groupBy(col("tok"))
-      .agg(count(lit(1)).as("delta_df"), sum(col("tf")).cast("long").as("delta_tf"))
-      .join(table.select(col("tok"), col("df").as("old_df"),
-        col("tf_total").as("old_tf")), Seq("tok"), "left")
-      .select(col("tok"),
-        coalesce(col("old_df"), lit(0L)).as("old_df"), col("delta_df"),
-        (coalesce(col("old_df"), lit(0L)) + col("delta_df")).as("new_df"),
-        coalesce(col("old_tf"), lit(0L)).as("old_tf"), col("delta_tf"),
-        (coalesce(col("old_tf"), lit(0L)) + col("delta_tf")).as("new_tf"),
-        col("old_df").isNull.as("is_new_term"))
-
   /** The delta-aggregate core over a (tok, tf, indexed) term stream —
-    * split out so the streaming face and the spec can drive arbitrary
-    * index/batch splits; see [[taIndexDelta]].
+    * split out so the spec can drive arbitrary index/batch splits; see
+    * [[taIndexDelta]].
     */
   private[graft] def indexDeltaOf(tf: DataFrame): DataFrame =
     tf.groupBy(col("tok"))
@@ -1414,8 +1388,7 @@ object TextQueries {
     * explosion and counting then run over the VOCAB table — bounded by
     * distinct words × word length, independent of corpus size. This is
     * why real BPE trainers count on the word-frequency table, never the
-    * raw corpus; the plan makes that shape explicit. Multi-round
-    * learning (count → pick → re-merge) is [[bpeLearn]]; one round is
+    * raw corpus; the plan makes that shape explicit. One round is
     * SQL-expressible and carries the oracle.
     */
   def taBpePairs: Q = (s, dir) => {
@@ -1427,55 +1400,10 @@ object TextQueries {
         "transform(sequence(1, length(tok) - 1), i -> substring(tok, i, 2))")).as("pair"))
       .groupBy(col("pair")).agg(sum(col("f")).cast("long").as("cnt"))
       .orderBy(col("cnt").desc, col("pair").asc).limit(BpeTopPairs)
+      // a deliberate global window: its input is the BpeTopPairs rows the
+      // limit keeps (Spark still logs `WindowExec: No Partition Defined`)
       .withColumn("rank",
         row_number().over(Window.orderBy(col("cnt").desc, col("pair").asc)))
-  }
-
-  /** Multi-round BPE merge learning over a (word, freq) vocabulary:
-    * returns the ordered merge list. Each round counts adjacent-symbol
-    * pairs (weighted by word frequency), picks the (count, pair)-max
-    * merge, and rewrites every word's symbol array with the standard
-    * left-to-right non-overlapping merge fold — "aaa" under merge (a,a)
-    * becomes ["aa","a"], and a token produced by this round's merge is
-    * never itself merged again within the round (the fold's lookbehind
-    * compares against the PRE-merge symbol, so a freshly emitted "ab"
-    * can't re-match as the `a` of the same pair).
-    *
-    * Distribution mirrors [[graft.queries.SimQueries]]'s Lloyd loop:
-    * the per-round argmax is a driver-collected control value (one
-    * row); the rewrite is a map-only transform over the vocab frame;
-    * pair counting is one bounded aggregation. Rounds are sequential by
-    * nature (each merge depends on the last) — the per-round cost is
-    * vocab-bounded, never corpus-bounded.
-    */
-  private[graft] def bpeLearn(words: DataFrame, rounds: Int): Seq[String] = {
-    var syms = words.select(col("f"),
-      expr("transform(sequence(1, length(tok)), i -> substring(tok, i, 1))").as("syms"))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (_ <- 1 to rounds) {
-      val top = syms
-        .filter(size(col("syms")) >= 2)
-        .select(col("f"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), i -> struct(element_at(syms, i) AS a, element_at(syms, i + 1) AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("f")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.nonEmpty) {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += s"$a$b"
-        // non-overlap falls out of the fold: a merge replaces the last
-        // slot with a+b, which can never equal `a` again (b nonempty),
-        // so "aaa" under (a,a) yields ["aa","a"], not ["aa","aa"]
-        val acc = aggregate(col("syms"), array().cast("array<string>"),
-          (st, x) => when(
-            size(st) > 0 && element_at(st, -1) === lit(a) && x === lit(b),
-            concat(slice(st, lit(1), size(st) - 1), array(lit(s"$a$b")))
-          ).otherwise(concat(st, array(x))))
-        syms = syms.select(col("f"), acc.as("syms"))
-      }
-    }
-    merges.toSeq
   }
 
   /** ta_bigram_lm — bigram language-model scoring (the CCNet-style

@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
   *  - Bucketed tables: facts bucketed on the join key join WITHOUT any
   *    exchange — at 1000 executors the repeated clinical⋈mutation joins
   *    (SURVEY §2.3) pay the shuffle once at write time, then never again.
-  *  - The input-width guard ([[spread]]), small-file compaction
-  *    ([[compact]]) and Z-order clustering ([[writeZOrdered]]).
+  *  - The input-width guard ([[spread]]) and small-file compaction
+  *    ([[compact]]).
   */
 object Layout {
 
@@ -136,48 +136,5 @@ object Layout {
       s"compact: rename $tmp -> $p failed; original preserved at $old")
     fs.delete(old, true)
     (before.length, dataFiles().length)
-  }
-
-  /** Multi-dimensional clustering (Z-order style, the Delta/Iceberg
-    * `OPTIMIZE ZORDER BY` layout): sort rows by the bit-interleaving of
-    * two columns' grid cells so every file's min/max stats are tight on
-    * BOTH dimensions — a linear sort can only serve one. Parquet readers
-    * then skip files/row-groups from footer stats for filters on either
-    * column; at 100 TB this is the difference between scanning a slice
-    * and scanning the table for the second-most-common filter column.
-    * Pure DataFrame ops: global min/max (one tiny agg) → fixed grid →
-    * interleave via shift/mask → repartitionByRange + sort on the
-    * z-value. Returns the number of files written.
-    */
-  def writeZOrdered(spark: SparkSession, df: DataFrame, path: String,
-                    colA: String, colB: String, bits: Int = 8,
-                    numFiles: Int = 8): Int = {
-    import org.apache.spark.sql.functions._
-    val Array(r) = df.agg(
-      min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double"))).collect()
-    val (aMin, aMax, bMin, bMax) =
-      (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-    val cells = (1L << bits) - 1
-    def cell(c: String, lo: Double, hi: Double) = {
-      val denom = if (hi > lo) hi - lo else 1.0
-      least(lit(cells), greatest(lit(0L),
-        ((col(c).cast("double") - lit(lo)) / lit(denom) * lit(cells.toDouble))
-          .cast("long")))
-    }
-    val (za, zb) = (cell(colA, aMin, aMax), cell(colB, bMin, bMax))
-    // interleave via the compiled kernel (cell indices < 2^bits ≤ 2^16,
-    // so the 16-bit interleave is exact): one codegen'd call instead of
-    // a 2·bits-term shift/mask expression tree
-    require(bits <= 16, s"zorder grid is capped at 16 bits, got $bits")
-    val z = graft.functions.ZInterleave16.zinterleave16(za, zb)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).count(s => s.isFile && !s.getPath.getName.startsWith("_"))
   }
 }

@@ -84,16 +84,27 @@ object Tsv {
     reader(spark, comment, multiLine = false).option("inferSchema", true).csv(paths: _*)
 
   /** A study package file read back as written: every column a string,
-    * `#` lines skipped, one header job and no inference pass; None when
+    * `#` lines skipped, no header job and no inference pass; None when
     * the file is absent. Ids keep their written form (`007` stays `007`)
     * and values are checked as the portal's importer reads them. Quoted
     * values may span lines, as the sinks write them and the `cbio` scan
     * reads them, so each file is one task.
+    *
+    * The schema comes from the column line [[readHead]] reads. A column
+    * line Spark's header read would rewrite (an empty, quoted or repeated
+    * name) keeps that read instead.
     */
   def readWritten(spark: SparkSession, dir: String, file: String): Option[DataFrame] = {
     val p = Paths.get(dir, file)
     if (!Files.exists(p)) None
-    else Some(read(spark, p.toString, comment = Some('#'), inferSchema = false, multiLine = true))
+    else {
+      val schema = readHead(p.toString).map(_.columns).filter { cs =>
+        cs.nonEmpty && cs.forall(c => c.nonEmpty && !c.contains('"')) &&
+          cs.map(_.toLowerCase).distinct.size == cs.size
+      }.map(cs => StructType(cs.map(StructField(_, StringType))))
+      Some(read(spark, p.toString, comment = Some('#'), inferSchema = false,
+        schema = schema, multiLine = true))
+    }
   }
 
   /** Each column type's K1 cell rule: `%.12g` doubles and floats, plain

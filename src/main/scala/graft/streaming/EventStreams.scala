@@ -1,44 +1,31 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-/** Structured-Streaming surface over the `events` table (extension per
-  * SURVEY §2.8/§7 — the reference is batch-only). Every transform here is
-  * defined once and runs on either a batch or a streaming DataFrame: the
-  * batch run is what the DuckDB oracle checks; the streaming run (tested
-  * with MemoryStream) adds watermarks and state.
+/** Event-time transforms over the `events` table (extension per SURVEY
+  * §2.8/§7 — the reference is batch-only). Each is defined once and runs
+  * on either a batch or a streaming DataFrame: the `ev_*` queries run the
+  * batch face, which the DuckDB oracle checks; EventStreamsSpec runs the
+  * same functions on MemoryStream and file-source streams.
   *
   * Scale design: windowed aggregations shuffle on (window, key) with
-  * map-side partial aggregation; watermarks bound state size; the custom
-  * sessionizer keeps one small state object per user key and emits on
-  * event-time timeout, so state is O(active users), not O(events).
+  * map-side partial aggregation; on a stream, a watermark set upstream
+  * bounds the window and join state.
   */
 object EventStreams {
 
-  case class Event(event_id: Long, ts: Timestamp, user_id: Long,
-                   event_type: String, value: Double)
-
-  case class SessionOut(user_id: Long, session_start: Timestamp,
-                        session_end: Timestamp, n_events: Long, sum_value: Double)
-
-  /** Internal per-user session accumulator (public: the state encoder's
-    * generated code must be able to call its accessors).
-    */
-  case class SessionState(start: Long, last: Long, n: Long, total: Double)
-
-  /** Tumbling 1-hour windows: count + sum by (window, event_type).
-    * On a stream, call `.withWatermark("ts", ...)` upstream.
+  /** ev_tumbling — 1-hour tumbling windows: count + exact decimal sum by
+    * (window, event_type). On a stream, call `.withWatermark("ts", ...)`
+    * upstream.
     */
   def tumblingCounts(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,2)")).as("sum_value"))
       .select(col("window.start").as("w_start"), col("event_type"),
-        col("n"), col("sum_value"))
+        col("n"), col("sum_value").cast("double").as("sum_value"))
 
   /** Sliding 1-hour windows every 30 minutes. */
   def slidingCounts(events: DataFrame): DataFrame =
@@ -55,21 +42,6 @@ object EventStreams {
       .select(col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("user_id"), col("n_events"))
-
-  /** Watermarked streaming variant of [[tumblingCounts]]. */
-  def tumblingCountsStream(events: DataFrame, watermark: String): DataFrame =
-    tumblingCounts(events.withWatermark("ts", watermark))
-
-  /** Streaming exact dedup by key with BOUNDED state: duplicates arriving
-    * within the watermark horizon are dropped, and state for keys older
-    * than the watermark is evicted — the streaming face of the dedup
-    * module (batch face: `dd_exact`). Plain `dropDuplicates` on a stream
-    * would keep every key forever.
-    */
-  def dedupedStream(events: DataFrame, watermark: String,
-                    keys: Seq[String] = Seq("event_id")): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
 
   /** Stream-stream interval join: each click joined to purchases of the
     * same user within the preceding hour. Both sides carry watermarks and
@@ -132,205 +104,4 @@ object EventStreams {
   def enrichStream(events: DataFrame, dim: DataFrame,
                    key: String): DataFrame =
     events.join(broadcast(dim), Seq(key), "left")
-
-  /** CDC change row for the streaming upsert sink: `op` is
-    * insert/update/delete on key `k`; `version` orders changes to the
-    * same key within a batch (last write wins).
-    */
-  case class Change(k: Long, op: String, v: Double, version: Long)
-
-  /** Streaming MERGE — the foreachBatch CDC-apply pattern: each
-    * micro-batch of keyed change rows is collapsed to its latest change
-    * per key, merged into the parquet snapshot with the same
-    * full-outer + null-safe-delete + coalesce plan as the batch upsert
-    * (OlapQueries u5), and atomically promoted (write-aside + rename, no
-    * window where the only copy is gone). Exactly-once effect comes from
-    * the checkpoint + an idempotent batch function: replaying a batch
-    * after a crash rewrites the same snapshot. This is the lakehouse
-    * streaming-upsert shape with plain parquet standing in for a table
-    * format's transaction log.
-    */
-  def cdcUpsertSink(changes: Dataset[Change], baseDir: String,
-                    checkpoint: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Change], _: Long) =>
-        applyChangeBatch(batch.toDF(), baseDir)
-      }
-      .start()
-
-  /** One CDC batch applied to the parquet snapshot at `baseDir`. */
-  def applyChangeBatch(batch: DataFrame, baseDir: String): Unit = {
-    val spark = batch.sparkSession
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("k")).orderBy(col("version").desc)
-    val latest = batch
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .select(col("k"), col("op"), col("v").as("nv"))
-    val p = new org.apache.hadoop.fs.Path(baseDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val base =
-      if (fs.exists(p)) spark.read.parquet(baseDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.DoubleType))))
-    val merged = base.join(latest, Seq("k"), "full_outer")
-      .filter(!(col("op") <=> lit("delete")))
-      .select(col("k"), coalesce(col("nv"), col("v")).as("v"))
-    // write aside, then promote — mirrors Layout.compact's crash-safe swap
-    val tmp = new org.apache.hadoop.fs.Path(baseDir + "__upsert_tmp")
-    val old = new org.apache.hadoop.fs.Path(baseDir + "__upsert_old")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(old, true)
-    if (fs.exists(p)) require(fs.rename(p, old), s"upsert: rename $p -> $old failed")
-    require(fs.rename(tmp, p), s"upsert: rename $tmp -> $p failed; original at $old")
-    fs.delete(old, true)
-  }
-
-  case class AdmitOut(user_id: Long, event_id: Long, admitted: Boolean)
-
-  /** Per-user token-bucket state: credit in integer microseconds and the
-    * last-seen event time (public for the state encoder's codegen).
-    */
-  case class BucketState(creditUs: Long, prevUs: Long)
-
-  /** Streaming face of `ev_rate_limit`
-    * ([[graft.queries.StreamQueries.rateLimit]]): the identical
-    * all-integer token-bucket recurrence as keyed state, emitting one
-    * admit/drop decision per event. State per user is two longs; within
-    * a micro-batch events fold in (ts, event_id) order, and the state
-    * carries credit + last timestamp across batches, so an in-order
-    * stream reproduces the batch fold decision for decision (spec-
-    * locked). Timestamps convert at MICROsecond precision — the batch
-    * side uses unix_micros, and Timestamp.getTime would truncate to
-    * millis and drift the refill arithmetic.
-    */
-  def rateLimitStream(events: Dataset[Event])
-                     (implicit spark: SparkSession): Dataset[AdmitOut] = {
-    import spark.implicits._
-    import graft.queries.StreamQueries.{RlCapacity, RlRefillUs}
-    val cap = RlCapacity * RlRefillUs
-    def micros(t: Timestamp): Long =
-      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[BucketState, AdmitOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, rows: Iterator[Event], state: GroupState[BucketState]) =>
-          var st = state.getOption.getOrElse(BucketState(cap, -1L))
-          val out = rows.toSeq
-            .sortBy(e => (micros(e.ts), e.event_id))
-            .map { e =>
-              val t = micros(e.ts)
-              val pre = math.min(cap,
-                st.creditUs + (if (st.prevUs == -1L) 0L else t - st.prevUs))
-              val ok = pre >= RlRefillUs
-              st = BucketState(if (ok) pre - RlRefillUs else pre, t)
-              AdmitOut(uid, e.event_id, ok)
-            }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  case class CusumOut(event_type: String, w_start: Timestamp, x: Long,
-                      cusum: Long, drift: Int)
-
-  /** Per-type CUSUM state: the open hour bucket (epoch micros), its
-    * running event count, and the CUSUM statistic after the last CLOSED
-    * bucket.
-    */
-  case class CusumMonitorState(bucketUs: Long, x: Long, s: Long)
-
-  /** Streaming face of `ev_cusum`
-    * ([[graft.queries.StreamQueries.cusumHourly]]): the identical
-    * all-integer running-reset recurrence S = max(0, S + x − k) as
-    * keyed state per event type, emitting one row per CLOSED hour
-    * bucket (a bucket closes when a later-hour event arrives — the
-    * batch face's per-observed-bucket rows, minus the still-open last
-    * bucket). The reference rate k per type is a PARAMETER, calibrated
-    * offline (the batch query derives it from the corpus mean) and
-    * monitored online — the production CUSUM deployment split. State
-    * per type is three longs; in-order streams reproduce the batch
-    * statistic bucket for bucket across micro-batch boundaries
-    * (spec-locked, split mid-bucket).
-    */
-  def cusumStream(events: Dataset[Event], k: Map[String, Long])
-                 (implicit spark: SparkSession): Dataset[CusumOut] = {
-    import spark.implicits._
-    import graft.queries.StreamQueries.CusumHMult
-    def micros(t: Timestamp): Long =
-      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[CusumMonitorState, CusumOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[Event], state: GroupState[CusumMonitorState]) =>
-          val kk = k(typ)
-          var st = state.getOption.getOrElse(CusumMonitorState(-1L, 0L, 0L))
-          val out = scala.collection.mutable.ListBuffer[CusumOut]()
-          rows.toSeq.sortBy(e => micros(e.ts)).foreach { e =>
-            val b = micros(e.ts) - math.floorMod(micros(e.ts), 3600000000L)
-            if (b != st.bucketUs) {
-              if (st.bucketUs >= 0L) { // close the previous bucket
-                val s1 = math.max(0L, st.s + st.x - kk)
-                out += CusumOut(typ, new Timestamp(st.bucketUs / 1000L), st.x,
-                  s1, if (s1 > CusumHMult * kk) 1 else 0)
-                st = CusumMonitorState(b, 0L, s1)
-              } else st = CusumMonitorState(b, 0L, st.s)
-            }
-            st = st.copy(x = st.x + 1L)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Custom stateful sessionization with flatMapGroupsWithState: one
-    * state object per user; sessions close on a 10-minute event-time gap
-    * enforced via the watermark timeout. This is the
-    * mapGroupsWithState-shaped state machine the built-in session_window
-    * can't express once per-session custom logic is needed.
-    */
-  def sessionize(events: Dataset[Event], gapMs: Long = 10 * 60 * 1000L)
-                (implicit spark: SparkSession): Dataset[SessionOut] = {
-    import spark.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(userId, new Timestamp(s.start),
-              new Timestamp(s.last + gapMs), s.n, s.total))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.last < gapMs =>
-                  cur = Some(s.copy(last = math.max(s.last, t), n = s.n + 1,
-                    total = s.total + e.value))
-                case Some(s) =>
-                  closed ::= SessionOut(userId, new Timestamp(s.start),
-                    new Timestamp(s.last + gapMs), s.n, s.total)
-                  cur = Some(SessionState(t, t, 1L, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1L, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.last + gapMs)
-            }
-            closed.reverseIterator
-          }
-      }
-  }
 }

@@ -39,7 +39,7 @@ private[graft] object Async {
 
   private val pool = Executors.newCachedThreadPool(new ThreadFactory {
     private val n = new AtomicInteger()
-    def newThread(r: Runnable): Thread = {
+    override def newThread(r: Runnable): Thread = {
       val t = new Thread(r, s"graft-async-${n.incrementAndGet()}")
       t.setDaemon(true)
       t

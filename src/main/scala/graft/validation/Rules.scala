@@ -69,7 +69,7 @@ object Rules {
     * pass per frame; this costs none — at 100 TB that is the difference
     * between validating for free and re-reading the table. Returns the
     * instrumented frame (use it IN PLACE of the original for exactly one
-    * action) and the Observation; read results with [[observedReport]]
+    * action) and the Observation; read results with [[observedRows]]
     * after the action ran. Aggregates are coalesced to 0 so an empty
     * frame yields counts, not nulls. Limitation (Spark's, by design):
     * observe metrics cannot contain distinct aggregates — dup checks
@@ -93,14 +93,6 @@ object Rules {
       val v = m(r.name).asInstanceOf[Long]
       (r.name, v, if (r.passWhenZero) v == 0L else v > 0L)
     }
-  }
-
-  /** [[observedRows]] as a report DataFrame. */
-  def observedReport(spark: SparkSession,
-                     obs: org.apache.spark.sql.Observation,
-                     rules: Seq[Rule]): DataFrame = {
-    import spark.implicits._
-    observedRows(obs, rules).toDF("rule", "value", "passed")
   }
 
   /** Evaluate a set of rules over one frame in ONE aggregate pass,

@@ -355,42 +355,6 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
-  test("bpe property: distributed merge loop equals a reference BPE on a 2-letter alphabet") {
-    // tiny alphabet maximizes overlap/chaining cases ("aaa" under (a,a))
-    val wordsGen = Gen.listOfN(8, Gen.zip(
-      Gen.nonEmptyListOf(Gen.oneOf('a', 'b')).map(_.mkString.take(6)),
-      Gen.chooseNum(1L, 9L)))
-    def refBpe(words: Seq[(String, Long)], rounds: Int): Seq[String] = {
-      var syms = words.map { case (w, f) => (w.map(_.toString).toList, f) }
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      for (_ <- 1 to rounds) {
-        val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-        syms.foreach { case (ss, f) =>
-          ss.zip(ss.drop(1)).foreach(p => counts(p) = counts.getOrElse(p, 0L) + f)
-        }
-        if (counts.nonEmpty) {
-          val (a, b) = counts.toSeq.minBy { case ((x, y), c) => (-c, x, y) }._1
-          out += a + b
-          syms = syms.map { case (ss, f) =>
-            val acc = scala.collection.mutable.ListBuffer.empty[String]
-            ss.foreach { x =>
-              if (acc.nonEmpty && acc.last == a && x == b)
-                acc(acc.length - 1) = a + b
-              else acc += x
-            }
-            (acc.toList, f)
-          }
-        }
-      }
-      out.toSeq
-    }
-    samples(wordsGen, 4).foreach { raw =>
-      val words = raw.groupBy(_._1).map { case (w, xs) => (w, xs.map(_._2).sum) }.toSeq
-      val got = graft.queries.TextQueries.bpeLearn(words.toDF("tok", "f"), 2)
-      assert(got === refBpe(words, 2), s"words=$words")
-    }
-  }
-
   test("chunk property: coverage, stride starts, and tail rule for any token count") {
     import graft.queries.TextQueries.{ChunkWindow => W, ChunkStride => S}
     val ns = samples(Gen.chooseNum(1, 400), 12).distinct
@@ -432,17 +396,5 @@ class PropertiesSpec extends AnyFunSuite {
       }
       assert(got === want)
     }
-  }
-
-  test("z-order property: layout preserves the exact multiset of rows") {
-    samples(Gen.listOfN(80, Gen.zip(Gen.chooseNum(0L, 1000L), Gen.chooseNum(0.0, 1.0))), 4)
-      .foreach { rows =>
-        val df = rows.toDF("a", "b")
-        val dir = java.nio.file.Files.createTempDirectory("graft-zp").toString
-        graft.sources.Layout.writeZOrdered(spark, df, dir, "a", "b", bits = 4, numFiles = 3)
-        val back = spark.read.parquet(dir).collect()
-          .map(r => (r.getLong(0), r.getDouble(1))).sorted
-        assert(back.toSeq == rows.sorted, "z-order write must not drop/alter rows")
-      }
   }
 }

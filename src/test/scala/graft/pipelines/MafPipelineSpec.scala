@@ -121,7 +121,7 @@ class MafPipelineSpec extends AnyFunSuite {
       (r, v, ok) } == Seq(("maf_not_in_neo", "2", false), ("neo_not_in_maf", "0", true)))
   }
 
-  test("readAndMergeMafs: by-name union of mixed-column .maf files; None when empty") {
+  test("mergeByHeader: by-name union of mixed-column files; header-less files skipped") {
     import org.apache.spark.sql.functions.col
     val tmp = Files.createTempDirectory("maf-merge").toString
     // two MAFs with DIFFERENT column sets and orders — pandas outer
@@ -130,7 +130,6 @@ class MafPipelineSpec extends AnyFunSuite {
       "#version 1\nHugo_Symbol\tChromosome\tt_ref_count\nTP53\tchr17\t10\n")
     Files.writeString(Paths.get(s"$tmp/b.maf"),
       "#version 1\nChromosome\tHugo_Symbol\tExtra_Col\nchr12\tKRAS\tx\n")
-    Files.writeString(Paths.get(s"$tmp/ignore.txt"), "not\ta\tmaf\n")
     // same header as a.maf → one census group, one distributed scan for both
     Files.writeString(Paths.get(s"$tmp/c.maf"),
       "#version 1\nHugo_Symbol\tChromosome\tt_ref_count\nBRAF\tchr7\t4\n")
@@ -138,7 +137,8 @@ class MafPipelineSpec extends AnyFunSuite {
     // pandas' EmptyDataError path
     Files.writeString(Paths.get(s"$tmp/empty.maf"), "")
     Files.writeString(Paths.get(s"$tmp/comments.maf"), "#only\n#comments\n")
-    val merged = MafPipeline.readAndMergeMafs(spark, tmp).get
+    val merged = MafPipeline.mergeByHeader(spark,
+      Seq("a.maf", "b.maf", "c.maf", "empty.maf", "comments.maf").map(f => s"$tmp/$f")).get
     assert(merged.count() == 3)
     assert(merged.filter(col("Hugo_Symbol") === "BRAF").count() == 1)
     val byGene = merged.collect().map(r =>
@@ -149,9 +149,9 @@ class MafPipelineSpec extends AnyFunSuite {
       && byGene("TP53")._3.isEmpty)
     assert(byGene("KRAS")._1 == "chr12" && byGene("KRAS")._2.isEmpty
       && byGene("KRAS")._3.contains("x"))
-    // empty folder → None (reference returns None and exits)
-    val empty = Files.createTempDirectory("maf-empty").toString
-    assert(MafPipeline.readAndMergeMafs(spark, empty).isEmpty)
+    // nothing readable → None (reference returns None and exits)
+    assert(MafPipeline.mergeByHeader(spark,
+      Seq("empty.maf", "comments.maf").map(f => s"$tmp/$f")).isEmpty)
     assert(merged.filter(col("Chromosome") === "chr17").count() == 1)
   }
 

@@ -205,20 +205,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(counts.getLong(1) === tf)
   }
 
-  // ---- ta_bpe_pairs / bpeLearn ----------------------------------------
-
-  test("bpeLearn reproduces the classic Sennrich merge sequence") {
-    val words = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
-      .toDF("tok", "f")
-    assert(TextQueries.bpeLearn(words, 3) === Seq("es", "est", "lo"))
-  }
-
-  test("bpeLearn merges left-to-right without overlap, then chains") {
-    val words = Seq(("aaa", 1L)).toDF("tok", "f")
-    // round 1: (a,a) has count 2 but merges ONCE -> ["aa","a"];
-    // round 2: (aa,a) -> "aaa"
-    assert(TextQueries.bpeLearn(words, 2) === Seq("aa", "aaa"))
-  }
+  // ---- ta_bpe_pairs ---------------------------------------------------
 
   test("ta_bpe_pairs top merge equals a driver-side recount over the vocabulary") {
     val vocab = TextQueries.taVocab(spark, sf001) // reuse corpus tokenization
@@ -1253,62 +1240,5 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(got("a") == ((2L, 2L, 4L, 3L, 2L, 5L, false)))
     assert(got("c") == ((1L, 1L, 2L, 1L, 2L, 3L, false)))
     assert(got("d") == ((0L, 2L, 2L, 0L, 2L, 2L, true)), "new term flagged")
-  }
-
-  test("ta_index_delta: standing-table form equals the parity one-shot") {
-    val docs = graft.Tables.documents(spark, sf001)
-    val tf = TextQueries.tokTfStream(docs)
-    val table = tf.filter($"doc_id" % 2 === 0).groupBy($"tok")
-      .agg(count(lit(1)).as("df"), sum($"tf").cast("long").as("tf_total"))
-    val viaTable = deltaMap(TextQueries.indexDeltaAgainstTable(
-      table, tf.filter($"doc_id" % 2 === 1)))
-    val oneShot = deltaMap(TextQueries.taIndexDelta(spark, sf001))
-    assert(viaTable == oneShot)
-    assert(oneShot.nonEmpty)
-    // (is_new_term coverage lives in the constructed-split test — at
-    // sf0.001 the shared vocabulary makes every batch term pre-indexed)
-    assert(oneShot.values.exists(!_._7), "batch must touch existing terms")
-  }
-
-  test("ta_index_delta stream face: applying per-micro-batch write sets equals a rebuild") {
-    // The maintenance invariant that makes incremental indexing safe at
-    // all: standing table + Σ(write sets applied in stream order) must
-    // be BIT-IDENTICAL to rebuilding the index over the full corpus.
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val docs = graft.Tables.documents(spark, sf001)
-    val tf = TextQueries.tokTfStream(docs)
-    // standing table (even docs), maintained driver-side in the spec —
-    // production would upsert a keyed store/delta table with the same rows
-    val table = scala.collection.mutable.Map[String, (Long, Long)]()
-    tf.filter($"doc_id" % 2 === 0).groupBy($"tok")
-      .agg(count(lit(1)).as("df"), sum($"tf").cast("long").as("tf_total"))
-      .collect().foreach(r => table(r.getString(0)) = (r.getLong(1), r.getLong(2)))
-
-    val arrivals = docs.filter($"doc_id" % 2 === 1)
-      .select($"doc_id", $"text").as[(Long, String)].collect()
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val standing = table.toSeq.map { case (t, (d, s)) => (t, d, s) }
-          .toDF("tok", "df", "tf_total")
-        TextQueries.indexDeltaAgainstTable(standing,
-          TextQueries.tokTfStream(batch)).collect().foreach { r =>
-          table(r.getString(0)) = (r.getLong(3), r.getLong(6)) // new_df, new_tf
-        }
-        ()
-      }
-      .start()
-    try {
-      val (first, rest) = arrivals.splitAt(arrivals.length / 2)
-      mem.addData(first.toIndexedSeq); q.processAllAvailable()
-      mem.addData(rest.toIndexedSeq); q.processAllAvailable()
-    } finally q.stop()
-
-    val rebuilt = tf.groupBy($"tok")
-      .agg(count(lit(1)).as("df"), sum($"tf").cast("long").as("tf_total"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(table.toMap == rebuilt,
-      "incremental maintenance must equal the full rebuild")
   }
 }

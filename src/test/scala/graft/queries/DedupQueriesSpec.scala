@@ -274,40 +274,6 @@ class DedupQueriesSpec extends AnyFunSuite {
     assert(got.nonEmpty, "threshold 0.2 on random gaussians must yield candidates")
   }
 
-  test("incremental dedup stream face: per-micro-batch lookups equal the batch run") {
-    // The continuous-ingest idiom: arrivals stream in, each micro-batch
-    // runs incrementalDedup against the STATIC index (foreachBatch) —
-    // same function, so stream totals must equal the one-shot batch.
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.SparkTestBase.sf001
-    implicit val sq = spark.sqlContext
-    val docs = graft.Tables.documents(spark, sf001)
-    val index = docs.filter($"doc_id" % 2 === 0)
-    val arrivals = docs.filter($"doc_id" % 2 === 1)
-      .select($"doc_id", $"text").as[(Long, String)].collect()
-    val expected = DedupQueries.ddIncremental(spark, sf001).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), Option(r.get(2)), r.getBoolean(3))).toMap
-
-    val got = scala.collection.mutable.Map[Long, (Long, Option[Any], Boolean)]()
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        DedupQueries.incrementalDedup(index, batch).collect().foreach(r =>
-          got(r.getLong(0)) = (r.getLong(1), Option(r.get(2)), r.getBoolean(3)))
-        ()
-      }
-      .start()
-    try {
-      val (first, rest) = arrivals.splitAt(arrivals.length / 2)
-      mem.addData(first.toIndexedSeq); q.processAllAvailable()
-      mem.addData(rest.toIndexedSeq); q.processAllAvailable()
-    } finally q.stop()
-    assert(got.size == expected.size, s"${got.size} vs ${expected.size}")
-    assert(got.toMap == expected)
-    assert(expected.values.exists(!_._3), "the corpus must contain at least one duplicate arrival")
-    assert(expected.values.exists(_._3), "and at least one novel arrival")
-  }
-
   test("dd_semdedup: complete decision table, clusters = sim_kmeans, drops = lower-id LSH dup") {
     // SemDeDup is a COMPOSITION of two already-locked operators; this
     // spec pins the composition contract: (1) one decision row per

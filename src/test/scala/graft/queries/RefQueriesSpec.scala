@@ -129,4 +129,19 @@ class RefQueriesSpec extends AnyFunSuite {
     // every chunk except the last is exactly full
     assert(rows.dropRight(1).forall(_.getAs[Long]("n") == 400))
   }
+
+  test("a warm v18_portal_rules runs at most 11 Spark jobs") {
+    // the first run builds the durable fixtures; the second is the warm
+    // run a benchmark repeats. 14 when the durable MAF and each package
+    // read-back ran a schema or header job
+    RefQueries.v18PortalRules(spark, sf001).collect()
+    val sc = spark.sparkContext
+    val group = "v18-warm-jobs"
+    sc.setJobGroup(group, group)
+    try RefQueries.v18PortalRules(spark, sf001).collect()
+    finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    info(s"a warm v18_portal_rules launched $jobs jobs")
+    assert(jobs > 0 && jobs <= 11, s"a warm v18_portal_rules launched $jobs jobs")
+  }
 }

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase.{sf001, spark}
 import graft.Tables
 
-/** The physical layouts: small-file compaction, Z-order clustering, and
-  * bucketed co-located joins for the repeated key joins, the last
+/** The physical layouts: small-file compaction and bucketed co-located
+  * joins for the repeated key joins, the last
   * asserted at the PLAN level — a layout that silently starts shuffling
   * is a perf regression the row-level tests can't see.
   */
@@ -26,34 +26,6 @@ class LayoutSpec extends AnyFunSuite {
     val (nBefore, nAfter) = Layout.compact(spark, dir)
     assert(nBefore == 24 && nAfter == 1, s"$nBefore -> $nAfter")
     assert(checksum(spark.read.parquet(dir)) == beforeSum)
-  }
-
-  test("z-ordered layout tightens per-file min/max on BOTH dimensions") {
-    import org.apache.spark.sql.functions._
-    val df = Tables.orders(spark, sf001)
-      .select(col("o_custkey"), col("o_totalprice"))
-    val naiveDir = java.nio.file.Files.createTempDirectory("graft-zn").toString
-    val zDir = java.nio.file.Files.createTempDirectory("graft-zo").toString
-    // naive: same file count, no clustering
-    df.repartition(4).write.mode("overwrite").parquet(naiveDir)
-    val nFiles = Layout.writeZOrdered(spark, df, zDir,
-      "o_custkey", "o_totalprice", bits = 8, numFiles = 4)
-    assert(nFiles == 4)
-    // per-file (max-min) spread, summed over files, for each dimension —
-    // the quantity parquet footer stats expose to the reader's skipper
-    def spread(dir: String, c: String): Double =
-      spark.read.parquet(dir)
-        .groupBy(input_file_name())
-        .agg((max(col(c)) - min(col(c))).cast("double").as("r"))
-        .agg(sum(col("r"))).head().getDouble(0)
-    val (nCust, zCust) = (spread(naiveDir, "o_custkey"), spread(zDir, "o_custkey"))
-    val (nPrice, zPrice) = (spread(naiveDir, "o_totalprice"), spread(zDir, "o_totalprice"))
-    assert(zCust < nCust * 0.8,
-      s"z-order must tighten custkey file ranges: $zCust vs naive $nCust")
-    assert(zPrice < nPrice * 0.8,
-      s"z-order must tighten totalprice file ranges: $zPrice vs naive $nPrice")
-    // data preserved
-    assert(spark.read.parquet(zDir).count() == df.count())
   }
 
   test("bucketed tables join with zero exchanges (co-located SMJ)") {

@@ -135,4 +135,26 @@ class TsvSpec extends AnyFunSuite {
     Tsv.clearDir(tmp)
     assert(Files.list(Paths.get(tmp)).count() == 0)
   }
+
+  test("readWritten: the column line gives an all-string schema and no header job") {
+    val tmp = Files.createTempDirectory("tsv-spec").toString
+    Files.writeString(Paths.get(tmp, "ok.txt"),
+      "#Patient\tAge\n#STRING\tNUMBER\nPATIENT_ID\tAGE\n007\t\"4\n2\"\nP2\t\n")
+    Files.writeString(Paths.get(tmp, "dup.txt"), "A\ta\t\nx\ty\tz\n")
+    val sc = spark.sparkContext
+    sc.setJobGroup("tsv-read-written", "schema")
+    val ok = try Tsv.readWritten(spark, tmp, "ok.txt").get finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("tsv-read-written").isEmpty,
+      "building the read-back must run no Spark job")
+    assert(ok.schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq(("PATIENT_ID", "string"), ("AGE", "string")))
+    assert(ok.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("007", "4\n2"), ("P2", null)))
+    // names Spark's header read rewrites (case-insensitive repeat, empty)
+    // keep that read
+    val dup = Tsv.readWritten(spark, tmp, "dup.txt").get
+    assert(dup.columns.toSeq ==
+      spark.read.options(Tsv.Dialect).csv(s"$tmp/dup.txt").columns.toSeq)
+    assert(Tsv.readWritten(spark, tmp, "absent.txt").isEmpty)
+  }
 }

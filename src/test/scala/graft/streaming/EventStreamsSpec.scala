@@ -7,11 +7,12 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase.spark
-import graft.streaming.EventStreams.{Event, SessionOut}
+import graft.streaming.EventStreamsSpec.Event
 
-/** Streaming semantics under MemoryStream: window aggregation with
-  * watermark-driven late-data dropping, and the custom
-  * flatMapGroupsWithState sessionizer (state closes on event-time gap).
+/** The batch faces run on a stream: window aggregation with
+  * watermark-driven late-data dropping, stream-stream interval joins and
+  * the stream-static enrichment, each checked against the same function
+  * on a batch frame.
   */
 class EventStreamsSpec extends AnyFunSuite {
   import spark.implicits._
@@ -27,7 +28,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("tumbling window stream drops events later than the watermark") {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[Event]
-    val out = EventStreams.tumblingCountsStream(mem.toDF(), "30 minutes")
+    val out = EventStreams.tumblingCounts(mem.toDF().withWatermark("ts", "30 minutes"))
     val q = out.writeStream.format("memory").queryName("tumbling_wm")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -46,125 +47,6 @@ class EventStreamsSpec extends AnyFunSuite {
       // ts(min) offsets by +60min, so the first hour window starts at 3600s
       assert(rows(3600L) == 2L, "first-hour window: late event dropped, 2 not 3")
       assert(rows(7200L) == 2L, "second-hour window: in-time event counted")
-    } finally q.stop()
-  }
-
-  test("streaming token bucket reproduces the batch fold decision for decision") {
-    implicit val s = spark
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val out = EventStreams.rateLimitStream(mem.toDS())
-    val q = out.writeStream.format("memory").queryName("rate_limit")
-      .outputMode(OutputMode.Append()).start()
-    val t0 = 1700000000L * 1000L // epoch millis
-    def e(id: Long, offSec: Long) =
-      Event(id, new Timestamp(t0 + offSec * 1000L), 7L, "click", 1.0)
-    val timeline = Seq(e(1, 0), e(2, 0), e(3, 0), e(4, 0), e(5, 0),
-      e(6, 30), e(7, 120), e(8, 120), e(9, 120))
-    try {
-      // state must survive micro-batch boundaries: burst, then the
-      // starved probe, then the refilled tail arrive in separate batches
-      mem.addData(timeline.take(5): _*)
-      q.processAllAvailable()
-      mem.addData(timeline(5))
-      q.processAllAvailable()
-      mem.addData(timeline.drop(6): _*)
-      q.processAllAvailable()
-      val got = spark.table("rate_limit").as[EventStreams.AdmitOut].collect()
-        .map(a => a.event_id -> a.admitted).toMap
-      assert(got === Map(1L -> true, 2L -> true, 3L -> true, 4L -> false,
-        5L -> false, 6L -> false, 7L -> true, 8L -> true, 9L -> false))
-      // stream ≡ batch: the SQL fold over the same events agrees
-      val batch = graft.queries.StreamQueries.rateLimit(timeline.toDF())
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      assert(batch === Array((7L, 9L, 5L, 4L)))
-    } finally q.stop()
-  }
-
-  test("streaming CUSUM matches the batch statistic bucket for bucket across batches") {
-    implicit val s = spark
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val hourMs = 3600000L
-    val t0 = 1700000000000L / hourMs * hourMs
-    var id = 0L
-    def ev(typ: String, hour: Int, n: Int): Seq[Event] =
-      (0 until n).map { i =>
-        id += 1
-        Event(id, new Timestamp(t0 + hour * hourMs + (i + 1) * 1000L), 1L, typ, 1.0)
-      }
-    val click = Seq(2, 2, 2, 9, 9, 9).zipWithIndex.flatMap { case (n, h) => ev("click", h, n) }
-    val view = Seq(3, 3, 3, 3).zipWithIndex.flatMap { case (n, h) => ev("view", h, n) }
-    val all = (click ++ view).sortBy(_.ts.getTime)
-    // offline calibration: the same per-type k the batch query derives
-    def kOf(es: Seq[Event]): Long = {
-      val byH = es.groupBy(_.ts.getTime / hourMs).map(_._2.size.toLong)
-      val m = byH.sum / byH.size
-      m + m / graft.queries.StreamQueries.CusumSlackDiv + 1
-    }
-    val k = Map("click" -> kOf(click), "view" -> kOf(view))
-    val out = EventStreams.cusumStream(mem.toDS(), k)
-    val q = out.writeStream.format("memory").queryName("cusum_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // three micro-batches, split MID-bucket: state carries the open
-      // hour's partial count and the statistic across the boundary
-      val (b1, rest) = all.splitAt(7)
-      val (b2, b3) = rest.splitAt(9)
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-      mem.addData(b3: _*); q.processAllAvailable()
-      val got = spark.table("cusum_stream").as[EventStreams.CusumOut].collect()
-        .map(c => (c.event_type, c.w_start.getTime, c.x, c.cusum, c.drift)).toSet
-      val batch = graft.queries.StreamQueries.cusumHourly(all.toDF()).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getLong(2),
-          r.getLong(3), r.getInt(4)))
-      // the stream emits CLOSED buckets: everything but each type's last
-      val lastPerType = batch.groupBy(_._1).map { case (t, rs) => t -> rs.map(_._2).max }
-      assert(got == batch.filter(r => r._2 < lastPerType(r._1)).toSet)
-      assert(got.count(_._1 == "click") == 5 && got.count(_._1 == "view") == 3)
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessionizer: gap splits sessions, timeout emits") {
-    implicit val s = spark
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val out = EventStreams.sessionize(mem.toDS())
-    val q = out.writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // user 1: events at min 0,5 (one session), then 30 (new session: gap 25 > 10)
-      mem.addData(ev(1, 0, 1, value = 2.0), ev(2, 5, 1, value = 3.0), ev(3, 30, 1))
-      q.processAllAvailable()
-      // advance watermark far ahead so the open session times out and emits
-      mem.addData(ev(9, 300, 2))
-      q.processAllAvailable()
-      mem.addData(ev(10, 600, 2))
-      q.processAllAvailable()
-      val rows = spark.table("sessions").as[SessionOut].collect()
-        .filter(_.user_id == 1L).sortBy(_.session_start.getTime)
-      assert(rows.length == 2, s"expected 2 closed sessions, got ${rows.toSeq}")
-      assert(rows(0).n_events == 2L && rows(0).sum_value == 5.0)
-      assert(rows(0).session_start == ts(0) && rows(0).session_end == ts(15))
-      assert(rows(1).n_events == 1L && rows(1).session_start == ts(30))
-    } finally q.stop()
-  }
-
-  test("dedupedStream drops in-horizon duplicates with bounded state") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val out = EventStreams.dedupedStream(mem.toDF(), "30 minutes")
-    val q = out.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(ev(1, 0, 1), ev(1, 0, 1), ev(2, 5, 2)) // dup in same batch
-      q.processAllAvailable()
-      mem.addData(ev(1, 1, 1), ev(3, 10, 3)) // dup across batches
-      q.processAllAvailable()
-      val ids = spark.table("dedup_stream").select($"event_id")
-        .as[Long].collect().sorted.toSeq
-      assert(ids == Seq(1L, 2L, 3L), s"expected deduped ids, got $ids")
     } finally q.stop()
   }
 
@@ -253,7 +135,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .schema(events.toDF().schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$dir/in/*")
-    val q = EventStreams.tumblingCountsStream(src, "1 minute")
+    val q = EventStreams.tumblingCounts(src.withWatermark("ts", "1 minute"))
       .writeStream.format("memory").queryName("tumbling_file")
       .option("checkpointLocation", s"$dir/ckpt")
       .outputMode(OutputMode.Complete()).start()
@@ -275,7 +157,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select($"w_start".cast("long"), $"event_type", $"n")
       .as[(Long, String, Long)].collect().toSet
     val mem = MemoryStream[Event]
-    val q = EventStreams.tumblingCountsStream(mem.toDF(), "1 minute")
+    val q = EventStreams.tumblingCounts(mem.toDF().withWatermark("ts", "1 minute"))
       .writeStream.format("memory").queryName("tumbling_eq")
       .outputMode(OutputMode.Complete()).start()
     try {
@@ -321,132 +203,10 @@ class EventStreamsSpec extends AnyFunSuite {
       assert(batchPlan.contains("BroadcastHashJoin"), batchPlan.take(300))
     } finally q.stop()
   }
+}
 
-  test("cdcUpsertSink: micro-batched changes converge to the merged snapshot") {
-    import EventStreams.Change
-    implicit val sq = spark.sqlContext
-    val baseDir = java.nio.file.Files.createTempDirectory("graft-cdc").toString + "/base"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-ck").toString
-    val mem = MemoryStream[Change]
-    val q = EventStreams.cdcUpsertSink(mem.toDS(), baseDir, ckpt)
-    try {
-      // batch 1: three inserts, one key written twice (version 2 wins)
-      mem.addData(Change(1, "insert", 10.0, 1), Change(2, "insert", 20.0, 1),
-        Change(3, "insert", 30.0, 1), Change(3, "insert", 33.0, 2))
-      q.processAllAvailable()
-      val afterB1 = spark.read.parquet(baseDir).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(afterB1 == Map(1L -> 10.0, 2L -> 20.0, 3L -> 33.0),
-        s"batch 1 snapshot wrong: $afterB1")
-      // batch 2: update k=1, delete k=2, insert k=4
-      mem.addData(Change(1, "update", 11.0, 3), Change(2, "delete", 0.0, 3),
-        Change(4, "insert", 40.0, 3))
-      q.processAllAvailable()
-      val afterB2 = spark.read.parquet(baseDir).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(afterB2 == Map(1L -> 11.0, 3L -> 33.0, 4L -> 40.0),
-        s"batch 2 snapshot wrong: $afterB2")
-    } finally q.stop()
-  }
-
-  test("cdcUpsertSink exactly-once: file source, crash-replayed batch is a no-op, restart resumes") {
-    // The full production triad — file source → foreachBatch upsert →
-    // checkpoint — driven through a crash/replay cycle. Exactly-once here
-    // is checkpoint + idempotent batch apply: a batch re-delivered after a
-    // crash (sink wrote, checkpoint commit didn't) must leave the snapshot
-    // byte-identical, and a restart must process only unseen files.
-    import EventStreams.Change
-    val root = java.nio.file.Files.createTempDirectory("graft-e1").toString
-    val srcDir = s"$root/in"; val baseDir = s"$root/base"; val ckpt = s"$root/ckpt"
-    val changeSchema = Seq(Change(0, "insert", 0.0, 0)).toDF().schema
-    def snapshot(): Map[Long, Double] =
-      spark.read.parquet(baseDir).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    def runToCompletion(): Unit = {
-      val src = spark.readStream.schema(changeSchema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*").as[Change]
-      val q = EventStreams.cdcUpsertSink(src, baseDir, ckpt)
-      try q.processAllAvailable() finally q.stop()
-    }
-    // two source files with disjoint keys (multi-batch, order-free)
-    Seq(Change(1, "insert", 10.0, 1), Change(2, "insert", 20.0, 1))
-      .toDF().write.parquet(s"$srcDir/f1.parquet")
-    Seq(Change(3, "insert", 30.0, 1), Change(4, "insert", 44.0, 1))
-      .toDF().write.parquet(s"$srcDir/f2.parquet")
-    runToCompletion()
-    val s1 = snapshot()
-    assert(s1 == Map(1L -> 10.0, 2L -> 20.0, 3L -> 30.0, 4L -> 44.0))
-    // crash simulation: the engine re-invokes foreachBatch with the last
-    // batch on recovery; applying it a second time must change nothing
-    EventStreams.applyChangeBatch(
-      Seq(Change(3, "insert", 30.0, 1), Change(4, "insert", 44.0, 1)).toDF(), baseDir)
-    assert(snapshot() == s1, "replayed batch must be idempotent")
-    // restart from the same checkpoint with one new file: only f3 applies
-    Seq(Change(1, "update", 11.0, 2), Change(2, "delete", 0.0, 2),
-      Change(5, "insert", 50.0, 2))
-      .toDF().write.parquet(s"$srcDir/f3.parquet")
-    runToCompletion()
-    val s2 = snapshot()
-    assert(s2 == Map(1L -> 11.0, 3L -> 30.0, 4L -> 44.0, 5L -> 50.0),
-      s"post-restart snapshot wrong: $s2")
-    // f3's batch replayed after a hypothetical second crash: still a no-op
-    EventStreams.applyChangeBatch(
-      Seq(Change(1, "update", 11.0, 2), Change(2, "delete", 0.0, 2),
-        Change(5, "insert", 50.0, 2)).toDF(), baseDir)
-    assert(snapshot() == s2, "delete replay must not resurrect or double-apply")
-    // restart with nothing new: checkpoint says all files seen — no work
-    runToCompletion()
-    assert(snapshot() == s2)
-  }
-
-  test("RocksDB state store: sessionizer and watermark dedup results identical") {
-    // At 100× the keyed state (open sessions, dedup horizon) outgrows the
-    // default HDFS-backed in-memory provider; RocksDB spills it to local
-    // disk with the same semantics. Run the stateful operators under the
-    // RocksDB provider and require byte-identical results. (The CDC
-    // upsert sink needs no variant: its state is the checkpoint's source
-    // log + the idempotent parquet snapshot, not a state store.)
-    implicit val s = spark
-    implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // sessionizer (flatMapGroupsWithState keyed state)
-      val mem = MemoryStream[Event]
-      val q = EventStreams.sessionize(mem.toDS())
-        .writeStream.format("memory").queryName("sessions_rocks")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        mem.addData(ev(1, 0, 1, value = 2.0), ev(2, 5, 1, value = 3.0), ev(3, 30, 1))
-        q.processAllAvailable()
-        mem.addData(ev(9, 300, 2)); q.processAllAvailable()
-        mem.addData(ev(10, 600, 2)); q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("sessions_rocks").as[SessionOut].collect()
-        .filter(_.user_id == 1L).sortBy(_.session_start.getTime)
-      assert(rows.length == 2, s"expected 2 closed sessions, got ${rows.toSeq}")
-      assert(rows(0).n_events == 2L && rows(0).sum_value == 5.0)
-      assert(rows(0).session_start == ts(0) && rows(0).session_end == ts(15))
-      assert(rows(1).n_events == 1L && rows(1).session_start == ts(30))
-
-      // watermark dedup (dropDuplicates state)
-      val mem2 = MemoryStream[Event]
-      val q2 = EventStreams.dedupedStream(mem2.toDF(), "30 minutes")
-        .writeStream.format("memory").queryName("dedup_rocks")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        mem2.addData(ev(1, 0, 1), ev(1, 0, 1), ev(2, 5, 2))
-        q2.processAllAvailable()
-        mem2.addData(ev(1, 1, 1), ev(3, 10, 3))
-        q2.processAllAvailable()
-      } finally q2.stop()
-      val ids = spark.table("dedup_rocks").select($"event_id")
-        .as[Long].collect().sorted.toSeq
-      assert(ids == Seq(1L, 2L, 3L), s"expected deduped ids, got $ids")
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+object EventStreamsSpec {
+  /** One row of the `events` table, for MemoryStream input. */
+  case class Event(event_id: Long, ts: Timestamp, user_id: Long,
+                   event_type: String, value: Double)
 }

@@ -116,8 +116,8 @@ class RulesSpec extends AnyFunSuite {
     var report = Map.empty[String, (Long, Boolean)]
     val instrumentedJobs = jobsIn("rules-instr") {
       nRows = instrumented.count() // stand-in for an export write
-      report = Rules.observedReport(spark, obs, rules).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+      report = Rules.observedRows(obs, rules)
+        .map { case (rule, v, ok) => rule -> (v, ok) }.toMap
     }
     assert(instrumentedJobs <= plainJobs,
       s"metrics must not launch their own job ($instrumentedJobs vs $plainJobs)")
@@ -133,8 +133,7 @@ class RulesSpec extends AnyFunSuite {
     val (instrumented, obs) = Rules.observed(empty, "obs_empty_spec", rules)
     instrumented.write.mode("overwrite")
       .parquet(java.nio.file.Files.createTempDirectory("graft-obs").toString + "/out")
-    val rep = Rules.observedReport(spark, obs, rules).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val rep = Rules.observedRows(obs, rules).map { case (rule, v, _) => rule -> v }.toMap
     assert(rep("rows_empty") == 0L && rep("no_null_k") == 0L)
   }
 
